@@ -137,56 +137,28 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
 
 
-def ordered_kgram_hashes(text: Column, k: int = 5) -> Column:
-    """k-gram 32-bit hashes in DOCUMENT ORDER (duplicates kept) — the
-    rolling-hash stream winnowing selects from."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1))),
-        lambda i: F.conv(
-            F.substring(F.md5(F.substring(text, i, k)), 1, 8), 16, 10
-        ).cast("long"),
-    )
-
-
-def winnowing_from_hashes(hash_col: Column, w: int = 4) -> Column:
-    """Winnowing (Schleimer et al.): slide a window of ``w`` consecutive
-    k-gram hashes and keep each window's minimum; the distinct minima are
-    the document's fingerprint set.  Guarantees any shared substring of
-    length >= k + w - 1 contributes a shared fingerprint — the
-    plagiarism/near-dup detection workhorse.  Sorted for deterministic
-    comparison.
-
-    ``hash_col`` MUST be a materialized column reference, not an inline
-    ordered_kgram_hashes() expression: the per-window lambda references it
-    and projection collapse would otherwise recompute the full md5 stream
-    per window — O(n^2) per document (measured 89s vs ~2s at sf0.001).
-    """
-    windows = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(hash_col) - (w - 1), F.lit(1))),
-        lambda i: F.array_min(F.slice(hash_col, i, w)),
-    )
-    return F.array_sort(F.array_distinct(windows))
-
-
 def winnowing_fingerprint_rows(
     df, id_col: str, text_col: str, k: int = 5, w: int = 4
 ):
-    """Vectorized winnowing: one (doc, fp) row per distinct window-minimum,
-    computed in an Arrow-batched mapInPandas kernel.
+    """Winnowing (Schleimer et al.): one (doc, fp) row per distinct
+    window-minimum, computed in an Arrow-batched mapInPandas kernel.
 
-    Bit-identical to ordered_kgram_hashes + winnowing_from_hashes +
-    explode (pytest-asserted; the DuckDB oracle is unchanged): same
-    md5[:8]-hex k-gram hash, same document-order stream with duplicates,
-    same ``max(n-w+1, 1)`` window count with the short-text whole-array
-    window.  Exists for the same reason as dedup.hashed_sig_docs — the
-    Catalyst HOF spelling evaluates one lambda call per k-gram plus one
-    per window, interpreted, which makes the hash stream the entire cost
-    of the operator; the kernel dict-caches md5 per distinct k-gram and
-    takes sliding-window minima with numpy strides.
+    Each k-gram, in DOCUMENT ORDER with duplicates kept, hashes to the
+    first 8 hex chars of its md5 parsed base-16; a window of ``w``
+    consecutive hashes slides over that stream (``max(n-w+1, 1)``
+    windows, so a text of at most k+w-1 chars is one whole-stream
+    window) and each window's minimum is a fingerprint.  Any shared
+    substring of length >= k + w - 1 contributes a shared fingerprint —
+    the plagiarism/near-dup detection workhorse.  The
+    text_winnowing_fingerprints DuckDB oracle spells the same math.
+
+    A kernel rather than a Catalyst HOF chain for the same reason as
+    dedup.hashed_sig_docs: the HOF spelling evaluates one lambda call per
+    k-gram plus one per window, interpreted, which makes the hash stream
+    the entire cost of the operator; the kernel dict-caches md5 per
+    distinct k-gram and takes sliding-window minima with numpy strides.
     """
     import pandas as pd
-
-    from pyspark.sql import functions as F  # noqa: F401 (parity with peers)
 
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = f"doc_id {id_type}, fp bigint"
@@ -225,7 +197,7 @@ def winnowing_fingerprint_rows(
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
         # NULL text dropped JVM-side: the kernel slices the string, and the
-        # exploded output of the SQL spelling has no rows for a null doc.
+        # oracle's unnest emits no rows for a null doc.
         df.select(id_col, text_col)
         .filter(F.col(text_col).isNotNull())
         .repartition(n_parts)

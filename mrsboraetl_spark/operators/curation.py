@@ -854,14 +854,14 @@ def _repetition_counts_kernel(
     plans/r13/curation_repetition_metrics_{before,after}.txt).
 
     Exact parity is kept by emitting ONLY integers — the divisions and
-    roundings stay in JVM columns, byte-identical to the explode
-    spelling (pinned kernel-vs-explode in tests/test_llmdata.py).  The
+    roundings stay in JVM columns, byte-identical to the oracle's SQL
+    arithmetic (edge rows pinned in tests/test_llmdata.py).  The
     tokenizer mirrors the SQL one exactly: re.ASCII makes Python's
     ``\\s`` the same 6-char class as Java's default, the normalize-
     then-split-on-single-space sequence matches regexp_replace + trim +
     split (Spark's trim strips spaces only — after normalization that
     is all that remains at the edges), and an empty normalized string
-    yields the same singleton [''] token list on both paths.
+    yields the same singleton [''] token list as the SQL split.
     """
     import re
 
@@ -910,8 +910,8 @@ def _repetition_counts_kernel(
 
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
-        # NULL text dropped JVM-side — the explode spelling's
-        # where(ts.isNotNull()) does the same.
+        # NULL text dropped JVM-side: a null document gets no metrics
+        # row (the oracle filters ``text IS NOT NULL`` the same way).
         df.select(id_col, text_col)
         .filter(F.col(text_col).isNotNull())
         .repartition(n_parts)
@@ -922,7 +922,6 @@ def _repetition_counts_kernel(
 def repetition_metrics(
     df: DataFrame, id_col: str, text_col: str,
     max_doc_tokens: int | None = None,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """(id, n_tokens, n_distinct, dup_token_frac, top_token_frac,
     top_bigram_frac) per document.
@@ -936,100 +935,35 @@ def repetition_metrics(
     null, so downstream threshold filters need no null guard.
 
     Cost is bounded by (and ~linear in, modulo GC) the LARGEST document:
-    the (id, token) agg combines map-side inside the task that owns the
-    doc (tests/adversarial_doc_probe.py: a 16M-token doc completes in
-    tens of seconds, no hang).  ``max_doc_tokens`` caps that bound: the
-    metrics are computed over each document's FIRST max_doc_tokens
-    tokens (a documented approximation — a crawler artifact that long
-    is degenerate and will score as such on any prefix), and
-    ``n_tokens`` then reflects the truncated count.
+    its token and bigram Counters are built inside the one task that owns
+    the doc (tests/adversarial_doc_probe.py drives a 16M-token doc).
+    ``max_doc_tokens`` caps that bound: the metrics are computed over
+    each document's FIRST max_doc_tokens tokens (a documented
+    approximation — a crawler artifact that long is degenerate and will
+    score as such on any prefix), and ``n_tokens`` then reflects the
+    truncated count.
 
-    ``use_kernel`` (r13, default True): the integer ingredients come
-    from the zero-shuffle Arrow pass (:func:`_repetition_counts_kernel`)
-    and only the divisions/roundings below run in the JVM — results
-    byte-identical to the explode spelling (pinned), plan loses all 4
-    exchanges and the stats join.  ``use_kernel=False`` keeps the
-    all-JVM explode path for environments without Python workers."""
-    if use_kernel:
-        counts = _repetition_counts_kernel(
-            df, id_col, text_col, max_doc_tokens
-        )
-        return counts.select(
-            "id",
-            "n_tokens",
-            "n_distinct",
-            F.round(1.0 - F.col("n_distinct") / F.col("n_tokens"), 6).alias(
-                "dup_token_frac"
-            ),
-            F.round(F.col("top_c") / F.col("n_tokens"), 6).alias(
-                "top_token_frac"
-            ),
-            F.when(
-                F.col("n_bigrams") > 0,
-                F.round(F.col("top_bg_c") / F.col("n_bigrams"), 6),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("top_bigram_frac"),
-        )
-    ts = F.split(
-        F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " "
-    )
-    if max_doc_tokens is not None:
-        ts = F.slice(ts, 1, max_doc_tokens)
-    toks = df.select(
-        F.col(id_col).alias("id"), ts.alias("ts")
-    ).where(F.col("ts").isNotNull())
-
-    tok_counts = (
-        toks.select("id", F.explode("ts").alias("t"))
-        .groupBy("id", "t")
-        .agg(F.count("*").alias("c"))
-    )
-    tok_stats = tok_counts.groupBy("id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count("*").alias("n_distinct"),
-        F.max("c").alias("top_c"),
-    )
-
-    # sequence(1, 0) would generate a DESCENDING [1, 0] (and element_at 0
-    # then errors), so single-token docs take the empty-array branch.
-    bigrams = toks.select(
+    The integer ingredients come from the zero-shuffle Arrow pass
+    (:func:`_repetition_counts_kernel`, r13) and only the divisions and
+    roundings below run in the JVM, so the fractions match the
+    curation_repetition_metrics oracle's SQL arithmetic exactly."""
+    counts = _repetition_counts_kernel(df, id_col, text_col, max_doc_tokens)
+    return counts.select(
         "id",
-        F.explode(
-            F.when(
-                F.size("ts") >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ts") - 1),
-                    lambda i: F.concat_ws(
-                        " ", F.element_at("ts", i), F.element_at("ts", i + 1)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("b"),
-    )
-    bg_stats = (
-        bigrams.groupBy("id", "b")
-        .agg(F.count("*").alias("c"))
-        .groupBy("id")
-        .agg(F.sum("c").alias("n_bigrams"), F.max("c").alias("top_bg_c"))
-    )
-
-    return (
-        tok_stats.join(bg_stats, "id", "left")
-        .select(
-            "id",
-            "n_tokens",
-            "n_distinct",
-            F.round(1.0 - F.col("n_distinct") / F.col("n_tokens"), 6).alias(
-                "dup_token_frac"
-            ),
-            F.round(F.col("top_c") / F.col("n_tokens"), 6).alias(
-                "top_token_frac"
-            ),
-            F.round(
-                F.coalesce(F.col("top_bg_c") / F.col("n_bigrams"), F.lit(0.0)), 6
-            ).alias("top_bigram_frac"),
+        "n_tokens",
+        "n_distinct",
+        F.round(1.0 - F.col("n_distinct") / F.col("n_tokens"), 6).alias(
+            "dup_token_frac"
+        ),
+        F.round(F.col("top_c") / F.col("n_tokens"), 6).alias(
+            "top_token_frac"
+        ),
+        F.when(
+            F.col("n_bigrams") > 0,
+            F.round(F.col("top_bg_c") / F.col("n_bigrams"), 6),
         )
+        .otherwise(F.lit(0.0))
+        .alias("top_bigram_frac"),
     )
 
 

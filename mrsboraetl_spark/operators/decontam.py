@@ -146,8 +146,8 @@ def ngram_hits_kernel(
     2 ints/row).  That deletes the probe hash join AND the groupBy(id)
     exchange: the whole operator is one scan + one mapInPandas.  Hit
     counting over a local Python set is behavior-identical to the
-    distinct-gram join + count(*) (pytest-pinned both against the HOF
-    spelling and the shuffle fallback).
+    distinct-gram join + count(*) (pytest-pinned against the shuffle
+    fallback and the decontam_ngram_overlap oracle).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
@@ -188,7 +188,6 @@ def contamination_counts(
     text_col: str = "text",
     n: int = 5,
     broadcast_eval: bool = True,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """(id_col, n_hits) for every train document sharing >= 1 token
     n-gram with the eval corpus; n_hits = number of distinct shared grams.
@@ -207,11 +206,10 @@ def contamination_counts(
     (pytest-pinned); the trade is one corpus-gram shuffle for not
     materializing the eval grams on every worker.
 
-    The corpus side runs through the Arrow-vectorized
+    On that fallback the corpus side runs through the Arrow-vectorized
     :func:`ngram_docs_kernel` (already per-doc-distinct, so the probe's
-    matches need no further dedup); the HOF spelling remains the
-    oracle-parity reference.  ``use_kernel=False`` keeps the all-JVM
-    path for environments where Python workers are unavailable.
+    matches need no further dedup); the eval side stays the all-JVM
+    :func:`_exploded_ngrams`.
     """
     # r13 (guide §2.4 "remove shuffles outright"): the probe set only
     # needs the GLOBALLY distinct grams, so the per-document dedup that
@@ -223,7 +221,7 @@ def contamination_counts(
         .select("gram")
         .distinct()
     )
-    if use_kernel and broadcast_eval:
+    if broadcast_eval:
         # r13: the eval grams go to the Python workers instead of a JVM
         # broadcast relation, and the probe runs inside the corpus kernel
         # (see ngram_hits_kernel).  The collect is the same bounded
@@ -235,17 +233,9 @@ def contamination_counts(
         ev_set = frozenset(r[0] for r in eval_grams.collect())
         eval_bc = train.sparkSession.sparkContext.broadcast(ev_set)
         return ngram_hits_kernel(train, id_col, text_col, n, eval_bc)
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
-    if use_kernel:
-        train_grams = ngram_docs_kernel(train, id_col, text_col, n)
-        hits = train_grams.join(eval_grams, "gram")
-    else:
-        hits = (
-            _exploded_ngrams(train, id_col, text_col, n)
-            .join(eval_grams, "gram")
-            .distinct()  # a doc repeating a matched gram counts it once
-        )
+    hits = ngram_docs_kernel(train, id_col, text_col, n).join(
+        eval_grams, "gram"
+    )
     return hits.groupBy(id_col).agg(F.count("*").alias("n_hits"))
 
 
@@ -275,7 +265,6 @@ def contamination_pairs(
     n: int = 5,
     min_shared: int = 1,
     broadcast_eval: bool = True,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """(train_id, eval_id, n_shared) — the ATTRIBUTION view of
     contamination: which eval document leaked into which train document,
@@ -295,12 +284,7 @@ def contamination_pairs(
     )
     if broadcast_eval:
         eval_grams = F.broadcast(eval_grams)
-    if use_kernel:
-        train_grams = ngram_docs_kernel(train, id_col, text_col, n)
-    else:
-        train_grams = _exploded_ngrams(
-            train, id_col, text_col, n
-        ).distinct()
+    train_grams = ngram_docs_kernel(train, id_col, text_col, n)
     return (
         train_grams.select(F.col(id_col).alias("train_id"), "gram")
         .join(eval_grams, "gram")

@@ -3,8 +3,8 @@
 Four families, all deterministic and shuffle-conscious:
 
 * exact       — md5-hash groupBy (one shuffle on the hash);
-* MinHash+LSH — shingle -> per-seed minhash computed *inside the row* with
-  array functions (no explode, no shuffle), then a band-bucket self-join so
+* MinHash+LSH — shingle -> per-seed minhash computed *inside the row* by
+  an Arrow kernel (no explode, no shuffle), then a band-bucket self-join so
   candidate generation is an equi-join, not an O(n^2) cross join;
 * SimHash     — 32-bit fingerprint from the high bit of each md5 nibble,
   portable across engines (no 64-bit int parsing required);
@@ -27,16 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles as array<string> (JVM-side, no UDF)."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1))),
-            lambda i: F.substring(text, i, k),
-        )
-    )
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -108,62 +98,6 @@ MINHASH_B = [
 ]
 
 
-def shingle_hashes(text: Column, k: int = 5) -> Column:
-    """Distinct k-shingles hashed ONCE each to a 32-bit int: the first 8 hex
-    chars of md5, parsed base-16.  Portable bit-for-bit (Spark ``conv`` ==
-    DuckDB ``('0x'||h)::BIGINT``).  Everything downstream derives per-seed
-    hashes from this single value with integer arithmetic — computing
-    md5(shingle||seed) per seed was 8x the hashing plus per-call string
-    allocation, and measured 117s vs ~14s at sf0.1.
-    """
-    return F.array_distinct(
-        F.transform(
-            shingles(text, k),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-        )
-    )
-
-
-def minhash_signature(hash_col: Column, num_hashes: int = 8) -> Column:
-    """Array of ``num_hashes`` minhashes: min over shingle hashes of the
-    Carter-Wegman rehash (MINHASH_A[s]*h + MINHASH_B[s]) mod MINHASH_MOD —
-    pure 64-bit arithmetic, independent across seeds.  Entirely within-row:
-    zero shuffles.
-
-    ``hash_col`` must be a *materialized column reference* (not an inline
-    shingle_hashes() expression): each per-seed lambda references it, and
-    Catalyst does not share subexpressions across lambda bodies.
-    """
-    a_arr = F.array(*[F.lit(a) for a in MINHASH_A[:num_hashes]])
-    b_arr = F.array(*[F.lit(b) for b in MINHASH_B[:num_hashes]])
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(
-            F.transform(
-                hash_col,
-                lambda h: (
-                    F.element_at(a_arr, seed + 1).cast("long") * h
-                    + F.element_at(b_arr, seed + 1)
-                )
-                % F.lit(MINHASH_MOD),
-            )
-        ),
-    )
-
-
-def hashed_shingle_docs(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5
-) -> DataFrame:
-    """(doc, hs) with hs = 32-bit shingle-hash array.  A small parquet file
-    arrives as one partition and the hashing is compute-heavy per row, so
-    spread rows across cores first; at real scale the source is many files
-    and the repartition is a no-op choice."""
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n_parts).select(
-        F.col(id_col).alias("doc"), shingle_hashes(F.col(text_col), k).alias("hs")
-    )
-
-
 def hashed_sig_docs(
     df: DataFrame,
     id_col: str,
@@ -171,53 +105,48 @@ def hashed_sig_docs(
     k: int = 5,
     num_hashes: int = 8,
     include_hashes: bool = True,
-    compact_hashes: bool = False,
 ) -> DataFrame:
     """(doc, hs, sig): shingle-hash set AND minhash signature in ONE
     Arrow-batched pass (mapInPandas).
 
-    This is the vectorized twin of hashed_shingle_docs + minhash_signature
-    and produces bit-identical values (same md5[:8]-hex-as-int shingle hash,
-    same Carter-Wegman rehash — pytest-asserted equal to the SQL path, and
-    the DuckDB oracles are unchanged).  It exists because Catalyst evaluates
-    higher-order-function lambdas interpreted, per element: the SQL spelling
-    costs ~23 ms/doc on 300-char docs (sequence -> substring -> array_distinct
-    -> md5 -> 8 affine rehashes, each a Column-tree walk per shingle), which
-    at 100 TB makes the hashing stage the whole job.  The kernel instead does
-    a per-partition dict-cached hashlib.md5 per DISTINCT shingle (templated
-    corpora repeat shingles heavily across docs) and one numpy broadcast for
-    all num_hashes signature rows — measured ~40x less CPU on the sf0.1
-    corpus (115 s -> ~3 s of core-time).
+    Shingle hash = the first 8 hex chars of md5 over each DISTINCT
+    character k-shingle, parsed base-16 (bit-identical to the DuckDB
+    oracles' ``('0x' || substr(md5(s), 1, 8))::BIGINT``); signature row s
+    = min over the shingle hashes of the Carter-Wegman rehash
+    (MINHASH_A[s]*h + MINHASH_B[s]) mod MINHASH_MOD.  The operator is a
+    kernel rather than a Catalyst higher-order-function chain because
+    Catalyst evaluates HOF lambdas interpreted, per element: that
+    spelling cost ~23 ms/doc on 300-char docs (sequence -> substring ->
+    array_distinct -> md5 -> 8 affine rehashes, each a Column-tree walk
+    per shingle), which at 100 TB makes the hashing stage the whole job.
+    The kernel does a per-partition dict-cached hashlib.md5 per DISTINCT
+    shingle (templated corpora repeat shingles heavily across docs) and
+    one numpy broadcast for all num_hashes signature rows — measured
+    ~40x less CPU on the sf0.1 corpus (115 s -> ~3 s of core-time).
 
     Scale shape: embarrassingly parallel, no shuffle beyond the spreading
     repartition; Arrow batches bound worker memory.
 
-    ``include_hashes=False`` omits the ``hs`` column from the Arrow
-    output (r13, guide §4.1 "pass only the columns the function needs" —
-    in reverse: ship only the columns the CALLER needs).  The shingle-hash
-    set is by far the widest column (~one bigint per distinct shingle vs
+    ``hs`` is array<int>: each 32-bit shingle hash reinterpreted as a
+    signed int32 (two's-complement wrap).  The wrap is a BIJECTION on
+    [0, 2^32), so set sizes and intersection sizes — all any verify
+    consumer reads — equal those of the unsigned values, while the widest
+    column is half the bytes of an int64 array in the Arrow transfer, the
+    localCheckpoint, and the verify joins' exchanges.  Signatures are
+    computed from the unsigned values (band keys match the oracles).
+
+    ``include_hashes=False`` omits ``hs`` from the Arrow output (r13,
+    guide §4.1: ship only the columns the CALLER needs).  The shingle-hash
+    set is by far the widest column (~one int per distinct shingle vs
     the fixed 8-element signature); candidate-only consumers
     (minhash_lsh_pairs) never read it, so emitting it paid Arrow transfer
     plus localCheckpoint serialization for dead weight.  The signature
-    values are computed identically either way.
-
-    ``compact_hashes=True`` (r13, guide §2.3 "narrower types") emits
-    ``hs`` as array<int>: the values are 32-bit by construction
-    (md5[:8] hex), stored int64 only because Spark's ``conv`` returns
-    long — reinterpreting each as a signed int32 (two's-complement
-    wrap) is a BIJECTION on [0, 2^32), so set sizes and intersection
-    sizes — all any verify consumer reads — are exactly preserved
-    while the widest column halves in the Arrow transfer, the
-    localCheckpoint, and the verify joins' exchanges.  Signatures are
-    still computed from the original 64-bit values (band keys
-    unchanged).  Equality of the downstream (pair, jaccard) output is
-    pinned in tests/test_llmdata.py."""
+    values are computed identically either way."""
     import pandas as pd
 
     id_type = df.schema[id_col].dataType.simpleString()
-    hs_type = "array<int>" if compact_hashes else "array<bigint>"
     out_schema = (
-        f"doc {id_type}, hs {hs_type}, sig array<bigint>"
+        f"doc {id_type}, hs array<int>, sig array<bigint>"
         if include_hashes
         else f"doc {id_type}, sig array<bigint>"
     )
@@ -249,12 +178,9 @@ def hashed_sig_docs(
                 hv = np.array(hs, dtype=np.int64)[None, :]
                 sig = ((av * hv + bv) % MINHASH_MOD).min(axis=1)
                 if include_hashes:
-                    if compact_hashes:
-                        hs_col.append(
-                            hv[0].astype(np.uint32).view(np.int32).tolist()
-                        )
-                    else:
-                        hs_col.append(hs)
+                    hs_col.append(
+                        hv[0].astype(np.uint32).view(np.int32).tolist()
+                    )
                 sig_col.append(sig.tolist())
             out = {"doc": ids}
             if include_hashes:
@@ -265,9 +191,9 @@ def hashed_sig_docs(
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
         # NULL text is dropped JVM-side: the kernel indexes/slices the
-        # string, and the SQL spelling's null row (null hs/sig array)
-        # carries no information any consumer uses — explode-of-null /
-        # band derivation both emit nothing for it anyway.
+        # string, and a null doc has no shingles, so it could yield no
+        # band row or verify input anyway (the oracles' unnest of a null
+        # list emits nothing either).
         df.select(F.col(id_col), F.col(text_col))
         .filter(F.col(text_col).isNotNull())
         .repartition(n_parts)
@@ -281,9 +207,9 @@ def bands_from_sig(
     rows_per_band: int = 2,
     carry_keys: bool = False,
 ) -> DataFrame:
-    """(doc, band, bk) from a materialized ``sig`` column — the cheap tail
-    of minhash_bands once the signature already exists (slicing an
-    8-element array, no shingle recompute).
+    """(doc, band, bk) from a materialized ``sig`` column: band key =
+    '|'-joined slice of the signature (slicing an 8-element array, no
+    shingle recompute).
 
     ``carry_keys=True`` (r14, guide §2.4) additionally carries the FULL
     band-key array as ``bks`` on every band row, which lets
@@ -307,29 +233,6 @@ def bands_from_sig(
         return sigged.select("doc", F.posexplode(keys).alias("band", "bk"))
     return sigged.select("doc", keys.alias("bks")).select(
         "doc", "bks", F.posexplode("bks").alias("band", "bk")
-    )
-
-
-def minhash_bands(
-    hashed: DataFrame, num_hashes: int = 8, rows_per_band: int = 2
-) -> DataFrame:
-    """(doc, band, bk): band key = '|'-joined slice of the signature."""
-    n_bands = num_hashes // rows_per_band
-    return hashed.select(
-        "doc", minhash_signature(F.col("hs"), num_hashes).alias("sig")
-    ).select(
-        "doc",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda i: F.concat_ws(
-                    "|",
-                    F.slice(
-                        F.col("sig"), i * rows_per_band + 1, rows_per_band
-                    ).cast("array<string>"),
-                ),
-            )
-        ).alias("band", "bk"),
     )
 
 
@@ -578,11 +481,8 @@ def lsh_verified_pairs(
     exhaustive baseline.  ``max_band_freq`` caps hot bands (see
     candidate_pairs).
     """
-    # compact_hashes (r13, guide §2.3): hs as int32 — bijective wrap, so
-    # intersection/size counts (hence jaccard) are identical while the
-    # checkpoint and both attach joins carry half the bytes.
     sigged = hashed_sig_docs(
-        df, id_col, text_col, k, num_hashes, compact_hashes=True
+        df, id_col, text_col, k, num_hashes
     ).localCheckpoint()
     bands = bands_from_sig(
         sigged, num_hashes, rows_per_band, carry_keys=max_band_freq is None
@@ -727,9 +627,8 @@ def shingle_docs_exploded(
     df: DataFrame, id_col: str, text_col: str, k: int = 5
 ) -> DataFrame:
     """(doc, s) — one row per DISTINCT k-shingle per doc, emitted by an
-    Arrow-batched kernel.  Row-equivalent to
-    ``select(doc, explode(shingles(text, k)))`` (the HOF spelling the
-    DuckDB oracles encode), vectorized for the same reason as
+    Arrow-batched kernel (the DuckDB oracles' ``unnest(list_distinct(
+    [substr(text, i, k) ...]))``), vectorized for the same reason as
     hashed_sig_docs: Catalyst evaluates the sequence->substring->
     array_distinct lambdas interpreted per element, and the inverted-index
     consumers below re-evaluate the un-materialized explode several times.
@@ -751,7 +650,7 @@ def shingle_docs_exploded(
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
         # NULL text filtered JVM-side — exactly explode-of-null semantics
-        # (no rows), which is what the SQL spelling emits.
+        # (no rows), which is what the oracles' unnest emits.
         df.select(id_col, text_col)
         .filter(F.col(text_col).isNotNull())
         .repartition(n_parts)
@@ -1070,13 +969,11 @@ def fuzzy_text_join(
     ``max_band_freq`` caps hot bands by the COMBINED frequency across
     both sides (a band degenerate in either table floods the join the
     same way)."""
-    # compact_hashes (r13): same bijective int32 narrowing as
-    # lsh_verified_pairs — jaccard unchanged, half the hs bytes moved.
     sl = hashed_sig_docs(
-        left, left_id, left_text, k, num_hashes, compact_hashes=True
+        left, left_id, left_text, k, num_hashes
     ).localCheckpoint()
     sr = hashed_sig_docs(
-        right, right_id, right_text, k, num_hashes, compact_hashes=True
+        right, right_id, right_text, k, num_hashes
     ).localCheckpoint()
     carry = max_band_freq is None
     bl = bands_from_sig(sl, num_hashes, rows_per_band, carry_keys=carry)

@@ -252,7 +252,7 @@ def nearest_cells_kernel(
     :func:`_nearest_cells_expr`.
 
     Bit-identical selection (pinned kernel-vs-expr in
-    tests/test_similarity.py): distances accumulate one dimension at a
+    tests/test_llmdata.py): distances accumulate one dimension at a
     time in ascending dim order with float64 ops — the same sequential
     ``acc + (x-y)^2`` fold the SQL ``aggregate`` performs element by
     element — and ties sort by (distance, cell id) exactly like
@@ -372,7 +372,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | None = None,
     sample_fraction: float = 0.25,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a coarse quantizer partitions
     the corpus into cells; each query probes its ``nprobe`` nearest cells
@@ -420,43 +419,30 @@ def ivf_topk(
     # PAIR; the probe side also gets column-pruned before broadcast
     qv = F.col("query_vec").cast("array<double>")
     vv = F.col(vec_col).cast("array<double>")
-    if use_kernel:
-        # r13: cell assignment through the Arrow kernel (see
-        # nearest_cells_kernel) — bit-identical ids, one small plan node
-        # instead of the n_centers x dim literal tree on both sides.
-        # The norm stays a JVM fold over the SAME casted array (the
-        # kernel passes float64 through Arrow losslessly), so every
-        # downstream value is unchanged.
-        cells = nearest_cells_kernel(
-            vectors.select(F.col(id_col), vv.alias(vec_col)),
-            vec_col, centers, 1,
-        ).select(
-            F.col(id_col),
-            F.col(vec_col),
-            norm(F.col(vec_col)).alias("_vn"),
-            F.col("_cells").getItem(0).alias("cell"),
-        )
-        probes = nearest_cells_kernel(
-            queries.select("query_id", qv.alias("query_vec")),
-            "query_vec", centers, nprobe,
-        ).select(
-            "query_id",
-            F.col("query_vec"),
-            norm(F.col("query_vec")).alias("_qn"),
-            F.explode("_cells").alias("cell"),
-        )
-    else:
-        cells = vectors.select(
-            F.col(id_col), vv.alias(vec_col), norm(vv).alias("_vn")
-        ).withColumn(
-            "cell", _nearest_cells_expr(centers, vec_col, 1).getItem(0)
-        )
-        probes = queries.select(
-            "query_id", qv.alias("query_vec"), norm(qv).alias("_qn")
-        ).withColumn(
-            "cell",
-            F.explode(_nearest_cells_expr(centers, "query_vec", nprobe)),
-        )
+    # r13: cell assignment through the Arrow kernel (see
+    # nearest_cells_kernel) — bit-identical ids, one small plan node
+    # instead of the n_centers x dim literal tree on both sides.
+    # The norm stays a JVM fold over the SAME casted array (the
+    # kernel passes float64 through Arrow losslessly), so every
+    # downstream value is unchanged.
+    cells = nearest_cells_kernel(
+        vectors.select(F.col(id_col), vv.alias(vec_col)),
+        vec_col, centers, 1,
+    ).select(
+        F.col(id_col),
+        F.col(vec_col),
+        norm(F.col(vec_col)).alias("_vn"),
+        F.col("_cells").getItem(0).alias("cell"),
+    )
+    probes = nearest_cells_kernel(
+        queries.select("query_id", qv.alias("query_vec")),
+        "query_vec", centers, nprobe,
+    ).select(
+        "query_id",
+        F.col("query_vec"),
+        norm(F.col("query_vec")).alias("_qn"),
+        F.explode("_cells").alias("cell"),
+    )
     sim = F.round(
         dot(F.col("query_vec"), F.col(vec_col))
         / (F.col("_qn") * F.col("_vn")),
@@ -836,7 +822,7 @@ def ivf_cell_join(
     # r13: both sides' cell assignment through the Arrow kernel — the
     # full-corpus pass on each side was the expr spelling's interpreted
     # n_centers x dim per-row loop (see nearest_cells_kernel; ids
-    # bit-identical, pinned kernel-vs-expr in tests/test_similarity.py).
+    # bit-identical, pinned kernel-vs-expr in tests/test_llmdata.py).
     la = nearest_cells_kernel(
         left.select(
             F.col(left_id).alias("id_a"),

@@ -42,7 +42,7 @@ _SHINGLES = (
     " FOR i IN range(1, greatest(length(text)-4, 1)+1)])"
 )
 # 32-bit shingle hash + affine per-seed rehash — must mirror
-# operators/dedup.shingle_hashes / minhash_signature exactly.
+# operators/dedup.hashed_sig_docs exactly.
 _SHINGLE_HASHES = (
     "list_distinct([('0x' || substr(md5(s), 1, 8))::BIGINT"
     " FOR s IN shingles])"
@@ -625,9 +625,7 @@ def text_doc_metrics(spark, sf_dir):
 def text_winnowing_fingerprints(spark, sf_dir):
     """Rolling-hash winnowing fingerprints (k=5, w=4): distinct minima of a
     sliding window over the ordered k-gram hash stream, via the vectorized
-    Arrow kernel (bit-identical to the HOF spelling
-    ordered_kgram_hashes + winnowing_from_hashes, which remains as the
-    oracle-documented parity reference — see functions/text.py).
+    Arrow kernel (see functions/text.py).
 
     Output is one scalar row per (doc_id, fingerprint): the driver's pandas
     canonicalizer hashes cell values and cannot sort list cells, so the

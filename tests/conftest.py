@@ -156,3 +156,16 @@ def pytest_collection_modifyitems(config, items):
         key = f"{item.fspath.basename}::{item.name}"
         if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    n = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", ())
+        if item.get_closest_marker("slow")
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow tests deselected; run the full suite with: "
+            'python -m pytest tests/ -m "" -q'
+        )

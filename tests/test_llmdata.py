@@ -128,58 +128,228 @@ def test_ivf_seed_centroids_deterministic(spark, sf_dir):
     assert run() == run()
 
 
-def test_vectorized_minhash_kernel_matches_sql_spelling(spark, sf_dir):
-    """hashed_sig_docs (Arrow kernel) must be bit-identical to the HOF
-    spelling shingle_hashes + minhash_signature — the kernel exists for
-    speed (Catalyst evaluates HOF lambdas interpreted per element), never
-    for different math; the DuckDB oracles encode the SQL spelling."""
+def _md5_32(s):
+    """First 8 hex chars of md5, base-16 — the shingle/k-gram hash."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
+
+
+# Literal edge docs for the kernel references: empty, shorter than k,
+# exactly k, repeated shingles, non-ASCII, and one NULL (no output row).
+_KERNEL_DOCS = [
+    (1, ""),
+    (2, "abc"),
+    (3, "abcde"),
+    (4, "aaaaaaaaaa"),
+    (5, "the quick brown fox jumps over the lazy dog"),
+    (6, "héllo wörld — ünïcode"),
+    (7, None),
+]
+
+
+def test_minhash_kernel_matches_python_reference(spark):
+    """hashed_sig_docs against a pure-Python reference: hs = md5[:8] of
+    each DISTINCT 5-shingle in first-occurrence order, wrapped to a
+    signed int32; sig[s] = min over the unsigned hashes of
+    (MINHASH_A[s]*h + MINHASH_B[s]) mod MINHASH_MOD.  The wrap is a
+    bijection, so per-doc set sizes (hence every verify jaccard) match
+    the unsigned values; dedup_minhash_lsh / dedup_lsh_verified pin the
+    end-to-end pairs against their DuckDB oracles."""
     from mrsboraetl_spark.operators.dedup import (
-        hashed_shingle_docs,
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_MOD,
         hashed_sig_docs,
-        minhash_signature,
     )
+
+    def ref(t, k=5):
+        grams = dict.fromkeys(
+            t[i : i + k] for i in range(max(len(t) - (k - 1), 1))
+        )
+        hs = [_md5_32(g) for g in grams]
+        sig = [
+            min((a * h + b) % MINHASH_MOD for h in hs)
+            for a, b in zip(MINHASH_A, MINHASH_B)
+        ]
+        hs32 = [h - (1 << 32) if h >= (1 << 31) else h for h in hs]
+        assert len(set(hs32)) == len(hs)
+        return hs32, sig
+
+    df = spark.createDataFrame(_KERNEL_DOCS, "doc_id long, text string")
+    out = hashed_sig_docs(df, "doc_id", "text", 5, 8)
+    assert dict(out.dtypes)["hs"] == "array<int>"
+    got = {r["doc"]: (list(r["hs"]), list(r["sig"])) for r in out.collect()}
+    want = {d: ref(t) for d, t in _KERNEL_DOCS if t is not None}
+    assert got == want
+    assert any(h < 0 for hs, _ in want.values() for h in hs), (
+        "no hash >= 2^31: the int32 wrap went unexercised"
+    )
+
+    sig_only = hashed_sig_docs(
+        df, "doc_id", "text", 5, 8, include_hashes=False
+    )
+    assert sig_only.columns == ["doc", "sig"]
+    assert {r["doc"]: list(r["sig"]) for r in sig_only.collect()} == {
+        d: sig for d, (_, sig) in want.items()
+    }
+
+
+def _sql_hashed_sig_docs(df, id_col, text_col, k=5, num_hashes=8):
+    """The JVM-only (SQL function) spelling of minhash, kept here as a
+    reference for the Arrow kernel: distinct k-shingles, each hashed once
+    to the unsigned 32-bit md5[:8] value (``hs`` stays array<bigint>),
+    then sig[s] = min over hs of (MINHASH_A[s]*h + MINHASH_B[s]) mod
+    MINHASH_MOD as higher-order array functions."""
+    from mrsboraetl_spark.operators.dedup import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_MOD,
+    )
+
+    text = F.col(text_col)
+    shingles = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length(text) - (k - 1), F.lit(1))),
+            lambda i: F.substring(text, i, k),
+        )
+    )
+    hs = F.array_distinct(
+        F.transform(
+            shingles,
+            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
+        )
+    )
+    a_arr = F.array(*[F.lit(a) for a in MINHASH_A[:num_hashes]])
+    b_arr = F.array(*[F.lit(b) for b in MINHASH_B[:num_hashes]])
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda seed: F.array_min(
+            F.transform(
+                F.col("hs"),
+                lambda h: (
+                    F.element_at(a_arr, seed + 1).cast("long") * h
+                    + F.element_at(b_arr, seed + 1)
+                )
+                % F.lit(MINHASH_MOD),
+            )
+        ),
+    )
+    return (
+        df.filter(text.isNotNull())
+        .select(F.col(id_col).alias("doc"), hs.alias("hs"))
+        .localCheckpoint()
+        .withColumn("sig", sig)
+    )
+
+
+def _wrap_int32(h):
+    return h - (1 << 32) if h >= (1 << 31) else h
+
+
+def test_vectorized_minhash_kernel_matches_sql_spelling(spark, sf_dir):
+    """hashed_sig_docs (Arrow kernel) must agree bit for bit with the SQL
+    spelling of minhash (_sql_hashed_sig_docs) on the whole corpus: the
+    same signatures, and shingle hashes equal up to the int32 wrap the
+    kernel applies.  The kernel exists for speed, never for different
+    math; the DuckDB oracles encode the SQL spelling."""
+    from mrsboraetl_spark.operators.dedup import hashed_sig_docs
 
     docs = table(spark, sf_dir, "documents")
     sql_side = {
-        r["doc"]: (r["hs"], r["sig"])
-        for r in hashed_shingle_docs(docs, "doc_id", "text")
-        .withColumn("sig", minhash_signature(F.col("hs"), 8))
-        .collect()
+        r["doc"]: ([_wrap_int32(h) for h in r["hs"]], list(r["sig"]))
+        for r in _sql_hashed_sig_docs(docs, "doc_id", "text").collect()
     }
     vec_side = {
-        r["doc"]: (r["hs"], r["sig"])
+        r["doc"]: (list(r["hs"]), list(r["sig"]))
         for r in hashed_sig_docs(docs, "doc_id", "text", 5, 8).collect()
     }
     assert sql_side == vec_side
 
 
-def test_vectorized_winnowing_kernel_matches_sql_spelling(spark, sf_dir):
-    """winnowing_fingerprint_rows must equal ordered_kgram_hashes +
-    winnowing_from_hashes + explode, row for row."""
-    from mrsboraetl_spark.functions.text import (
-        ordered_kgram_hashes,
-        winnowing_from_hashes,
-        winnowing_fingerprint_rows,
+def test_compact_hashes_bijection_preserves_pairs(spark, sf_dir):
+    """The kernel's int32 ``hs`` reinterprets each unsigned 32-bit shingle
+    hash as a signed int32 — a bijection on [0, 2^32), so per-doc set
+    sizes and pairwise intersection sizes (hence every jaccard the verify
+    path emits) must be EXACTLY those of the unsigned int64 hashes.  Pins
+    both the elementwise wrap and the end-to-end pair output."""
+    from mrsboraetl_spark.operators.dedup import (
+        bands_from_sig,
+        candidate_pairs,
+        hashed_sig_docs,
+        lsh_verified_pairs,
     )
 
     docs = table(spark, sf_dir, "documents")
-    sql_rows = sorted(
-        map(
-            tuple,
-            docs.repartition(8)
-            .select("doc_id", ordered_kgram_hashes(F.col("text"), 5).alias("h"))
-            .localCheckpoint()
-            .select(
-                "doc_id",
-                F.explode(winnowing_from_hashes(F.col("h"), 4)).alias("fp"),
-            )
-            .collect(),
+    wide_df = _sql_hashed_sig_docs(docs, "doc_id", "text").localCheckpoint()
+    assert dict(wide_df.dtypes)["hs"] == "array<bigint>"
+    wide = {r["doc"]: list(r["hs"]) for r in wide_df.collect()}
+    narrow_df = hashed_sig_docs(docs, "doc_id", "text", 5, 8)
+    assert dict(narrow_df.dtypes)["hs"] == "array<int>"
+    narrow = {r["doc"]: list(r["hs"]) for r in narrow_df.collect()}
+    assert set(wide) == set(narrow)
+    for d, hs64 in wide.items():
+        assert narrow[d] == [_wrap_int32(h) for h in hs64]
+        assert len(set(narrow[d])) == len(set(hs64))
+
+    # End to end: the int32 verify path (what lsh_verified_pairs runs)
+    # must emit the same (pair, jaccard) set as an int64 verify built
+    # from the unsigned hashes.
+    cands = candidate_pairs(bands_from_sig(wide_df, 8, 4))
+    hashed = wide_df.select("doc", "hs")
+    joined = (
+        cands.join(
+            hashed.select(F.col("doc").alias("doc_a"), F.col("hs").alias("sh_a")),
+            "doc_a",
         )
+        .join(
+            hashed.select(F.col("doc").alias("doc_b"), F.col("hs").alias("sh_b")),
+            "doc_b",
+        )
+        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn("sz_a", F.size("sh_a"))
+        .withColumn("sz_b", F.size("sh_b"))
     )
-    vec_rows = sorted(
-        map(tuple, winnowing_fingerprint_rows(docs, "doc_id", "text", 5, 4).collect())
+    jac = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
+    wide_pairs = {
+        (r["doc_a"], r["doc_b"], r["jaccard"])
+        for r in joined.withColumn("jaccard", F.round(jac, 4))
+        .select("doc_a", "doc_b", "jaccard")
+        .filter(F.col("jaccard") >= 0.5)
+        .collect()
+    }
+    compact_pairs = {
+        (r["doc_a"], r["doc_b"], r["jaccard"])
+        for r in lsh_verified_pairs(
+            docs, "doc_id", "text", 8, 5, 4, 0.5
+        ).collect()
+    }
+    assert compact_pairs == wide_pairs
+    assert compact_pairs, "probe needs a non-empty pair set"
+
+
+def test_winnowing_kernel_matches_python_reference(spark):
+    """winnowing_fingerprint_rows against a pure-Python reference: the
+    document-order md5[:8] k-gram stream (duplicates kept), windows of w
+    consecutive hashes (one whole-stream window when the text has at most
+    k+w-1 chars), distinct window minima."""
+    from mrsboraetl_spark.functions.text import winnowing_fingerprint_rows
+
+    def ref(t, k=5, w=4):
+        h = [_md5_32(t[i : i + k]) for i in range(max(len(t) - (k - 1), 1))]
+        return {min(h[i : i + w]) for i in range(max(len(h) - (w - 1), 1))}
+
+    df = spark.createDataFrame(_KERNEL_DOCS, "doc_id long, text string")
+    got = sorted(
+        map(tuple, winnowing_fingerprint_rows(df, "doc_id", "text", 5, 4).collect())
     )
-    assert sql_rows == vec_rows
+    want = sorted(
+        (d, fp) for d, t in _KERNEL_DOCS if t is not None for fp in ref(t)
+    )
+    assert got == want
+    # "abcde" (k chars) and "abc" (< k) are one-window docs; the pangram
+    # has many windows and more than one distinct minimum.
+    assert sum(1 for d, _ in got if d == 5) > 1
 
 
 def _union_find_components(edges):
@@ -1008,72 +1178,6 @@ def test_pq_codes_kernel_matches_expr(spark):
     assert list(kern_out[-1]["codes"])[0] == 0
 
 
-def test_compact_hashes_bijection_preserves_pairs(spark, sf_dir):
-    """compact_hashes=True (r13) reinterprets each 32-bit shingle hash as
-    a signed int32 — a bijection on [0, 2^32), so per-doc set sizes and
-    pairwise intersection sizes (hence every jaccard the verify path
-    emits) must be EXACTLY preserved while the column type narrows.
-    Pins both the elementwise wrap and the end-to-end pair output."""
-    from mrsboraetl_spark.operators.dedup import (
-        bands_from_sig,
-        candidate_pairs,
-        hashed_sig_docs,
-        lsh_verified_pairs,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    wide = {
-        r["doc"]: list(r["hs"])
-        for r in hashed_sig_docs(docs, "doc_id", "text", 5, 8).collect()
-    }
-    narrow_df = hashed_sig_docs(
-        docs, "doc_id", "text", 5, 8, compact_hashes=True
-    )
-    assert dict(narrow_df.dtypes)["hs"] == "array<int>"
-    narrow = {r["doc"]: list(r["hs"]) for r in narrow_df.collect()}
-    assert set(wide) == set(narrow)
-    for d, hs64 in wide.items():
-        expect = [h - (1 << 32) if h >= (1 << 31) else h for h in hs64]
-        assert narrow[d] == expect
-        assert len(set(narrow[d])) == len(set(hs64))
-
-    # End to end: the compact verify path (what lsh_verified_pairs now
-    # runs) must emit the same (pair, jaccard) set as an int64 verify
-    # built from the wide kernel output.
-    sigged = hashed_sig_docs(docs, "doc_id", "text", 5, 8).localCheckpoint()
-    cands = candidate_pairs(bands_from_sig(sigged, 8, 4))
-    hashed = sigged.select("doc", "hs")
-    joined = (
-        cands.join(
-            hashed.select(F.col("doc").alias("doc_a"), F.col("hs").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            hashed.select(F.col("doc").alias("doc_b"), F.col("hs").alias("sh_b")),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("sz_a", F.size("sh_a"))
-        .withColumn("sz_b", F.size("sh_b"))
-    )
-    jac = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
-    wide_pairs = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in joined.withColumn("jaccard", F.round(jac, 4))
-        .select("doc_a", "doc_b", "jaccard")
-        .filter(F.col("jaccard") >= 0.5)
-        .collect()
-    }
-    compact_pairs = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in lsh_verified_pairs(
-            docs, "doc_id", "text", 8, 5, 4, 0.5
-        ).collect()
-    }
-    assert compact_pairs == wide_pairs
-    assert compact_pairs, "probe needs a non-empty pair set"
-
-
 def test_bm25_single_pass_matches_multi_pass_spelling(spark, sf_dir):
     """The r13 single-corpus-pass bm25 (compact materialized (id, dl,
     matched-terms) table) must score identically to the original
@@ -1131,28 +1235,13 @@ def test_bm25_single_pass_matches_multi_pass_spelling(spark, sf_dir):
     assert got, "probe needs non-empty scores"
 
 
-def test_repetition_kernel_matches_explode_spelling(spark, sf_dir):
-    """The r13 zero-shuffle repetition kernel emits integer ingredients
-    and leaves every division/rounding in the JVM — its output must be
-    byte-identical to the explode+aggregate spelling, including the
-    empty-string token, NULL-text drop, whitespace-class, and
-    max_doc_tokens truncation edges."""
+def test_repetition_metrics_edge_rows(spark):
+    """repetition_metrics on hand-computed edge rows: the empty string
+    (one '' token), NULL text (no row), the 6-char ASCII whitespace
+    class, and max_doc_tokens truncation.  Tuples are (id, n_tokens,
+    n_distinct, dup_token_frac, top_token_frac, top_bigram_frac); the
+    full corpus is pinned by the curation_repetition_metrics oracle."""
     from mrsboraetl_spark.operators.curation import repetition_metrics
-
-    docs = table(spark, sf_dir, "documents")
-    a = sorted(
-        map(tuple, repetition_metrics(docs, "doc_id", "text").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            repetition_metrics(
-                docs, "doc_id", "text", use_kernel=False
-            ).collect(),
-        )
-    )
-    assert a == b
-    assert a, "probe needs non-empty metrics"
 
     edge = spark.createDataFrame(
         [
@@ -1165,8 +1254,24 @@ def test_repetition_kernel_matches_explode_spelling(spark, sf_dir):
         ],
         "doc_id long, text string",
     )
-    for cap in (None, 3):
-        ka = sorted(
+    want = {
+        None: [
+            (1, 1, 1, 0.0, 1.0, 0.0),
+            (2, 1, 1, 0.0, 1.0, 0.0),
+            (4, 5, 2, 0.6, 0.6, 0.5),
+            (5, 6, 6, 0.0, 0.166667, 0.2),
+            (6, 6, 1, 0.833333, 1.0, 1.0),
+        ],
+        3: [
+            (1, 1, 1, 0.0, 1.0, 0.0),
+            (2, 1, 1, 0.0, 1.0, 0.0),
+            (4, 3, 1, 0.666667, 1.0, 1.0),
+            (5, 3, 3, 0.0, 0.333333, 0.5),
+            (6, 3, 1, 0.666667, 1.0, 1.0),
+        ],
+    }
+    for cap, rows in want.items():
+        got = sorted(
             map(
                 tuple,
                 repetition_metrics(
@@ -1174,16 +1279,7 @@ def test_repetition_kernel_matches_explode_spelling(spark, sf_dir):
                 ).collect(),
             )
         )
-        kb = sorted(
-            map(
-                tuple,
-                repetition_metrics(
-                    edge, "doc_id", "text", max_doc_tokens=cap,
-                    use_kernel=False,
-                ).collect(),
-            )
-        )
-        assert ka == kb, f"cap={cap}"
+        assert got == rows, f"cap={cap}"
 
 
 def test_candidate_pairs_injoin_dedup_exactly_once(spark):

@@ -74,29 +74,11 @@ def test_ngram_kernel_matches_hof_spelling(spark, sf_dir):
     assert kern == hof
 
 
-def test_contamination_counts_kernel_and_hof_agree(spark, sf_dir):
-    docs = table(spark, sf_dir, "documents")
-    eval_df = docs.filter(F.col("doc_id") % 23 == 0)
-    train = docs.filter(F.col("doc_id") % 23 != 0)
-    a = {
-        (r.doc_id, r.n_hits)
-        for r in contamination_counts(train, eval_df, n=4).collect()
-    }
-    b = {
-        (r.doc_id, r.n_hits)
-        for r in contamination_counts(
-            train, eval_df, n=4, use_kernel=False
-        ).collect()
-    }
-    assert a == b and a
-
-
 def test_in_kernel_probe_matches_join_spelling(spark, sf_dir):
     """r13 pin: the default in-kernel probe (eval grams shipped to the
-    Python workers, (id, n_hits) emitted directly) equals BOTH join
-    spellings — the Arrow-gram-stream broadcast join (use_kernel=True,
-    broadcast_eval=False routes the kernel's grams through a join) and
-    the all-JVM HOF explode (use_kernel=False)."""
+    Python workers, (id, n_hits) emitted directly) equals the gram-keyed
+    shuffle-join fallback (broadcast_eval=False routes the kernel's gram
+    stream through a join)."""
     docs = table(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") % 23 == 0)
     train = docs.filter(F.col("doc_id") % 23 != 0)
@@ -110,13 +92,7 @@ def test_in_kernel_probe_matches_join_spelling(spark, sf_dir):
             train, eval_df, n=4, broadcast_eval=False
         ).collect()
     }
-    join_hof = {
-        (r.doc_id, r.n_hits)
-        for r in contamination_counts(
-            train, eval_df, n=4, use_kernel=False
-        ).collect()
-    }
-    assert in_kernel == join_kernel == join_hof and in_kernel
+    assert in_kernel == join_kernel and in_kernel
 
 
 def test_empty_eval_set_keeps_everything(spark, sf_dir):
