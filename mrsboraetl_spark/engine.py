@@ -6,16 +6,22 @@ flat_visit_summary, flat_latest_hiv_summary.  The engine form is a driver
 loop: for each stage, resolve the watermark (I1), build the incremental (or
 full-rebuild) plan, write the target atomically, log the run.
 
-Storage is format-agnostic parquet-by-default: each target lives at
-``<root>/<table>.parquet``.  The default layout rewrites the target whole
-behind one atomic swap; under ``partitioned=True`` a sync rewrites ONLY
-the ``p_month`` directories its delta touches (the plans report an
-affected-month superset via their ``out`` side-channel), so write I/O
-scales with the delta, not the target — the reference's ``REPLACE INTO``
-cost model.  The upsert algebra in operators/upsert.py computes the
-merged state; a Delta MERGE writer can slot in without touching the
-plans.  Writes go to a temp dir then move — the source parquet is
-re-read lazily, so writing over the path being read would corrupt it.
+Storage is parquet, one of two layouts per runner, each target at
+``<root>/<table>.parquet``:
+
+* plain (default) — the target is rewritten whole behind one
+  rename-aside swap (operators/_swap.swap_in);
+* partitioned (``partitioned=True``) — a month's content is a file list
+  in an atomic ``_snapshot.json``, and a sync rewrites ONLY the files its
+  delta touches (the plans report an affected-month superset via their
+  ``out`` side-channel), then flips the snapshot: write I/O scales with
+  the delta, not the target — the reference's ``REPLACE INTO`` cost
+  model.
+
+The upsert algebra in operators/upsert.py computes the merged state; a
+Delta MERGE writer can slot in without touching the plans.  Writes are
+staged then published — the source parquet is re-read lazily, so
+writing over the path being read would corrupt it.
 
 Modes (flat_visit_summary_v1.0.sql:6 @query_type):
 * ``rebuild`` — recompute every target from the sources;
@@ -38,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET, TABLE_VERSIONS
+from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.plans.flat_lab_obs import (
     build_flat_lab_obs,
     incremental_flat_lab_obs,
@@ -66,52 +73,47 @@ class PipelineRunner:
         self,
         spark: SparkSession,
         storage_root: str,
-        versioned: bool = False,
         partitioned: bool = False,
-        manifest: bool = False,
+        manifest: bool | None = None,
         keep_snapshots: int = 1,
     ):
-        """``versioned=True`` stores every target as a VersionedTable
-        (sources/versioned.py): each run commits a new immutable version
-        behind an atomic manifest swap — snapshot isolation for
-        concurrent readers plus time travel over past sync states — at
-        the cost of keeping old versions until ``vacuum``.  The default
-        swap layout keeps only the latest state.
+        """Two layouts, one per table shape.
 
-        ``partitioned=True`` lays the large targets out hive-style under
-        ``p_month=YYYY-MM`` directories (derived from the encounter
-        datetime) so date-range consumers get PARTITION PRUNING — at
-        100 TB a month-window query then opens ~1/N of the files instead
-        of relying on row-group stats alone.  Within each month
-        directory files stay clustered+sorted on the PK (the shuffle key
-        is (p_month, pk), so no task writes into more than one month
-        directory).  ``read_target`` drops the synthetic ``p_month`` so
-        the incremental plans see the exact stage schema; date-range
-        consumers read the path directly with a ``p_month`` filter.
+        The default (plain) layout keeps only the latest state of each
+        target: every write stages the whole table and promotes it with
+        one rename-aside swap.
 
-        ``manifest=True`` (requires ``partitioned=True``; r10, VERDICT
-        r9 item 1) makes a month's content a FILE LIST in an atomic
-        ``_snapshot.json`` instead of a directory listing: data files
-        land in immutable hidden epoch directories (``_e{N}``), a
-        file-level delta's untouched files are carried forward as
-        MANIFEST ENTRIES (zero data-file renames, links, or copies —
-        the object-store story: S3/GCS/ABFS have no hardlinks and a
-        rename is a full physical copy there), and the swap is ONE
-        snapshot pointer flip (``os.replace`` locally; a single-key
-        conditional PUT on an object store).  Replaced files are
-        garbage-collected after the flip.  Trade-off, same as
+        ``partitioned=True`` is the manifest layout.  The large targets
+        are clustered by ``p_month=YYYY-MM`` (month of the encounter
+        datetime) and PK-range-sorted within each month, but a month's
+        content is a FILE LIST in an atomic ``_snapshot.json``, not a
+        directory listing: data files land in immutable hidden epoch
+        directories (``_e{N}``), a file-level delta's untouched files
+        are carried forward as MANIFEST ENTRIES (zero data-file renames,
+        links, or copies — the object-store story: S3/GCS/ABFS have no
+        hardlinks and a rename is a full physical copy there), and the
+        swap is ONE snapshot pointer flip (``os.replace`` locally; a
+        single-key conditional PUT on an object store).  Replaced files
+        are garbage-collected after the flip.  Trade-off, same as
         Delta/Iceberg: readers go through ``read_target``/
-        ``read_target_months`` — a raw ``spark.read.parquet(path)``
-        sees NO data (hidden epoch dirs are skipped by Spark's
-        listing), fail-safe rather than silently stale/duplicated.
-        Unpartitioned targets (flat_latest_hiv_summary) route through
+        ``read_target_months`` — a raw ``spark.read.parquet(path)`` sees
+        NO data (hidden epoch dirs are skipped by Spark's listing),
+        fail-safe rather than silently stale/duplicated.
+        ``read_target_months`` selects a month window's exact file
+        lists, so date-range consumers open ~1/N of the files.  The
+        unpartitioned target (flat_latest_hiv_summary) routes through
         VersionedTable — the same manifest discipline, already
         crash-pinned (sources/versioned.py).
 
-        ``keep_snapshots`` (manifest mode): how many recent snapshots'
-        files survive GC (default 1 = only the live one, swap-layout
-        semantics).  With N > 1 a concurrent reader holding a snapshot
-        up to N-1 flips old never loses files mid-job — the
+        ``manifest`` selects nothing: it is accepted for callers written
+        when the manifest layout was a separate switch, and must agree
+        with ``partitioned`` when given (``manifest=True`` alone, or
+        ``manifest=False`` with ``partitioned=True``, raises).
+
+        ``keep_snapshots`` (partitioned layout): how many recent
+        snapshots' files survive GC (default 1 = only the live one,
+        swap-layout semantics).  With N > 1 a concurrent reader holding
+        a snapshot up to N-1 flips old never loses files mid-job — the
         snapshot-isolation knob the immediate-GC contract lacks — and
         ``read_target_at(table, epoch)`` time-travels to any retained
         snapshot.  Each flip records its content as
@@ -126,27 +128,20 @@ class PipelineRunner:
         the hot pointer stays one small PUT at any table size, an
         untouched month's manifest carries forward by NAME, and GC
         treats manifest files exactly like the data they reference."""
+        if manifest is not None and bool(manifest) != bool(partitioned):
+            raise ValueError(
+                "manifest is the partitioned layout, not a separate "
+                "switch: pass partitioned=True (manifest=True is "
+                "accepted alongside it, manifest=False is not)"
+            )
         self.spark = spark
         self.root = storage_root
-        self.versioned = versioned
         self.partitioned = partitioned
-        self.manifest = manifest
         self.keep_snapshots = max(1, int(keep_snapshots))
-        # content-addressed per-month manifest cache (manifest split
-        # mode): a _man_ file's NAME commits to its content, so an
-        # entry can never go stale — see _resolve_man_months
+        # content-addressed per-month manifest cache: a _man_ file's
+        # NAME commits to its content, so an entry can never go stale —
+        # see _resolve_man_months
         self._man_cache: dict[str, list[str]] = {}
-        if versioned and partitioned:
-            raise ValueError(
-                "versioned and partitioned layouts are mutually exclusive "
-                "(the manifest writer commits unpartitioned snapshots)"
-            )
-        if manifest and not partitioned:
-            raise ValueError(
-                "manifest layout is a mode of the partitioned layout "
-                "(pass partitioned=True); for unpartitioned manifest "
-                "storage use versioned=True"
-            )
         os.makedirs(storage_root, exist_ok=True)
         self.watermarks = WatermarkStore(
             spark, os.path.join(storage_root, "flat_log.parquet")
@@ -164,15 +159,13 @@ class PipelineRunner:
 
     def _recover_fs(self, table: str) -> bool:
         """Crash-window filesystem recovery for a target, WITHOUT
-        reading any data: promote a demoted ``.old`` whole table and
-        rescue ``_old.M`` month directories.  Returns True when the
-        live path exists afterwards.  Every skip decision must route
-        through this (not a bare existence test): a stage left demoted
-        by a crashed swap would otherwise stay invisible to external
-        path readers across arbitrarily many skipping syncs."""
-        if self.versioned:
-            return self._versioned(table).version() >= 0
-        if self.manifest:
+        reading any data: promote a demoted ``.old`` whole table.
+        Returns True when the live target exists afterwards.  Every
+        skip decision must route through this (not a bare existence
+        test): a stage left demoted by a crashed swap would otherwise
+        stay invisible to external path readers across arbitrarily many
+        skipping syncs."""
+        if self.partitioned:
             if table not in self._PARTITION_SRC:
                 return self._versioned(table).version() >= 0
             # The snapshot flip is atomic: whatever pointer is on disk
@@ -181,71 +174,26 @@ class PipelineRunner:
             # are invisible to manifest readers and GC'd at the next
             # write.
             return self._load_manifest(table) is not None
-        path = self._path(table)
-        old = path + ".old"
-        if not os.path.exists(path) and os.path.exists(old):
-            # _write crashed inside its demote->promote window (old moved
-            # aside, tmp not yet promoted): recover the previous table so
-            # the next run is an incremental, not a silent cold rebuild.
-            os.replace(old, path)
-        if not os.path.exists(path):
-            return False
-        if self.partitioned:
-            # Rescue months orphaned by a _write_months crash: the swap
-            # demotes p_month=M to _old.M (underscore prefix => invisible
-            # to Spark's partition discovery) before promoting the new
-            # directory.  A crash in that window leaves the month only at
-            # _old.M — restore it.  The watermark is logged strictly
-            # after a fully-successful write, so a restored-then-stale
-            # month is simply re-synced by the next run (idempotent
-            # delete+reaggregate), never silently lost.
-            for entry in os.listdir(path):
-                if entry.startswith(self._OLD_PREFIX):
-                    dst = os.path.join(
-                        path,
-                        f"{self.PARTITION_COL}="
-                        + entry[len(self._OLD_PREFIX):],
-                    )
-                    if not os.path.exists(dst):
-                        os.replace(os.path.join(path, entry), dst)
-                    else:
-                        # dst present => that month's swap COMPLETED
-                        # (demote happens strictly before promote); the
-                        # leftover demoted copy is a crash artifact from
-                        # the post-promote cleanup window — drop it so
-                        # it can't linger forever on never-rewritten
-                        # months.
-                        shutil.rmtree(
-                            os.path.join(path, entry), ignore_errors=True
-                        )
-        return True
+        # _write crashed inside its demote->promote window (old moved
+        # aside, tmp not yet promoted): recover the previous table so
+        # the next run is an incremental, not a silent cold rebuild.
+        rescue_orphan(self._path(table))
+        return os.path.exists(self._path(table))
 
     def read_target(self, table: str) -> DataFrame | None:
-        if self.versioned:
-            vt = self._versioned(table)
-            return None if vt.version() < 0 else vt.read(self.spark)
-        if self.manifest:
+        if self.partitioned:
             if table not in self._PARTITION_SRC:
                 vt = self._versioned(table)
                 return None if vt.version() < 0 else vt.read(self.spark)
             files = self._manifest_files(table)
             # zero-month snapshot reads as cold (no schema to serve);
-            # the next run rebuilds — same convergence as dir mode's
-            # empty-directory failure, without the reader crash
+            # the next run rebuilds
             return (
                 self.spark.read.parquet(*files) if files else None
             )
         if not self._recover_fs(table):
             return None
-        path = self._path(table)
-        df = self.spark.read.parquet(path)
-        if self.partitioned and self.PARTITION_COL in df.columns:
-            # Incremental plans expect the exact stage schema; the
-            # synthetic partition column is a storage-layout detail.
-            # Date-range consumers should read the path directly and
-            # filter on p_month to get partition pruning.
-            df = df.drop(self.PARTITION_COL)
-        return df
+        return self.spark.read.parquet(self._path(table))
 
     # PK per target: writes are repartitioned + sorted on it, so parquet
     # row-group min/max statistics prune key probes (the engine's stand-in
@@ -272,9 +220,9 @@ class PipelineRunner:
         "flat_latest_hiv_summary": ["person_id"],
     }
 
-    # Hive partition column per large target (partitioned=True): month of
-    # the row's clinical datetime.  Month granularity keeps directory
-    # cardinality bounded (years of data -> tens of partitions) while
+    # Partition column per large target (partitioned=True): month of
+    # the row's clinical datetime.  Month granularity keeps the snapshot's
+    # month count bounded (years of data -> tens of months) while
     # matching the dominant consumer predicate (date-range reports).
     # flat_latest_hiv_summary stays unpartitioned: a small latest-state
     # per-patient table with no date-range access pattern.
@@ -285,15 +233,13 @@ class PipelineRunner:
         "flat_visit_summary": "encounter_datetime",
     }
     PARTITION_COL = "p_month"
-    # Demoted month directories during a partial swap: the underscore
-    # prefix keeps them invisible to Spark's partition discovery (hidden
-    # path rule), unlike a 'p_month=M.old' name, which discovery would
-    # read back as a phantom partition VALUE 'M.old'.
+    # Demoted month directories of the retired directory layout (the
+    # migration sweep in _write_manifest_full removes them).
     _OLD_PREFIX = "_old."
     # Delta-scoped writes stop paying off when the delta touches most of
-    # the target anyway: past this fraction of month directories the
-    # single-pass full rewrite (one job, one atomic swap) wins over
-    # per-directory swaps, so fall back.
+    # the target anyway: past this fraction of months the single-pass
+    # full rewrite (one job, one flip) wins over a month-scoped one, so
+    # fall back.
     _DELTA_WRITE_MAX_FRACTION = 0.5
 
     # Latest-summary analogue: past this fraction of the latest table's
@@ -302,7 +248,7 @@ class PipelineRunner:
     _LATEST_MERGE_MAX_FRACTION = 0.5
 
     # Per-month [min, max] key bounds, recorded at write time so the
-    # sync's phase-1 retraction probe opens only the month directories
+    # sync's phase-1 retraction probe opens only the months
     # whose range can contain a changed key — the partitioned-layout
     # lift of VersionedTable.merge_delta's per-file accounting
     # (sources/versioned.py:236-252) and the engine's stand-in for the
@@ -400,11 +346,10 @@ class PipelineRunner:
     # the scan.
     _PROBE_ISIN_MAX = 64
 
-    # Underscore prefix: invisible to Spark's file discovery, like the
-    # demoted _old.M directories.
+    # Underscore prefix: invisible to Spark's file discovery.
     _BOUNDS_FILE = "_month_bounds.json"
     _BLOOMS_FILE = "_month_blooms.bin"
-    # Manifest layout (manifest=True): the snapshot pointer and the
+    # Partitioned (manifest) layout: the snapshot pointer and the
     # hidden epoch-directory prefix.  Underscore prefixes keep all of
     # them invisible to Spark's file listing — a raw path reader sees
     # an empty table, never a cross-epoch union.
@@ -426,7 +371,7 @@ class PipelineRunner:
     _MAN_PREFIX = "_man_"
 
     # Optional cap on rows per data file (Spark maxRecordsPerFile).
-    # Within a month directory rows are RANGE-partitioned and sorted on
+    # Within a month rows are RANGE-partitioned and sorted on
     # the PK (see _write), so a FULL-month write produces contiguous,
     # DISJOINT per-file key ranges — the property that makes file-level
     # delta PRUNING effective (correctness rests on exact bounds + the
@@ -453,35 +398,22 @@ class PipelineRunner:
     def read_target_months(
         self, table: str, months: list[str]
     ) -> DataFrame:
-        """The target restricted to the given storage months, with the
-        month predicate applied ON THE PHYSICAL PARTITION COLUMN so
-        Spark's planning-time partition pruning opens only those
-        directories — the read-side complement of the delta-scoped
-        write (at 100 TB this is what makes a sync O(delta months) end
-        to end instead of an O(target) scan feeding an O(delta)
-        write).  Manifest mode selects the months' exact file lists
-        from the snapshot — same pruning, zero directory listing."""
-        if self.manifest:
-            sel = self._manifest_files(table, months) if months else []
-            if sel:
-                return self.spark.read.parquet(*sel)
-            # no candidate months (or months absent from the snapshot):
-            # an empty frame with the target schema keeps downstream
-            # joins well-typed — read one live file's schema, no rows
-            all_files = self._manifest_files(table)
-            return (
-                self.spark.read.parquet(*all_files[:1])
-                .filter(F.lit(False))
-            )
-        df = self.spark.read.parquet(self._path(table))
-        if not months:
-            # No candidate months: nothing to read (and isin() with an
-            # empty list is invalid) — an empty frame with the target
-            # schema keeps downstream joins well-typed.
-            return df.filter(F.lit(False)).drop(self.PARTITION_COL)
-        return df.filter(
-            F.col(self.PARTITION_COL).isin(months)
-        ).drop(self.PARTITION_COL)
+        """The target restricted to the given storage months: the
+        months' exact file lists from the snapshot, so only those
+        files are opened — the read-side complement of the
+        delta-scoped write (at 100 TB this is what makes a sync
+        O(delta months) end to end instead of an O(target) scan
+        feeding an O(delta) write).  Partitioned layout only."""
+        sel = self._manifest_files(table, months) if months else []
+        if sel:
+            return self.spark.read.parquet(*sel)
+        # no candidate months (or months absent from the snapshot): an
+        # empty frame with the target schema keeps downstream joins
+        # well-typed — read one live file's schema, no rows
+        all_files = self._manifest_files(table)
+        return (
+            self.spark.read.parquet(*all_files[:1]).filter(F.lit(False))
+        )
 
     # ------------------------------------------------- month key bounds
 
@@ -592,7 +524,7 @@ class PipelineRunner:
     # is just a relpath kept in the new month list.  No data file is
     # ever renamed, linked, or copied after its initial write, so the
     # layout costs the same on a filesystem without hardlinks or cheap
-    # renames (monkeypatched-os.link pin: tests/test_manifest_layout.py).
+    # renames (no-hardlink pin: tests/test_manifest_layout.py).
 
     def _snapshot_path_dir(self, table_dir: str) -> str:
         return os.path.join(table_dir, self._SNAPSHOT_FILE)
@@ -1000,8 +932,8 @@ class PipelineRunner:
         """Record, as one atomic pointer, the epoch/version of every
         pipeline table AS THIS RUN COMMITTED IT — called by run()
         strictly after all stages (and the latest-summary table)
-        committed.  Manifest mode only: it is the layout with
-        retained-epoch reads; the other layouts keep the documented
+        committed.  Partitioned layout only: it is the layout with
+        retained-epoch reads; the plain layout keeps the documented
         self-healing contract instead.
 
         Sources, in precedence order (ADVICE r12): (1) the in-memory
@@ -1012,7 +944,7 @@ class PipelineRunner:
         skip by definition required no change to; (3) the live pointer
         (cold map / table never recorded — single-runner bootstrap,
         where live IS this run's state)."""
-        if not self.manifest:
+        if not self.partitioned:
             return
         committed = getattr(self, "_run_commit_map", None) or {}
         prev = self.pipeline_snapshot()
@@ -1328,7 +1260,7 @@ class PipelineRunner:
     def _rebase_file_entries(sidecar: dict, edir: str) -> None:
         """Rewrite a staged sidecar's per-file entry KEYS from bare
         filenames (what footer scanning yields) to relpaths from the
-        table root — manifest mode's file identity, so sidecar entries,
+        table root — the snapshot's file identity, so sidecar entries,
         manifest lists, touched sets, and carry maps all speak the same
         key."""
         ename = os.path.basename(edir)
@@ -1341,19 +1273,11 @@ class PipelineRunner:
                 }
 
     def _existing_months(self, table: str) -> list[str]:
-        """Storage months of the live table — manifest keys in manifest
-        mode (no directory listing: the snapshot IS the content
-        authority, and disk may hold not-yet-GC'd orphans), hive
-        directory names otherwise."""
-        if self.manifest:
-            man = self._load_manifest(table)
-            return sorted((man or {"months": {}})["months"])
-        path = self._path(table)
-        return sorted(
-            d.split("=", 1)[1]
-            for d in os.listdir(path)
-            if d.startswith(self.PARTITION_COL + "=")
-        )
+        """Storage months of the live table — the snapshot's keys (no
+        directory listing: the snapshot IS the content authority, and
+        disk may hold not-yet-GC'd orphans)."""
+        man = self._load_manifest(table)
+        return sorted((man or {"months": {}})["months"])
 
     def _compute_month_bounds(self, src, cols: dict) -> dict:
         """Exact per-month [min, max] of each bounds column over its
@@ -1669,19 +1593,12 @@ class PipelineRunner:
     ) -> dict:
         """Exact range + Bloom entries for ONE month of the live
         (post-swap) table, from a column-pruned scan of exactly its
-        current data files — the cadence re-tighten's read.  In
-        manifest mode ``file_names`` are snapshot relpaths; in dir mode
-        the month directory is read whole (its content just swapped to
-        exactly these files)."""
-        if self.manifest:
-            df = self.spark.read.parquet(
-                *[os.path.join(path, rp) for rp in file_names]
-            )
-        else:
-            df = self.spark.read.parquet(
-                os.path.join(path, f"{self.PARTITION_COL}={m}")
-            )
-        # direct partition-dir / leaf-file reads carry no p_month column
+        current data files — the cadence re-tighten's read.
+        ``file_names`` are snapshot relpaths."""
+        df = self.spark.read.parquet(
+            *[os.path.join(path, rp) for rp in file_names]
+        )
+        # leaf-file reads carry no p_month column
         df = df.withColumn(self.PARTITION_COL, F.lit(m))
         ent = dict(self._compute_month_bounds(df, bounds_cols).get(m, {}))
         for c in bloom_cols:
@@ -1817,10 +1734,10 @@ class PipelineRunner:
         bounds.  The closure range-joins the distinct probe keys against
         the broadcast per-month bounds (tens of rows), collects the
         candidate month list (bounded driver action), and returns the
-        target restricted to those directories via planning-time
-        partition pruning.  Months on disk with no recorded bounds for
-        the column are unconditionally candidates — pruning must only
-        ever drop months the bounds PROVE cannot hold a key."""
+        target restricted to those months' files (read_target_months).
+        Months in the snapshot with no recorded bounds for the column
+        are unconditionally candidates — pruning must only ever drop
+        months the bounds PROVE cannot hold a key."""
         cols = self._BOUNDS_COLS.get(table, ())
         bounds = self._load_bounds(table) if cols else None
         if bounds is None:
@@ -1902,7 +1819,7 @@ class PipelineRunner:
             out_df = self.read_target_months(table, sorted(cand))
             # Small-delta row-group skipping (the PERF.md "isin file
             # skipping" item): month pruning got the probe down to
-            # candidate DIRECTORIES; for a handful of keys, a pushed-
+            # candidate months' FILES; for a handful of keys, a pushed-
             # down In filter lets the PK-sorted row-group statistics
             # skip inside them too (session raises the parquet
             # inFilterThreshold accordingly).  Exact, not a superset
@@ -2030,12 +1947,12 @@ class PipelineRunner:
         affected month, which of its data files must be rewritten.
 
         Returns ``(touched, carry)`` — ``touched`` maps each month to
-        its set of filenames to rewrite, or None VALUE for a month
-        falling back to the whole-directory rewrite (sidecar
-        missing/stale for it); months absent from the map have no
-        on-disk directory (new months, nothing to carry).  ``carry``
-        maps file-level months to the untouched {filename: [lo, hi,
-        n]} entries to hardlink forward.  Returns None OUTRIGHT when
+        its set of file relpaths to rewrite, or None VALUE for a month
+        falling back to the whole-month rewrite (sidecar missing/stale
+        for it); months absent from the map are not in the snapshot
+        (new months, nothing to carry).  ``carry`` maps file-level
+        months to the untouched {relpath: [lo, hi, n]} entries to carry
+        forward as manifest entries.  Returns None OUTRIGHT when
         file-level accounting is unavailable (plan provides no
         changed-key superset, or no month has usable file entries) and
         the caller keeps today's month-grain path.
@@ -2066,12 +1983,7 @@ class PipelineRunner:
             return None
         pk = self._CLUSTER_BY[table][0]
         bounds = self._load_bounds(table) or {}
-        path = self._path(table)
-        man_months = (
-            (self._load_manifest(table) or {"months": {}})["months"]
-            if self.manifest
-            else None
-        )
+        man_months = (self._load_manifest(table) or {"months": {}})["months"]
         sentinel = dict(self._BOUNDS_COLS.get(table, {})).get(pk)
         synth_months: set = set()
         sm = out.get("synthetic_delta_months")
@@ -2081,20 +1993,9 @@ class PipelineRunner:
         plan_map: dict = {}
         file_rows: list = []
         for m in months:
-            if man_months is not None:
-                live = man_months.get(m)
-                if live is None:
-                    continue  # new month: all rows staged fresh
-            else:
-                mdir = os.path.join(path, f"{self.PARTITION_COL}={m}")
-                if not os.path.isdir(mdir):
-                    continue  # new month: all rows staged fresh
-                live = sorted(
-                    f
-                    for f in os.listdir(mdir)
-                    if f.endswith(".parquet")
-                    and not f.startswith(("_", "."))
-                )
+            live = man_months.get(m)
+            if live is None:
+                continue  # new month: all rows staged fresh
             ent = bounds.get(m, {}).get("files")
             if ent is None or sorted(ent) != sorted(live):
                 # pre-file-entry table, crash-widened sidecar, or any
@@ -2152,36 +2053,19 @@ class PipelineRunner:
         self, table: str, months: list[str], touched: dict
     ) -> DataFrame:
         """The target restricted to the touched FILES of the affected
-        months (whole directories / full month lists for months whose
-        file accounting fell back) — the read-side half of the per-file
-        cost model: phase 2 neither reads nor rewrites a carried
-        file."""
+        months (full month lists for months whose file accounting fell
+        back) — the read-side half of the per-file cost model: phase 2
+        neither reads nor rewrites a carried file."""
         path = self._path(table)
+        man = self._load_manifest(table) or {"months": {}}
         sel: list[str] = []
-        if self.manifest:
-            man = self._load_manifest(table) or {"months": {}}
-            for m, t in touched.items():
-                names = (
-                    man["months"].get(m, ()) if t is None else sorted(t)
-                )
-                sel += [os.path.join(path, rp) for rp in names]
-            if not sel:
-                return self.read_target_months(table, [])
-            # explicit leaf files: no partition inference, no p_month
-            return self.spark.read.parquet(*sel)
         for m, t in touched.items():
-            mdir = os.path.join(path, f"{self.PARTITION_COL}={m}")
-            if t is None:
-                sel.append(mdir)
-            else:
-                sel += [os.path.join(mdir, f) for f in sorted(t)]
+            names = man["months"].get(m, ()) if t is None else sorted(t)
+            sel += [os.path.join(path, rp) for rp in names]
         if not sel:
             return self.read_target_months(table, [])
-        return (
-            self.spark.read.option("basePath", path)
-            .parquet(*sel)
-            .drop(self.PARTITION_COL)
-        )
+        # explicit leaf files: no partition inference, no p_month
+        return self.spark.read.parquet(*sel)
 
     def _merge_latest_summary(self, vs: DataFrame, queue: DataFrame) -> bool:
         """Incremental flat_latest_hiv_summary (r10; measured: the
@@ -2200,11 +2084,11 @@ class PipelineRunner:
         person is purged from visit_summary without entering the
         queue, so only the fingerprint-gated path may reach here.
 
-        Write cost: under versioned/manifest layouts this is
+        Write cost: under the partitioned layout this is
         VersionedTable.merge_delta — O(files holding queued persons),
         the person-clustered layout makes those ranges tight; the
-        plain directory layout still swaps the whole (small) table but
-        skips the full-table window+aggregate recompute.  The read of
+        plain layout still swaps the whole (small) table but skips the
+        full-table window+aggregate recompute.  The read of
         visit_summary is person-probe pruned (Bloom/bounds sidecar)
         to the months that can hold a queued person.  Reference cost
         model being replaced: flat_latest_hiv_summary_v1.0.sql:21-37
@@ -2215,14 +2099,14 @@ class PipelineRunner:
         _LATEST_MERGE_MAX_FRACTION of the table's persons, one window
         over everything beats per-person merge + delete — the latest
         analogue of _DELTA_WRITE_MAX_FRACTION.  The row count comes
-        free from the VersionedTable manifest; the directory layout
-        pays one count of the (small) table."""
+        free from the VersionedTable manifest; the plain layout pays
+        one count of the (small) table."""
         table = "flat_latest_hiv_summary"
         keys = queue.select("person_id").distinct()
         n_queue = keys.count()
         if n_queue == 0:
             return True  # empty queue: latest state already consistent
-        if self.versioned or self.manifest:
+        if self.partitioned:
             vt = self._versioned(table)
             ent = vt._entry(vt.version()) or {}
             n_latest = ent.get("rows")
@@ -2239,19 +2123,18 @@ class PipelineRunner:
             src.join(keys, "person_id", "left_semi")
         )
         pk = self._CLUSTER_BY[table]
-        if self.versioned or self.manifest:
+        if self.partitioned:
             delta = delta.repartition(*pk).sortWithinPartitions(*pk)
             vt = self._versioned(table)
             self._record_run_commit(table, vt.merge_delta(
                 self.spark, delta, keys=pk,
                 note=f"{table} queue merge", delete_keys=keys,
             ))
-            if self.manifest:
-                # honor the runner's retention window exactly like the
-                # partitioned flip's GC does (review finding r10: a
-                # hard-coded keep_last=1 silently broke keep_snapshots
-                # and read_target_at for the unpartitioned table)
-                vt.vacuum(keep_last=self.keep_snapshots)
+            # honor the runner's retention window exactly like the
+            # partitioned flip's GC does (review finding r10: a
+            # hard-coded keep_last=1 silently broke keep_snapshots and
+            # read_target_at for the unpartitioned table)
+            vt.vacuum(keep_last=self.keep_snapshots)
             return True
         from mrsboraetl_spark.operators.upsert import anti_delete
 
@@ -2263,8 +2146,8 @@ class PipelineRunner:
 
     def _pin_commit_parent(self, table: str) -> int | None:
         """The live commit parent of ``table`` — manifest raw-pointer
-        epoch or versioned version — captured at PLAN time, i.e. before
-        read_target pins the plan base (ADVICE r12, medium).  The old
+        epoch or VersionedTable version — captured at PLAN time, i.e.
+        before read_target pins the plan base (ADVICE r12, medium).  The old
         spelling captured the CAS parent inside _write/_write_delta when
         STAGING began: a concurrent commit landing during the plan/probe
         phase (the longest part of a sync) advanced the pointer first,
@@ -2274,124 +2157,90 @@ class PipelineRunner:
         the plan base is read closes that window from the safe side: a
         commit between the pin and read_target makes the plan actually
         CURRENT yet the flip still raises, costing one spurious (safe,
-        idempotent) retry.  None for the plain directory layout, which
-        has no CAS (documented single-runner contract)."""
-        part_src = (
-            self._PARTITION_SRC.get(table) if self.partitioned else None
-        )
-        if self.versioned or (self.manifest and not part_src):
+        idempotent) retry.  None for the plain layout, which has no CAS
+        (documented single-runner contract)."""
+        if not self.partitioned:
+            return None
+        if table not in self._PARTITION_SRC:
             return self._versioned(table).version()
-        if self.manifest:
-            return self._raw_pointer_epoch(self._path(table))
-        return None
+        return self._raw_pointer_epoch(self._path(table))
 
     def _write(
         self, df: DataFrame, table: str, parent: int | None = None
     ) -> None:
-        """Full write: cluster, stage, atomic whole-table swap.
+        """Full write: cluster, stage, publish — one rename-aside swap
+        (plain layout) or one snapshot flip (partitioned layout).
         ``parent``: plan-time commit parent from _pin_commit_parent —
         threaded into the layout's CAS so a commit that landed during
         the caller's plan phase raises instead of being overwritten;
         None keeps the capture-at-staging behavior for callers outside
         the optimistic-retry loop."""
         pk = self._CLUSTER_BY.get(table)
-        part_src = self._PARTITION_SRC.get(table) if self.partitioned else None
+        if not self.partitioned:
+            if pk:
+                df = df.repartition(*pk).sortWithinPartitions(*pk)
+            tmp = self._path(table) + ".tmp"
+            writer = df.write.mode("overwrite")
+            if self._TARGET_FILE_ROWS:
+                writer = writer.option(
+                    "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
+                )
+            writer.parquet(tmp)
+            # A crash inside the swap leaves the previous table intact
+            # at `.old`; _recover_fs restores it.
+            swap_in(tmp, self._path(table))
+            return
+        part_src = self._PARTITION_SRC.get(table)
         if part_src:
             from mrsboraetl_spark.schemas import p_month_of
 
             df = df.withColumn(self.PARTITION_COL, p_month_of(part_src))
             # RANGE-shuffle on (month, pk) — r9: each output partition
             # covers a contiguous (month, pk) span, so within a month
-            # directory the files carry DISJOINT pk ranges (recorded in
-            # the sidecar's per-file entries).  A hash shuffle would
-            # give every file ~the month's whole range and file-level
-            # delta pruning could never drop one.  Rows stay pk-sorted
-            # within each file for row-group statistics; a boundary
-            # partition straddling two months still writes one file per
-            # month (partitionBy splits on the partition value).
+            # the files carry DISJOINT pk ranges (recorded in the
+            # sidecar's per-file entries).  A hash shuffle would give
+            # every file ~the month's whole range and file-level delta
+            # pruning could never drop one.  Rows stay pk-sorted within
+            # each file for row-group statistics; a boundary partition
+            # straddling two months still writes one file per month
+            # (partitionBy splits on the partition value).
             df = df.repartitionByRange(
                 self.PARTITION_COL, *pk
             ).sortWithinPartitions(self.PARTITION_COL, *pk)
-        elif pk:
+            self._write_manifest_full(df, table, pk[0], parent_epoch=parent)
+            return
+        # unpartitioned target: VersionedTable IS the manifest layout
+        # for the whole-table case — commit + retain the runner's
+        # snapshot window (keep_snapshots=1 default = swap-layout
+        # semantics; review finding r10).  stats_key + bounded file
+        # grain: merge_delta's per-file pruning and reuse need per-file
+        # key ranges and more than one file to exist (an AQE-coalesced
+        # small table would otherwise land whole in a single file).
+        if pk:
             df = df.repartition(*pk).sortWithinPartitions(*pk)
-        if self.versioned:
-            # stats_key + bounded file grain: merge_delta's per-file
-            # pruning and reuse need per-file key ranges and more than
-            # one file to exist (an AQE-coalesced small table would
-            # otherwise land whole in a single file)
-            self._record_run_commit(table, self._versioned(table).commit(
-                df, note=table, stats_key=pk[0] if pk else None,
-                max_records_per_file=self._TARGET_FILE_ROWS or None,
-                parent_version=parent,
-                retries=0 if parent is not None else None,
-            ))
-            return
-        if self.manifest:
-            if part_src:
-                self._write_manifest_full(
-                    df, table, pk[0], parent_epoch=parent
-                )
-            else:
-                # unpartitioned target: VersionedTable IS the manifest
-                # layout for the whole-table case — commit + retain the
-                # runner's snapshot window (keep_snapshots=1 default =
-                # swap-layout semantics; review finding r10)
-                vt = self._versioned(table)
-                self._record_run_commit(table, vt.commit(
-                    df, note=table, stats_key=pk[0] if pk else None,
-                    max_records_per_file=self._TARGET_FILE_ROWS or None,
-                    parent_version=parent,
-                    retries=0 if parent is not None else None,
-                ))
-                vt.vacuum(keep_last=self.keep_snapshots)
-            return
-        path, tmp = self._path(table), self._path(table) + ".tmp"
-        old = path + ".old"
-        writer = df.write.mode("overwrite")
-        if part_src:
-            writer = writer.partitionBy(self.PARTITION_COL)
-        if self._TARGET_FILE_ROWS:
-            writer = writer.option(
-                "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
-            )
-        writer.parquet(tmp)
-        bounds_cols = self._BOUNDS_COLS.get(table, ()) if part_src else ()
-        if bounds_cols:
-            # Exact bounds + Blooms + per-file pk entries, staged
-            # INSIDE tmp so the swap below carries data + sidecar
-            # atomically.
-            self._write_bounds(
-                tmp,
-                self._compute_month_sidecar(
-                    tmp, bounds_cols, self._BLOOM_COLS.get(table, ()),
-                    pk=pk[0],
-                ),
-            )
-        # Promote via rename-aside: demote old -> promote tmp -> drop old.
-        # A crash between the two os.replace calls leaves nothing at `path`
-        # but the previous table intact at `.old`; read_target recovers it.
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(path):
-            os.replace(path, old)
-        os.replace(tmp, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        vt = self._versioned(table)
+        self._record_run_commit(table, vt.commit(
+            df, note=table, stats_key=pk[0] if pk else None,
+            max_records_per_file=self._TARGET_FILE_ROWS or None,
+            parent_version=parent,
+            retries=0 if parent is not None else None,
+        ))
+        vt.vacuum(keep_last=self.keep_snapshots)
 
     def _write_manifest_full(
         self, df: DataFrame, table: str, pk: str,
         parent_epoch: int | None = None,
     ) -> None:
-        """Full rewrite under the manifest layout: stage a complete new
-        epoch, flip the snapshot to it, GC everything older.  ``df`` is
-        already month-partitioned and PK-range-clustered by _write.
+        """Full rewrite under the partitioned layout: stage a complete
+        new epoch, flip the snapshot to it, GC everything older.  ``df``
+        is already month-partitioned and PK-range-clustered by _write.
 
         Sidecar discipline mirrors _write_months: WIDEN (old ∪ staged,
         file entries dropped for re-staged months) before the flip,
         EXACT after — a crash on either side of the flip leaves bounds
         that cover whichever content the live snapshot names.  The flip
-        itself is the only promotion step; there is no directory swap
-        and no crash window with partial content."""
+        itself is the only promotion step; there is no crash window
+        with partial content."""
         path = self._path(table)
         os.makedirs(path, exist_ok=True)
         man_old = self._load_manifest(table)  # loaded ONCE per write
@@ -2460,13 +2309,13 @@ class PipelineRunner:
             self._write_bounds(path, staged)
         # previous epochs are now unreferenced
         self._gc_epochs(table, man_new)
-        # Migration sweep (review finding r10): a table upgraded from
-        # the directory layout still holds its pre-manifest hive dirs
-        # (p_month=M live, _old.M demoted, *.tmp staging) — the flip
-        # just committed the complete new state, so they are stale
+        # Migration sweep (review finding r10): a table written by the
+        # retired directory layout still holds its pre-manifest hive
+        # dirs (p_month=M live, _old.M demoted) — the flip just
+        # committed the complete new state, so they are stale
         # duplicates that a raw path reader would otherwise silently
         # serve (breaking the advertised fail-safe) and that double
-        # storage forever.  Manifest mode never writes these names.
+        # storage forever.  No writer produces these names any more.
         for entry in os.listdir(path):
             if entry.startswith(
                 (self.PARTITION_COL + "=", self._OLD_PREFIX)
@@ -2479,10 +2328,10 @@ class PipelineRunner:
     ) -> None:
         """Delta-scoped write: ``df`` is the merged state of the
         affected months only (restricted to the TOUCHED files when the
-        file-level path is active); cluster it and swap just those
-        directories (see _write_months for the crash contract).
-        ``carry``: {month: {filename: [lo, hi, n]}} of untouched files
-        to carry forward by hardlink into the staged swap.
+        file-level path is active); cluster it and publish just those
+        months (see _write_months for the crash contract).
+        ``carry``: {month: {relpath: [lo, hi, n]}} of untouched files
+        to carry forward as manifest entries.
         ``parent``: plan-time CAS parent (see _pin_commit_parent)."""
         from mrsboraetl_spark.schemas import p_month_of
 
@@ -2492,96 +2341,80 @@ class PipelineRunner:
             df.withColumn(self.PARTITION_COL, p_month_of(part_src))
             # The plans' superset contract puts every merged row in an
             # affected month; the filter pins the staged write to the
-            # exact swap set (rows outside it could never be promoted).
+            # exact publish set (rows outside it could never be named).
             .filter(F.col(self.PARTITION_COL).isin(months))
             # Same range layout as _write: disjoint per-file pk ranges
             .repartitionByRange(self.PARTITION_COL, *pk)
             .sortWithinPartitions(self.PARTITION_COL, *pk)
         )
         self._write_months(
-            delta, self._path(table), months,
+            delta, table, months,
             bounds_cols=self._BOUNDS_COLS.get(table, ()),
             bloom_cols=self._BLOOM_COLS.get(table, ()),
             pk=pk[0],
             carry=carry,
-            table=table,
             parent_epoch=parent,
         )
 
     def _write_months(
-        self, df: DataFrame, path: str, months: list[str],
+        self, df: DataFrame, table: str, months: list[str],
         bounds_cols=(), bloom_cols=(), pk=None, carry=None,
-        table: str | None = None, parent_epoch: int | None = None,
+        parent_epoch: int | None = None,
     ) -> None:
-        """Rewrite ONLY the given ``p_month`` directories of an existing
-        partitioned target from ``df`` (already filtered to those months,
-        month-partitioned and PK-sorted by _write).
+        """Rewrite ONLY the given months of an existing partitioned
+        target from ``df`` (already filtered to those months,
+        month-partitioned and PK-sorted by _write_delta).
 
         An empty ``months`` list means the sync changed nothing: skip
-        the write entirely (zero write I/O for a no-op sync).  Months
-        staged with no surviving rows have their directory deleted.
-        Each directory swap is individually crash-safe (demote to
-        _old.M -> promote staged -> drop _old.M; read_target restores
-        an orphaned _old.M); the sequence as a whole is converged by
-        the next sync, since the watermark only advances after every
-        swap completed.
+        the write entirely (zero write I/O for a no-op sync).  The
+        new epoch is staged in a uniquely named hidden directory; ONE
+        atomic snapshot flip then publishes it: carried relpaths join
+        the freshly staged ones in the new month lists, untouched
+        months keep their entries verbatim, and months with neither
+        staged rows nor carry are dropped.  Replaced files are GC'd
+        after the flip.  A crash before the flip leaves the previous
+        snapshot live and the staging an orphan.
 
         Bounds sidecar discipline (``bounds_cols``): WIDEN before the
-        swaps (old ∪ staged per rewritten month), EXACT after them.  A
-        crash anywhere inside the swap window therefore leaves bounds
-        that cover both the old and the new content of every month —
-        the superset invariant _make_probe_reader's pruning relies on;
-        a missed month here would be a silently-unretracted row
-        forever.  Looseness from an interrupted sync is repaired by the
-        exact pass of the next successful one.
+        flip (old ∪ staged per rewritten month), EXACT after it.  A
+        crash on either side of the flip therefore leaves bounds that
+        cover both the old and the new content of every month — the
+        superset invariant _make_probe_reader's pruning relies on; a
+        missed month here would be a silently-unretracted row forever.
+        Looseness from an interrupted sync is repaired by the exact
+        pass of the next successful one.
 
-        File-level carry (r9, ``carry``): the staged month directory is
-        assembled as freshly-written files PLUS hardlinks of the
-        untouched files from the live directory — write I/O scales with
-        touched FILES, the month swap stays the unit of atomicity (no
-        new crash windows).  For carried months the widen pass DROPS
-        the "files" entries (a crash leaves the directory version
+        File-level carry (r9, ``carry``): the carry is PURE METADATA —
+        untouched files' relpaths stay in the new month lists (no
+        hardlink, no copy: the object-store-safe form) — so write I/O
+        scales with touched FILES.  For carried months the widen pass
+        DROPS the "files" entries (a crash leaves the month's file list
         unknown — stale per-file bounds must not survive into the next
         sync's touched-file computation; that sync month-grain-rewrites
         instead, conservative) and the final pass records carried ∪
         staged file entries with month ranges/Blooms kept WIDENED (the
         carried files' exact population is deliberately never re-read;
-        exactness returns at the next full-month rewrite).
-
-        Manifest layout (r10): same staging and identical sidecar
-        discipline, but the carry is PURE METADATA — untouched files'
-        relpaths stay in the new snapshot's month lists (no hardlink,
-        no copy: the object-store-safe form) — and the per-month
-        directory swaps collapse into ONE atomic snapshot flip, after
-        which replaced files are GC'd."""
+        exactness returns at the next full-month rewrite)."""
         if not months:
             return
         carry = carry or {}
-        man_old: dict | None = None
-        if self.manifest:
-            # test-only direct callers pass path without table; the
-            # production caller (_write_delta) threads the name through
-            if table is None:
-                table = os.path.basename(path)[: -len(".parquet")]
-            # content authority while staging: the CURRENT snapshot,
-            # loaded once per write.  Staging dirs are uniquely named
-            # (_e{N}_{uuid}): crashed or concurrent attempts of the
-            # same epoch never collide; post-flip GC sweeps orphans.
-            man_old = self._load_manifest(table)
-            # CAS parent: the caller's plan-time pin when given (ADVICE
-            # r12, medium), else captured here; raw-pointer fallback
-            # keeps the heal flip of an unresolvable snapshot possible
-            # (ADVICE r11, high — see _raw_pointer_epoch)
-            if parent_epoch is None:
-                parent_epoch = (
-                    int(man_old["epoch"]) if man_old
-                    else self._raw_pointer_epoch(path)
-                )
-            epoch, tmp = self._next_epoch_dir(table, man_old)
-        else:
-            tmp = path + ".delta-tmp"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
+        path = self._path(table)
+        # content authority while staging: the CURRENT snapshot, loaded
+        # once per write.  Staging dirs are uniquely named
+        # (_e{N}_{uuid}): crashed or concurrent attempts of the same
+        # epoch never collide; post-flip GC sweeps orphans.
+        man_old = self._load_manifest(table)
+        live_months = (man_old or {"months": {}})["months"]
+        # CAS parent: the caller's plan-time pin when given (ADVICE
+        # r12, medium), else captured here; raw-pointer fallback keeps
+        # the heal flip of an unresolvable snapshot possible (ADVICE
+        # r11, high — see _raw_pointer_epoch)
+        if parent_epoch is None:
+            parent_epoch = (
+                int(man_old["epoch"]) if man_old
+                else self._raw_pointer_epoch(path)
+            )
+        epoch, tmp = self._next_epoch_dir(table, man_old)
         writer = df.write.mode("overwrite").partitionBy(self.PARTITION_COL)
         if self._TARGET_FILE_ROWS:
             writer = writer.option(
@@ -2594,22 +2427,15 @@ class PipelineRunner:
             staged_bounds = self._compute_month_sidecar(
                 tmp, bounds_cols, bloom_cols, pk=pk
             )
-            if self.manifest:
-                self._rebase_file_entries(staged_bounds, tmp)
+            self._rebase_file_entries(staged_bounds, tmp)
             old_bounds = self._load_sidecar_dir(path) or {}
             widened = dict(old_bounds)
             for m in months:
                 if m in staged_bounds:
-                    if old_bounds.get(m) is None and (
-                        m in (man_old or {"months": {}})["months"]
-                        if self.manifest
-                        else os.path.isdir(os.path.join(
-                            path, f"{self.PARTITION_COL}={m}"
-                        ))
-                    ):
+                    if old_bounds.get(m) is None and m in live_months:
                         # pre-bounds upgrade month (live data, no
                         # recorded entry): recording the staged tight
-                        # ranges before the swap could prune the old
+                        # ranges before the flip could prune the old
                         # rows out of a recovery sync's probe — omit;
                         # no entry = unconditional candidate (review
                         # finding r10)
@@ -2623,87 +2449,32 @@ class PipelineRunner:
                 elif carry.get(m):
                     # pure-carry month (all staged rows deleted, some
                     # files untouched): old ranges cover the carried
-                    # subset; only the file list is unknown mid-swap
+                    # subset; only the file list is unknown mid-flip
                     widened[m] = {
                         k: v
                         for k, v in (old_bounds.get(m) or {}).items()
                         if k != "files"
                     }
                 # month being deleted (no staged rows, no carry): keep
-                # the old entry until the directory is actually gone
+                # the old entry until the snapshot stops naming it
             self._write_bounds(path, widened)
-        man_new: dict | None = None
-        if self.manifest:
-            # THE swap: carried relpaths join the freshly staged ones
-            # in the new month lists; untouched months keep their
-            # entries verbatim; months with neither staged rows nor
-            # carry are deleted.  No data file moves — one pointer
-            # flip publishes everything at once.
-            staged_files = self._staged_month_files(tmp)
-            new_months = dict(
-                (man_old or {"months": {}})["months"]
-            )
-            for m in months:
-                fl = staged_files.get(m, []) + sorted(carry.get(m) or ())
-                if fl:
-                    new_months[m] = sorted(fl)
-                else:
-                    new_months.pop(m, None)
-            man_new = {"epoch": epoch, "months": new_months}
-            # staged data durable BEFORE the pointer names it
-            self._fsync_tree(tmp)
-            self._flip_manifest_dir(
-                path, man_new, parent_epoch=parent_epoch
-            )
-            self._record_run_commit(table, epoch)
-        else:
-            # Assemble carried files into the staged directories BEFORE
-            # any swap: hardlinks from the still-live month dirs (same
-            # inode — carried bytes are never copied; rmtree of the
-            # demoted dir after promotion only drops the old NAME).
-            for m, files in carry.items():
-                if not files:
-                    continue
-                src_dir = os.path.join(tmp, f"{self.PARTITION_COL}={m}")
-                live_dir = os.path.join(
-                    path, f"{self.PARTITION_COL}={m}"
-                )
-                os.makedirs(src_dir, exist_ok=True)
-                for fname in files:
-                    s = os.path.join(live_dir, fname)
-                    d = os.path.join(src_dir, fname)
-                    if os.path.exists(d):
-                        # a staged fresh file under a carried name
-                        # would be silently replaced by stale live data
-                        # — impossible with uuid part-names, so a
-                        # collision means state corruption: fail
-                        # loudly, never overwrite
-                        raise FileExistsError(
-                            f"carried file collides with staged file:"
-                            f" {d}"
-                        )
-                    try:
-                        os.link(s, d)
-                    except OSError:
-                        # cross-device / no-hardlink filesystem: copy
-                        shutil.copy2(s, d)
-            for m in months:
-                src = os.path.join(tmp, f"{self.PARTITION_COL}={m}")
-                dst = os.path.join(path, f"{self.PARTITION_COL}={m}")
-                old = os.path.join(path, self._OLD_PREFIX + m)
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                if os.path.exists(dst):
-                    os.replace(dst, old)
-                if os.path.exists(src):
-                    os.replace(src, dst)
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-            shutil.rmtree(tmp)
+        staged_files = self._staged_month_files(tmp)
+        new_months = dict(live_months)
+        for m in months:
+            fl = staged_files.get(m, []) + sorted(carry.get(m) or ())
+            if fl:
+                new_months[m] = sorted(fl)
+            else:
+                new_months.pop(m, None)
+        man_new = {"epoch": epoch, "months": new_months}
+        # staged data durable BEFORE the pointer names it
+        self._fsync_tree(tmp)
+        self._flip_manifest_dir(path, man_new, parent_epoch=parent_epoch)
+        self._record_run_commit(table, epoch)
         if bounds_cols:
-            # Every swap completed: tighten to the exact staged bounds
+            # The flip committed: tighten to the exact staged bounds
             # (plus carried file entries for file-level months) and
-            # drop entries for months whose directory was deleted.
+            # drop entries for months the snapshot no longer names.
             final = dict(old_bounds)
             for m in months:
                 staged = staged_bounds.get(m)
@@ -2773,10 +2544,9 @@ class PipelineRunner:
                 else:
                     final[m] = staged
             self._write_bounds(path, final)
-        if self.manifest:
-            # replaced touched files (and the old epoch's _SUCCESS
-            # markers) are now unreferenced
-            self._gc_epochs(table, man_new)
+        # replaced touched files (and the old epoch's _SUCCESS markers)
+        # are now unreferenced
+        self._gc_epochs(table, man_new)
 
     # -------------------------------------------------------------- runs
 
@@ -3300,15 +3070,14 @@ class PipelineRunner:
             # flat_obs max_date_created snapshot read.
             vs_ran = False
         vs_out: dict = {}
-        if self.versioned or not self.partitioned:
+        if not self.partitioned:
             # The latest-summary merge consumes the plan's queue in a
-            # separate action after the stage's own write; layouts that
-            # never set pin_recomputed (no two-phase re-run) — the
-            # versioned layout AND the plain unpartitioned directory
-            # layout — would otherwise never publish the key, leaving
+            # separate action after the stage's own write; the plain
+            # layout never sets pin_recomputed (no two-phase re-run), so
+            # it would otherwise never publish the key, leaving
             # _merge_latest_summary's merge leg unreachable and those
             # deployments silently on the full latest-table rewrite
-            # (ADVICE r10; plain-dir gap ADVICE r11).
+            # (ADVICE r10; plain-layout gap ADVICE r11).
             vs_out["pin_keys"] = ("queue_keys",)
         if vs_ran:
             flat_obs = self.read_target("flat_obs")
@@ -3606,14 +3375,14 @@ class PipelineRunner:
            column-pruned key/datetime probe of the target — the only
            full-target touch left in a sync);
         2. if the delta is month-local, RE-RUN the plan against the
-           month-pruned target (planning-time partition pruning: only
-           affected directories are even opened — rows elsewhere are
-           neither retracted nor rewritten, so excluding them is
-           exact) and swap just those directories.  An empty month set
-           means a no-op sync: nothing is read beyond the probe,
-           nothing is written.  Falls back to the full single-phase
-           write when the delta spans most months (or the layout is
-           unpartitioned/versioned/cold-start)."""
+           month-pruned target (only the affected months' files are
+           even opened — rows elsewhere are neither retracted nor
+           rewritten, so excluding them is exact) and publish just
+           those months.  An empty month set means a no-op sync:
+           nothing is read beyond the probe, nothing is written.  Falls
+           back to the full single-phase write when the delta spans
+           most months (or the layout is plain, the table
+           unpartitioned, or the target cold)."""
         started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         version = TABLE_VERSIONS[table]
         if (
@@ -3682,7 +3451,7 @@ class PipelineRunner:
             out["pin_recomputed"] = True
             # Key-bounds candidate pruning for the plan's retraction
             # probes (plans/_probe.month_probe): the phase-1 read then
-            # opens only month directories whose recorded key range can
+            # opens only months whose recorded key range can
             # contain a changed key, instead of scanning 3 columns of
             # the whole target every sync.
             reader = self._make_probe_reader(table)
@@ -3720,9 +3489,9 @@ class PipelineRunner:
                     # File-level path (r9): when the plan published a
                     # changed-key superset and the sidecar carries
                     # per-file bounds, phase 2 reads ONLY the touched
-                    # files and carries the rest forward by hardlink —
-                    # read and write both O(touched files), not
-                    # O(touched months).
+                    # files and carries the rest forward as manifest
+                    # entries — read and write both O(touched files),
+                    # not O(touched months).
                     plan_files = self._plan_touched_files(
                         table, months, out
                     )

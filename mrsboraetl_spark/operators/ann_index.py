@@ -45,7 +45,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan
+from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.similarity import (
     _nearest_cells_expr,
     cosine,
@@ -258,15 +258,7 @@ class IvfIndex:
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        old = self.cells_path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(self.cells_path, old)
-        try:
-            os.replace(tmp, self.cells_path)
-        except OSError:
-            os.replace(old, self.cells_path)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        swap_in(tmp, self.cells_path)
 
 
     def skew_ratio(self, spark: SparkSession) -> float:

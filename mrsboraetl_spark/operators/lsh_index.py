@@ -46,7 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan
+from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.dedup import bands_from_sig, hashed_sig_docs
 
 
@@ -155,7 +155,6 @@ class LshBandIndex:
         so parquet row-group stats prune probe reads) behind the same
         rename-aside atomic swap as the other persistent indexes.  Pair
         semantics are untouched — compaction only moves rows."""
-        import shutil
         import uuid
 
         if self.is_empty():
@@ -171,12 +170,4 @@ class LshBandIndex:
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        old = self.bands_path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(self.bands_path, old)
-        try:
-            os.replace(tmp, self.bands_path)
-        except OSError:
-            os.replace(old, self.bands_path)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        swap_in(tmp, self.bands_path)

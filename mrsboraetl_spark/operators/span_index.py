@@ -35,13 +35,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan
+from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.spans import clean_spans, doc_spans
 
 
@@ -146,12 +145,4 @@ class SpanFrequencyIndex:
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        old = self.counts_path + ".old"
-        shutil.rmtree(old, ignore_errors=True)  # leftover of a prior crash
-        os.replace(self.counts_path, old)
-        try:
-            os.replace(tmp, self.counts_path)
-        except OSError:
-            os.replace(old, self.counts_path)  # restore; keep tmp for audit
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        swap_in(tmp, self.counts_path)

@@ -27,12 +27,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan
+from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.sketch import _hash_frac
 
 _STATE = "state.parquet"
@@ -151,15 +150,9 @@ class StatsIndex:
             )
         else:
             merged = batch
-        tmp, old = state_path + ".tmp", state_path + ".old"
+        tmp = state_path + ".tmp"
         merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(state_path):
-            os.replace(state_path, old)
-        os.replace(tmp, state_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        swap_in(tmp, state_path)
 
     def stats(self, spark: SparkSession) -> DataFrame:
         """(group, n_docs, n_tokens, est_distinct_tokens) from the

@@ -41,8 +41,8 @@ def pin(df: DataFrame, out: dict | None, key: str) -> DataFrame:
     consumer in a separate action AFTER the stage's own write (the
     latest-summary merge reads ``queue_keys`` post-commit), so the
     same materialize-once trade applies on any layout (ADVICE r10:
-    without this the versioned layout never published the queue and
-    its merge path was unreachable).
+    without this the plain layout never publishes the queue and its
+    merge path is unreachable).
     localCheckpoint preserves size stats (PERF.md), so a pinned
     delta-key frame stays broadcast-eligible."""
     if out is None:

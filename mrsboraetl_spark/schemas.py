@@ -183,11 +183,11 @@ FLAT_LATEST_HIV_SUMMARY_SCHEMA = T.StructType([
 # ------------------------------------------------------- storage layout
 
 def p_month_of(col_name: str):
-    """The hive partition value (engine.PipelineRunner.PARTITION_COL) for
-    a row's clinical datetime: 'yyyy-MM', nulls bucketed to 'unknown'.
+    """The storage month (engine.PipelineRunner.PARTITION_COL) of a
+    row's clinical datetime: 'yyyy-MM', nulls bucketed to 'unknown'.
     Shared by the engine's partitioned writer and the incremental plans'
     affected-month derivation so the two can never disagree on which
-    directory a row lives in."""
+    month a row is stored under."""
     from pyspark.sql import functions as F
 
     return F.coalesce(

@@ -58,7 +58,7 @@ def get_spark(
         # Let small key sets reach the parquet scan as an In filter
         # (default threshold 10): the engine's small-delta probes push
         # up to _PROBE_ISIN_MAX keys so PK-sorted row-group statistics
-        # can skip inside candidate month directories.
+        # can skip inside candidate months' files.
         .config("spark.sql.parquet.pushdown.inFilterThreshold", "100")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # r13 (guide §5): right-size the heap instead of grabbing most of

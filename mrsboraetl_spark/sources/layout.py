@@ -1,7 +1,7 @@
 """Multi-dimensional data layout: z-order (Morton-curve) clustering.
 
-Hive partitioning (engine.py ``partitioned=True``) prunes on ONE
-directory column; bucketing (sources/bucketing.py) co-locates ONE join
+Month partitioning (engine.py ``partitioned=True``) prunes on ONE
+column; bucketing (sources/bucketing.py) co-locates ONE join
 key.  When queries filter on TWO independent columns (user AND time,
 tenant AND day), clustering the stored files along a space-filling
 curve gives every file/row-group a tight min/max envelope on BOTH
@@ -129,10 +129,11 @@ def compact_parquet(
     The small-files problem is the classic 100 TB operational failure
     mode (per-file open/footer/task overhead dominating the scan); this
     is the stock compaction: size the output from the ACTUAL on-disk
-    bytes, one repartition, then promote via the engine's rename-aside
-    swap (write to `.tmp`, demote current to `.old`, promote, drop
-    `.old`) so readers never observe a partial directory and a crash
-    leaves the previous data recoverable at `.old`.
+    bytes, one repartition, then promote via the shared rename-aside
+    swap (operators/_swap.swap_in: write to `.tmp`, demote current to
+    `.old`, promote, drop `.old`) so readers never observe a partial
+    directory and a crash leaves the previous data recoverable at
+    `.old`.
 
     ``zorder_cols`` re-clusters along the Morton curve while compacting
     (the OPTIMIZE-ZORDER composition — plain round-robin compaction
@@ -143,7 +144,8 @@ def compact_parquet(
     """
     import math
     import os
-    import shutil
+
+    from mrsboraetl_spark.operators._swap import swap_in
 
     if target_bytes < 1:
         raise ValueError(f"target_bytes must be >= 1, got {target_bytes}")
@@ -154,15 +156,11 @@ def compact_parquet(
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(total / target_bytes))
-    tmp, old = path + ".tmp", path + ".old"
+    tmp = path + ".tmp"
     df = spark.read.parquet(path)
     if zorder_cols:
         write_zordered(df, tmp, zorder_cols, n_files=n_files, bits=bits)
     else:
         df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old)
+    swap_in(tmp, path)
     return n_files

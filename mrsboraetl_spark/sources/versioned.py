@@ -1,8 +1,8 @@
 """Versioned parquet tables: atomic commits, snapshot reads, time travel.
 
 The reference's REPLACE INTO mutates its target in place; the engine's
-PipelineRunner swaps directories.  Both give the LATEST state only.  A
-transaction-log layout (what Delta/Iceberg do) adds, on plain parquet +
+plain layout swaps whole directories.  Both give the LATEST state only.
+A transaction-log layout (what Delta/Iceberg do) adds, on plain parquet +
 a JSON manifest, the three properties a 100 TB deployment actually
 needs from its sink:
 

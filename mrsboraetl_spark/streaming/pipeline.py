@@ -21,8 +21,9 @@ mode.  Delivery semantics come free from the engine's own contract:
 * the sync is IDEMPOTENT (delete+reaggregate keyed on the watermark),
   so foreachBatch's at-least-once replay converges to the same state —
   effectively exactly-once without any sink coordination;
-* a trigger with nothing new past the watermark is a NO-OP sync, which
-  under the partitioned layout writes zero bytes
+* a trigger with nothing new past the watermark is a NO-OP sync: the
+  engine's stage skip writes zero bytes, and under the partitioned
+  layout a stage that does run writes nothing either
   (engine._write_months's empty-month fast path).
 
 At 100 TB the trigger stream is a metadata-only file watch (the

@@ -48,7 +48,7 @@ def sf_dir_mid():
 # keeps at least one representative in the fast tier so the default
 # collection still exercises every operator family end-to-end at least
 # once (the three all-slow files each keep their fastest probe:
-# latest-merge versioned layout, manifest corrupt-ref read, file-level
+# latest-merge manifest reuse, manifest corrupt-ref read, file-level
 # sidecar tracking).  Fast tier measured ~280 tests / well under the
 # budget; the slow tier is the 69 heavyweight probes below.
 _SLOW_TESTS = {
@@ -56,7 +56,6 @@ _SLOW_TESTS = {
     "test_ann_index.py::test_streaming_skew_triggers_exactly_one_retrain",
     "test_corpus_pipeline.py::test_curate_and_export_end_to_end",
     "test_corpus_pipeline.py::test_priority_keeper_policy_in_composed_pipeline",
-    "test_file_level_writes.py::test_file_level_interrupted_swap_keeps_contract",
     "test_file_level_writes.py::test_file_level_sync_rewrites_only_touched_files",
     "test_file_level_writes.py::test_lab_file_level_sync_rewrites_only_touched_files",
     "test_file_level_writes.py::test_person_retighten_cadence",
@@ -68,7 +67,6 @@ _SLOW_TESTS = {
     "test_jdbc_pipeline.py::test_jdbc_watermark_scoped_staging_is_o_delta",
     "test_latest_merge.py::test_latest_merge_catchup_fraction_falls_back",
     "test_latest_merge.py::test_latest_merge_deletes_fully_voided_person",
-    "test_latest_merge.py::test_latest_merge_manifest_reuses_files",
     "test_latest_merge.py::test_latest_merge_runs_and_matches_full_build",
     "test_latest_merge.py::test_latest_person_void_falls_back_to_full_build",
     "test_latest_merge.py::test_latest_table_honors_keep_snapshots",
@@ -95,8 +93,6 @@ _SLOW_TESTS = {
     "test_manifest_layout.py::test_two_full_runs_race_end_to_end_and_converge",
     "test_manifest_layout.py::test_unreadable_snapshot_heals_under_cas",
     "test_oracle_parity.py::test_no_nonscalar_output_columns",
-    "test_partitioned.py::test_partitioned_month_swap_crash_is_rescued",
-    "test_partitioned.py::test_stale_demoted_month_dir_is_cleaned",
     "test_partitioned.py::test_sync_covers_encounter_repointed_across_person_and_month",
     "test_partitioned.py::test_sync_rewrites_only_affected_months",
     "test_partitioned_bounds.py::test_sync_probe_reads_scale_with_delta",
@@ -120,7 +116,6 @@ _SLOW_TESTS = {
     "test_streaming.py::test_streaming_pipeline_sync_manifest_mode_crash_and_gc",
     "test_versioned.py::test_concurrent_merge_retries_and_both_land",
     "test_versioned.py::test_history_compaction_bounds_manifest",
-    "test_versioned.py::test_pipeline_versioned_layout_matches_default",
     "test_ann_index.py::test_batch_split_assignment_is_exact",
     "test_ann_index.py::test_ivf_cell_join_hot_cell_cap",
     "test_corpus_pipeline.py::test_audit_partitions_every_doc_exactly_once",

@@ -1,13 +1,18 @@
 """Delta-scoped sync write- AND read-amplification probe (manual tool,
 not a pytest test) — VERDICT r5 item 1 and r6 item 1 done-criteria.
 
-At a given person count, rebuilds the partitioned pipeline, then syncs a
-SMALL delta (new obs on a handful of existing encounters, all in
-whatever months those encounters live in) under three configurations:
+At a given person count, rebuilds the partitioned (manifest) pipeline,
+then syncs a SMALL delta (new obs on a handful of existing encounters,
+all in whatever months those encounters live in) under these
+configurations:
 
 * delta-scoped writer + key-bounds probe (the default): only affected
-  p_month directories rewritten, and the phase-1 retraction probe opens
-  only candidate month directories (engine._BOUNDS_COLS sidecar);
+  months rewritten, and the phase-1 retraction probe opens only
+  candidate months (engine._BOUNDS_COLS sidecar);
+* the same with several files per month, file-level (touched files
+  only) vs month-grain (file accounting disabled) — the file-level
+  write cut;
+* path sources instead of DataFrames (footer change signals);
 * delta-scoped writer, bounds sidecars DELETED: the r6 behavior — the
   probe falls back to a column-pruned scan of the whole target;
 * full-rewrite fallback forced (_DELTA_WRITE_MAX_FRACTION = -1): the
@@ -53,9 +58,10 @@ def tree_bytes_after(root: str, t0: float) -> int:
 
 
 def data_files_after(root: str, t0: float) -> tuple[int, int]:
-    """(#data files written since t0, #data files total).  Hardlinked
-    carries keep the original inode mtime, so a carried file does NOT
-    count as written — the file-level writer's claim in one number."""
+    """(#data files written since t0, #data files total).  Carried
+    files are never rewritten and keep their original mtime, so a
+    carried file does NOT count as written — the file-level writer's
+    claim in one number."""
     new = total = 0
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
@@ -154,12 +160,12 @@ def run_probe(n: int) -> None:
             df.cache().count()
 
     results = {"n_persons": n, "n_delta_obs": len(new_rows)}
-    # The decisive probe-read metric is WHICH month directories the
-    # phase-1 retraction probe opens (whole-sync executor input bytes
+    # The decisive probe-read metric is WHICH months the phase-1
+    # retraction probe opens (whole-sync executor input bytes
     # are dominated by source reads at this SF and cannot isolate it):
     # with bounds, reader() routes through read_target_months on the
     # candidate list; without, the probe is a full-target scan.  Spy on
-    # both and account the opened directories' on-disk size.
+    # both and account the opened months' on-disk size.
     probed_months: list[tuple[str, tuple]] = []
     orig_rtm = PipelineRunner.read_target_months
 
@@ -170,9 +176,8 @@ def run_probe(n: int) -> None:
     PipelineRunner.read_target_months = spy_rtm
 
     def month_dir_stats(runner, root):
-        """(#dirs opened by probes, their MB) vs (#dirs, MB) on disk.
-        Manifest layout: a 'directory' is a snapshot month's file
-        list."""
+        """(#months opened by probes, their MB) vs (#months, MB) in the
+        snapshot; a month is the snapshot's file list for it."""
         opened_mb = 0.0
         opened = 0
         total = 0
@@ -182,68 +187,35 @@ def run_probe(n: int) -> None:
             by_table.setdefault(t, set()).update(ms)
         for t in runner._BOUNDS_COLS:
             tdir = runner._path(t)
-            if not os.path.isdir(tdir):
-                continue
-            if getattr(runner, "manifest", False):
-                man = runner._load_manifest(t) or {"months": {}}
-                for m, files in man["months"].items():
-                    total += 1
-                    sz = sum(
-                        os.stat(os.path.join(tdir, rp)).st_size
-                        for rp in files
-                    )
-                    total_mb += sz
-                    if m in by_table.get(t, ()):
-                        opened += 1
-                        opened_mb += sz
-                continue
-            for d in os.listdir(tdir):
-                if not d.startswith("p_month="):
-                    continue
+            man = runner._load_manifest(t) or {"months": {}}
+            for m, files in man["months"].items():
                 total += 1
-                sz = tree_bytes(os.path.join(tdir, d))
+                sz = sum(
+                    os.stat(os.path.join(tdir, rp)).st_size
+                    for rp in files
+                )
                 total_mb += sz
-                if d.split("=", 1)[1] in by_table.get(t, ()):
+                if m in by_table.get(t, ()):
                     opened += 1
                     opened_mb += sz
         return opened, round(opened_mb / 1e6, 2), total, round(
             total_mb / 1e6, 2
         )
 
-    # Count data-file link/copy carries per sync: the file-level dir
-    # layout hardlinks every carried file; the manifest layout must do
-    # ZERO of either (the object-store-safe claim).
-    carry_ops = {"link": 0, "copy": 0}
-    real_link, real_copy = os.link, shutil.copy2
-
-    def counting_link(src, dst, **kw):
-        carry_ops["link"] += 1
-        return real_link(src, dst, **kw)
-
-    def counting_copy(src, dst, **kw):
-        carry_ops["copy"] += 1
-        return real_copy(src, dst, **kw)
-
     for mode in (
         "warmup",
         "delta_bounds",
         "delta_file_level",
-        "delta_manifest",
         "delta_month_grain",
         "delta_bounds_paths",
         "delta_no_bounds",
         "full_rewrite",
     ):
         root = tempfile.mkdtemp(prefix=f"dwp_{mode}_")
-        runner = PipelineRunner(
-            spark, root, partitioned=True,
-            manifest=(mode == "delta_manifest"),
-        )
+        runner = PipelineRunner(spark, root, partitioned=True)
         if mode == "full_rewrite":
             runner._DELTA_WRITE_MAX_FRACTION = -1  # force the fallback
-        if mode in (
-            "delta_file_level", "delta_manifest", "delta_month_grain"
-        ):
+        if mode in ("delta_file_level", "delta_month_grain"):
             # r9: several files per month so the file-level writer has
             # something to prune — at 50k persons ~2.5k flat rows/month
             # this yields ~10 files/month; write I/O must then scale
@@ -281,12 +253,7 @@ def run_probe(n: int) -> None:
         t_sync = time.time()
         r0 = executor_input_bytes(spark)
         probed_months.clear()
-        carry_ops.update(link=0, copy=0)
-        os.link, shutil.copy2 = counting_link, counting_copy
-        try:
-            runner.run(src_sync, mode="sync")
-        finally:
-            os.link, shutil.copy2 = real_link, real_copy
+        runner.run(src_sync, mode="sync")
         sync_s = time.time() - t0
         opened, opened_mb, n_dirs, dirs_mb = month_dir_stats(runner, root)
         if mode == "delta_no_bounds":
@@ -307,8 +274,6 @@ def run_probe(n: int) -> None:
             "probe_month_dirs_mb": opened_mb,
             "month_dirs_total": n_dirs,
             "month_dirs_total_mb": dirs_mb,
-            "sync_carry_links": carry_ops["link"],
-            "sync_carry_copies": carry_ops["copy"],
             # per-table write split (r10 open item: does
             # flat_visit_summary's whole-person-history recompute
             # dominate file-level sync writes?) — top-level storage
@@ -334,14 +299,6 @@ def run_probe(n: int) -> None:
     mgf = results["delta_month_grain"]["sync_files_written"]
     results["file_level_files_cut_ratio"] = (
         round(mgf / flf, 1) if flf else None
-    )
-    mf = results["delta_manifest"]["sync_write_mb"]
-    results["manifest_vs_file_level_write"] = (
-        round(mf / fl, 2) if fl else None
-    )
-    results["manifest_carry_ops"] = (
-        results["delta_manifest"]["sync_carry_links"]
-        + results["delta_manifest"]["sync_carry_copies"]
     )
     rb = results["delta_bounds"]["probe_month_dirs_mb"]
     rn = results["delta_no_bounds"]["probe_month_dirs_mb"]

@@ -81,7 +81,7 @@ def main() -> None:
     # isin month filter prunes at planning time, which inputFiles does
     # not reflect — it lists the unpruned file index)
     runner = PipelineRunner(
-        spark, f"{tmp}/store", partitioned=True, manifest=True
+        spark, f"{tmp}/store", partitioned=True
     )
     # several files per month so the file-level path is exercised
     PipelineRunner._TARGET_FILE_ROWS = 2000

@@ -17,8 +17,9 @@ MySQL (flat_obs_v1.0.sql:147-149) — and records:
   ``num_partitions`` bounded SELECTs, a no-op sync as a handful of
   one-row probes and ZERO table scans).
 
-Usage: python tests/jdbc_scale_probe.py [n_persons]   # default 50000
-Results land in PERF.md by hand.
+Usage: python tests/jdbc_scale_probe.py [--plain] [n_persons]
+Defaults to 50000 persons on the partitioned (manifest) layout;
+``--plain`` runs the plain layout.  Results land in PERF.md by hand.
 """
 
 from __future__ import annotations
@@ -74,7 +75,7 @@ def _count_selects(txt: str) -> dict:
     return out
 
 
-def run_probe(n: int) -> None:
+def run_probe(n: int, partitioned: bool = True) -> None:
     from mrsboraetl_spark.engine import PipelineRunner
     from mrsboraetl_spark.session import get_spark
     from mrsboraetl_spark.sources.readers import JdbcSource
@@ -134,10 +135,11 @@ def run_probe(n: int) -> None:
 
     sources = {name: src(name) for name in PART_COLS}
     root = tempfile.mkdtemp(prefix="jdbc_scale_store_")
-    runner = PipelineRunner(spark, root, partitioned=True)
+    runner = PipelineRunner(spark, root, partitioned=partitioned)
 
     results: dict = {
         "n_persons": n,
+        "layout": "partitioned" if partitioned else "plain",
         "rows": {k: len(v) for k, v in pdfs.items()},
         "jdbc_load_sec": round(load_s, 1),
         "partitions": {k: v[1] for k, v in PART_COLS.items()},
@@ -204,4 +206,8 @@ def run_probe(n: int) -> None:
 
 
 if __name__ == "__main__":
-    run_probe(int(sys.argv[1]) if len(sys.argv) > 1 else 50000)
+    args = [a for a in sys.argv[1:] if a != "--plain"]
+    run_probe(
+        int(args[0]) if args else 50000,
+        partitioned="--plain" not in sys.argv[1:],
+    )

@@ -1,8 +1,8 @@
 """Continuous-pipeline per-sync cost probe (manual tool, not a pytest
 test) — VERDICT r6 item 6's done-criterion.
 
-Rebuilds the partitioned pipeline at a given person count, then times
-three kinds of incremental sync:
+Rebuilds the pipeline at a given person count, once per layout (plain
+and partitioned), then times three kinds of incremental sync:
 
 * an OBS wave (new obs rows on existing encounters) — flat_obs /
   flat_lab_obs / flat_visit_summary / latest must run; flat_orders has
@@ -94,24 +94,27 @@ def main(n: int) -> None:
         )
 
     results = {"n_persons": n}
-    for skip in (True, False):
-        PipelineRunner._STAGE_SKIP = skip
-        root = tempfile.mkdtemp(prefix=f"psp_{skip}_")
-        runner = PipelineRunner(spark, root, partitioned=True)
-        base = to_spark(spark, pdfs)
-        runner.run(base, mode="rebuild")
-        runner.run(base, mode="sync")  # drain watermark stragglers
-        label = "skip_on" if skip else "skip_off"
-        res = {}
-        for wave_name, dfs in (
-            ("obs_wave", to_spark(spark, obs_wave(1))),
-            ("orders_wave", to_spark(spark, orders_wave(2))),
-            ("noop", base),
-        ):
-            t0 = time.time()
-            runner.run(dfs, mode="sync")
-            res[wave_name + "_sec"] = round(time.time() - t0, 1)
-        results[label] = res
+    for layout in ("plain", "partitioned"):
+        for skip in (True, False):
+            PipelineRunner._STAGE_SKIP = skip
+            root = tempfile.mkdtemp(prefix=f"psp_{layout}_{skip}_")
+            runner = PipelineRunner(
+                spark, root, partitioned=layout == "partitioned"
+            )
+            base = to_spark(spark, pdfs)
+            runner.run(base, mode="rebuild")
+            runner.run(base, mode="sync")  # drain watermark stragglers
+            label = f"{layout}_skip_{'on' if skip else 'off'}"
+            res = {}
+            for wave_name, dfs in (
+                ("obs_wave", to_spark(spark, obs_wave(1))),
+                ("orders_wave", to_spark(spark, orders_wave(2))),
+                ("noop", base),
+            ):
+                t0 = time.time()
+                runner.run(dfs, mode="sync")
+                res[wave_name + "_sec"] = round(time.time() - t0, 1)
+            results[label] = res
     PipelineRunner._STAGE_SKIP = True
     print(json.dumps(results), flush=True)
 

@@ -5,8 +5,10 @@ count, and records total shuffle read/write bytes per phase from the Spark
 REST API — the judge-facing evidence for where the single-node cost knee
 sits (VERDICT r2 item 7).
 
-Usage: python tests/scale_probe.py [n_persons ...]
-Defaults to 1200 4800 50000.  Results land in PERF.md by hand.
+Usage: python tests/scale_probe.py [--partitioned] [n_persons ...]
+Defaults to 1200 4800 50000 on the plain layout; ``--partitioned``
+runs the partitioned (manifest) layout.  Results land in PERF.md by
+hand.
 """
 
 from __future__ import annotations
@@ -30,8 +32,10 @@ def shuffle_totals(ui_port: int = 4040) -> tuple[int, int]:
 
 def main() -> None:
     args = sys.argv[1:]
-    versioned = "--versioned" in args
-    sizes = [int(a) for a in args if a != "--versioned"] or [1200, 4800, 50000]
+    partitioned = "--partitioned" in args
+    sizes = [int(a) for a in args if a != "--partitioned"] or [
+        1200, 4800, 50000
+    ]
 
     sys.path.insert(0, "/root/repo")
     import tempfile
@@ -54,7 +58,7 @@ def main() -> None:
         gen_s = time.time() - t0
 
         root = tempfile.mkdtemp(prefix=f"probe_{n}_")
-        runner = PipelineRunner(spark, root, versioned=versioned)
+        runner = PipelineRunner(spark, root, partitioned=partitioned)
 
         rd0, wr0 = shuffle_totals()
         t0 = time.time()
@@ -71,7 +75,7 @@ def main() -> None:
             json.dumps(
                 {
                     "n_persons": n,
-                    "versioned": versioned,
+                    "partitioned": partitioned,
                     "n_obs": n_obs,
                     "gen_sec": round(gen_s, 1),
                     "rebuild_sec": round(rebuild_s, 1),

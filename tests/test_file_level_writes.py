@@ -1,16 +1,15 @@
-"""File-level delta writes inside month directories (r9, VERDICT r8
-item 2): a sync whose delta is month-LOCAL must rewrite only the
-PK-clustered files whose recorded key bounds intersect the changed-key
-set, carrying every untouched file forward by hardlink — write I/O
-scales with touched FILES, not touched months (the partitioned-layout
-lift of VersionedTable.merge_delta's per-file accounting,
+"""File-level delta writes inside months (r9, VERDICT r8 item 2): a
+sync whose delta is month-LOCAL must rewrite only the PK-clustered
+files whose recorded key bounds intersect the changed-key set, carrying
+every untouched file forward as a snapshot entry — write I/O scales
+with touched FILES, not touched months (the partitioned-layout lift of
+VersionedTable.merge_delta's per-file accounting,
 sources/versioned.py:236-252; the reference's REPLACE INTO cost model
 is per-row, flat_obs_v1.0.sql:115).
 
-The month-directory swap stays the unit of atomicity — file-level only
-changes how the STAGED directory is assembled (fresh files + hardlinks),
-so the crash contract (demote _old.M -> promote -> cleanup; widened
-sidecar before swaps, exact after) is inherited unchanged.
+The snapshot flip stays the unit of atomicity; its crash contract
+(widened sidecar before the flip, exact after) is pinned in
+tests/test_manifest_layout.py::test_manifest_crash_at_flip_keeps_contract.
 """
 
 from __future__ import annotations
@@ -18,8 +17,6 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import pytest
-from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
 
@@ -30,8 +27,7 @@ def _mk_state(
 ):
     """Partitioned pipeline with several files per month (small
     maxRecordsPerFile) through rebuild + a draining sync.
-    ``runner_kw`` forwards layout flags (manifest=True for the
-    snapshot-pointer layout tests)."""
+    ``runner_kw`` forwards runner options (keep_snapshots, ...)."""
     from tests.fixtures import make_sources, to_spark
 
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", file_rows)
@@ -82,19 +78,48 @@ def _small_delta(pdfs):
     ))
 
 
-def _file_map(root, table):
-    """{month: {fname: (inode, mtime, size)}} of a partitioned target."""
+def _file_map(runner, table):
+    """{month: {relpath: (inode, mtime, size)}} of the live snapshot of
+    a partitioned target."""
+    base = runner._path(table)
     out: dict = {}
-    tdir = os.path.join(root, f"{table}.parquet")
-    for d in os.listdir(tdir):
-        if not d.startswith("p_month="):
-            continue
-        m = d.split("=", 1)[1]
+    for m, files in runner._load_manifest(table)["months"].items():
         out[m] = {}
-        for f in os.listdir(os.path.join(tdir, d)):
-            if f.endswith(".parquet"):
-                st = os.stat(os.path.join(tdir, d, f))
-                out[m][f] = (st.st_ino, st.st_mtime_ns, st.st_size)
+        for rp in files:
+            st = os.stat(os.path.join(base, rp))
+            out[m][rp] = (st.st_ino, st.st_mtime_ns, st.st_size)
+    return out
+
+
+def _live_with_month(runner, table):
+    """The live target with its storage month column, for the
+    scan-derived bounds recompute (``_compute_month_bounds``)."""
+    from mrsboraetl_spark.schemas import p_month_of
+
+    return runner.read_target(table).withColumn(
+        runner.PARTITION_COL, p_month_of(runner._PARTITION_SRC[table])
+    )
+
+
+def _live_footer_stats(runner, table, pk):
+    """{month: {relpath: [lo, hi, n]}} from the parquet footers of the
+    live snapshot's files, read per epoch directory."""
+    live = {
+        rp for fl in runner._load_manifest(table)["months"].values()
+        for rp in fl
+    }
+    base = runner._path(table)
+    out: dict = {}
+    for edir in sorted({rp.split("/", 1)[0] for rp in live}):
+        stats = runner._file_pk_stats_from_footers(
+            os.path.join(base, edir), pk
+        )
+        assert stats is not None, edir
+        for m, fent in stats.items():
+            for fn, st in fent.items():
+                rp = f"{edir}/{runner.PARTITION_COL}={m}/{fn}"
+                if rp in live:
+                    out.setdefault(m, {})[rp] = st
     return out
 
 
@@ -104,7 +129,7 @@ def test_file_level_sync_rewrites_only_touched_files(
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
-    before = _file_map(r.root, "flat_obs")
+    before = _file_map(r, "flat_obs")
     n_files_before = sum(len(v) for v in before.values())
     assert n_files_before > len(before), (
         "fixture must produce multiple files per month for the claim "
@@ -114,7 +139,7 @@ def test_file_level_sync_rewrites_only_touched_files(
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
 
-    after = _file_map(r.root, "flat_obs")
+    after = _file_map(r, "flat_obs")
     per_month: dict = {}
     for m, files in after.items():
         c = rw = 0
@@ -126,8 +151,9 @@ def test_file_level_sync_rewrites_only_touched_files(
         per_month[m] = (c, rw)
     rewritten = sum(rw for _c, rw in per_month.values())
     # Carried-within-AFFECTED-months is the discriminating count: an
-    # untouched month's identical files prove nothing (never swapped),
-    # a swapped month keeping old inodes proves the hardlink carry.
+    # untouched month's identical files prove nothing (never
+    # republished), a rewritten month keeping old files proves the
+    # carry by reference.
     carried_in_affected = sum(
         c for c, rw in per_month.values() if rw > 0
     )
@@ -144,7 +170,7 @@ def test_file_level_sync_rewrites_only_touched_files(
     # to a fresh scan-derived recompute over the live table.
     bounds = r._load_bounds("flat_obs")
     exact = r._compute_month_bounds(
-        r._path("flat_obs"), r._BOUNDS_COLS["flat_obs"]
+        _live_with_month(r, "flat_obs"), r._BOUNDS_COLS["flat_obs"]
     )
     for m, (_c, rw) in per_month.items():
         if rw and "encounter_id" in exact.get(m, {}):
@@ -173,8 +199,8 @@ def test_file_level_sync_rewrites_only_touched_files(
 def test_sidecar_file_entries_track_disk_and_are_disjoint(
     spark, tmp_path, monkeypatch
 ):
-    """Per-month 'files' sidecar entries must list exactly the data
-    files on disk; after FULL-month writes (this state) their PK ranges
+    """Per-month 'files' sidecar entries must list exactly the
+    snapshot's data files; after FULL-month writes (this state) their PK ranges
     within a month must additionally be disjoint — the pruning-QUALITY
     property the range shuffle buys (hash-partitioned layouts have
     overlapping per-file ranges and prune nothing).  Disjointness is
@@ -185,7 +211,7 @@ def test_sidecar_file_entries_track_disk_and_are_disjoint(
     r, _ = _mk_state(spark, tmp_path, monkeypatch, n_persons=40, seed=47)
     for t in ("flat_obs", "flat_orders", "flat_visit_summary"):
         bounds = r._load_bounds(t)
-        disk = _file_map(r.root, t)
+        disk = _file_map(r, t)
         for m, files in disk.items():
             ent = bounds.get(m, {}).get("files")
             assert ent is not None, (t, m)
@@ -198,59 +224,6 @@ def test_sidecar_file_entries_track_disk_and_are_disjoint(
                     f"{t}/{m}: overlapping file ranges "
                     f"[{lo1},{hi1}] vs [{lo2},{hi2}]"
                 )
-
-
-def test_file_level_interrupted_swap_keeps_contract(
-    spark, tmp_path, monkeypatch
-):
-    """Crash inside the swap window of a file-level delta write: the
-    widened sidecar must have DROPPED the rewritten month's file
-    entries (unknown which directory version survives), so the next
-    sync month-grain-rewrites that month instead of trusting stale
-    file bounds; recovery + re-sync converges to the rebuild state."""
-    from tests.fixtures import to_spark
-
-    r, pdfs = _mk_state(spark, tmp_path, monkeypatch, n_persons=40, seed=53)
-    pdfs2 = _small_delta(pdfs)
-
-    real_replace = os.replace
-    blown = {}
-
-    def exploding_replace(src, dst):
-        # Crash at the FIRST month-directory promote of flat_obs's
-        # delta write (demote already done -> the _old.M window).
-        if "/flat_obs.parquet/p_month=" in str(dst) and not blown:
-            blown["at"] = (src, dst)
-            raise RuntimeError("injected crash inside swap window")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(
-        "mrsboraetl_spark.engine.os.replace", exploding_replace
-    )
-    with pytest.raises(RuntimeError, match="injected crash"):
-        r.run(to_spark(spark, pdfs2), mode="sync")
-    monkeypatch.setattr("mrsboraetl_spark.engine.os.replace", real_replace)
-    assert blown, "injection never fired"
-
-    crashed_month = str(blown["at"][1]).rsplit("p_month=", 1)[1]
-    bounds = r._load_bounds("flat_obs")
-    assert "files" not in bounds.get(crashed_month, {}), (
-        "widened (pre-swap) sidecar must not carry file entries for a "
-        "month whose directory version is unknown"
-    )
-
-    # Next sync: recovery promotes/demotes as needed, then converges.
-    r.run(to_spark(spark, pdfs2), mode="sync")
-    rb = PipelineRunner(spark, str(tmp_path / "rebuild"), partitioned=True)
-    rb.run(to_spark(spark, pdfs2), mode="rebuild")
-    cols = sorted(
-        c for c in r.read_target("flat_obs").columns if c != "obs_map"
-    )
-    a = sorted(map(repr, r.read_target("flat_obs").toPandas()[cols]
-                    .itertuples(index=False)))
-    b = sorted(map(repr, rb.read_target("flat_obs").toPandas()[cols]
-                    .itertuples(index=False)))
-    assert a == b
 
 
 def test_phase2_reads_only_touched_files_plus_fallback_months(
@@ -280,7 +253,7 @@ def test_phase2_reads_only_touched_files_plus_fallback_months(
     n_selected = sum(
         len(v) for v in touched.values() if v is not None
     )
-    disk = _file_map(r.root, "flat_obs")
+    disk = _file_map(r, "flat_obs")
     n_disk = sum(
         len(disk.get(m, {})) for m in touched
     )
@@ -296,9 +269,9 @@ def test_sidecar_file_entries_after_file_level_sync(
     alone, so a staged file's span can straddle carried files' spans:
     overlap is explicitly TOLERATED here (it degrades pruning quality,
     never correctness — see _plan_touched_files's docstring).  What must
-    hold exactly, and is pinned: the sidecar lists precisely the on-disk
-    files, and every [lo, hi, n] entry equals the file's parquet-footer
-    truth."""
+    hold exactly, and is pinned: the sidecar lists precisely the
+    snapshot's files, and every [lo, hi, n] entry equals the file's
+    parquet-footer truth."""
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(spark, tmp_path, monkeypatch, n_persons=40, seed=47)
@@ -306,15 +279,13 @@ def test_sidecar_file_entries_after_file_level_sync(
     r.run(to_spark(spark, pdfs2), mode="sync")
 
     bounds = r._load_bounds("flat_obs")
-    disk = _file_map(r.root, "flat_obs")
+    disk = _file_map(r, "flat_obs")
     for m, files in disk.items():
         ent = bounds.get(m, {}).get("files")
         assert ent is not None, m
         assert sorted(ent) == sorted(files), m
-    footer = r._file_pk_stats_from_footers(
-        r._path("flat_obs"), "encounter_id"
-    )
-    assert footer is not None
+    footer = _live_footer_stats(r, "flat_obs", "encounter_id")
+    assert sorted(footer) == sorted(disk)
     for m, fent in footer.items():
         for fn, st in fent.items():
             assert bounds[m]["files"][fn] == st, (m, fn)
@@ -419,9 +390,9 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
     obs4.loc[mine, "voided"] = 1
     obs4.loc[mine, "date_voided"] = wm + dt.timedelta(days=3)
     pdfs4 = dict(pdfs3, obs=obs4)
-    before = _file_map(r.root, "flat_obs")
+    before = _file_map(r, "flat_obs")
     r.run(to_spark(spark, pdfs4), mode="sync")
-    after = _file_map(r.root, "flat_obs")
+    after = _file_map(r, "flat_obs")
     carried_in_modal = sum(
         1
         for f, st in after.get(modal, {}).items()
@@ -447,7 +418,7 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
     ) == set()
     # ...and the exact recompute matches a fresh scan-derived truth
     exact = r._compute_month_bounds(
-        r._path("flat_obs"), r._BOUNDS_COLS["flat_obs"]
+        _live_with_month(r, "flat_obs"), r._BOUNDS_COLS["flat_obs"]
     )
     assert b3[modal]["person_id"] == exact[modal]["person_id"]
 
@@ -487,7 +458,7 @@ def test_lab_file_level_sync_rewrites_only_touched_files(
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
-    before = _file_map(r.root, "flat_lab_obs")
+    before = _file_map(r, "flat_lab_obs")
     assert sum(len(v) for v in before.values()) > len(before), (
         "need multiple files per lab month"
     )
@@ -510,7 +481,7 @@ def test_lab_file_level_sync_rewrites_only_touched_files(
     ))
     r.run(to_spark(spark, pdfs2), mode="sync")
 
-    after = _file_map(r.root, "flat_lab_obs")
+    after = _file_map(r, "flat_lab_obs")
     per_month: dict = {}
     for m, files in after.items():
         c = rw = 0

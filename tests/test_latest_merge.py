@@ -14,7 +14,7 @@ criteria:
   loses their latest row — the delete_keys half of the merge;
 * a person VOID falls back to the full-build path (unstable void set:
   the purge is queue-invisible) and still converges;
-* under the manifest layout the merge goes through
+* under the partitioned (manifest) layout the merge goes through
   VersionedTable.merge_delta and REUSES untouched files (write cost
   O(files holding queued persons), not O(table)).
 """
@@ -85,7 +85,10 @@ def _new_obs_delta(pdfs, wm, days=1):
 def test_latest_merge_runs_and_matches_full_build(
     spark, tmp_path, spy
 ):
-    r, pdfs, wm = _base(spark, tmp_path, "dirmode")
+    """Plain layout: the plan publishes queue_keys through
+    out["pin_keys"] (no two-phase re-run there), and the latest table
+    merges by anti-delete + whole-table swap."""
+    r, pdfs, wm = _base(spark, tmp_path, "plainmode", partitioned=False)
     latest0 = r.read_target("flat_latest_hiv_summary")
     n_persons_total = latest0.count()
     spy.clear()
@@ -152,12 +155,18 @@ def test_latest_person_void_falls_back_to_full_build(
     assert len(latest) == len(latest0) - 1
 
 
-def test_latest_merge_manifest_reuses_files(spark, tmp_path, monkeypatch):
+def test_latest_merge_manifest_reuses_files(
+    spark, tmp_path, monkeypatch, spy
+):
+    """Partitioned layout: the merge commits a VersionedTable 'queue
+    merge' version through merge_delta, whose build saw only the
+    queued person's visit rows, and reuses untouched files."""
     # several small files so the merge has something to reuse
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", 4)
-    r, pdfs, wm = _base(spark, tmp_path, "manmode", manifest=True)
+    r, pdfs, wm = _base(spark, tmp_path, "manmode")
     vt = r._versioned("flat_latest_hiv_summary")
     v0 = vt.version()
+    spy.clear()
 
     pdfs2, person = _new_obs_delta(pdfs, wm)
     r.run(to_spark(spark, pdfs2), mode="sync")
@@ -173,48 +182,12 @@ def test_latest_merge_manifest_reuses_files(spark, tmp_path, monkeypatch):
         entry["reused_files"] + entry["rewrote_files"]
     ), entry
 
-    # state equality with an independent full build
-    import mrsboraetl_spark.plans.flat_latest_hiv_summary as m
-
-    vs = r.read_target("flat_visit_summary")
-    assert _rows(r.read_target("flat_latest_hiv_summary")) == _rows(
-        m.build_flat_latest_hiv_summary(vs)
-    )
-
-
-def test_latest_merge_versioned_layout_uses_merge_delta(
-    spark, tmp_path, spy
-):
-    """ADVICE r10: the versioned layout never set pin_recomputed, so
-    the plan never published queue_keys and _merge_latest_summary's
-    merge_delta leg was unreachable — versioned deployments silently
-    kept the full latest-table rewrite.  The engine now names
-    queue_keys in out["pin_keys"] for versioned runs.  Pins: the merge
-    commit lands as a VersionedTable 'queue merge' version whose build
-    saw only the queued person's visit rows, and the state equals an
-    independent full build."""
-    r, pdfs, wm = _base(
-        spark, tmp_path, "versmode", partitioned=False, versioned=True
-    )
-    vt = r._versioned("flat_latest_hiv_summary")
-    v0 = vt.version()
-    spy.clear()
-
-    pdfs2, person = _new_obs_delta(pdfs, wm)
-    r.run(to_spark(spark, pdfs2), mode="sync")
-
-    v1 = vt.version()
-    assert v1 > v0
-    entry = next(
-        e for e in vt._read_manifest()["history"] if e["version"] == v1
-    )
-    assert entry["note"] == "flat_latest_hiv_summary queue merge"
-
     vs = r.read_target("flat_visit_summary")
     n_person_rows = vs.filter(f"person_id = {person}").count()
     assert spy == [n_person_rows], (spy, n_person_rows)
     assert n_person_rows < vs.count()
 
+    # state equality with an independent full build
     import mrsboraetl_spark.plans.flat_latest_hiv_summary as m
 
     assert _rows(r.read_target("flat_latest_hiv_summary")) == _rows(
@@ -283,7 +256,7 @@ def test_latest_table_honors_keep_snapshots(spark, tmp_path, monkeypatch):
     contract as the partitioned tables' retained snapshots."""
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", 4)
     r, pdfs, wm = _base(
-        spark, tmp_path, "keepmode", manifest=True, keep_snapshots=2
+        spark, tmp_path, "keepmode", keep_snapshots=2
     )
     vt = r._versioned("flat_latest_hiv_summary")
     v0 = vt.version()

@@ -1,19 +1,18 @@
-"""Manifest layout (r10, VERDICT r9 item 1): the object-store-safe
-carry.  A partitioned target's content is a per-month FILE LIST in an
-atomic ``_snapshot.json``; data files live in immutable hidden epoch
-directories; a file-level delta's untouched files are carried forward
-as MANIFEST ENTRIES and the swap is ONE snapshot pointer flip.
+"""Manifest layout — ``partitioned=True`` (r10, VERDICT r9 item 1):
+the object-store-safe carry.  A partitioned target's content is a
+per-month FILE LIST in an atomic ``_snapshot.json``; data files live in
+immutable hidden epoch directories; a file-level delta's untouched
+files are carried forward as MANIFEST ENTRIES and the swap is ONE
+snapshot pointer flip.
 
 The pins here are the verdict's done-criteria:
 
 * a file-level sync on a NO-HARDLINK filesystem (``os.link`` and
   ``shutil.copy2`` monkeypatched to raise) writes only touched bytes —
   carried files are never linked, copied, moved, or rewritten;
-* the crash contract survives in manifest mode (the manifest analogue
-  of test_file_level_interrupted_swap_keeps_contract): a crash at the
-  flip leaves the OLD snapshot readable and the widened sidecar free of
-  per-file entries for the affected months, and the next sync
-  converges to the rebuild state;
+* the crash contract: a crash at the flip leaves the OLD snapshot
+  readable and the widened sidecar free of per-file entries for the
+  affected months, and the next sync converges to the rebuild state;
 * replaced/orphaned files are garbage-collected; a raw
   ``spark.read.parquet(path)`` sees NO data (fail-safe, Delta-like) —
   manifest-mode consumers read through the runner.
@@ -84,7 +83,7 @@ def test_manifest_file_level_sync_carries_by_reference(
     from tests.fixtures import to_spark
 
     _forbid_data_copies(monkeypatch)
-    r, pdfs = _mk_state(spark, tmp_path, monkeypatch, manifest=True)
+    r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
     before = _live_file_map(r, "flat_obs")
     n_before = sum(len(v) for v in before.values())
     assert n_before > len(before), "need multiple files per month"
@@ -134,17 +133,13 @@ def test_manifest_incremental_matches_rebuild_and_dir_mode(
     spark, tmp_path, monkeypatch
 ):
     """Master correctness across layouts: the manifest-mode incremental
-    state equals the directory-mode incremental state equals a fresh
-    rebuild, table by table."""
+    state equals the plain-layout incremental state, table by table."""
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
-    rd = PipelineRunner(
-        spark, str(tmp_path / "dirmode"), partitioned=True
-    )
+    rd = PipelineRunner(spark, str(tmp_path / "plain"))
     dfs = to_spark(spark, pdfs)
     rd.run(dfs, mode="rebuild")
     rd.run(dfs, mode="sync")
@@ -167,7 +162,6 @@ def test_manifest_raw_path_read_sees_no_data(
     runner."""
     r, _ = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
         spark.read.parquet(r._path("flat_obs")).count()
@@ -175,9 +169,8 @@ def test_manifest_raw_path_read_sees_no_data(
 
 
 def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
-    """Manifest analogue of
-    test_file_level_interrupted_swap_keeps_contract: a crash AT the
-    snapshot flip of flat_obs's delta write leaves (a) the OLD snapshot
+    """A crash AT the snapshot flip of flat_obs's file-level delta
+    write leaves (a) the OLD snapshot
     as live content — the flip is all-or-nothing, there is no partial
     state to rescue — and (b) a widened sidecar whose affected months
     carry NO per-file entries (their pre-crash entries would no longer
@@ -188,7 +181,6 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
 
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=53,
-        manifest=True,
     )
     rows_before = _rows(r, "flat_obs")
     man_before = _manifest(r, "flat_obs")
@@ -286,7 +278,7 @@ def test_manifest_gc_and_probe_pruning(spark, tmp_path, monkeypatch):
     listing anywhere in the read path)."""
     from tests.fixtures import to_spark
 
-    r, pdfs = _mk_state(spark, tmp_path, monkeypatch, manifest=True)
+    r, pdfs = _mk_state(spark, tmp_path, monkeypatch)
     before = _live_file_map(r, "flat_obs")
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
@@ -352,7 +344,7 @@ def test_manifest_snapshot_retention_and_time_travel(
     _forbid_data_copies(monkeypatch)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     e0 = _manifest(r, "flat_obs")["epoch"]
     rows_e0 = _rows(r, "flat_obs")
@@ -433,7 +425,7 @@ def test_manifest_split_reads_identical_and_carries_refs(
     _MANIFEST_SPLIT_BYTES forced to 0 every flip stores per-month
     {"ref": _man_*.json} entries instead of inline file lists.  Pins:
 
-    * the resolved state is row-identical to a directory-mode run
+    * the resolved state is row-identical to a plain-layout run
       through the same rebuild -> sync -> delta-sync lifecycle (the
       no-link/no-copy property of manifest mode itself is pinned by
       test_manifest_file_level_sync_carries_by_reference);
@@ -451,11 +443,8 @@ def test_manifest_split_reads_identical_and_carries_refs(
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
-    rd = PipelineRunner(
-        spark, str(tmp_path / "dirmode"), partitioned=True
-    )
+    rd = PipelineRunner(spark, str(tmp_path / "plain"))
     dfs = to_spark(spark, pdfs)
     rd.run(dfs, mode="rebuild")
     rd.run(dfs, mode="sync")
@@ -513,7 +502,7 @@ def test_manifest_split_crash_retention_and_time_travel(
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     e0 = _raw_snapshot(r, "flat_obs")["epoch"]
     rows_e0 = _rows(r, "flat_obs")
@@ -594,7 +583,6 @@ def test_gc_protects_live_refs_when_history_missing(
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
     table = "flat_obs"
     rows_before = _rows(r, table)
@@ -628,7 +616,6 @@ def test_corrupt_ref_reads_as_cold_never_escapes(
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, _pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=20, seed=13,
-        manifest=True,
     )
     table = "flat_obs"
     base = r._path(table)
@@ -669,26 +656,43 @@ def test_corrupt_ref_reads_as_cold_never_escapes(
 def test_manifest_migration_sweeps_legacy_hive_dirs(
     spark, tmp_path, monkeypatch
 ):
-    """Review finding r10: enabling manifest=True on a table built by
-    the directory layout must not leave the pre-migration p_month=*
-    dirs live — a raw path reader would silently serve the frozen old
-    table (breaking the advertised fail-safe) and storage doubles.
-    The first manifest full write sweeps them after its flip."""
+    """Review finding r10: a table written by the retired directory
+    layout (hive ``p_month=*`` dirs, a demoted ``_old.M`` dir, no
+    snapshot) must not stay live after the manifest layout takes it
+    over — a raw path reader would silently serve the frozen old table
+    (breaking the advertised fail-safe) and storage doubles.  No writer
+    produces that layout any more, so the legacy dirs are built here by
+    hand; the first manifest full write sweeps them after its flip."""
+    import shutil
+
+    from mrsboraetl_spark.plans.flat_obs import build_flat_obs
+    from mrsboraetl_spark.schemas import p_month_of
     from tests.fixtures import make_sources, to_spark
 
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", 4)
     pdfs = make_sources(n_persons=20, seed=13)
     dfs = to_spark(spark, pdfs)
     root = tmp_path / "migrate"
-    rd = PipelineRunner(spark, str(root), partitioned=True)
-    rd.run(dfs, mode="rebuild")
-    obs_dir = rd._path("flat_obs")
-    assert any(
-        e.startswith("p_month=") for e in os.listdir(obs_dir)
-    ), "dir-mode table must have hive dirs"
-    rows_before = _rows(rd, "flat_obs")
+    rm = PipelineRunner(spark, str(root), partitioned=True)
+    obs_dir = rm._path("flat_obs")
+    (
+        build_flat_obs(dfs["obs"], dfs["encounter"], dfs["person"])
+        .withColumn(rm.PARTITION_COL, p_month_of("encounter_datetime"))
+        .write.partitionBy(rm.PARTITION_COL)
+        .parquet(obs_dir)
+    )
+    hive = sorted(e for e in os.listdir(obs_dir) if e.startswith("p_month="))
+    assert hive, "legacy table must have hive dirs"
+    shutil.copytree(
+        os.path.join(obs_dir, hive[0]),
+        os.path.join(obs_dir, rm._OLD_PREFIX + hive[0].split("=", 1)[1]),
+    )
+    legacy = spark.read.parquet(obs_dir).drop(rm.PARTITION_COL)
+    cols = sorted(c for c in legacy.columns if c != "obs_map")
+    rows_before = sorted(
+        map(repr, legacy.toPandas()[cols].itertuples(index=False))
+    )
 
-    rm = PipelineRunner(spark, str(root), partitioned=True, manifest=True)
     rm.run(dfs, mode="rebuild")
     left = [
         e for e in os.listdir(obs_dir)
@@ -712,7 +716,6 @@ def test_manifest_crash_orphan_epoch_not_time_travelable(
 
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
     e0 = _raw_snapshot(r, "flat_obs")["epoch"]
 
@@ -760,7 +763,6 @@ def test_manifest_crash_with_preexisting_unbounded_month_stays_conservative(
 
     r, pdfs = _mk(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
     # simulate the pre-bounds upgrade: drop sidecar + blooms entirely
     for p in (
@@ -821,10 +823,9 @@ def test_concurrent_flip_raises_and_preserves_winner(
 
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
     rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True
+        spark, rA.root, partitioned=True
     )
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
@@ -890,10 +891,9 @@ def test_concurrent_flip_retries_and_both_land(
 
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
     rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True
+        spark, rA.root, partitioned=True
     )
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
@@ -951,7 +951,6 @@ def test_unreadable_snapshot_heals_under_cas(
     monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True,
     )
     table = "flat_obs"
     e0 = _raw_snapshot(r, table)["epoch"]
@@ -994,7 +993,7 @@ def test_pipeline_snapshot_gives_cross_table_consistent_reads(
 
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     tables = (
         "flat_obs", "flat_orders", "flat_lab_obs",
@@ -1089,10 +1088,10 @@ def test_commit_during_plan_phase_raises_then_converges(
     # still reads (the race under test is the POINTER, not retention)
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True,
+        spark, rA.root, partitioned=True,
         keep_snapshots=2,
     )
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
@@ -1146,10 +1145,10 @@ def test_pipeline_snapshot_records_own_commits_not_live_pointers(
 
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=2,
+        keep_snapshots=2,
     )
     rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True,
+        spark, rA.root, partitioned=True,
         keep_snapshots=2,
     )
 
@@ -1191,7 +1190,6 @@ def test_pipeline_snapshot_tolerates_non_dict_pointer(tmp_path, spark):
     raise AttributeError at snap.get."""
     r = PipelineRunner(
         spark, str(tmp_path / "store_nd"), partitioned=True,
-        manifest=True,
     )
     p = os.path.join(r.root, r._PIPELINE_SNAPSHOT_FILE)
     for garbage in ('[1, 2, 3]', '"str"', '7', '{"tables": [1]}'):
@@ -1220,10 +1218,10 @@ def test_two_full_runs_race_end_to_end_and_converge(
 
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
-        manifest=True, keep_snapshots=3,
+        keep_snapshots=3,
     )
     rB = PipelineRunner(
-        spark, rA.root, partitioned=True, manifest=True,
+        spark, rA.root, partitioned=True,
         keep_snapshots=3,
     )
     pdfs2 = _small_delta(pdfs)

@@ -1,6 +1,6 @@
-"""Hive-partitioned target layout (PipelineRunner(partitioned=True)):
-month directories, equivalence with the swap layout, and — the point —
-partition pruning for date-range consumers."""
+"""Partitioned target layout (PipelineRunner(partitioned=True)): the
+snapshot's month lists, equivalence with the plain layout, and — the
+point — month pruning for date-range consumers."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
 from tests.fixtures import make_sources, to_spark
@@ -42,61 +41,81 @@ def test_partitioned_layout_matches_default(layouts):
 
 
 def test_month_directories_on_disk(layouts):
-    path = layouts["part"]._path("flat_obs")
-    subdirs = [d for d in os.listdir(path) if d.startswith("p_month=")]
-    assert len(subdirs) >= 2, subdirs  # fixture spans multiple months
+    """The snapshot names several months, each a non-empty list of
+    data files that exist on disk inside a hidden epoch directory."""
+    r = layouts["part"]
+    months = r._load_manifest("flat_obs")["months"]
+    assert len(months) >= 2, months  # fixture spans multiple months
+    for m, files in months.items():
+        assert files, m
+        for rp in files:
+            assert rp.startswith(r._EPOCH_PREFIX), rp
+            assert f"/{r.PARTITION_COL}={m}/" in rp, rp
+            assert os.path.isfile(os.path.join(r._path("flat_obs"), rp))
 
 
 def test_partition_pruning_on_month_filter(spark, layouts):
-    """A month-filtered read must open only that month's files and show
-    the filter as a PartitionFilter (pruning at planning time), not a
-    row-level PushedFilter."""
-    path = layouts["part"]._path("flat_obs")
-    full = spark.read.parquet(path)
-    months = [r["p_month"] for r in full.select("p_month").distinct().collect()]
+    """A month-window read (read_target_months) must open only that
+    month's files — the scan lists exactly the snapshot's file list for
+    the month — and return exactly the target's rows of that month."""
+    from mrsboraetl_spark.schemas import p_month_of
+
+    r = layouts["part"]
+    months = r._load_manifest("flat_obs")["months"]
     one = sorted(months)[0]
-    pruned = full.filter(F.col("p_month") == one)
-    # Planning-time pruning: the month predicate must land in the scan's
-    # PartitionFilters (directory pruning), not as a row-level data filter.
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    pf = plan.split("PartitionFilters")[1].split("]")[0]
-    assert "p_month" in pf, plan
-    # And the pruned read equals reading that month's directory directly.
-    sub = spark.read.parquet(f"{path}/p_month={one}")
-    assert pruned.count() == sub.count() > 0
+    pruned = r.read_target_months("flat_obs", [one])
+    opened = sorted(os.path.basename(f) for f in pruned.inputFiles())
+    assert opened == sorted(os.path.basename(f) for f in months[one])
+    assert len(opened) < sum(len(fl) for fl in months.values())
+    full = r.read_target("flat_obs")
+    expect = full.filter(p_month_of("encounter_datetime") == one).count()
+    assert pruned.count() == expect > 0
+    # no candidate months: an empty frame with the target schema
+    empty = r.read_target_months("flat_obs", [])
+    assert empty.columns == full.columns and empty.count() == 0
 
 
-def test_partitioned_versioned_mutually_exclusive(spark, tmp_path):
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        PipelineRunner(
-            spark, str(tmp_path / "x"), versioned=True, partitioned=True
-        )
+def test_manifest_keyword_selects_partitioned_layout(spark, tmp_path):
+    """``manifest`` is kept as an accepted keyword that selects nothing:
+    it must agree with ``partitioned``, and ``partitioned=True,
+    manifest=True`` builds exactly the ``partitioned=True`` runner."""
+    root = str(tmp_path / "kw")
+    with pytest.raises(ValueError, match="manifest"):
+        PipelineRunner(spark, root, partitioned=True, manifest=False)
+    with pytest.raises(ValueError, match="manifest"):
+        PipelineRunner(spark, root, manifest=True)
+
+    def state(r):
+        return {
+            k: v for k, v in vars(r).items() if k not in ("watermarks",)
+        }
+
+    both = PipelineRunner(spark, root, partitioned=True, manifest=True)
+    part = PipelineRunner(spark, root, partitioned=True)
+    assert state(both) == state(part)
+    assert part.partitioned and not hasattr(part, "manifest")
 
 
 # ----------------------------------------------- delta-scoped sync writes
 
 
-def _month_inventory(path):
-    """{month: {(relative file, mtime_ns, size)}} for every p_month dir."""
+def _month_inventory(runner, table):
+    """{month: {(relpath, mtime_ns, size)}} of the live snapshot."""
+    base = runner._path(table)
     inv = {}
-    for d in os.listdir(path):
-        if not d.startswith("p_month="):
-            continue
-        month = d.split("=", 1)[1]
-        files = set()
-        sub = os.path.join(path, d)
-        for f in sorted(os.listdir(sub)):
-            st = os.stat(os.path.join(sub, f))
-            files.add((f, st.st_mtime_ns, st.st_size))
-        inv[month] = files
+    for m, files in runner._load_manifest(table)["months"].items():
+        inv[m] = {
+            (rp, st.st_mtime_ns, st.st_size)
+            for rp in files
+            for st in (os.stat(os.path.join(base, rp)),)
+        }
     return inv
 
 
 def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
     """The delta-scoped writer (VERDICT r5 item 1): a sync whose delta
-    touches one month must leave every other p_month directory's files
-    byte-for-byte untouched (same names, mtimes, sizes) — write I/O
+    touches one month must leave every other month's snapshot files
+    byte-for-byte untouched (same relpaths, mtimes, sizes) — write I/O
     scales with the delta, not the target — while final state still
     equals a plain full rebuild.
 
@@ -120,8 +139,7 @@ def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("deltapart"))
     runner = PipelineRunner(spark, root, partitioned=True)
     runner.run(dfs, mode="rebuild")
-    path = runner._path("flat_obs")
-    inv0 = _month_inventory(path)
+    inv0 = _month_inventory(runner, "flat_obs")
     assert len(inv0) >= 4, "fixture must span several months"
 
     # ONE new obs on an existing encounter: the only affected month is
@@ -145,7 +163,7 @@ def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
     dfs2 = to_spark(spark, pdfs2)
     runner.run(dfs2, mode="sync")
 
-    inv1 = _month_inventory(path)
+    inv1 = _month_inventory(runner, "flat_obs")
     changed = {m for m in set(inv0) | set(inv1) if inv1.get(m) != inv0.get(m)}
     assert changed == {victim_month}, (changed, victim_month)
     # State equals a plain rebuild over the final sources.
@@ -160,55 +178,10 @@ def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
         assert sa == sb, table
 
     # A no-op sync (no new changes) must write NOTHING anywhere.
-    vs_path = runner._path("flat_visit_summary")
-    inv_vs = _month_inventory(vs_path)
+    inv_vs = _month_inventory(runner, "flat_visit_summary")
     runner.run(dfs2, mode="sync")
-    assert _month_inventory(path) == inv1
-    assert _month_inventory(vs_path) == inv_vs
-
-
-def test_partitioned_month_swap_crash_is_rescued(spark, tmp_path_factory):
-    """A _write_months crash between demote and promote leaves a month
-    only at _old.M (invisible to Spark's partition discovery);
-    read_target must restore it."""
-    dfs = to_spark(spark, make_sources(n_persons=10, seed=9))
-    root = str(tmp_path_factory.mktemp("crashpart"))
-    runner = PipelineRunner(spark, root, partitioned=True)
-    runner.run(dfs, mode="rebuild")
-    path = runner._path("flat_obs")
-    before = runner.read_target("flat_obs").count()
-    month_dir = sorted(
-        d for d in os.listdir(path) if d.startswith("p_month=")
-    )[0]
-    m = month_dir.split("=", 1)[1]
-    os.replace(
-        os.path.join(path, month_dir), os.path.join(path, "_old." + m)
-    )
-    # Hidden-path rule: without rescue the month would just be missing.
-    assert runner.read_target("flat_obs").count() == before
-    assert os.path.exists(os.path.join(path, month_dir))
-
-
-def test_stale_demoted_month_dir_is_cleaned(spark, tmp_path_factory):
-    """A crash AFTER a month swap's promote but before its cleanup
-    leaves a stale _old.M beside the live directory; read_target must
-    drop it (the swap provably completed) and never touch the live
-    data."""
-    dfs = to_spark(spark, make_sources(n_persons=8, seed=4))
-    root = str(tmp_path_factory.mktemp("stalepart"))
-    runner = PipelineRunner(spark, root, partitioned=True)
-    runner.run(dfs, mode="rebuild")
-    path = runner._path("flat_obs")
-    month_dir = sorted(
-        d for d in os.listdir(path) if d.startswith("p_month=")
-    )[0]
-    m = month_dir.split("=", 1)[1]
-    before = runner.read_target("flat_obs").count()
-    # Fabricate the post-promote crash artifact: a stale demoted copy.
-    os.makedirs(os.path.join(path, "_old." + m, "junk"))
-    assert runner.read_target("flat_obs").count() == before
-    assert not os.path.exists(os.path.join(path, "_old." + m))
-    assert os.path.exists(os.path.join(path, month_dir))
+    assert _month_inventory(runner, "flat_obs") == inv1
+    assert _month_inventory(runner, "flat_visit_summary") == inv_vs
 
 
 def test_sync_covers_encounter_repointed_across_person_and_month(

@@ -1,5 +1,5 @@
 """Per-month key-bounds sidecar (engine._BOUNDS_COLS): the sync's
-phase-1 retraction probe must open only candidate month directories —
+phase-1 retraction probe must open only candidate months —
 read I/O scaling with the delta — while the bounds stay a strict
 superset of reality across every crash window (a missed month would be
 a silently-unretracted row forever)."""
@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
 from tests.fixtures import make_sources, to_spark
+from tests.test_file_level_writes import _live_with_month
 
 
 @pytest.fixture(scope="module")
@@ -49,7 +50,7 @@ def test_bounds_sidecar_exact_after_rebuild(spark, built):
         F.col("encounter_id"),
     )
     actual = (
-        spark.read.parquet(runner._path("flat_obs"))
+        _live_with_month(runner, "flat_obs")
         .groupBy("p_month")
         .agg(
             F.min(real_enc).alias("elo"),
@@ -78,7 +79,7 @@ def test_probe_reader_prunes_to_candidate_months(spark, built, monkeypatch):
     # whose range contains it; a key beyond every range reads nothing.
     from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
 
-    target = spark.read.parquet(runner._path("flat_obs"))
+    target = _live_with_month(runner, "flat_obs")
     row = (
         target.filter(F.col("encounter_id") < SYNTHETIC_ENCOUNTER_OFFSET)
         .select("encounter_id", "p_month")
@@ -186,7 +187,7 @@ def test_probe_reader_synthetic_key_defeats_pruning(spark, built):
         [(SYNTHETIC_ENCOUNTER_OFFSET + 5,)], "encounter_id long"
     )
     res = reader(keys, "encounter_id")
-    full = spark.read.parquet(runner._path("flat_obs")).count()
+    full = runner.read_target("flat_obs").count()
     assert res.count() == full
 
 
@@ -235,10 +236,7 @@ def test_sync_probe_reads_scale_with_delta(spark, built, monkeypatch):
 
     monkeypatch.setattr(PipelineRunner, "read_target_months", spy)
 
-    n_months_obs = len([
-        d for d in os.listdir(runner._path("flat_obs"))
-        if d.startswith("p_month=")
-    ])
+    n_months_obs = len(runner._existing_months("flat_obs"))
     runner.run(dfs2, mode="sync")
     obs_probe_months = {
         m for t, ms in probed if t == "flat_obs" for m in ms
@@ -251,24 +249,23 @@ def test_sync_probe_reads_scale_with_delta(spark, built, monkeypatch):
     )
 
     # No-op sync: nothing changed since the watermark -> every probe's
-    # candidate set is empty -> zero month directories read.
+    # candidate set is empty -> zero months read.
     probed.clear()
     runner.run(dfs2, mode="sync")
     assert all(ms == () for _t, ms in probed), probed
 
 
 def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
-    """Crash INSIDE the swap loop: bounds must still cover both old and
-    new month content (widen-before-swap), and the next sync converges."""
+    """Crash AT the snapshot flip of a month-scoped write: bounds must
+    still cover both old and new month content (widen-before-flip), the
+    old snapshot stays live, and the next write converges."""
     runner = built["runner"]
     table = "flat_obs"
-    path = runner._path(table)
     pre = runner._load_bounds(table)
-    target = spark.read.parquet(path)
-    months = sorted(
-        r["p_month"]
-        for r in target.select("p_month").distinct().collect()
-    )[:2]
+    epoch0 = runner._load_manifest(table)["epoch"]
+    target = _live_with_month(runner, table)
+    n_before = target.count()
+    months = sorted(runner._existing_months(table))[:2]
     delta = (
         target.filter(F.col("p_month").isin(months))
         # shift every key so the staged bounds differ from the old ones
@@ -276,28 +273,25 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
             "encounter_id", (F.col("encounter_id") + F.lit(7)).cast("long")
         )
         # pin: the engine always stages from SOURCE data, never from the
-        # directories it is about to swap — reading the target lazily
-        # across its own swap would re-open moved files (the documented
+        # files it is about to replace — reading the target lazily
+        # across its own GC would re-open deleted files (the documented
         # write-over-read hazard); the checkpoint mimics the engine's
         # source-derived input.
         .localCheckpoint()
     )
 
-    calls = {"n": 0}
     orig_replace = os.replace
 
     def exploding_replace(src, dst):
-        if f"{runner.PARTITION_COL}=" in os.path.basename(dst):
-            calls["n"] += 1
-            if calls["n"] == 2:  # first month swapped, second mid-flight
-                raise RuntimeError("injected crash between month swaps")
+        if os.path.basename(dst) == runner._SNAPSHOT_FILE:
+            raise RuntimeError("injected crash at the snapshot flip")
         return orig_replace(src, dst)
 
     os.replace = exploding_replace
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             runner._write_months(
-                delta, path, months,
+                delta, table, months,
                 bounds_cols=runner._BOUNDS_COLS[table],
             )
     finally:
@@ -310,17 +304,14 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
         old_lo, old_hi = pre[m]["encounter_id"]
         assert mid[m]["encounter_id"][0] <= old_lo
         assert mid[m]["encounter_id"][1] >= old_hi + 7
-    # Recovery: read_target restores the demoted month, a clean rewrite
-    # of the same months lands exact bounds again.
+    # The flip never happened: the old snapshot is still the table.
+    assert runner._load_manifest(table)["epoch"] == epoch0
     restored = runner.read_target(table)
-    assert restored is not None
+    assert restored.count() == n_before
     restored = restored.localCheckpoint()  # same hazard for the cleanup
-    leftover = [
-        d for d in os.listdir(path) if d.startswith(runner._OLD_PREFIX)
-    ]
-    assert not leftover, leftover
+    # A clean rewrite of the same months lands exact bounds again.
     runner._write_months(
-        delta, path, months, bounds_cols=runner._BOUNDS_COLS[table]
+        delta, table, months, bounds_cols=runner._BOUNDS_COLS[table]
     )
     post = runner._load_bounds(table)
     for m in months:
@@ -336,13 +327,16 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
 
 def test_bounds_file_invisible_to_spark(spark, built):
     """The underscore-prefixed sidecar (and its tmp) must never surface
-    as data or break partition discovery."""
+    as data: the snapshot names only data files, and a raw read of the
+    table root still finds no data file at all."""
     runner = built["runner"]
     path = runner._path("flat_obs")
     assert os.path.exists(os.path.join(path, "_month_bounds.json"))
-    df = spark.read.parquet(path)
-    assert "p_month" in df.columns
-    assert df.count() > 0
+    files = runner._manifest_files("flat_obs")
+    assert files and all(f.endswith(".parquet") for f in files)
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        spark.read.parquet(path).count()
+    assert runner.read_target("flat_obs").count() > 0
 
 
 def test_missing_bounds_falls_back_to_full_probe(built):
@@ -387,7 +381,7 @@ def test_bloom_sidecar_prunes_person_probe(spark, built):
     with open(runner._bounds_path("flat_obs")) as f:
         assert "bloom:" not in f.read()
 
-    tgt = spark.read.parquet(runner._path("flat_obs"))
+    tgt = _live_with_month(runner, "flat_obs")
     victim = int(tgt.select("person_id").first()["person_id"])
     mine = tgt.filter(F.col("person_id") == victim)
     true_rows, true_months = (
@@ -525,13 +519,13 @@ def test_bloom_hash_survives_ansi_overflow_keys(spark):
 def test_small_delta_probe_pushes_isin_to_scan(spark, built):
     """r8 (PERF.md 'isin file skipping' item): a probe for a handful of
     keys pushes the key set into the parquet scan as an In filter, so
-    PK-sorted row-group statistics skip inside the candidate month
-    directories — and the probe result is EXACTLY the probed keys'
+    PK-sorted row-group statistics skip inside the candidate months'
+    files — and the probe result is EXACTLY the probed keys'
     rows (the filter is semantics-preserving: probe consumers look up
     exactly these keys)."""
     runner = built["runner"]
     reader = runner._make_probe_reader("flat_obs")
-    tgt = spark.read.parquet(runner._path("flat_obs"))
+    tgt = runner.read_target("flat_obs")
     victims = [
         int(r["person_id"])
         for r in tgt.select("person_id").distinct().limit(3).collect()
@@ -565,7 +559,7 @@ def test_probe_with_null_keys_neither_crashes_nor_misses(spark, built):
     collect's int(), and not defeat the valid keys' pruning."""
     runner = built["runner"]
     reader = runner._make_probe_reader("flat_obs")
-    tgt = spark.read.parquet(runner._path("flat_obs"))
+    tgt = runner.read_target("flat_obs")
     victim = int(tgt.select("person_id").first()["person_id"])
     keys = spark.createDataFrame(
         [(None,), (victim,)], "person_id long"

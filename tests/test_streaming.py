@@ -529,7 +529,6 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
 
     runner = PipelineRunner(
         spark, str(tmp_path / "targets"), partitioned=True,
-        manifest=True,
     )
 
     # crash the SECOND tick's flat_obs flip (first tick cold-builds)

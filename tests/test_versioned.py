@@ -68,39 +68,6 @@ def test_crashed_write_is_invisible(spark, vt):
     assert leftovers == []
 
 
-def test_pipeline_versioned_layout_matches_default(spark, tmp_path):
-    """The five-stage pipeline on the versioned layout must produce the
-    same final tables as the swap layout, with one committed version per
-    run and the pre-sync state still time-travel-readable."""
-    from mrsboraetl_spark.engine import PipelineRunner
-    from tests.fixtures import make_sources, to_spark
-
-    dfs = to_spark(spark, make_sources(n_persons=20, seed=5))
-
-    plain = PipelineRunner(spark, str(tmp_path / "plain"))
-    plain.run(dfs, mode="rebuild")
-    vers = PipelineRunner(spark, str(tmp_path / "vers"), versioned=True)
-    # This test's point is that a same-data resync COMMITS a second
-    # version per table; pin the stage-level no-op short-circuit off so
-    # the incremental path actually runs (the skip behavior itself is
-    # pinned in test_pipeline.test_noop_sync_skips_every_stage).
-    vers._STAGE_SKIP = False
-    vers.run(dfs, mode="rebuild")
-    vers.run(dfs, mode="sync")
-
-    for table in ("flat_obs", "flat_visit_summary", "flat_latest_hiv_summary"):
-        a = plain.read_target(table).toPandas()
-        b = vers.read_target(table).toPandas()
-        cols = sorted(c for c in a.columns if c != "obs_map")
-        sa = sorted(map(tuple, a[cols].astype(str).itertuples(index=False)))
-        sb = sorted(map(tuple, b[cols].astype(str).itertuples(index=False)))
-        assert sa == sb, table
-        vt = vers._versioned(table)
-        assert vt.version() == 1  # rebuild + sync = two commits
-        # time travel: the rebuild-time state is still readable
-        assert vt.read(spark, 0).count() == len(a)
-
-
 def test_vacuum_drops_old_versions(spark, vt):
     for i in range(4):
         vt.commit(_df(spark, [(1, f"v{i}")]))
