@@ -11,9 +11,11 @@ Storage is parquet, one of two layouts per runner, each target at
 
 * plain (default) — the target is rewritten whole behind one
   rename-aside swap (operators/_swap.swap_in);
-* partitioned (``partitioned=True``) — a month's content is a file list
-  in an atomic ``_snapshot.json``, and a sync rewrites ONLY the files its
-  delta touches (the plans report an affected-month superset via their
+* partitioned (``partitioned=True``) — every target is a
+  manifest-committed table on the one snapshot protocol
+  (sources/snapshot.py): a month's content is a file list in an atomic
+  ``_snapshot.json``, and a sync rewrites ONLY the files its delta
+  touches (the plans report an affected-month superset via their
   ``out`` side-channel), then flips the snapshot: write I/O scales with
   the delta, not the target — the reference's ``REPLACE INTO`` cost
   model.
@@ -33,7 +35,6 @@ Modes (flat_visit_summary_v1.0.sql:6 @query_type):
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import json
 import os
 import random
@@ -61,7 +62,9 @@ from mrsboraetl_spark.plans.flat_visit_summary import (
     build_flat_visit_summary,
     incremental_flat_visit_summary,
 )
-from mrsboraetl_spark.sources.versioned import ConcurrentCommitError
+from mrsboraetl_spark.sources import snapshot
+from mrsboraetl_spark.sources.snapshot import ConcurrentCommitError
+from mrsboraetl_spark.sources.versioned import VersionedTable
 from mrsboraetl_spark.sources.watermark import WatermarkStore
 
 
@@ -101,9 +104,10 @@ class PipelineRunner:
         fail-safe rather than silently stale/duplicated.
         ``read_target_months`` selects a month window's exact file
         lists, so date-range consumers open ~1/N of the files.  The
-        unpartitioned target (flat_latest_hiv_summary) routes through
-        VersionedTable — the same manifest discipline, already
-        crash-pinned (sources/versioned.py).
+        unpartitioned target (flat_latest_hiv_summary) is a
+        VersionedTable in the same kind of directory: one file group
+        instead of months, the same snapshot protocol
+        (sources/snapshot.py) for commit, time travel and GC.
 
         ``manifest`` selects nothing: it is accepted for callers written
         when the manifest layout was a separate switch, and must agree
@@ -122,12 +126,12 @@ class PipelineRunner:
         snapshots by reference, so steady-state overhead is the
         TOUCHED files of the last N-1 syncs, not N copies).
 
-        Past ``_MANIFEST_SPLIT_BYTES`` of inline month lists the
-        snapshot splits Iceberg-style into per-month content-addressed
-        ``_man_*.json`` manifest files (see _split_manifest_months):
-        the hot pointer stays one small PUT at any table size, an
-        untouched month's manifest carries forward by NAME, and GC
-        treats manifest files exactly like the data they reference."""
+        Past ``snapshot._MANIFEST_SPLIT_BYTES`` of inline month lists
+        the snapshot splits Iceberg-style into per-month
+        content-addressed ``_man_*.json`` manifest files: the hot
+        pointer stays one small PUT at any table size, an untouched
+        month's manifest carries forward by NAME, and GC treats
+        manifest files exactly like the data they reference."""
         if manifest is not None and bool(manifest) != bool(partitioned):
             raise ValueError(
                 "manifest is the partitioned layout, not a separate "
@@ -138,10 +142,6 @@ class PipelineRunner:
         self.root = storage_root
         self.partitioned = partitioned
         self.keep_snapshots = max(1, int(keep_snapshots))
-        # content-addressed per-month manifest cache: a _man_ file's
-        # NAME commits to its content, so an entry can never go stale —
-        # see _resolve_man_months
-        self._man_cache: dict[str, list[str]] = {}
         os.makedirs(storage_root, exist_ok=True)
         self.watermarks = WatermarkStore(
             spark, os.path.join(storage_root, "flat_log.parquet")
@@ -152,10 +152,8 @@ class PipelineRunner:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, f"{table}.parquet")
 
-    def _versioned(self, table: str):
-        from mrsboraetl_spark.sources.versioned import VersionedTable
-
-        return VersionedTable(os.path.join(self.root, f"{table}.v"))
+    def _versioned(self, table: str) -> VersionedTable:
+        return VersionedTable(self._path(table))
 
     def _recover_fs(self, table: str) -> bool:
         """Crash-window filesystem recovery for a target, WITHOUT
@@ -166,14 +164,11 @@ class PipelineRunner:
         stay invisible to external path readers across arbitrarily many
         skipping syncs."""
         if self.partitioned:
-            if table not in self._PARTITION_SRC:
-                return self._versioned(table).version() >= 0
             # The snapshot flip is atomic: whatever pointer is on disk
             # IS the table — no demoted state can exist, nothing to
             # rescue.  Crash orphans (staged-but-never-flipped epochs)
-            # are invisible to manifest readers and GC'd at the next
-            # write.
-            return self._load_manifest(table) is not None
+            # are invisible to snapshot readers and GC'd later.
+            return snapshot.load(self._path(table)) is not None
         # _write crashed inside its demote->promote window (old moved
         # aside, tmp not yet promoted): recover the previous table so
         # the next run is an incremental, not a silent cold rebuild.
@@ -182,10 +177,7 @@ class PipelineRunner:
 
     def read_target(self, table: str) -> DataFrame | None:
         if self.partitioned:
-            if table not in self._PARTITION_SRC:
-                vt = self._versioned(table)
-                return None if vt.version() < 0 else vt.read(self.spark)
-            files = self._manifest_files(table)
+            files = snapshot.files(self._path(table))
             # zero-month snapshot reads as cold (no schema to serve);
             # the next run rebuilds
             return (
@@ -251,7 +243,7 @@ class PipelineRunner:
     # sync's phase-1 retraction probe opens only the months
     # whose range can contain a changed key — the partitioned-layout
     # lift of VersionedTable.merge_delta's per-file accounting
-    # (sources/versioned.py:236-252) and the engine's stand-in for the
+    # (sources/versioned.py) and the engine's stand-in for the
     # reference's PK-index lookup cost (flat_obs_v1.0.sql:46-50).
     # Columns per table = the keys its incremental plan probes on,
     # mapped to an optional UPPER SENTINEL: values at or above it are
@@ -346,29 +338,11 @@ class PipelineRunner:
     # the scan.
     _PROBE_ISIN_MAX = 64
 
-    # Underscore prefix: invisible to Spark's file discovery.
+    # Underscore prefix: invisible to Spark's file discovery (as are
+    # the snapshot pointer and the hidden epoch dirs — a raw path
+    # reader sees an empty table, never a cross-epoch union).
     _BOUNDS_FILE = "_month_bounds.json"
     _BLOOMS_FILE = "_month_blooms.bin"
-    # Partitioned (manifest) layout: the snapshot pointer and the
-    # hidden epoch-directory prefix.  Underscore prefixes keep all of
-    # them invisible to Spark's file listing — a raw path reader sees
-    # an empty table, never a cross-epoch union.
-    _SNAPSHOT_FILE = "_snapshot.json"
-    _EPOCH_PREFIX = "_e"
-    # Per-month manifest files (the Iceberg manifest-list shape): when
-    # the inline months dict would serialize past this many bytes, the
-    # snapshot stores {"ref": "_man_{month}_{sha}.json"} per month and
-    # each month's file list moves to its own CONTENT-ADDRESSED file.
-    # An untouched month then costs the flip NOTHING new: same list ->
-    # same hash -> same filename, carried forward as an 8-byte-ish
-    # pointer entry instead of re-serializing thousands of relpaths.
-    # On an object store this keeps the hot pointer a single small PUT
-    # regardless of table size; the default threshold keeps every
-    # sub-4-MiB deployment on the simpler inline form (pointer stays
-    # human-readable, zero extra reads).  Split and inline forms can
-    # mix within one snapshot's history — readers resolve per month.
-    _MANIFEST_SPLIT_BYTES = 4 << 20
-    _MAN_PREFIX = "_man_"
 
     # Optional cap on rows per data file (Spark maxRecordsPerFile).
     # Within a month rows are RANGE-partitioned and sorted on
@@ -404,13 +378,14 @@ class PipelineRunner:
         delta-scoped write (at 100 TB this is what makes a sync
         O(delta months) end to end instead of an O(target) scan
         feeding an O(delta) write).  Partitioned layout only."""
-        sel = self._manifest_files(table, months) if months else []
+        path = self._path(table)
+        sel = snapshot.files(path, months) if months else []
         if sel:
             return self.spark.read.parquet(*sel)
         # no candidate months (or months absent from the snapshot): an
         # empty frame with the target schema keeps downstream joins
         # well-typed — read one live file's schema, no rows
-        all_files = self._manifest_files(table)
+        all_files = snapshot.files(path)
         return (
             self.spark.read.parquet(*all_files[:1]).filter(F.lit(False))
         )
@@ -516,359 +491,31 @@ class PipelineRunner:
         os.replace(tmpb, bp)
 
     # ------------------------------------------------ manifest layout
-    # (r10, VERDICT r9 item 1: the object-store-safe carry.)  A table's
-    # content is defined by _snapshot.json: {"epoch": N, "months":
-    # {month: [relpath, ...]}} where every relpath points into an
-    # immutable hidden epoch directory.  Writes stage a new epoch, then
-    # FLIP the snapshot — one atomic metadata operation; a carried file
-    # is just a relpath kept in the new month list.  No data file is
-    # ever renamed, linked, or copied after its initial write, so the
-    # layout costs the same on a filesystem without hardlinks or cheap
-    # renames (no-hardlink pin: tests/test_manifest_layout.py).
-
-    def _snapshot_path_dir(self, table_dir: str) -> str:
-        return os.path.join(table_dir, self._SNAPSHOT_FILE)
-
-    @staticmethod
-    def _man_payload(files: list[str]) -> bytes:
-        """Canonical bytes of one month's file list — what the
-        content-addressed _man_ filename commits to."""
-        return json.dumps(sorted(files)).encode()
-
-    def _resolve_man_months(
-        self, table_dir: str, months: dict
-    ) -> dict[str, list[str]] | None:
-        """Resolve a raw snapshot ``months`` dict to plain
-        {month: [relpath, ...]}.  A value is either the inline list or
-        a {"ref": "_man_*.json"} pointer to a per-month manifest file
-        (split form, _MANIFEST_SPLIT_BYTES); both forms can coexist.
-        Returns None if any referenced manifest is missing/corrupt —
-        the caller treats the snapshot as unreadable.  Resolved refs
-        are cached by filename: the name is content-addressed, so a
-        hit can never be stale (and GC removing an unreferenced file
-        never invalidates a live entry).  Resolution is EAGER —
-        O(all months) manifest reads on a runner's FIRST load of a
-        split-form table — an accepted trade: callers index the months
-        dict freely, and the cache makes every later load (including
-        carried-forward refs across flips) a pure dict lookup, so the
-        cost is once per table per process, not per operation."""
-        out: dict[str, list[str]] = {}
-        for m, v in months.items():
-            if isinstance(v, list):
-                out[m] = v
-                continue
-            try:
-                ref = v["ref"]
-            except (TypeError, KeyError):
-                return None
-            # Shape-validate the ref BEFORE opening it (ADVICE r10): a
-            # corrupt pointer must read as unreadable, never as a path
-            # escape — the ref is joined into the table dir, so any
-            # separator (or a name outside the _man_*.json family)
-            # could reference files outside the table.
-            if (
-                not isinstance(ref, str)
-                or not ref.startswith(self._MAN_PREFIX)
-                or not ref.endswith(".json")
-                or "/" in ref
-                or os.sep in ref
-                or (os.altsep and os.altsep in ref)
-            ):
-                return None
-            cached = self._man_cache.get(ref)
-            if cached is None:
-                try:
-                    with open(os.path.join(table_dir, ref)) as f:
-                        cached = json.load(f)
-                    if not isinstance(cached, list):
-                        return None
-                except (OSError, ValueError):
-                    # OSError covers permission/IsADirectory/transient
-                    # I/O failures alongside FileNotFoundError;
-                    # ValueError covers JSONDecodeError AND the
-                    # UnicodeDecodeError a binary-garbage file raises —
-                    # all must read as None per the self-healing
-                    # contract, not crash the read path (ADVICE r10).
-                    return None
-                if len(self._man_cache) > 4096:
-                    self._man_cache.clear()
-                self._man_cache[ref] = cached
-            out[m] = cached
-        return out
-
-    def _raw_pointer_epoch(self, table_dir: str) -> int:
-        """Epoch of the on-disk snapshot pointer AS THE FLIP'S CAS
-        READS IT (parse ``_snapshot.json``, take ``epoch``), -1 when
-        cold or unparseable.  This is deliberately WEAKER than
-        _load_manifest: a pointer whose epoch parses but whose months
-        cannot be resolved (missing/corrupt ``_man_`` ref) still has a
-        raw epoch.  Writers that planned against a None manifest (cold
-        OR engine-unreadable snapshot) must pass THIS value as their
-        CAS parent, not -1 — otherwise the documented self-healing
-        rebuild of an unreadable-but-parseable pointer would compare
-        -1 against the intact epoch and raise ConcurrentCommitError
-        forever (ADVICE r11, high)."""
-        try:
-            with open(self._snapshot_path_dir(table_dir)) as f:
-                return int(json.load(f)["epoch"])
-        except (OSError, ValueError, KeyError, TypeError):
-            return -1
-
-    def _load_manifest(self, table: str) -> dict | None:
-        """The live snapshot with months RESOLVED to plain file lists
-        (see _resolve_man_months), or None for a cold/absent table.  A
-        corrupt snapshot — unparseable, missing either required key,
-        or naming a missing per-month manifest — also reads as None:
-        the next run cold-rebuilds and flips a fresh one (self-healing;
-        the fsync'd replace in _flip_manifest_dir makes a torn file
-        unreachable in normal operation).  Epoch is validated too:
-        treating an epoch-less months dict as live would keep reads
-        working while every write died in _next_epoch_dir forever
-        (review finding r10)."""
-        try:
-            path = self._path(table)
-            with open(self._snapshot_path_dir(path)) as f:
-                man = json.load(f)
-            if not isinstance(man.get("months"), dict):
-                return None
-            int(man["epoch"])
-            months = self._resolve_man_months(path, man["months"])
-            if months is None:
-                return None
-            man["months"] = months
-            return man
-        except (
-            OSError, AttributeError, KeyError, TypeError, ValueError,
-        ):
-            # OSError (not just FileNotFoundError): a permission or
-            # transient I/O failure on the pointer reads as cold, same
-            # self-healing contract as a torn file (ADVICE r10).
-            # ValueError subsumes JSONDecodeError and the
-            # UnicodeDecodeError of binary garbage.
-            return None
-
-    def _split_manifest_months(
-        self, table_dir: str, man: dict
-    ) -> dict:
-        """Split step of the flip: when the inline months dict would
-        push the snapshot pointer past _MANIFEST_SPLIT_BYTES, move each
-        month's file list into its own content-addressed
-        ``_man_{month}_{sha}.json`` and store {"ref": name} in the
-        snapshot.  Content addressing makes the carry free at the
-        metadata layer too: an untouched month hashes to the SAME
-        filename, so its manifest file is simply not rewritten (the
-        os.path.exists check below) and survives by reference in the
-        new snapshot — a flip writes O(touched months) manifest bytes
-        plus one small pointer, never O(table months).  Files are
-        fsync'd before the pointer names them (same durability
-        argument as the data tree); orphans from a crash before the
-        flip are pruned by retention GC (referenced by no retained
-        snapshot).  Under the threshold the snapshot stays inline —
-        mixed histories are fine, readers resolve per month."""
-        months = man["months"]
-        if (
-            len(json.dumps(months, sort_keys=True))
-            <= self._MANIFEST_SPLIT_BYTES
-        ):
-            return man
-        refs: dict[str, dict] = {}
-        for m, files in months.items():
-            payload = self._man_payload(files)
-            name = (
-                f"{self._MAN_PREFIX}{m}_"
-                f"{hashlib.sha256(payload).hexdigest()[:16]}.json"
-            )
-            target = os.path.join(table_dir, name)
-            if not os.path.exists(target):
-                tmp = target + ".tmp"
-                with open(tmp, "wb") as f:
-                    f.write(payload)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, target)
-            refs[m] = {"ref": name}
-        return {**man, "months": refs}
-
-    def _flip_manifest_dir(
-        self, table_dir: str, man: dict,
-        parent_epoch: int | None = None,
-    ) -> None:
-        """THE swap: one atomic, DURABLE pointer replace.  Local
-        stand-in for an object store's single-key conditional PUT.
-
-        ``parent_epoch`` (VERDICT r10 item 3, optimistic concurrency):
-        the live epoch the writer READ when it planned this write (-1
-        for a cold table).  If the on-disk pointer has moved past it —
-        a concurrent runner (or a streaming drain racing a batch sync)
-        committed in between — the flip raises ConcurrentCommitError
-        instead of silently dropping that committed epoch: this
-        writer's plan retracted/merged against a stale base, so
-        publishing it would lose the other writer's rows, not just its
-        epoch number.  The loser's staged epoch directory is an orphan
-        the next successful write's GC sweeps; the caller re-runs the
-        sync against the new snapshot (idempotent by the delete +
-        reaggregate contract).  The check-then-replace window is not
-        truly atomic on a local filesystem — on an object store, swap
-        the replace below for If-Match/compare-and-swap on the pointer
-        key and the contract is exact.  ``None`` skips the check
-        (callers that cannot know their parent; the reference's own
-        model is one serialized cron, flat_obs_v1.0.sql:115).
-
-        fsync before AND after the rename (review finding r10): GC
-        deletes the replaced data files immediately after this returns,
-        so a power loss that rolled the pointer back to the OLD
-        snapshot would leave it naming deleted files — a permanently
-        wedged table.  The JSON fsync makes the pointer content
-        durable before the rename; the directory fsync makes the
-        rename itself durable before any file the old snapshot
-        references can be removed.  Callers durably flush the staged
-        DATA first (_fsync_tree) — a durable pointer naming
-        never-written-back parquet pages is the same wedged state from
-        the other side (second review pass).  The directory fsync is
-        best-effort: some network/FUSE mounts reject fsync on a
-        directory fd, and failing every flip AFTER it already
-        committed would be worse than the narrowed crash window."""
-        p = self._snapshot_path_dir(table_dir)
-        if parent_epoch is not None:
-            try:
-                with open(p) as f:
-                    live = int(json.load(f)["epoch"])
-            except (OSError, ValueError, KeyError, TypeError):
-                live = -1  # cold/corrupt pointer == no committed parent
-            if live != int(parent_epoch):
-                raise ConcurrentCommitError(
-                    f"{table_dir}: planned against epoch {parent_epoch} "
-                    f"but live is {live} — a concurrent commit landed; "
-                    "re-run the sync against the new snapshot"
-                )
-        man = self._split_manifest_months(table_dir, man)
-        # History entry FIRST (crash before the pointer flip leaves an
-        # orphan history file that GC prunes as above-live): the flip
-        # then only publishes — time travel and retention GC read the
-        # history files, the pointer names the live epoch.
-        hist = os.path.join(
-            table_dir, f"_snap_{int(man['epoch']):08d}.json"
-        )
-        for target in (hist, p):
-            tmp = target + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(man, f, sort_keys=True)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, target)
-        try:
-            dfd = os.open(table_dir, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        except OSError:
-            pass
-
-    @staticmethod
-    def _fsync_tree(root_dir: str) -> None:
-        """Best-effort durable flush of a freshly staged directory
-        tree (files, then directories bottom-up) before a snapshot
-        flip names its files: Spark's local committer never fsyncs, so
-        without this a power loss after a durable flip + GC could
-        leave the only copy of a month's data as never-written-back
-        page-cache pages.  Best-effort (OSError swallowed): on mounts
-        that reject fsync the pre-r10 behavior is preserved rather
-        than failing writes that already succeeded."""
-        for droot, _dirs, files in os.walk(root_dir, topdown=False):
-            for fn in files:
-                try:
-                    fd = os.open(os.path.join(droot, fn), os.O_RDONLY)
-                    try:
-                        os.fsync(fd)
-                    finally:
-                        os.close(fd)
-                except OSError:
-                    pass
-            try:
-                fd = os.open(droot, os.O_RDONLY)
-                try:
-                    os.fsync(fd)
-                finally:
-                    os.close(fd)
-            except OSError:
-                pass
-
-    def _manifest_files(
-        self, table: str, months: list[str] | None = None
-    ) -> list[str]:
-        """Absolute data-file paths of the live snapshot, optionally
-        restricted to the given months — the manifest-mode equivalent
-        of partition pruning (strictly stronger: exact file lists, no
-        directory listing at all)."""
-        man = self._load_manifest(table)
-        if man is None:
-            return []
-        base = self._path(table)
-        sel = man["months"].items() if months is None else (
-            (m, man["months"].get(m, ())) for m in months
-        )
-        return [os.path.join(base, rp) for _m, fl in sel for rp in fl]
-
-    def _history_epochs(self, table: str) -> dict[int, str]:
-        """{epoch: history-file path} of recorded snapshots on disk."""
-        path = self._path(table)
-        out: dict[int, str] = {}
-        for entry in os.listdir(path) if os.path.isdir(path) else ():
-            if entry.startswith("_snap_") and entry.endswith(".json"):
-                try:
-                    out[int(entry[len("_snap_"):-len(".json")])] = (
-                        os.path.join(path, entry)
-                    )
-                except ValueError:
-                    continue
-        return out
+    # A partitioned-layout table is a manifest-committed table on the
+    # one snapshot protocol (sources/snapshot.py), keyed on its
+    # directory: the groups of its file map are storage months (the
+    # unpartitioned flat_latest_hiv_summary is a VersionedTable, one
+    # group, in the same kind of directory).  Writes stage a new epoch,
+    # then flip the snapshot; a carried file is just a relpath kept in
+    # the new month list.  No data file is ever renamed, linked, or
+    # copied after its initial write, so the layout costs the same on a
+    # filesystem without hardlinks or cheap renames (no-hardlink pin:
+    # tests/test_manifest_layout.py).  What stays here is the engine's
+    # own part: month staging, the bounds/Bloom sidecar and the
+    # pipeline epoch map.
 
     def snapshots(self, table: str) -> list[int]:
         """Retained snapshot epochs, oldest first (live one included).
         Any of them can be read with read_target_at."""
-        man = self._load_manifest(table)
-        if man is None:
-            return []
-        live = int(man["epoch"])
-        return sorted(
-            e for e in self._history_epochs(table) if e <= live
-        )
+        return snapshot.snapshots(self._path(table))
 
     def read_target_at(self, table: str, epoch: int) -> DataFrame:
         """Time travel: the target as of a RETAINED snapshot (see
-        keep_snapshots).  Carried files are shared across snapshots by
-        reference, so this costs no extra storage beyond the retention
-        window's touched files."""
-        hist = self._history_epochs(table).get(int(epoch))
-        man_live = self._load_manifest(table)
-        live = int(man_live["epoch"]) if man_live else -1
-        if hist is None or int(epoch) > live:
-            # the > live guard rejects crash orphans: a history file
-            # written before a flip that never happened names state
-            # that never committed, and the next write reuses its
-            # epoch NUMBER — overwriting the orphan history file —
-            # while staging into a fresh uuid-suffixed data dir
-            # (review finding r10; dir uniqueness ADVICE r11)
-            raise ValueError(
-                f"snapshot {epoch} of {table} is not retained "
-                f"(available: {self.snapshots(table)})"
-            )
-        with open(hist) as f:
-            man = json.load(f)
-        base = self._path(table)
-        months = self._resolve_man_months(base, man["months"])
-        if months is None:
-            raise ValueError(
-                f"snapshot {epoch} of {table} references a missing "
-                "per-month manifest"
-            )
-        files = [
-            os.path.join(base, rp)
-            for fl in months.values()
-            for rp in fl
-        ]
-        return self.spark.read.parquet(*files)
+        keep_snapshots); ValueError for an epoch out of retention."""
+        path = self._path(table)
+        return self.spark.read.parquet(
+            *snapshot.files(path, man=snapshot.load_at(path, epoch))
+        )
 
     # ------------------------------------------ pipeline-level snapshot
     # (r12, VERDICT r11 item 5.)  Each table's manifest commits
@@ -894,12 +541,12 @@ class PipelineRunner:
     # but a CONCURRENT run's live staging is never this old, which is
     # why the sweep cannot be unconditional (r13 race pin).
     _BLOOM_SCRATCH_PREFIX = "_bloom_agg_tmp_"
-    _SCRATCH_ORPHAN_SECONDS = 6 * 3600
 
     def _sweep_scratch(self) -> None:
         """Remove bloom-staging orphans left by hard crashes — only
-        dirs older than _SCRATCH_ORPHAN_SECONDS, so a concurrent
-        runner's live staging survives."""
+        dirs older than the snapshot protocol's orphan age gate
+        (snapshot._SCRATCH_ORPHAN_SECONDS), so a concurrent runner's
+        live staging survives."""
         now = dt.datetime.now().timestamp()
         try:
             entries = os.listdir(self.root)
@@ -910,7 +557,8 @@ class PipelineRunner:
                 continue
             p = os.path.join(self.root, entry)
             try:
-                if now - os.path.getmtime(p) > self._SCRATCH_ORPHAN_SECONDS:
+                age = now - os.path.getmtime(p)
+                if age > snapshot._SCRATCH_ORPHAN_SECONDS:
                     shutil.rmtree(p, ignore_errors=True)
             except OSError:
                 continue
@@ -955,17 +603,12 @@ class PipelineRunner:
                 tables[t] = committed[t]
             elif t in prev_tables:
                 tables[t] = int(prev_tables[t])
-            elif t in self._PARTITION_SRC:
-                tables[t] = self._raw_pointer_epoch(self._path(t))
             else:
-                tables[t] = self._versioned(t).version()
-        p = os.path.join(self.root, self._PIPELINE_SNAPSHOT_FILE)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"tables": tables}, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
+                tables[t] = snapshot.raw_epoch(self._path(t))
+        snapshot.write_json(
+            os.path.join(self.root, self._PIPELINE_SNAPSHOT_FILE),
+            {"tables": tables},
+        )
 
     def pipeline_snapshot(self) -> dict | None:
         """The last completed run's {table: epoch/version} map, or None
@@ -1002,240 +645,7 @@ class PipelineRunner:
                 f"{self.root}: no pipeline snapshot — no run has "
                 "completed on the manifest layout"
             )
-        v = snap["tables"][table]
-        if table in self._PARTITION_SRC:
-            return self.read_target_at(table, int(v))
-        return self._versioned(table).read(self.spark, version=int(v))
-
-    def _gc_epochs(self, table: str, man: dict | None = None) -> int:
-        """Delete epoch-directory files not referenced by any RETAINED
-        snapshot (the live one plus the keep_snapshots-1 before it):
-        replaced files past the retention window, orphans from a crash
-        before a flip.  Runs after every successful flip (which also
-        sweeps leftovers of earlier crashes).  ``man``: pass the
-        just-flipped snapshot to skip a redundant reload.  History
-        files above the live epoch are crash orphans (their flip never
-        happened) and are pruned with their data; history files below
-        the window are pruned after their exclusive data.  With the
-        default keep_snapshots=1 this is exactly the old swap-layout
-        contract: a concurrent reader of the PREVIOUS snapshot can
-        lose files mid-job; retention N > 1 is the snapshot-isolation
-        knob.
-
-        Concurrent-writer carve-out (r13): a staged epoch dir that was
-        NEVER flipped — no file of it named by the live snapshot or
-        any on-disk history of epoch <= live — may be another runner's
-        in-progress staging, not a crash orphan; those dirs are swept
-        only once older than _SCRATCH_ORPHAN_SECONDS (a staging
-        outliving that window is dead by definition — raise the knob
-        for deployments whose single stage write legitimately runs
-        longer).  Everything a completed flip ever published keeps the
-        immediate sweep."""
-        path = self._path(table)
-        if man is None:
-            man = self._load_manifest(table)
-        live_epoch = int(man["epoch"]) if man else -1
-        history = self._history_epochs(table)
-        retained = sorted(
-            (e for e in history if e <= live_epoch), reverse=True
-        )[: self.keep_snapshots]
-        live = {
-            rp
-            for fl in (man or {"months": {}})["months"].values()
-            for rp in fl
-        }
-        # Ref names are collected from the RAW retained history files
-        # (the in-memory ``man`` always carries resolved inline lists,
-        # but the on-disk pointer/history may hold the split form —
-        # its _man_ files are retained metadata exactly like the data
-        # they name) — AND from the raw live pointer itself (ADVICE
-        # r10): if the live epoch's history file is missing or
-        # unreadable, its except-continue below would otherwise retain
-        # no refs for the live snapshot and GC would delete the _man_
-        # files _snapshot.json still names, wedging the live table.
-        live_refs: set[str] = set()
-        try:
-            with open(self._snapshot_path_dir(path)) as f:
-                raw_live = json.load(f)
-            live_refs.update(
-                v["ref"]
-                for v in raw_live.get("months", {}).values()
-                if isinstance(v, dict) and "ref" in v
-            )
-        except (OSError, ValueError, AttributeError, TypeError):
-            pass  # cold/corrupt pointer: nothing live to protect
-        for e in retained:
-            try:
-                with open(history[e]) as f:
-                    snap = json.load(f)
-                raw_months = snap["months"]
-                live_refs.update(
-                    v["ref"]
-                    for v in raw_months.values()
-                    if isinstance(v, dict) and "ref" in v
-                )
-                if man is not None and e == live_epoch:
-                    continue  # data files already unioned above
-                resolved = self._resolve_man_months(path, raw_months)
-                for fl in (resolved or {}).values():
-                    live.update(fl)
-            except (OSError, ValueError, KeyError, TypeError):
-                continue  # unreadable history: retains nothing extra
-                # (the live snapshot's refs/data are protected above
-                # regardless — this arm only loses RETENTION extras)
-        # COMMITTED-evidence set (r13 race pin): files named by the
-        # live snapshot or by ANY on-disk history file of epoch <=
-        # live were published by a completed flip at some point — an
-        # unreferenced file in this set is a replaced/out-of-retention
-        # leftover and is swept immediately, exactly the old contract.
-        # A file OUTSIDE it belongs to a NEVER-flipped staging dir:
-        # either a hard-crash orphan or a CONCURRENT runner's
-        # in-progress epoch (which this GC must not destroy mid-write
-        # — the fixed-sweep spelling crashed the end-to-end two-runner
-        # race by rmtree'ing the other writer's staging).  Those are
-        # swept only once provably dead (_SCRATCH_ORPHAN_SECONDS old).
-        # Epochs ABOVE live with a history file (the microscopic
-        # hist-written-pointer-not-yet window of a concurrent winner)
-        # are deliberately NOT committed-evidence: age-gating them
-        # closes the wedge where GC deletes data whose pointer flip
-        # lands a moment later.
-        committed: set[str] = set(live)
-        for e, hp in history.items():
-            if e > live_epoch or e in retained:
-                continue  # retained epochs already unioned into live
-            try:
-                with open(hp) as f:
-                    snap = json.load(f)
-                resolved = self._resolve_man_months(
-                    path, snap["months"]
-                )
-                for fl in (resolved or {}).values():
-                    committed.update(fl)
-            except (OSError, ValueError, KeyError, TypeError):
-                continue  # unreadable: its files stay age-gated
-        for e, hp in history.items():
-            if e not in retained:
-                try:
-                    os.remove(hp)
-                except OSError:
-                    pass
-        for entry in os.listdir(path):
-            if (
-                entry.startswith(self._MAN_PREFIX)
-                and entry.endswith((".json", ".json.tmp"))
-                and entry not in live_refs
-            ):
-                try:
-                    os.remove(os.path.join(path, entry))
-                except OSError:
-                    pass
-        removed = 0
-        now = dt.datetime.now().timestamp()
-        for entry in os.listdir(path):
-            if not entry.startswith(self._EPOCH_PREFIX):
-                continue
-            edir = os.path.join(path, entry)
-            if not os.path.isdir(edir):
-                continue
-            # One walk up front: a dir holding NO live and NO
-            # committed-evidence file is a never-flipped staging —
-            # skip it whole (files, dirs, rmdir) unless provably dead,
-            # so a concurrent writer's half-written months are never
-            # touched (see the committed-evidence comment above).
-            walk = list(os.walk(edir, topdown=False))
-            all_rps = [
-                (os.path.join(root, fn),
-                 os.path.relpath(os.path.join(root, fn), path))
-                for root, _dirs, files in walk
-                for fn in files
-            ]
-            # empty dirs (no files yet) are age-gated too: a
-            # concurrent writer may have just created its staging tree
-            if not any(rp in committed for _fp, rp in all_rps):
-                try:
-                    age = now - os.path.getmtime(edir)
-                except OSError:
-                    continue
-                if age <= self._SCRATCH_ORPHAN_SECONDS:
-                    continue  # possibly a live concurrent staging
-            for root, _dirs, files in walk:
-                for fn in files:
-                    fp = os.path.join(root, fn)
-                    if os.path.relpath(fp, path) not in live:
-                        try:
-                            os.remove(fp)
-                        except OSError:
-                            # locked/undeletable file: GC must not fail
-                            # a sync whose flip already committed — the
-                            # leftover is swept by a later GC (review
-                            # finding r10)
-                            continue
-                        removed += 1
-                try:
-                    os.rmdir(root)  # drops emptied month/epoch dirs
-                except OSError:
-                    pass
-        return removed
-
-    @classmethod
-    def _epoch_of_dirname(cls, entry: str) -> int | None:
-        """Leading epoch number of an ``_e{N}[_{uuid}]`` directory
-        name, None for anything else (legacy un-suffixed names parse
-        too)."""
-        digits = entry[len(cls._EPOCH_PREFIX):].split("_", 1)[0]
-        try:
-            return int(digits)
-        except ValueError:
-            return None
-
-    def _next_epoch_dir(
-        self, table: str, man: dict | None = None
-    ) -> tuple[int, str]:
-        """Next epoch number + a UNIQUELY-NAMED staging dir
-        (``_e{N}_{uuid}``).  The uniqueness is the concurrent-writer
-        guard for the DATA (ADVICE r11, medium): two runners that both
-        planned against the same parent epoch would otherwise
-        mode-overwrite the SAME ``_e{N}`` directory — the loser's
-        interleaved write silently corrupting the files the winner's
-        flip is about to (or already did) publish.  With per-writer
-        dirs, only the pointer CAS in _flip_manifest_dir arbitrates;
-        the loser's staged dir is an un-referenced orphan the next
-        successful flip's GC sweeps (GC walks every ``_e*`` dir and
-        keys on relpaths, not epoch numbers).
-
-        The epoch NUMBER is floored by the live snapshot's epoch, the
-        raw pointer's epoch (heal path, ADVICE r11 — a parseable
-        pointer with unresolvable months still speaks an epoch the
-        history guard trusts), and any epoch directory already on
-        disk: after a corrupt manifest read as cold, a naive epoch-0
-        restart would collide with history files older snapshots still
-        reference."""
-        import uuid
-
-        path = self._path(table)
-        man = man if man is not None else self._load_manifest(table)
-        epoch = (
-            int(man["epoch"]) if man else self._raw_pointer_epoch(path)
-        ) + 1
-        on_disk = -1
-        for entry in os.listdir(path) if os.path.isdir(path) else ():
-            if entry.startswith(self._EPOCH_PREFIX):
-                e = self._epoch_of_dirname(entry)
-                if e is not None:
-                    on_disk = max(on_disk, e)
-        # an on-disk epoch == the computed next is a crashed staging
-        # attempt of exactly this write: REUSE THE NUMBER (the crashed
-        # attempt's _snap_ history orphan is then overwritten by this
-        # flip, keeping it un-time-travelable) but never its dir — the
-        # fresh uuid suffix keeps the data writes disjoint.  Anything
-        # HIGHER means the manifest went backwards (corruption read as
-        # cold): step past every existing dir.
-        if on_disk > epoch:
-            epoch = on_disk + 1
-        return epoch, os.path.join(
-            path,
-            f"{self._EPOCH_PREFIX}{epoch:08d}_{uuid.uuid4().hex[:8]}",
-        )
+        return self.read_target_at(table, int(snap["tables"][table]))
 
     def _staged_month_files(self, edir: str) -> dict[str, list[str]]:
         """{month: [relpath-from-table-root]} of a freshly staged epoch
@@ -1276,7 +686,7 @@ class PipelineRunner:
         """Storage months of the live table — the snapshot's keys (no
         directory listing: the snapshot IS the content authority, and
         disk may hold not-yet-GC'd orphans)."""
-        man = self._load_manifest(table)
+        man = snapshot.load(self._path(table))
         return sorted((man or {"months": {}})["months"])
 
     def _compute_month_bounds(self, src, cols: dict) -> dict:
@@ -1539,7 +949,7 @@ class PipelineRunner:
         and — when ``pk`` is given — per-FILE pk entries
         ``{"files": {name: [lo, hi, n_rows]}}`` (r9, VERDICT r8
         item 2: the partitioned-layout lift of
-        VersionedTable._file_key_stats, sources/versioned.py:77).
+        VersionedTable._file_key_stats in sources/versioned.py).
         Per-file ranges include synthetic rows (no sentinel clipping):
         a full-month range-partitioned write keeps per-file ranges
         DISJOINT, so a bimodal population just means the tail file(s)
@@ -1983,7 +1393,9 @@ class PipelineRunner:
             return None
         pk = self._CLUSTER_BY[table][0]
         bounds = self._load_bounds(table) or {}
-        man_months = (self._load_manifest(table) or {"months": {}})["months"]
+        man_months = (
+            snapshot.load(self._path(table)) or {"months": {}}
+        )["months"]
         sentinel = dict(self._BOUNDS_COLS.get(table, {})).get(pk)
         synth_months: set = set()
         sm = out.get("synthetic_delta_months")
@@ -2057,7 +1469,7 @@ class PipelineRunner:
         back) — the read-side half of the per-file cost model: phase 2
         neither reads nor rewrites a carried file."""
         path = self._path(table)
-        man = self._load_manifest(table) or {"months": {}}
+        man = snapshot.load(path) or {"months": {}}
         sel: list[str] = []
         for m, t in touched.items():
             names = man["months"].get(m, ()) if t is None else sorted(t)
@@ -2107,9 +1519,7 @@ class PipelineRunner:
         if n_queue == 0:
             return True  # empty queue: latest state already consistent
         if self.partitioned:
-            vt = self._versioned(table)
-            ent = vt._entry(vt.version()) or {}
-            n_latest = ent.get("rows")
+            n_latest = self._versioned(table).rows()
         else:
             n_latest = self.read_target(table).count()
         if n_latest and n_queue > self._LATEST_MERGE_MAX_FRACTION * n_latest:
@@ -2145,9 +1555,10 @@ class PipelineRunner:
         return True
 
     def _pin_commit_parent(self, table: str) -> int | None:
-        """The live commit parent of ``table`` — manifest raw-pointer
-        epoch or VersionedTable version — captured at PLAN time, i.e.
-        before read_target pins the plan base (ADVICE r12, medium).  The old
+        """The live commit parent of ``table`` — its raw snapshot
+        pointer epoch (a VersionedTable's version) — captured at PLAN
+        time, i.e. before read_target pins the plan base (ADVICE r12,
+        medium).  The old
         spelling captured the CAS parent inside _write/_write_delta when
         STAGING began: a concurrent commit landing during the plan/probe
         phase (the longest part of a sync) advanced the pointer first,
@@ -2161,9 +1572,7 @@ class PipelineRunner:
         (documented single-runner contract)."""
         if not self.partitioned:
             return None
-        if table not in self._PARTITION_SRC:
-            return self._versioned(table).version()
-        return self._raw_pointer_epoch(self._path(table))
+        return snapshot.raw_epoch(self._path(table))
 
     def _write(
         self, df: DataFrame, table: str, parent: int | None = None
@@ -2243,7 +1652,7 @@ class PipelineRunner:
         with partial content."""
         path = self._path(table)
         os.makedirs(path, exist_ok=True)
-        man_old = self._load_manifest(table)  # loaded ONCE per write
+        man_old = snapshot.load(path)  # loaded ONCE per write
         # CAS parent: the caller's plan-time pin when given (ADVICE
         # r12, medium — captured before read_target pinned the plan
         # base, see _pin_commit_parent); else captured here — the
@@ -2254,13 +1663,13 @@ class PipelineRunner:
         if parent_epoch is None:
             parent_epoch = (
                 int(man_old["epoch"]) if man_old
-                else self._raw_pointer_epoch(path)
+                else snapshot.raw_epoch(path)
             )
         # staging dir is uniquely named (_e{N}_{uuid}) — a crashed or
         # CONCURRENT staging attempt of the same epoch can never be
         # overwritten or interleaved with; its orphan files are swept
-        # by the post-flip GC (ADVICE r11, medium)
-        epoch, edir = self._next_epoch_dir(table, man_old)
+        # by a later GC (ADVICE r11, medium)
+        epoch, edir = snapshot.next_epoch_dir(path, man_old)
         writer = df.write.mode("overwrite").partitionBy(
             self.PARTITION_COL
         )
@@ -2301,14 +1710,13 @@ class PipelineRunner:
                 widened[m] = w
             self._write_bounds(path, widened)
         man_new = {"epoch": epoch, "months": months_files}
-        self._fsync_tree(edir)  # staged data durable BEFORE it's named
-        self._flip_manifest_dir(path, man_new, parent_epoch=parent_epoch)
+        snapshot.flip(path, man_new, parent_epoch=parent_epoch, staged=edir)
         self._record_run_commit(table, epoch)
         if bounds_cols:
             # exact: a full rewrite's content is exactly the staged set
             self._write_bounds(path, staged)
         # previous epochs are now unreferenced
-        self._gc_epochs(table, man_new)
+        snapshot.gc(path, man_new, keep=self.keep_snapshots)
         # Migration sweep (review finding r10): a table written by the
         # retired directory layout still holds its pre-manifest hive
         # dirs (p_month=M live, _old.M demoted) — the flip just
@@ -2403,18 +1811,18 @@ class PipelineRunner:
         # once per write.  Staging dirs are uniquely named
         # (_e{N}_{uuid}): crashed or concurrent attempts of the same
         # epoch never collide; post-flip GC sweeps orphans.
-        man_old = self._load_manifest(table)
+        man_old = snapshot.load(path)
         live_months = (man_old or {"months": {}})["months"]
         # CAS parent: the caller's plan-time pin when given (ADVICE
         # r12, medium), else captured here; raw-pointer fallback keeps
         # the heal flip of an unresolvable snapshot possible (ADVICE
-        # r11, high — see _raw_pointer_epoch)
+        # r11, high — see snapshot.raw_epoch)
         if parent_epoch is None:
             parent_epoch = (
                 int(man_old["epoch"]) if man_old
-                else self._raw_pointer_epoch(path)
+                else snapshot.raw_epoch(path)
             )
-        epoch, tmp = self._next_epoch_dir(table, man_old)
+        epoch, tmp = snapshot.next_epoch_dir(path, man_old)
         writer = df.write.mode("overwrite").partitionBy(self.PARTITION_COL)
         if self._TARGET_FILE_ROWS:
             writer = writer.option(
@@ -2467,9 +1875,7 @@ class PipelineRunner:
             else:
                 new_months.pop(m, None)
         man_new = {"epoch": epoch, "months": new_months}
-        # staged data durable BEFORE the pointer names it
-        self._fsync_tree(tmp)
-        self._flip_manifest_dir(path, man_new, parent_epoch=parent_epoch)
+        snapshot.flip(path, man_new, parent_epoch=parent_epoch, staged=tmp)
         self._record_run_commit(table, epoch)
         if bounds_cols:
             # The flip committed: tighten to the exact staged bounds
@@ -2546,7 +1952,7 @@ class PipelineRunner:
             self._write_bounds(path, final)
         # replaced touched files (and the old epoch's _SUCCESS markers)
         # are now unreferenced
-        self._gc_epochs(table, man_new)
+        snapshot.gc(path, man_new, keep=self.keep_snapshots)
 
     # -------------------------------------------------------------- runs
 
@@ -2686,8 +2092,6 @@ class PipelineRunner:
         and rows are never hard-deleted (OpenMRS voids).  Tables that
         can mutate without a dated column moving must leave
         delta_key/delta_cols undeclared (person)."""
-        from mrsboraetl_spark.sources.versioned import VersionedTable
-
         snap = os.path.join(self.root, f"_src_snapshot_{key}")
         if not (src.delta_key and src.delta_cols):
             src.load(self.spark).write.mode("overwrite").parquet(snap)
@@ -2821,7 +2225,7 @@ class PipelineRunner:
                 live_n = jdbc_row_count(
                     self.spark, src.url, src.table, src.props()
                 )
-                snap_n = (vt._entry(vt.version()) or {}).get("rows")
+                snap_n = vt.rows()
                 if snap_n != live_n:
                     shutil.rmtree(snap)
                     return self._stage_jdbc_snapshot(

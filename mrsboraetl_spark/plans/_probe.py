@@ -11,8 +11,8 @@ O(delta * log n) (flat_obs_v1.0.sql:46-50).
 ``month_probe`` closes that gap: when the engine offers a
 ``probe_reader`` (PipelineRunner keeps per-month [min, max] key bounds,
 recorded at write time — the partitioned-layout lift of
-VersionedTable.merge_delta's per-file accounting,
-sources/versioned.py:236-252), the probe reads ONLY the month
+VersionedTable.merge_delta's per-file accounting in
+sources/versioned.py), the probe reads ONLY the month
 directories whose recorded key range can contain a probe key; planning-
 time partition pruning means the other directories are never opened.
 The bounds are maintained as strict supersets across crash windows

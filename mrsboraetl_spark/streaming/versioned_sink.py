@@ -11,11 +11,13 @@ processed" record commit in ONE atomic manifest swap:
 * each micro-batch MERGEs into a ``VersionedTable`` keyed by the row
   id, with the batch id recorded in the commit's history note;
 * idempotence check = "is this batch id in the history" — read from
-  the SAME manifest the commit swaps, so there is no marker/data gap
-  to crash into.  Crash after the data rename but before the manifest
-  swap: the version was never committed, the replay re-merges, the
-  orphan staging directory is cleaned by the next commit.  Crash after
-  the swap: the replay sees the batch id and no-ops;
+  the SAME snapshots the commit flips, so there is no marker/data gap
+  to crash into.  Crash after the data write but before the snapshot
+  flip: the version was never committed, the replay re-merges, and
+  the orphan epoch directory is swept by a later vacuum once provably
+  dead (sources/snapshot.gc).  Crash after the flip: the replay sees
+  the batch id and no-ops.  The check sees the RETAINED history only:
+  vacuum no further back than the replay window of the source;
 * single writer, as with every persistent index here — Structured
   Streaming serializes foreachBatch calls; the check-then-commit pair
   is safe under that contract (a concurrent second WRITER would need

@@ -88,6 +88,7 @@ def executor_input_bytes(spark) -> int:
 
 def run_probe(n: int) -> None:
     from mrsboraetl_spark.engine import PipelineRunner
+    from mrsboraetl_spark.sources import snapshot
     from mrsboraetl_spark.session import get_spark
     from tests.fixtures import make_sources, to_spark
 
@@ -187,7 +188,7 @@ def run_probe(n: int) -> None:
             by_table.setdefault(t, set()).update(ms)
         for t in runner._BOUNDS_COLS:
             tdir = runner._path(t)
-            man = runner._load_manifest(t) or {"months": {}}
+            man = snapshot.load(runner._path(t)) or {"months": {}}
             for m, files in man["months"].items():
                 total += 1
                 sz = sum(

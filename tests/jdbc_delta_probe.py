@@ -44,6 +44,7 @@ def main() -> None:
     from mrsboraetl_spark.engine import PipelineRunner
     from mrsboraetl_spark.session import get_spark
     from mrsboraetl_spark.sources.readers import JdbcSource
+    from mrsboraetl_spark.sources import snapshot
     from mrsboraetl_spark.sources.versioned import VersionedTable
 
     spark = get_spark(app_name="jdbc-delta-probe")
@@ -81,8 +82,8 @@ def main() -> None:
     r._stage_jdbc_snapshot("t1", src, "rebuild")
     t_full = round(time.perf_counter() - t0, 1)
     vt = VersionedTable(snap)
-    e_full = vt._entry(vt.version())
-    full_files = vt._files_of(vt.version())
+    e_full = vt.history()[-1]
+    full_files = snapshot.load(snap)["months"]["data"]
     full_bytes = _tree_bytes(snap, full_files)
 
     # delta: n_delta appends (new pks, late dates) + n_delta dated
@@ -131,10 +132,11 @@ def main() -> None:
     t0 = time.perf_counter()
     r._stage_jdbc_snapshot("t1", src, "sync")
     t_delta = round(time.perf_counter() - t0, 1)
-    ver = vt.version()
-    e_delta = vt._entry(ver)
+    e_delta = vt.history()[-1]
+    live = snapshot.load(snap)
     new_files = [
-        f for f in e_delta.get("files", ()) if f.startswith(f"v{ver}/")
+        f for f in live["months"]["data"]
+        if snapshot._epoch_of_dirname(f.split("/", 1)[0]) == live["epoch"]
     ]
     delta_bytes = _tree_bytes(snap, new_files)
     with open(os.path.join(snap, "_delta_state.json")) as f:

@@ -19,6 +19,7 @@ import os
 
 
 from mrsboraetl_spark.engine import PipelineRunner
+from mrsboraetl_spark.sources import snapshot
 
 
 def _mk_state(
@@ -83,7 +84,7 @@ def _file_map(runner, table):
     a partitioned target."""
     base = runner._path(table)
     out: dict = {}
-    for m, files in runner._load_manifest(table)["months"].items():
+    for m, files in snapshot.load(runner._path(table))["months"].items():
         out[m] = {}
         for rp in files:
             st = os.stat(os.path.join(base, rp))
@@ -105,7 +106,7 @@ def _live_footer_stats(runner, table, pk):
     """{month: {relpath: [lo, hi, n]}} from the parquet footers of the
     live snapshot's files, read per epoch directory."""
     live = {
-        rp for fl in runner._load_manifest(table)["months"].values()
+        rp for fl in snapshot.load(runner._path(table))["months"].values()
         for rp in fl
     }
     base = runner._path(table)

@@ -173,9 +173,7 @@ def test_latest_merge_manifest_reuses_files(
 
     v1 = vt.version()
     assert v1 > v0
-    entry = next(
-        e for e in vt._read_manifest()["history"] if e["version"] == v1
-    )
+    entry = next(e for e in vt.history() if e["version"] == v1)
     assert entry["note"] == "flat_latest_hiv_summary queue merge"
     assert entry["reused_files"] > 0, entry
     assert entry["rewrote_files"] < (
@@ -275,21 +273,21 @@ def test_latest_table_honors_keep_snapshots(spark, tmp_path, monkeypatch):
     )
     assert got == rows_v0  # previous version retained and identical
 
-    # one more sync slides the window: v0's exclusive files (the ones
-    # v1's merge replaced — everything else is shared forward and must
-    # survive) are vacuumed.  (vt.read(v0) itself degrades to the
-    # shared subset rather than raising: a full-snapshot entry has no
-    # recorded file list, so _files_of falls back to the directory
-    # listing — pre-existing contract, pinned as file-level GC here.)
+    # one more sync slides the window: v0 is no longer retained, and
+    # its exclusive files (the ones v1's merge replaced — everything
+    # else is shared forward and must survive) are vacuumed.
     import os as _os
 
-    files_v0 = [_os.path.join(vt.root, f) for f in vt._files_of(v0)]
+    from mrsboraetl_spark.sources import snapshot
+
+    files_v0 = snapshot.files(
+        vt.root, man=snapshot.load_at(vt.root, v0)
+    )
     assert files_v0 and all(map(_os.path.exists, files_v0))
     pdfs3, _p = _new_obs_delta(pdfs2, wm, days=2)
     r.run(to_spark(spark, pdfs3), mode="sync")
     assert any(not _os.path.exists(p) for p in files_v0), files_v0
-    live = {
-        _os.path.join(vt.root, f) for f in vt._files_of(vt.version())
-    }
-    for p in live:
-        assert _os.path.exists(p), p
+    live = snapshot.files(vt.root)
+    assert live and all(map(_os.path.exists, live))
+    with pytest.raises(ValueError, match="not retained"):
+        vt.read(spark, version=v0)

@@ -27,6 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
+from mrsboraetl_spark.sources import snapshot
 from tests.test_file_level_writes import _mk_state, _small_delta
 
 
@@ -46,7 +47,7 @@ def _forbid_data_copies(monkeypatch):
 
 def _manifest(runner, table):
     with open(
-        os.path.join(runner._path(table), runner._SNAPSHOT_FILE)
+        os.path.join(runner._path(table), snapshot.SNAPSHOT_FILE)
     ) as f:
         return json.load(f)
 
@@ -116,7 +117,7 @@ def test_manifest_file_level_sync_carries_by_reference(
         rp
         for m, files in after.items()
         for rp in files
-        if r._epoch_of_dirname(rp.split("/", 1)[0]) != cur_e
+        if snapshot._epoch_of_dirname(rp.split("/", 1)[0]) != cur_e
     ]
     assert old_epoch_refs, "no cross-epoch manifest references"
 
@@ -186,10 +187,10 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     man_before = _manifest(r, "flat_obs")
     pdfs2 = _small_delta(pdfs)
 
-    real_flip = PipelineRunner._flip_manifest_dir
+    real_flip = snapshot.flip
     blown: dict = {}
 
-    def exploding_flip(self, table_dir, man, **kw):
+    def exploding_flip(table_dir, man, **kw):
         if "flat_obs.parquet" in table_dir and not blown:
             blown["months"] = [
                 m
@@ -197,15 +198,15 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
                 if man["months"][m] != man_before["months"].get(m)
             ]
             raise RuntimeError("injected crash at snapshot flip")
-        return real_flip(self, table_dir, man, **kw)
+        return real_flip(table_dir, man, **kw)
 
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", exploding_flip
+        snapshot, "flip", exploding_flip
     )
     with pytest.raises(RuntimeError, match="injected crash"):
         r.run(to_spark(spark, pdfs2), mode="sync")
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", real_flip
+        snapshot, "flip", real_flip
     )
     assert blown, "injection never fired"
 
@@ -233,7 +234,7 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
         base = r._path("flat_obs")
         out = set()
         for entry in os.listdir(base):
-            if entry.startswith(r._EPOCH_PREFIX):
+            if entry.startswith(snapshot.EPOCH_PREFIX):
                 for root, _d, files in os.walk(
                     os.path.join(base, entry)
                 ):
@@ -259,11 +260,11 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     # next GC sweeps it and disk holds exactly the referenced set.
     import time as _time
 
-    old = _time.time() - r._SCRATCH_ORPHAN_SECONDS - 60
+    old = _time.time() - snapshot._SCRATCH_ORPHAN_SECONDS - 60
     base = r._path("flat_obs")
     for entry in set(e.split("/")[0] for e in fresh_leaks):
         os.utime(os.path.join(base, entry), (old, old))
-    r._gc_epochs("flat_obs")
+    snapshot.gc(r._path("flat_obs"), keep=r.keep_snapshots)
     on_disk = files_on_disk()
     assert on_disk == referenced, (
         "disk holds unreferenced (leaked) or missing files",
@@ -402,7 +403,7 @@ def test_manifest_snapshot_retention_and_time_travel(
 
 def _raw_snapshot(runner, table):
     with open(
-        os.path.join(runner._path(table), runner._SNAPSHOT_FILE)
+        os.path.join(runner._path(table), snapshot.SNAPSHOT_FILE)
     ) as f:
         return json.load(f)
 
@@ -414,7 +415,7 @@ def _man_files_on_disk(runner, table):
     return {
         e: os.stat(os.path.join(base, e)).st_mtime_ns
         for e in os.listdir(base)
-        if e.startswith(runner._MAN_PREFIX) and e.endswith(".json")
+        if e.startswith(snapshot.MAN_PREFIX) and e.endswith(".json")
     }
 
 
@@ -440,7 +441,7 @@ def test_manifest_split_reads_identical_and_carries_refs(
     """
     from tests.fixtures import to_spark
 
-    monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
+    monkeypatch.setattr(snapshot, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
     )
@@ -456,7 +457,7 @@ def test_manifest_split_reads_identical_and_carries_refs(
         for v in raw0["months"].values()
     ), raw0["months"]
     mans_before = _man_files_on_disk(r, "flat_obs")
-    resolved_before = r._load_manifest("flat_obs")["months"]
+    resolved_before = snapshot.load(r._path("flat_obs"))["months"]
 
     pdfs2 = _small_delta(pdfs)
     dfs2 = to_spark(spark, pdfs2)
@@ -467,7 +468,7 @@ def test_manifest_split_reads_identical_and_carries_refs(
         assert _rows(r, t) == _rows(rd, t), t
 
     raw1 = _raw_snapshot(r, "flat_obs")
-    resolved_after = r._load_manifest("flat_obs")["months"]
+    resolved_after = snapshot.load(r._path("flat_obs"))["months"]
     touched = {
         m for m in resolved_after
         if resolved_after[m] != resolved_before.get(m)
@@ -499,7 +500,7 @@ def test_manifest_split_crash_retention_and_time_travel(
     files exclusive to the dropped snapshot."""
     from tests.fixtures import to_spark
 
-    monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
+    monkeypatch.setattr(snapshot, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
         keep_snapshots=2,
@@ -512,18 +513,16 @@ def test_manifest_split_crash_retention_and_time_travel(
 
     def crash_on_obs_pointer(src, dst):
         if dst.endswith(
-            os.path.join("flat_obs.parquet", r._SNAPSHOT_FILE)
+            os.path.join("flat_obs.parquet", snapshot.SNAPSHOT_FILE)
         ):
             raise RuntimeError("crash at flip")
         return real_replace(src, dst)
 
-    monkeypatch.setattr(
-        "mrsboraetl_spark.engine.os.replace", crash_on_obs_pointer
-    )
+    monkeypatch.setattr(snapshot.os, "replace", crash_on_obs_pointer)
     pdfs2 = _small_delta(pdfs)
     with pytest.raises(RuntimeError, match="crash at flip"):
         r.run(to_spark(spark, pdfs2), mode="sync")
-    monkeypatch.setattr("mrsboraetl_spark.engine.os.replace", real_replace)
+    monkeypatch.setattr(snapshot.os, "replace", real_replace)
 
     # old split snapshot still live and resolvable
     assert _raw_snapshot(r, "flat_obs")["epoch"] == e0
@@ -580,7 +579,7 @@ def test_gc_protects_live_refs_when_history_missing(
     live table into a cold rebuild.  The refs must also be collected
     from the raw live pointer so a lost history entry can never orphan
     the live snapshot's manifests."""
-    monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
+    monkeypatch.setattr(snapshot, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
     )
@@ -594,13 +593,13 @@ def test_gc_protects_live_refs_when_history_missing(
     # lose the live epoch's history file, then GC
     e_live = _raw_snapshot(r, table)["epoch"]
     os.remove(os.path.join(r._path(table), f"_snap_{e_live:08d}.json"))
-    r._man_cache.clear()  # force GC/readers back to disk
-    r._gc_epochs(table)
+    snapshot._man_cache.clear()  # force GC/readers back to disk
+    snapshot.gc(r._path(table), keep=r.keep_snapshots)
 
     for ref in live_refs:
         assert os.path.exists(os.path.join(r._path(table), ref)), ref
-    r._man_cache.clear()
-    assert r._load_manifest(table) is not None
+    snapshot._man_cache.clear()
+    assert snapshot.load(r._path(table)) is not None
     assert _rows(r, table) == rows_before
 
 
@@ -613,7 +612,7 @@ def test_corrupt_ref_reads_as_cold_never_escapes(
     dir and opened; a shape-valid ref hitting an IsADirectoryError
     (OSError, formerly uncaught) must also read as None instead of
     raising out of every read path."""
-    monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
+    monkeypatch.setattr(snapshot, "_MANIFEST_SPLIT_BYTES", 0)
     r, _pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=20, seed=13,
     )
@@ -635,22 +634,22 @@ def test_corrupt_ref_reads_as_cold_never_escapes(
     evil = dict(snap)
     evil["months"] = dict(snap["months"])
     evil["months"][month] = {"ref": f"../{outside.name}"}
-    with real_open(os.path.join(base, r._SNAPSHOT_FILE), "w") as f:
+    with real_open(os.path.join(base, snapshot.SNAPSHOT_FILE), "w") as f:
         json.dump(evil, f)
-    r._man_cache.clear()
+    snapshot._man_cache.clear()
     monkeypatch.setattr("builtins.open", spying_open)
-    assert r._load_manifest(table) is None
+    assert snapshot.load(r._path(table)) is None
     monkeypatch.undo()
     assert not any(str(outside) in p for p in opened), opened
 
     # (b) shape-valid ref naming a DIRECTORY: OSError, reads as None
-    dirref = f"{r._MAN_PREFIX}{month}_0000000000000000.json"
+    dirref = f"{snapshot.MAN_PREFIX}{month}_0000000000000000.json"
     os.makedirs(os.path.join(base, dirref), exist_ok=True)
     evil["months"][month] = {"ref": dirref}
-    with real_open(os.path.join(base, r._SNAPSHOT_FILE), "w") as f:
+    with real_open(os.path.join(base, snapshot.SNAPSHOT_FILE), "w") as f:
         json.dump(evil, f)
-    r._man_cache.clear()
-    assert r._load_manifest(table) is None
+    snapshot._man_cache.clear()
+    assert snapshot.load(r._path(table)) is None
 
 
 def test_manifest_migration_sweeps_legacy_hive_dirs(
@@ -723,22 +722,20 @@ def test_manifest_crash_orphan_epoch_not_time_travelable(
 
     def crash_on_pointer(src, dst):
         if dst.endswith(
-            os.path.join("flat_obs.parquet", r._SNAPSHOT_FILE)
+            os.path.join("flat_obs.parquet", snapshot.SNAPSHOT_FILE)
         ):
             raise RuntimeError("crash between history and pointer")
         return real_replace(src, dst)
 
-    monkeypatch.setattr(
-        "mrsboraetl_spark.engine.os.replace", crash_on_pointer
-    )
+    monkeypatch.setattr(snapshot.os, "replace", crash_on_pointer)
     pdfs2 = _small_delta(pdfs)
     with pytest.raises(RuntimeError, match="crash between"):
         r.run(to_spark(spark, pdfs2), mode="sync")
-    monkeypatch.setattr("mrsboraetl_spark.engine.os.replace", real_replace)
+    monkeypatch.setattr(snapshot.os, "replace", real_replace)
 
     # orphan history exists above live, but is not servable
     assert _raw_snapshot(r, "flat_obs")["epoch"] == e0
-    hist = r._history_epochs("flat_obs")
+    hist = snapshot._history_epochs(r._path("flat_obs"))
     orphans = [e for e in hist if e > e0]
     assert orphans, "crash left no orphan history?"
     with pytest.raises(ValueError, match="not retained"):
@@ -776,18 +773,16 @@ def test_manifest_crash_with_preexisting_unbounded_month_stays_conservative(
 
     def crash_at_flip(src, dst):
         if dst.endswith(
-            os.path.join("flat_obs.parquet", r._SNAPSHOT_FILE)
+            os.path.join("flat_obs.parquet", snapshot.SNAPSHOT_FILE)
         ):
             raise RuntimeError("crash at flip")
         return real_replace(src, dst)
 
-    monkeypatch.setattr(
-        "mrsboraetl_spark.engine.os.replace", crash_at_flip
-    )
+    monkeypatch.setattr(snapshot.os, "replace", crash_at_flip)
     pdfs2 = _small_delta(pdfs)
     with pytest.raises(RuntimeError, match="crash at flip"):
         r.run(to_spark(spark, pdfs2), mode="sync")
-    monkeypatch.setattr("mrsboraetl_spark.engine.os.replace", real_replace)
+    monkeypatch.setattr(snapshot.os, "replace", real_replace)
 
     # the pre-flip sidecar recorded NOTHING for the live months the
     # delta touched (no entry = cannot prune = conservative)
@@ -829,25 +824,22 @@ def test_concurrent_flip_raises_and_preserves_winner(
     )
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
-    real_flip = PipelineRunner._flip_manifest_dir
+    real_flip = snapshot.flip
     fired: dict = {}
 
-    def interleaved_flip(self, table_dir, man, **kw):
-        if (
-            self is rA
-            and "flat_obs.parquet" in table_dir
-            and not fired
-        ):
+    def interleaved_flip(table_dir, man, **kw):
+        # rA's first flat_obs flip; rB's own flip runs inside it
+        if "flat_obs.parquet" in table_dir and not fired:
             fired["e_b"] = None
             # runner B lands a full flat_obs epoch between A's plan
             # and A's flip (content-identical rewrite — the race is
             # about epochs, not rows)
             rB._write(rB.read_target("flat_obs"), "flat_obs")
             fired["e_b"] = _raw_snapshot(rB, "flat_obs")["epoch"]
-        return real_flip(self, table_dir, man, **kw)
+        return real_flip(table_dir, man, **kw)
 
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", interleaved_flip
+        snapshot, "flip", interleaved_flip
     )
     # retries=0 pins the RAISE contract itself; the default bounded
     # retry's convergence is pinned in
@@ -857,7 +849,7 @@ def test_concurrent_flip_raises_and_preserves_winner(
     with pytest.raises(ConcurrentCommitError, match="concurrent"):
         rA.run(to_spark(spark, pdfs2), mode="sync")
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", real_flip
+        snapshot, "flip", real_flip
     )
     assert fired.get("e_b") is not None and fired["e_b"] > e0
 
@@ -866,7 +858,7 @@ def test_concurrent_flip_raises_and_preserves_winner(
     assert rA.read_target("flat_obs").count() > 0
 
     # the loser re-runs against the new snapshot and converges
-    rA._man_cache.clear()
+    snapshot._man_cache.clear()
     rA.run(to_spark(spark, pdfs2), mode="sync")
     rf = PipelineRunner(
         spark, str(tmp_path / "fresh_cc"), partitioned=True
@@ -897,27 +889,24 @@ def test_concurrent_flip_retries_and_both_land(
     )
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
-    real_flip = PipelineRunner._flip_manifest_dir
+    real_flip = snapshot.flip
     fired: dict = {}
 
-    def interleaved_flip(self, table_dir, man, **kw):
-        if (
-            self is rA
-            and "flat_obs.parquet" in table_dir
-            and not fired
-        ):
+    def interleaved_flip(table_dir, man, **kw):
+        # rA's first flat_obs flip; rB's own flip runs inside it
+        if "flat_obs.parquet" in table_dir and not fired:
             fired["e_b"] = None
             rB._write(rB.read_target("flat_obs"), "flat_obs")
             fired["e_b"] = _raw_snapshot(rB, "flat_obs")["epoch"]
-        return real_flip(self, table_dir, man, **kw)
+        return real_flip(table_dir, man, **kw)
 
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", interleaved_flip
+        snapshot, "flip", interleaved_flip
     )
     pdfs2 = _small_delta(pdfs)
     rA.run(to_spark(spark, pdfs2), mode="sync")  # must NOT raise
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", real_flip
+        snapshot, "flip", real_flip
     )
 
     # B's epoch landed AND A's retry landed on top of it
@@ -948,7 +937,7 @@ def test_unreadable_snapshot_heals_under_cas(
     wedged one, and the rows equal a fresh rebuild."""
     from tests.fixtures import to_spark
 
-    monkeypatch.setattr(PipelineRunner, "_MANIFEST_SPLIT_BYTES", 0)
+    monkeypatch.setattr(snapshot, "_MANIFEST_SPLIT_BYTES", 0)
     r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
     )
@@ -959,13 +948,13 @@ def test_unreadable_snapshot_heals_under_cas(
     ]
     assert refs, "split mode must store refs"
     os.remove(os.path.join(r._path(table), refs[0]))
-    r._man_cache.clear()  # content-addressed cache would mask the loss
-    assert r._load_manifest(table) is None, "snapshot must read as None"
-    assert r._raw_pointer_epoch(r._path(table)) == e0
+    snapshot._man_cache.clear()  # the cache would mask the loss
+    assert snapshot.load(r._path(table)) is None, "must read as None"
+    assert snapshot.raw_epoch(r._path(table)) == e0
 
     # the heal sync must neither raise nor wedge
     r.run(to_spark(spark, pdfs), mode="sync")
-    assert r._load_manifest(table) is not None
+    assert snapshot.load(r._path(table)) is not None
     e1 = _raw_snapshot(r, table)["epoch"]
     assert e1 > e0, (e1, e0)
 
@@ -1036,23 +1025,23 @@ def test_pipeline_snapshot_gives_cross_table_consistent_reads(
     # visit-summary flip explodes — the live pointers now hold a MIXED
     # state, but the map still names snap1's completed cut
     pdfs3 = _small_delta(pdfs2)
-    real_flip = PipelineRunner._flip_manifest_dir
+    real_flip = snapshot.flip
 
-    def exploding_flip(self, table_dir, man, **kw):
+    def exploding_flip(table_dir, man, **kw):
         if "flat_visit_summary.parquet" in table_dir:
             raise RuntimeError("crash before downstream commit")
-        return real_flip(self, table_dir, man, **kw)
+        return real_flip(table_dir, man, **kw)
 
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", exploding_flip
+        snapshot, "flip", exploding_flip
     )
     with pytest.raises(RuntimeError, match="crash"):
         r.run(to_spark(spark, pdfs3), mode="sync")
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", real_flip
+        snapshot, "flip", real_flip
     )
     assert (
-        r._raw_pointer_epoch(r._path("flat_obs"))
+        snapshot.raw_epoch(r._path("flat_obs"))
         > snap1["tables"]["flat_obs"]
     ), "upstream must have committed for the pin to mean anything"
     snap_after_crash = r.pipeline_snapshot()
@@ -1119,7 +1108,7 @@ def test_commit_during_plan_phase_raises_then_converges(
 
     # default budget: the same interleave (already fired) converges
     monkeypatch.setattr(PipelineRunner, "_COMMIT_RETRIES", 2)
-    rA._man_cache.clear()
+    snapshot._man_cache.clear()
     rA.run(to_spark(spark, pdfs2), mode="sync")
     rf = PipelineRunner(
         spark, str(tmp_path / "fresh_pp"), partitioned=True
@@ -1178,7 +1167,7 @@ def test_pipeline_snapshot_records_own_commits_not_live_pointers(
     assert snap["tables"]["flat_obs"] == e_a
     assert fired["e_b"] > e_a
     assert (
-        rA._raw_pointer_epoch(rA._path("flat_obs")) == fired["e_b"]
+        snapshot.raw_epoch(rA._path("flat_obs")) == fired["e_b"]
     )
     # and the cut is readable (retention holds it)
     assert rA.read_pipeline("flat_obs", snapshot=snap).count() > 0
@@ -1255,7 +1244,7 @@ def test_two_full_runs_race_end_to_end_and_converge(
         spark, str(tmp_path / "fresh_race"), partitioned=True
     )
     rf.run(to_spark(spark, pdfs2), mode="rebuild")
-    rA._man_cache.clear()
+    snapshot._man_cache.clear()
     for t in ("flat_obs", "flat_orders", "flat_lab_obs",
               "flat_visit_summary", "flat_latest_hiv_summary"):
         assert _rows(rA, t) == _rows(rf, t), t

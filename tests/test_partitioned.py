@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 from mrsboraetl_spark.engine import PipelineRunner
+from mrsboraetl_spark.sources import snapshot
 from tests.fixtures import make_sources, to_spark
 
 
@@ -44,12 +45,12 @@ def test_month_directories_on_disk(layouts):
     """The snapshot names several months, each a non-empty list of
     data files that exist on disk inside a hidden epoch directory."""
     r = layouts["part"]
-    months = r._load_manifest("flat_obs")["months"]
+    months = snapshot.load(r._path("flat_obs"))["months"]
     assert len(months) >= 2, months  # fixture spans multiple months
     for m, files in months.items():
         assert files, m
         for rp in files:
-            assert rp.startswith(r._EPOCH_PREFIX), rp
+            assert rp.startswith(snapshot.EPOCH_PREFIX), rp
             assert f"/{r.PARTITION_COL}={m}/" in rp, rp
             assert os.path.isfile(os.path.join(r._path("flat_obs"), rp))
 
@@ -61,7 +62,7 @@ def test_partition_pruning_on_month_filter(spark, layouts):
     from mrsboraetl_spark.schemas import p_month_of
 
     r = layouts["part"]
-    months = r._load_manifest("flat_obs")["months"]
+    months = snapshot.load(r._path("flat_obs"))["months"]
     one = sorted(months)[0]
     pruned = r.read_target_months("flat_obs", [one])
     opened = sorted(os.path.basename(f) for f in pruned.inputFiles())
@@ -103,7 +104,7 @@ def _month_inventory(runner, table):
     """{month: {(relpath, mtime_ns, size)}} of the live snapshot."""
     base = runner._path(table)
     inv = {}
-    for m, files in runner._load_manifest(table)["months"].items():
+    for m, files in snapshot.load(runner._path(table))["months"].items():
         inv[m] = {
             (rp, st.st_mtime_ns, st.st_size)
             for rp in files

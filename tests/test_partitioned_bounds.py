@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
+from mrsboraetl_spark.sources import snapshot
 from tests.fixtures import make_sources, to_spark
 from tests.test_file_level_writes import _live_with_month
 
@@ -262,7 +263,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     runner = built["runner"]
     table = "flat_obs"
     pre = runner._load_bounds(table)
-    epoch0 = runner._load_manifest(table)["epoch"]
+    epoch0 = snapshot.load(runner._path(table))["epoch"]
     target = _live_with_month(runner, table)
     n_before = target.count()
     months = sorted(runner._existing_months(table))[:2]
@@ -283,7 +284,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     orig_replace = os.replace
 
     def exploding_replace(src, dst):
-        if os.path.basename(dst) == runner._SNAPSHOT_FILE:
+        if os.path.basename(dst) == snapshot.SNAPSHOT_FILE:
             raise RuntimeError("injected crash at the snapshot flip")
         return orig_replace(src, dst)
 
@@ -305,7 +306,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
         assert mid[m]["encounter_id"][0] <= old_lo
         assert mid[m]["encounter_id"][1] >= old_hi + 7
     # The flip never happened: the old snapshot is still the table.
-    assert runner._load_manifest(table)["epoch"] == epoch0
+    assert snapshot.load(runner._path(table))["epoch"] == epoch0
     restored = runner.read_target(table)
     assert restored.count() == n_before
     restored = restored.localCheckpoint()  # same hazard for the cleanup
@@ -332,7 +333,7 @@ def test_bounds_file_invisible_to_spark(spark, built):
     runner = built["runner"]
     path = runner._path("flat_obs")
     assert os.path.exists(os.path.join(path, "_month_bounds.json"))
-    files = runner._manifest_files("flat_obs")
+    files = snapshot.files(runner._path("flat_obs"))
     assert files and all(f.endswith(".parquet") for f in files)
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
         spark.read.parquet(path).count()

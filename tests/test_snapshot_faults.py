@@ -1,0 +1,195 @@
+"""Deterministic fault-injection sweep over the snapshot protocol
+(sources/snapshot.py), Spark-free.
+
+Small "data" files are staged by hand; the module's file-system calls —
+opening a file for writing, ``os.fsync``, ``os.replace``, ``os.remove``
+and ``os.rmdir`` — are counted, and the sweep crashes one commit
+(``flip`` + ``gc``) at the N-th call for every N.  After each crash:
+
+* ``load()`` is exactly the old snapshot or exactly the new one;
+* every file it names exists;
+* the live epoch is retained, and every retained epoch still reads,
+  naming only existing files;
+* re-running the interrupted publish converges to the new snapshot,
+  and the next commit lands with the same invariants.
+
+Covered for the inline and the split (per-group ``_man_`` files) forms
+of the pointer, each with ``keep`` 1 and 2.  The hand-enumerated crash
+windows of the engine's pipeline are pinned end to end in
+tests/test_manifest_layout.py.
+"""
+
+from __future__ import annotations
+
+import builtins
+import os
+import time
+
+import pytest
+
+from mrsboraetl_spark.sources import snapshot
+
+
+class Crash(Exception):
+    """The injected fault.  Not an OSError: the protocol swallows
+    OSError on best-effort paths, and a crash must propagate."""
+
+
+class _Faults:
+    """While installed, counts the module's file-system calls and
+    raises Crash at call number ``crash_at`` (1-based; None = never)."""
+
+    def __init__(self, crash_at: int | None = None):
+        self.crash_at = crash_at
+        self.calls = 0
+
+    def hit(self) -> None:
+        self.calls += 1
+        if self.calls == self.crash_at:
+            raise Crash(f"injected crash at call {self.calls}")
+
+    def counted(self, fn):
+        def wrapper(*a, **kw):
+            self.hit()
+            return fn(*a, **kw)
+        return wrapper
+
+    def open(self, file, mode="r", *a, **kw):
+        if any(c in mode for c in "wax+"):
+            self.hit()
+        return builtins.open(file, mode, *a, **kw)
+
+    def __enter__(self):
+        faults = self
+
+        class _Os:
+            fsync = staticmethod(faults.counted(os.fsync))
+            replace = staticmethod(faults.counted(os.replace))
+            remove = staticmethod(faults.counted(os.remove))
+            rmdir = staticmethod(faults.counted(os.rmdir))
+
+            def __getattr__(self, name):
+                return getattr(os, name)
+
+        snapshot.os = _Os()
+        snapshot.open = self.open
+        return self
+
+    def __exit__(self, *exc):
+        snapshot.os = os
+        del snapshot.open
+        return False
+
+
+_GROUPS = ("2024-01", "2024-02", "2024-03")
+
+
+def _stage(table_dir: str, man: dict | None, files: dict) -> tuple:
+    """Stage ``files`` ({group: n_new_files}) into a fresh epoch dir and
+    return (epoch, dir, {group: [relpath]}), with a Spark-like
+    ``_SUCCESS`` marker the snapshot never names."""
+    epoch, edir = snapshot.next_epoch_dir(table_dir, man)
+    name = os.path.basename(edir)
+    out: dict[str, list[str]] = {}
+    for g, n in files.items():
+        os.makedirs(os.path.join(edir, f"g={g}"), exist_ok=True)
+        for i in range(n):
+            rp = f"{name}/g={g}/part-{i}.dat"
+            with open(os.path.join(table_dir, rp), "w") as f:
+                f.write(f"{rp}\n")
+            out.setdefault(g, []).append(rp)
+    with open(os.path.join(edir, "_SUCCESS"), "w"):
+        pass
+    return epoch, edir, out
+
+
+def _prepare(table_dir: str, step: int) -> tuple[dict, str]:
+    """Stage one commit: rewrite one group (carrying one of its old
+    files by relpath), carry the others untouched, drop a group on step
+    3.  Returns the snapshot to publish and its staged dir."""
+    old = snapshot.load(table_dir)
+    groups = dict((old or {"months": {}})["months"])
+    touched = {_GROUPS[step % len(_GROUPS)]: 2}
+    if step == 0:
+        touched = {g: 2 for g in _GROUPS[:2]}
+    epoch, edir, staged = _stage(table_dir, old, touched)
+    for g, fl in staged.items():
+        groups[g] = sorted(list(groups.get(g, ()))[:1] + fl)
+    if step == 3:
+        groups.pop(_GROUPS[1], None)
+    return {"epoch": epoch, "months": groups, "note": f"step {step}"}, edir
+
+
+def _publish(table_dir: str, new: dict, edir: str, keep: int) -> None:
+    """The protocol under test: CAS flip, then GC."""
+    parent = snapshot.raw_epoch(table_dir)
+    snapshot.flip(table_dir, new, parent_epoch=parent, staged=edir)
+    snapshot.gc(table_dir, new, keep=keep)
+
+
+def _commit(table_dir: str, step: int, keep: int) -> dict:
+    new, edir = _prepare(table_dir, step)
+    _publish(table_dir, new, edir, keep)
+    return new
+
+
+def _check(table_dir: str, allowed: list[dict]) -> None:
+    snapshot._man_cache.clear()  # read every per-group manifest from disk
+    live = snapshot.load(table_dir)
+    assert live in allowed, (live, allowed)
+    for p in snapshot.files(table_dir, man=live):
+        assert os.path.exists(p), p
+    assert live["epoch"] in snapshot.snapshots(table_dir)
+    for e in snapshot.snapshots(table_dir):
+        at = snapshot.load_at(table_dir, e)
+        for p in snapshot.files(table_dir, man=at):
+            assert os.path.exists(p), (e, p)
+
+
+def _build(table_dir: str, keep: int) -> dict:
+    """Three committed epochs, a dead orphan staging (older than the
+    age gate) and a young one for GC to sweep and to spare."""
+    os.makedirs(table_dir)
+    man = None
+    for step in range(3):
+        man = _commit(table_dir, step, keep)
+    for tag, age in (("0000dead", snapshot._SCRATCH_ORPHAN_SECONDS + 60),
+                     ("0000beef", 0)):
+        d = os.path.join(table_dir, f"_e{man['epoch'] + 1:08d}_{tag}")
+        os.makedirs(os.path.join(d, "g=x"))
+        with open(os.path.join(d, "g=x", "part-0.dat"), "w") as f:
+            f.write("orphan\n")
+        t = time.time() - age
+        os.utime(d, (t, t))
+    return man
+
+
+@pytest.mark.parametrize("keep", [1, 2])
+@pytest.mark.parametrize("split", [False, True], ids=["inline", "split"])
+def test_crash_at_every_call_of_flip_and_gc(
+    tmp_path, monkeypatch, split, keep
+):
+    if split:
+        monkeypatch.setattr(snapshot, "_MANIFEST_SPLIT_BYTES", 0)
+
+    # dry run: how many file-system calls one commit makes
+    dry = str(tmp_path / "dry")
+    _build(dry, keep)
+    new, edir = _prepare(dry, 3)
+    with _Faults() as counter:
+        _publish(dry, new, edir, keep)
+    _check(dry, [new])
+    assert counter.calls > 10, counter.calls
+
+    for n in range(1, counter.calls + 1):
+        d = str(tmp_path / f"crash{n}")
+        old = _build(d, keep)
+        new, edir = _prepare(d, 3)
+        with pytest.raises(Crash), _Faults(crash_at=n):
+            _publish(d, new, edir, keep)
+        _check(d, [old, new])
+        # the table is never wedged: retrying the same publish lands
+        # it, and the next commit lands on top with the same guarantees
+        _publish(d, new, edir, keep)
+        _check(d, [new])
+        _check(d, [_commit(d, 4, keep)])

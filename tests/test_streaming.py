@@ -476,6 +476,7 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
     from pyspark.sql import functions as F
 
     from mrsboraetl_spark.engine import PipelineRunner
+    from mrsboraetl_spark.sources import snapshot
     from mrsboraetl_spark.streaming.pipeline import streaming_pipeline_sync
     from tests.fixtures import make_sources, to_spark
 
@@ -532,19 +533,19 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
     )
 
     # crash the SECOND tick's flat_obs flip (first tick cold-builds)
-    real_flip = PipelineRunner._flip_manifest_dir
+    real_flip = snapshot.flip
     state = {"flips": 0, "armed": True}
 
-    def crashing_flip(self, table_dir, man, **kw):
+    def crashing_flip(table_dir, man, **kw):
         if "flat_obs.parquet" in table_dir:
             state["flips"] += 1
             if state["flips"] == 2 and state["armed"]:
                 state["armed"] = False
                 raise RuntimeError("injected crash mid-tick")
-        return real_flip(self, table_dir, man, **kw)
+        return real_flip(table_dir, man, **kw)
 
     monkeypatch.setattr(
-        PipelineRunner, "_flip_manifest_dir", crashing_flip
+        snapshot, "flip", crashing_flip
     )
     ckpt = str(tmp_path / "ckpt")
     q = streaming_pipeline_sync(spark, runner, dirs, ckpt)
@@ -599,7 +600,7 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
         assert sa == sb, table
 
     # GC under the drain, under the r13 concurrent-writer carve-out
-    # (engine._gc_epochs): every file a completed flip ever PUBLISHED
+    # (snapshot.gc): every file a completed flip ever PUBLISHED
     # and then replaced is swept immediately (the old contract), while
     # a never-flipped staging dir — here, the crashed tick's
     # uuid-suffixed epoch dir — is age-gated for _SCRATCH_ORPHAN_SECONDS
@@ -613,13 +614,13 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
 
     def disk_vs_referenced(table):
         base = runner._path(table)
-        with open(os.path.join(base, runner._SNAPSHOT_FILE)) as f:
+        with open(os.path.join(base, snapshot.SNAPSHOT_FILE)) as f:
             raw = _json.load(f)
-        months = runner._resolve_man_months(base, raw["months"])
+        months = snapshot._resolve(base, raw["months"])
         referenced = {rp for fl in months.values() for rp in fl}
         on_disk = set()
         for entry in os.listdir(base):
-            if entry.startswith(runner._EPOCH_PREFIX):
+            if entry.startswith(snapshot.EPOCH_PREFIX):
                 for root, _d, files in os.walk(
                     os.path.join(base, entry)
                 ):
@@ -644,8 +645,8 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
             )
     # age gate lapsed -> the orphaned stagings are provably dead and one
     # sweep restores exact disk == referenced
-    monkeypatch.setattr(PipelineRunner, "_SCRATCH_ORPHAN_SECONDS", -1.0)
+    monkeypatch.setattr(snapshot, "_SCRATCH_ORPHAN_SECONDS", -1.0)
     for table in tables_gc:
-        runner._gc_epochs(table)
+        snapshot.gc(runner._path(table), keep=runner.keep_snapshots)
         on_disk, referenced = disk_vs_referenced(table)
         assert on_disk == referenced, (table, on_disk ^ referenced)

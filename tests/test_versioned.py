@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from mrsboraetl_spark.sources import snapshot
 from mrsboraetl_spark.sources.versioned import VersionedTable
 
 
@@ -35,10 +36,10 @@ def test_commit_read_time_travel(spark, vt):
 
 def test_snapshot_isolation(spark, vt):
     vt.commit(_df(spark, [(1, "a")]))
-    snapshot = vt.read(spark)  # resolves v0 now
+    pinned = vt.read(spark)  # resolves v0 now
     vt.commit(_df(spark, [(1, "CHANGED")]))
     # the pre-commit reader still sees its version
-    assert [r.v for r in snapshot.collect()] == ["a"]
+    assert [r.v for r in pinned.collect()] == ["a"]
     assert [r.v for r in vt.read(spark).collect()] == ["CHANGED"]
 
 
@@ -53,19 +54,20 @@ def test_merge_is_replace_into_with_history(spark, vt):
 
 def test_crashed_write_is_invisible(spark, vt):
     vt.commit(_df(spark, [(1, "a")]))
-    # simulate a crash AFTER data write, BEFORE manifest commit: an orphan
-    # v1 directory with no manifest update
-    _df(spark, [(9, "junk")]).write.parquet(os.path.join(vt.root, "v1"))
+    # simulate a crash AFTER data write, BEFORE the snapshot flip: an
+    # orphan epoch directory no snapshot names
+    orphan = os.path.join(vt.root, "_e00000001_deadbeef")
+    _df(spark, [(9, "junk")]).write.parquet(orphan)
     assert vt.version() == 0
     assert {r.pk for r in vt.read(spark).collect()} == {1}
-    # recovery: the next commit clears the orphan itself (the manifest
-    # proves v1 was never committed) instead of wedging on errorifexists
+    # recovery: the next commit reuses the epoch NUMBER in a fresh
+    # directory — never the orphan's — and lands as version 1
     vt.commit(_df(spark, [(1, "a2")]))
     assert vt.version() == 1
     assert {r.v for r in vt.read(spark).collect()} == {"a2"}
-    # no staging debris left behind
-    leftovers = [d for d in os.listdir(vt.root) if "staging" in d]
-    assert leftovers == []
+    assert not any(
+        p.startswith(orphan) for p in snapshot.files(vt.root)
+    )
 
 
 def test_vacuum_drops_old_versions(spark, vt):
@@ -167,7 +169,9 @@ def test_merge_delta_rewrites_only_touched_files(spark, tmp_path):
     # Only the file(s) holding pk=3 were rewritten; the rest reused.
     assert entry["rewrote_files"] >= 1
     assert entry["reused_files"] >= 5, entry
-    reused = [f for f in entry["files"] if f.startswith("v0/")]
+    v0_dir = snapshot.load_at(vt.root, 0)["months"]["data"][0].split("/")[0]
+    files_v1 = snapshot.load_at(vt.root, v1)["months"]["data"]
+    reused = [f for f in files_v1 if f.startswith(v0_dir + "/")]
     assert len(reused) == entry["reused_files"]
 
     got = {r.pk: r.v for r in vt.read(spark).collect()}
@@ -210,11 +214,8 @@ def test_merge_delta_vacuum_keeps_shared_files(spark, tmp_path):
     got = {r.pk: r.v for r in vt.read(spark).collect()}
     assert len(got) == 100 and got[0] == "s0" and got[2] == "s2"
     # Shared v0 files referenced by kept versions still on disk.
-    latest_files = [
-        e for e in vt.history() if e["version"] == vt.version()
-    ][0]["files"]
-    for f in latest_files:
-        assert os.path.exists(os.path.join(vt.root, f)), f
+    for f in snapshot.files(vt.root):
+        assert os.path.exists(f), f
 
 
 def test_merge_delta_empty_table_and_schema_guard(spark, tmp_path):
@@ -245,9 +246,9 @@ def test_merge_delta_empty_table_and_schema_guard(spark, tmp_path):
 
 
 def test_vacuum_regrown_keep_last_skips_dropped_versions(spark, tmp_path):
-    """A vacuum with a LARGER keep_last than an earlier one references
-    versions whose directories are already gone — it must skip them,
-    not crash (ADVICE r6: _files_of FileNotFoundError)."""
+    """A vacuum with a LARGER keep_last than an earlier one must not
+    resurrect or trip over versions an earlier vacuum already dropped
+    (ADVICE r6): their history is gone, so they are not retained."""
     from mrsboraetl_spark.sources.versioned import VersionedTable
 
     vt = VersionedTable(str(tmp_path / "vt_regrow"))
@@ -256,7 +257,7 @@ def test_vacuum_regrown_keep_last_skips_dropped_versions(spark, tmp_path):
             spark.createDataFrame([(1, f"v{i}")], "pk int, v string")
         )
     assert vt.vacuum(keep_last=1) == [0, 1, 2, 3]
-    # keep_last=4 references v1..v4; v1-v3 dirs were dropped above.
+    # keep_last=4 could span v1..v4; v1-v3 were dropped above.
     dropped = vt.vacuum(keep_last=4)
     assert dropped == []
     assert [r.v for r in vt.read(spark).collect()] == ["v4"]
@@ -299,7 +300,9 @@ def test_merge_delta_manifest_stats_prune_the_probe(spark, tmp_path):
     )
     e2 = [e for e in vt.history() if e["version"] == v2][0]
     assert e2["probed_files"] <= 2, e2["probed_files"]
-    assert len(e2["file_stats"]) == len(e2["files"])
+    assert sorted(e2["file_stats"]) == sorted(
+        snapshot.load_at(vt.root, v2)["months"]["data"]
+    )
 
     got = {r.pk: r.v for r in vt.read(spark).collect()}
     want = {i: f"v{i}" for i in range(1000)}
@@ -331,16 +334,16 @@ def test_concurrent_commit_raises_instead_of_dropping(spark, tmp_path):
     a.commit(_df(spark, [(1, "a"), (2, "b")]), note="base",
              stats_key="pk")
 
-    real = VersionedTable._commit_manifest
+    real = snapshot.flip
     fired: list[int] = []
 
-    def interleaved(self, manifest, parent_version=None):
-        if self is a and not fired:
+    def interleaved(table_dir, man, **kw):
+        if not fired:  # a's flip; b's own flip runs inside it
             fired.append(1)
             b.commit(_df(spark, [(9, "B")]), note="winner")
-        return real(self, manifest, parent_version)
+        return real(table_dir, man, **kw)
 
-    VersionedTable._commit_manifest = interleaved
+    snapshot.flip = interleaved
     try:
         # retries=0 pins the RAISE contract itself; the default
         # bounded-retry convergence is pinned separately in
@@ -351,7 +354,7 @@ def test_concurrent_commit_raises_instead_of_dropping(spark, tmp_path):
                 note="loser", retries=0,
             )
     finally:
-        VersionedTable._commit_manifest = real
+        snapshot.flip = real
 
     # B's epoch survived; A's plan never published
     assert vt_notes(b) == ["base", "winner"]
@@ -366,87 +369,6 @@ def test_concurrent_commit_raises_instead_of_dropping(spark, tmp_path):
 
 def vt_notes(t):
     return [h["note"] for h in t.history()]
-
-
-def test_history_compaction_bounds_manifest(spark, tmp_path, monkeypatch):
-    """VERDICT r10 item 2: N >> keep_last merge syncs must not grow
-    the manifest's bulky per-file metadata without bound.  With the
-    size threshold forced to 0, vacuum(keep_last=2) strips files +
-    file_stats from every entry below the kept window (audit row
-    kept), the kept window stays fully readable/mergeable, and reading
-    a compacted version raises loudly instead of serving a partial
-    directory."""
-    import json as _json
-
-    monkeypatch.setattr(VersionedTable, "_HISTORY_COMPACT_BYTES", 0)
-    vt = VersionedTable(str(tmp_path / "hc"))
-    vt.commit(
-        _df(spark, [(i, f"v{i}") for i in range(8)]),
-        note="base", stats_key="pk",
-        max_records_per_file=2,
-    )
-    n_syncs = 6
-    for i in range(n_syncs):
-        vt.merge_delta(
-            spark, _df(spark, [(i % 8, f"m{i}")]), keys=["pk"],
-            note=f"sync{i}",
-        )
-        vt.vacuum(keep_last=2)
-
-    man = vt._read_manifest()
-    latest = man["version"]
-    assert latest == n_syncs
-    # r12: entries below the window are ROLLED OUT of the hot pointer
-    # into the archive — hot history is exactly the kept window
-    hot_versions = {e["version"] for e in man["history"]}
-    assert hot_versions == {latest - 1, latest}, hot_versions
-    for e in man["history"]:
-        assert "files" in e and "file_stats" in e, e
-    archived = vt.archived_history()
-    assert {e["version"] for e in archived} == set(
-        range(latest - 1)
-    ), archived
-    for e in archived:
-        assert "files" not in e and "file_stats" not in e, e
-        assert e.get("compacted") is True
-        assert {"version", "rows", "note"} <= set(e)  # audit survives
-    # the full audit trail is retrievable in order
-    assert [
-        e["version"] for e in vt.history(include_archived=True)
-    ] == list(range(latest + 1))
-
-    # kept window: readable, and the next merge still prunes its probe
-    # via the latest entry's carried stats (candidates < base files)
-    assert vt.read(spark).count() == 8
-    n_base_files = len(vt._files_of(latest))
-    vt.merge_delta(spark, _df(spark, [(0, "zz")]), keys=["pk"])
-    e_new = vt._entry(vt.version())
-    assert e_new["probed_files"] < n_base_files, e_new
-    assert e_new["file_stats"], "stats must carry through compaction"
-
-    # a compacted version refuses to read (no silent partial data)
-    with pytest.raises(ValueError, match="compacted"):
-        vt.read(spark, version=1)
-
-    # bounded metadata: the compacted manifest is much smaller than an
-    # uncompacted replay of the same history
-    vt2 = VersionedTable(str(tmp_path / "hc_u"))
-    vt2.commit(
-        _df(spark, [(i, f"v{i}") for i in range(8)]),
-        note="base", stats_key="pk", max_records_per_file=2,
-    )
-    monkeypatch.setattr(
-        VersionedTable, "_HISTORY_COMPACT_BYTES", 1 << 60
-    )
-    for i in range(n_syncs):
-        vt2.merge_delta(
-            spark, _df(spark, [(i % 8, f"m{i}")]), keys=["pk"],
-            note=f"sync{i}",
-        )
-        vt2.vacuum(keep_last=2)
-    sz_c = len(_json.dumps(vt._read_manifest()))
-    sz_u = len(_json.dumps(vt2._read_manifest()))
-    assert sz_c < 0.7 * sz_u, (sz_c, sz_u)
 
 
 def test_concurrent_merge_retries_and_both_land(spark, tmp_path):
@@ -464,25 +386,25 @@ def test_concurrent_merge_retries_and_both_land(spark, tmp_path):
         note="base", stats_key="pk",
     )
 
-    real = VersionedTable._commit_manifest
+    real = snapshot.flip
     fired: list[int] = []
 
-    def interleaved(self, manifest, parent_version=None):
-        if self is a and not fired:
+    def interleaved(table_dir, man, **kw):
+        if not fired:  # a's flip; b's own flip runs inside it
             fired.append(1)
             b.merge_delta(
                 spark, _df(spark, [(2, "B2"), (9, "B9")]),
                 keys=["pk"], note="winner",
             )
-        return real(self, manifest, parent_version)
+        return real(table_dir, man, **kw)
 
-    VersionedTable._commit_manifest = interleaved
+    snapshot.flip = interleaved
     try:
         v = a.merge_delta(
             spark, _df(spark, [(1, "A1")]), keys=["pk"], note="loser",
         )
     finally:
-        VersionedTable._commit_manifest = real
+        snapshot.flip = real
 
     # both commits are in the history, winner below loser
     assert vt_notes(a) == ["base", "winner", "loser"]
@@ -504,14 +426,12 @@ def test_concurrent_merge_retries_and_both_land(spark, tmp_path):
 
 
 def test_losing_writer_never_clobbers_winner_data(spark, tmp_path):
-    """ADVICE r11 (medium): the CAS fired only at the manifest swap,
-    but the loser rmtree'd an existing v{next_v} BEFORE the check — a
-    winner that committed v{next_v} during the loser's (long) parquet
-    write had its committed data directory deleted and replaced with
-    the loser's rows, then the loser raised, leaving the live manifest
-    naming files that no longer match its entry.  The parent check now
-    re-runs immediately before the clobber: the loser must raise
-    WITHOUT touching the winner's committed directory."""
+    """ADVICE r11 (medium): a winner that commits while the loser is
+    still staging must keep its committed data byte-untouched.  Both
+    writers stage into their own uniquely named epoch directory, so
+    only the flip arbitrates: the interleave lands the winner at the
+    loser's flip, the loser's CAS raises WITHOUT touching the winner's
+    directory, and the loser removes its own staging."""
     from mrsboraetl_spark.sources.versioned import ConcurrentCommitError
 
     root = str(tmp_path / "clb")
@@ -519,146 +439,123 @@ def test_losing_writer_never_clobbers_winner_data(spark, tmp_path):
     a.commit(_df(spark, [(1, "a"), (2, "b")]), note="base",
              stats_key="pk")
 
-    real_promote = VersionedTable._promote_staging
-    fired: list[int] = []
-    winner_files: dict = {}
+    real = snapshot.flip
+    fired: dict = {}
 
-    def interleaved(self, staging, data_dir, next_v):
-        if self is a and not fired:
-            fired.append(1)
-            # the winner lands v{next_v} while the loser is still in
-            # its write path (pre-promote == mid-staging in the
-            # malignant ordering this pins)
+    def interleaved(table_dir, man, **kw):
+        if not fired:
+            fired["loser_dir"] = kw["staged"]
+            # the winner lands the SAME version number while the loser
+            # holds its staged data (the malignant ordering this pins)
             b.commit(_df(spark, [(9, "B")]), note="winner")
-            d = os.path.join(root, f"v{next_v}")
-            winner_files.update({
+            d = os.path.dirname(snapshot.files(root)[0])
+            fired["winner_dir"] = d
+            fired["files"] = {
                 f: os.stat(os.path.join(d, f)).st_mtime_ns
                 for f in os.listdir(d)
-            })
-        return real_promote(self, staging, data_dir, next_v)
+            }
+        return real(table_dir, man, **kw)
 
-    VersionedTable._promote_staging = interleaved
+    snapshot.flip = interleaved
     try:
         with pytest.raises(ConcurrentCommitError, match="concurrent"):
             a.commit(_df(spark, [(1, "A")]), note="loser", retries=0)
     finally:
-        VersionedTable._promote_staging = real_promote
+        snapshot.flip = real
 
     # the winner's committed directory is byte-untouched and live
-    assert fired and winner_files
-    d = os.path.join(root, f"v{b.version()}")
+    assert fired and fired["loser_dir"] != fired["winner_dir"]
+    d = fired["winner_dir"]
     now = {
         f: os.stat(os.path.join(d, f)).st_mtime_ns
         for f in os.listdir(d)
     }
-    assert now == winner_files, "loser touched the winner's data dir"
+    assert now == fired["files"], "loser touched the winner's data dir"
     assert vt_notes(b) == ["base", "winner"]
     assert {r.pk: r.v for r in b.read(spark).collect()} == {9: "B"}
-    # no stray staging dirs left behind
-    strays = [e for e in os.listdir(root) if e.startswith(".v")]
-    assert strays == [], strays
+    # the loser removed its own staging
+    assert not os.path.exists(fired["loser_dir"])
 
     # and with the default retries the same loser converges
     a.commit(_df(spark, [(1, "A")]), note="retry-lands")
     assert vt_notes(a)[-1] == "retry-lands"
 
 
-def test_history_archive_keeps_hot_pointer_bounded(tmp_path):
-    """VERDICT r11 item 2 / ADVICE r11 (low): the r11 compaction kept
-    every audit row in the hot pointer forever, so past enough syncs
-    the manifest re-crossed the threshold with nothing left to strip
-    and grew linearly again.  Drive synthetic history past the
-    threshold TWICE: after each vacuum-cadence compaction the live
-    manifest must be back under the bound, every archived row must
-    remain retrievable (in order, exactly once), and a crash-duplicate
-    archive line must be de-duplicated on read.  No Spark needed —
-    this is pure manifest mechanics."""
-    import json as _json
+def test_pointer_size_is_independent_of_commit_count(spark, tmp_path):
+    """Per-epoch history files keep the hot pointer at ONE snapshot by
+    construction: the same commit lands the same pointer after 1 and
+    after 50 commits (up to the epoch number's extra digits), however
+    long the history grows."""
+    vt = VersionedTable(str(tmp_path / "ptr"))
+    ptr = os.path.join(vt.root, snapshot.SNAPSHOT_FILE)
+    # JVM-only rows: no Python worker round-trip per commit
+    df = spark.range(1).selectExpr("id AS pk", "'a' AS v")
+    vt.commit(df, note="same")
+    size_1 = os.path.getsize(ptr)
+    for _ in range(49):
+        vt.commit(df, note="same")
+    assert vt.version() == 49 and vt.rows() == 1
+    assert len(vt.history()) == 50
+    assert os.path.getsize(ptr) == size_1 + len("49") - len("0")
 
-    vt = VersionedTable(str(tmp_path / "arch"))
-    vt._HISTORY_COMPACT_BYTES = 2000  # instance override
 
-    def land(n):
-        man = vt._read_manifest()
-        for _ in range(n):
-            v = man["version"] + 1
-            man["version"] = v
-            man["history"] = [
-                *man["history"],
-                {
-                    "version": v,
-                    "rows": 10 + v,
-                    "note": f"sync{v}",
-                    "files": [f"v{v}/part-{i}.parquet" for i in range(4)],
-                    "file_stats": {
-                        f"v{v}/part-{i}.parquet": [0, 9, 3]
-                        for i in range(4)
-                    },
-                },
-            ]
-            vt._commit_manifest(man, parent_version=v - 1)
+def test_vacuum_sweeps_only_dead_staging(spark, vt):
+    """A killed commit leaves its staging epoch directory behind (no
+    in-process cleanup runs).  vacuum sweeps one older than the orphan
+    age gate, while a younger one — possibly a concurrent writer's
+    in-progress staging — survives."""
+    import time
 
-    land(40)
-    assert os.path.getsize(vt._manifest_path()) > 2000
-    n1 = vt.compact_history(keep_last=2)
-    assert n1 == 38  # everything below the kept window (38, 39) rolled
-    assert os.path.getsize(vt._manifest_path()) <= 2000
+    vt.commit(_df(spark, [(1, "a")]))
+    dead = os.path.join(vt.root, "_e00000001_0000dead")
+    young = os.path.join(vt.root, "_e00000001_0000beef")
+    for d in (dead, young):
+        _df(spark, [(9, "junk")]).write.parquet(d)
+    old = time.time() - snapshot._SCRATCH_ORPHAN_SECONDS - 60
+    os.utime(dead, (old, old))
 
-    # second wave: the hot pointer crosses the threshold AGAIN and the
-    # compaction still has material to roll (the r11 failure mode was
-    # exactly here — nothing left to strip)
-    land(40)
-    assert os.path.getsize(vt._manifest_path()) > 2000
-    n2 = vt.compact_history(keep_last=2)
-    assert n2 == 40
-    assert os.path.getsize(vt._manifest_path()) <= 2000
+    assert vt.vacuum(keep_last=1) == []
+    assert not os.path.exists(dead)
+    assert os.path.isdir(young) and os.listdir(young)
+    assert [r.v for r in vt.read(spark).collect()] == ["a"]
 
-    # every audit row retrievable, in order, exactly once
-    full = vt.history(include_archived=True)
-    assert [e["version"] for e in full] == list(range(80))
-    assert all(e["note"] == f"sync{e['version']}" for e in full)
-    # archived rows carry audit fields, never bulk metadata
-    for e in vt.archived_history():
-        assert "files" not in e and "file_stats" not in e
 
-    # crash-duplicate batch (archive append landed, manifest commit
-    # did not, batch re-archived): reader de-duplicates by version
-    dup = vt.archived_history()[0]
-    with open(vt._archive_path(), "a") as f:
-        f.write(_json.dumps(dup) + "\n")
-        f.write('{"torn line')  # append crash tail: tolerated
-    full2 = vt.history(include_archived=True)
-    assert [e["version"] for e in full2] == list(range(80))
+def test_commit_syncs_data_and_pointer_before_flip_returns(
+    spark, vt, monkeypatch
+):
+    """Durability: before a commit returns, every staged data file, the
+    staged directory, the pointer contents and the table directory have
+    been fsync'd — and the data before the pointer replace, so a power
+    loss can never leave a durable pointer naming unwritten pages."""
+    if not os.path.isdir("/proc/self/fd"):
+        pytest.skip("needs /proc/self/fd to name fsync'd descriptors")
+    events: list[tuple[str, str]] = []
+    real_fsync, real_replace = os.fsync, os.replace
 
-    # an archived version refuses to read rather than serving a
-    # partial directory
-    import pytest as _pytest
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return real_fsync(fd)
 
-    with _pytest.raises(ValueError, match="compacted"):
-        vt.read(None, version=0)
+    def replace(src, dst):
+        events.append(("replace", os.path.realpath(dst)))
+        return real_replace(src, dst)
 
-    # housekeeping loses a CAS race: compact must yield (return 0,
-    # live manifest untouched), and the retried compaction later must
-    # not duplicate audit rows (reader dedupe + re-roll)
-    from mrsboraetl_spark.sources.versioned import ConcurrentCommitError
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    vt.commit(_df(spark, [(1, "a"), (2, "b")]))
+    monkeypatch.undo()
 
-    land(40)  # versions 80..119
-    before = vt._read_manifest()
-    real = vt._commit_manifest
-
-    def racy(manifest, parent_version=None):
-        raise ConcurrentCommitError("simulated racing writer")
-
-    vt._commit_manifest = racy
-    try:
-        assert vt.compact_history(keep_last=2) == 0
-    finally:
-        vt._commit_manifest = real
-    assert vt._read_manifest() == before, "losing compact must not publish"
-    assert vt.compact_history(keep_last=2) == 40
-    assert [
-        e["version"] for e in vt.history(include_archived=True)
-    ] == list(range(120))
+    root = os.path.realpath(vt.root)
+    ptr = os.path.join(root, snapshot.SNAPSHOT_FILE)
+    staged = [
+        os.path.join(root, rp) for rp in snapshot.load(root)["months"]["data"]
+    ]
+    i_ptr = events.index(("replace", ptr))
+    before = {p for kind, p in events[:i_ptr] if kind == "fsync"}
+    assert set(staged) <= before, (staged, before)
+    assert os.path.dirname(staged[0]) in before
+    assert ptr + ".tmp" in before
+    assert ("fsync", root) in events[i_ptr + 1:]
 
 
 def test_pinned_parent_commit_rejects_plan_phase_conflict(spark, vt):
@@ -695,42 +592,3 @@ def test_pinned_parent_commit_rejects_plan_phase_conflict(spark, vt):
     )
     assert v == 2
     assert [r.v for r in vt.read(spark).collect()] == ["replanned"]
-
-
-def test_archived_history_since_version_cursor(tmp_path):
-    """VERDICT r12 item 5: archived_history() re-read, re-parsed, and
-    re-sorted the whole JSONL per call — a poller at sync cadence
-    re-paid O(total syncs) each time.  The ``since_version`` cursor
-    drops already-seen rows as read: a caller carrying the last
-    version it saw gets exactly the new tail, and the cursor composes
-    with the crash-duplicate dedupe."""
-    import json as _json
-
-    vt = VersionedTable(str(tmp_path / "cur"))
-    vt._HISTORY_COMPACT_BYTES = 500
-    man = vt._read_manifest()
-    for v in range(30):
-        man["version"] = v
-        man["history"] = [
-            *man["history"],
-            {"version": v, "rows": v, "note": f"s{v}",
-             "files": [f"v{v}/p.parquet"] * 8},
-        ]
-        vt._commit_manifest(man, parent_version=v - 1)
-    assert vt.compact_history(keep_last=2) == 28  # 0..27 archived
-
-    assert [e["version"] for e in vt.archived_history()] == list(
-        range(28)
-    )
-    # cursor: only rows past the caller's high-water mark
-    tail = vt.archived_history(since_version=24)
-    assert [e["version"] for e in tail] == [25, 26, 27]
-    assert vt.archived_history(since_version=27) == []
-    # composes with crash-duplicate dedupe and torn tails
-    with open(vt._archive_path(), "a") as f:
-        f.write(_json.dumps({"version": 26, "rows": 26,
-                             "note": "s26"}) + "\n")
-        f.write('{"torn')
-    assert [
-        e["version"] for e in vt.archived_history(since_version=24)
-    ] == [25, 26, 27]
