@@ -34,6 +34,7 @@ Modes (flat_visit_summary_v1.0.sql:6 @query_type):
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
 import os
@@ -285,9 +286,10 @@ class PipelineRunner:
     # (xxhash64 + odd-stepped crc32, j positions mod m) evaluated
     # JVM-side in both directions; the driver only ever transfers
     # month-bounded word lists.  False positives open an extra month
-    # (harmless); the widen-before-swap union (bitwise OR — exact for
-    # Blooms with equal (m, j)) keeps false NEGATIVES impossible across
-    # crash windows, same discipline as the ranges.  m is sized per
+    # (harmless); false NEGATIVES are impossible because each snapshot
+    # names the sidecar staged with its own data (a carried month's
+    # filter is the bitwise OR of old and staged — exact set union for
+    # equal (m, j)), same as the ranges.  m is sized per
     # month from the observed distinct count (~16 bits/key, capped):
     # a month that outgrows the cap saturates toward all-ones and
     # prunes nothing — conservative, never wrong; raise the cap (or
@@ -338,9 +340,9 @@ class PipelineRunner:
     # the scan.
     _PROBE_ISIN_MAX = 64
 
-    # Underscore prefix: invisible to Spark's file discovery (as are
-    # the snapshot pointer and the hidden epoch dirs — a raw path
-    # reader sees an empty table, never a cross-epoch union).
+    # Sidecar file names inside each epoch directory (the snapshot's
+    # ``aux`` names them).  Underscore prefix: invisible to Spark's file
+    # discovery when a staged directory is read back.
     _BOUNDS_FILE = "_month_bounds.json"
     _BLOOMS_FILE = "_month_blooms.bin"
 
@@ -392,29 +394,31 @@ class PipelineRunner:
 
     # ------------------------------------------------- month key bounds
 
-    def _bounds_path(self, table: str) -> str:
-        return os.path.join(self._path(table), self._BOUNDS_FILE)
-
     def _load_bounds(self, table: str) -> dict | None:
-        return self._load_sidecar_dir(self._path(table))
+        path = self._path(table)
+        return self._load_sidecar(path, snapshot.load(path))
 
-    def _load_sidecar_dir(self, table_dir: str) -> dict | None:
-        """The merged in-memory sidecar of a table directory: JSON
-        ranges/file entries plus "bloom:<col>" entries (raw ``bytes``
-        words) from the binary companion.  An unreadable bounds JSON
-        disables pruning entirely (None); an unreadable Bloom file just
-        loses the membership refinement — both conservative."""
+    def _load_sidecar(self, table_dir: str, man: dict | None) -> dict | None:
+        """The merged in-memory sidecar snapshot ``man`` names (its
+        ``aux`` files ``bounds`` and ``blooms``): JSON ranges/file
+        entries plus "bloom:<col>" entries (raw ``bytes`` words) from
+        the binary companion.  A snapshot naming no bounds file, or an
+        unreadable one, disables pruning entirely (None); an unreadable
+        Bloom file just loses the membership refinement — both
+        conservative."""
+        bp = snapshot.aux(table_dir, "bounds", man) if man else None
+        if bp is None:
+            return None  # cold or legacy table (see _stage_attempt)
         try:
-            with open(os.path.join(table_dir, self._BOUNDS_FILE)) as f:
+            with open(bp) as f:
                 bounds = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            # Pre-bounds table (or unreadable sidecar): callers fall
-            # back to the full-target probe — slower, never wrong.
+        except (OSError, ValueError):
             return None
+        blp = snapshot.aux(table_dir, "blooms", man)
+        if blp is None:
+            return bounds
         try:
-            with open(
-                os.path.join(table_dir, self._BLOOMS_FILE), "rb"
-            ) as f:
+            with open(blp, "rb") as f:
                 raw = f.read()
             hdr_len = int.from_bytes(raw[:4], "big")
             hdr = json.loads(raw[4 : 4 + hdr_len])
@@ -433,18 +437,18 @@ class PipelineRunner:
             pass
         return bounds
 
-    def _write_bounds(self, table_dir: str, bounds: dict) -> None:
-        """Atomically (re)write BOTH sidecars inside ``table_dir`` from
-        the merged in-memory dict: ranges + per-file entries land in
-        the JSON; "bloom:<col>" entries land in a compact binary file
-        (r9, VERDICT r8 item 3 — hex-JSON at the production-month cap
-        of 2^23 bits would be 2 MB of hex per month per column).
-        Binary layout: 4-byte big-endian header length, JSON header
-        {month: {col: {m, j, off, len}}}, concatenated filter words.
-        The two replaces are not jointly atomic; each file is
-        individually a superset of its predecessor at every
-        intermediate state (widen-before-swap discipline), so a crash
-        between them leaves a conservative, never-wrong pair."""
+    def _write_bounds(self, edir: str, bounds: dict) -> dict:
+        """Write the sidecar of the snapshot being staged into its epoch
+        directory ``edir``, from the merged in-memory dict: ranges +
+        per-file entries land in the JSON; "bloom:<col>" entries land
+        in a compact binary file (r9, VERDICT r8 item 3 — hex-JSON at
+        the production-month cap of 2^23 bits would be 2 MB of hex per
+        month per column).  Binary layout: 4-byte big-endian header
+        length, JSON header {month: {col: {m, j, off, len}}},
+        concatenated filter words.  Returns the snapshot's ``aux``
+        entries naming the files: the flip that publishes the data
+        publishes its sidecar, so no reader ever pairs a snapshot with
+        another snapshot's bounds."""
         plain: dict = {}
         blooms: dict = {}
         for m, ent in bounds.items():
@@ -458,16 +462,12 @@ class PipelineRunner:
             }
             if bl:
                 blooms[m] = bl
-        p = os.path.join(table_dir, self._BOUNDS_FILE)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
+        name = os.path.basename(edir)
+        with open(os.path.join(edir, self._BOUNDS_FILE), "w") as f:
             json.dump(plain, f, sort_keys=True)
-        os.replace(tmp, p)
-        bp = os.path.join(table_dir, self._BLOOMS_FILE)
+        aux = {"bounds": f"{name}/{self._BOUNDS_FILE}"}
         if not blooms:
-            if os.path.exists(bp):
-                os.remove(bp)
-            return
+            return aux
         hdr: dict = {}
         parts: list[bytes] = []
         off = 0
@@ -483,21 +483,23 @@ class PipelineRunner:
                 parts.append(w)
                 off += len(w)
         head = json.dumps(hdr, sort_keys=True).encode()
-        tmpb = bp + ".tmp"
-        with open(tmpb, "wb") as f:
+        with open(os.path.join(edir, self._BLOOMS_FILE), "wb") as f:
             f.write(len(head).to_bytes(4, "big"))
             f.write(head)
             f.write(b"".join(parts))
-        os.replace(tmpb, bp)
+        aux["blooms"] = f"{name}/{self._BLOOMS_FILE}"
+        return aux
 
     # ------------------------------------------------ manifest layout
     # A partitioned-layout table is a manifest-committed table on the
     # one snapshot protocol (sources/snapshot.py), keyed on its
     # directory: the groups of its file map are storage months (the
     # unpartitioned flat_latest_hiv_summary is a VersionedTable, one
-    # group, in the same kind of directory).  Writes stage a new epoch,
-    # then flip the snapshot; a carried file is just a relpath kept in
-    # the new month list.  No data file is ever renamed, linked, or
+    # group, in the same kind of directory).  Writes stage a new epoch
+    # — data plus the bounds/Bloom sidecar that describes it, named
+    # under the snapshot's ``aux`` — then flip the snapshot
+    # (snapshot.publish); a carried file is just a relpath kept in the
+    # new month list.  No data file is ever renamed, linked, or
     # copied after its initial write, so the layout costs the same on a
     # filesystem without hardlinks or cheap renames (no-hardlink pin:
     # tests/test_manifest_layout.py).  What stays here is the engine's
@@ -665,22 +667,6 @@ class PipelineRunner:
             if fl:
                 out[entry.split("=", 1)[1]] = fl
         return out
-
-    @staticmethod
-    def _rebase_file_entries(sidecar: dict, edir: str) -> None:
-        """Rewrite a staged sidecar's per-file entry KEYS from bare
-        filenames (what footer scanning yields) to relpaths from the
-        table root — the snapshot's file identity, so sidecar entries,
-        manifest lists, touched sets, and carry maps all speak the same
-        key."""
-        ename = os.path.basename(edir)
-        for m, ent in sidecar.items():
-            files = ent.get("files")
-            if files:
-                ent["files"] = {
-                    f"{ename}/p_month={m}/{fn}": v
-                    for fn, v in files.items()
-                }
 
     def _existing_months(self, table: str) -> list[str]:
         """Storage months of the live table — the snapshot's keys (no
@@ -947,7 +933,9 @@ class PipelineRunner:
         ranges for ``bounds_cols``, "bloom:<col>" membership filters
         for ``bloom_cols`` (sentinels shared with the range config),
         and — when ``pk`` is given — per-FILE pk entries
-        ``{"files": {name: [lo, hi, n_rows]}}`` (r9, VERDICT r8
+        ``{"files": {relpath: [lo, hi, n_rows]}}`` keyed by the
+        snapshot's relpath, so sidecar entries, month lists, touched
+        sets and carry maps all speak the same key (r9, VERDICT r8
         item 2: the partitioned-layout lift of
         VersionedTable._file_key_stats in sources/versioned.py).
         Per-file ranges include synthetic rows (no sentinel clipping):
@@ -994,16 +982,20 @@ class PipelineRunner:
                     stats.setdefault(str(r[self.PARTITION_COL]), {})[
                         name
                     ] = [int(r["lo"]), int(r["hi"]), int(r["n"])]
+            ename = os.path.basename(parquet_dir)
             for m, files in stats.items():
-                out.setdefault(m, {})["files"] = files
+                out.setdefault(m, {})["files"] = {
+                    f"{ename}/{self.PARTITION_COL}={m}/{fn}": v
+                    for fn, v in files.items()
+                }
         return out
 
     def _exact_month_entries(
         self, path: str, m: str, file_names, bounds_cols, bloom_cols
     ) -> dict:
-        """Exact range + Bloom entries for ONE month of the live
-        (post-swap) table, from a column-pruned scan of exactly its
-        current data files — the cadence re-tighten's read.
+        """Exact range + Bloom entries for ONE month of the snapshot
+        being staged, from a column-pruned scan of exactly its data
+        files (carried and staged) — the cadence re-tighten's read.
         ``file_names`` are snapshot relpaths."""
         df = self.spark.read.parquet(
             *[os.path.join(path, rp) for rp in file_names]
@@ -1024,7 +1016,7 @@ class PipelineRunner:
         """Exact month-level [lo, hi] of the REAL (below-sentinel) pk
         population, derived from per-file entries alone: each file's
         bounds are exact, and the files map is the month's exact
-        content after a completed swap.  Returns "omit" when no file
+        content in the snapshot being staged.  Returns "omit" when no file
         holds a provable real row (synthetic-only month — same
         semantics as the exact scan pass), or None when a file
         STRADDLES the sentinel (its real max is unknowable from bounds
@@ -1112,7 +1104,8 @@ class PipelineRunner:
         Bloom entries ("bloom:<col>") union by bitwise OR — EXACT set
         union for equal (m, j); a parameter mismatch (the month's
         filter was resized) omits the entry, unprunable until the
-        post-swap exact pass rewrites it."""
+        month's next exact entry (full-month rewrite or cadence
+        re-tighten)."""
         if old is None:
             return new
         merged = {}
@@ -1410,9 +1403,9 @@ class PipelineRunner:
                 continue  # new month: all rows staged fresh
             ent = bounds.get(m, {}).get("files")
             if ent is None or sorted(ent) != sorted(live):
-                # pre-file-entry table, crash-widened sidecar, or any
-                # content/sidecar drift: month-grain rewrite, never
-                # trust stale per-file bounds
+                # pre-file-entry month or any content/sidecar drift:
+                # month-grain rewrite, never trust stale per-file
+                # bounds
                 plan_map[m] = None
                 continue
             touched: set = set()
@@ -1641,15 +1634,11 @@ class PipelineRunner:
         parent_epoch: int | None = None,
     ) -> None:
         """Full rewrite under the partitioned layout: stage a complete
-        new epoch, flip the snapshot to it, GC everything older.  ``df``
-        is already month-partitioned and PK-range-clustered by _write.
-
-        Sidecar discipline mirrors _write_months: WIDEN (old ∪ staged,
-        file entries dropped for re-staged months) before the flip,
-        EXACT after — a crash on either side of the flip leaves bounds
-        that cover whichever content the live snapshot names.  The flip
-        itself is the only promotion step; there is no crash window
-        with partial content."""
+        new epoch — the data and its exact sidecar — flip the snapshot
+        to it, GC everything older.  ``df`` is already
+        month-partitioned and PK-range-clustered by _write.  The flip
+        is the only promotion step: a crash anywhere before it leaves
+        the old snapshot live with the sidecar it names."""
         path = self._path(table)
         os.makedirs(path, exist_ok=True)
         man_old = snapshot.load(path)  # loaded ONCE per write
@@ -1665,56 +1654,30 @@ class PipelineRunner:
                 int(man_old["epoch"]) if man_old
                 else snapshot.raw_epoch(path)
             )
-        # staging dir is uniquely named (_e{N}_{uuid}) — a crashed or
-        # CONCURRENT staging attempt of the same epoch can never be
-        # overwritten or interleaved with; its orphan files are swept
-        # by a later GC (ADVICE r11, medium)
-        epoch, edir = snapshot.next_epoch_dir(path, man_old)
-        writer = df.write.mode("overwrite").partitionBy(
-            self.PARTITION_COL
-        )
-        if self._TARGET_FILE_ROWS:
-            writer = writer.option(
-                "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
-            )
-        writer.parquet(edir)
-        months_files = self._staged_month_files(edir)
         bounds_cols = self._BOUNDS_COLS.get(table, ())
-        staged: dict = {}
-        if bounds_cols:
-            staged = self._compute_month_sidecar(
-                edir, bounds_cols, self._BLOOM_COLS.get(table, ()),
-                pk=pk,
+
+        def write(edir: str) -> dict:
+            writer = df.write.mode("overwrite").partitionBy(
+                self.PARTITION_COL
             )
-            self._rebase_file_entries(staged, edir)
-            old = self._load_sidecar_dir(path) or {}
-            live_m = set((man_old or {"months": {}})["months"])
-            widened = dict(old)
-            for m, ent in staged.items():
-                if old.get(m) is None and m in live_m:
-                    # pre-bounds upgrade month (live data, no recorded
-                    # entry): _widen_bounds(None, staged) would record
-                    # the staged TIGHT ranges before the flip, and a
-                    # crash in the window would let them prune old rows
-                    # out of the recovery sync's retraction probe.  No
-                    # entry = unconditional candidate — conservative
-                    # (review finding r10).
-                    widened.pop(m, None)
-                    continue
-                w = dict(
-                    self._widen_bounds(old.get(m), ent, bounds_cols)
+            if self._TARGET_FILE_ROWS:
+                writer = writer.option(
+                    "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
                 )
-                # file entries never belong in a pre-flip sidecar: the
-                # live month list is about to change under them
-                w.pop("files", None)
-                widened[m] = w
-            self._write_bounds(path, widened)
-        man_new = {"epoch": epoch, "months": months_files}
-        snapshot.flip(path, man_new, parent_epoch=parent_epoch, staged=edir)
-        self._record_run_commit(table, epoch)
-        if bounds_cols:
-            # exact: a full rewrite's content is exactly the staged set
-            self._write_bounds(path, staged)
+            writer.parquet(edir)
+            fields = {"months": self._staged_month_files(edir)}
+            if bounds_cols:
+                # exact: a full rewrite's content is exactly the staged set
+                fields["aux"] = self._write_bounds(
+                    edir, self._compute_month_sidecar(
+                        edir, bounds_cols, self._BLOOM_COLS.get(table, ()),
+                        pk=pk,
+                    ),
+                )
+            return fields
+
+        man_new = snapshot.publish(path, man_old, parent_epoch, write)
+        self._record_run_commit(table, man_new["epoch"])
         # previous epochs are now unreferenced
         snapshot.gc(path, man_new, keep=self.keep_snapshots)
         # Migration sweep (review finding r10): a table written by the
@@ -1723,12 +1686,17 @@ class PipelineRunner:
         # committed the complete new state, so they are stale
         # duplicates that a raw path reader would otherwise silently
         # serve (breaking the advertised fail-safe) and that double
-        # storage forever.  No writer produces these names any more.
+        # storage forever.  Same for the sidecar files older tables
+        # kept at the table root (and their .tmp leftovers).  No writer
+        # produces these names any more.
         for entry in os.listdir(path):
             if entry.startswith(
                 (self.PARTITION_COL + "=", self._OLD_PREFIX)
             ):
                 shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
+            elif entry.startswith((self._BOUNDS_FILE, self._BLOOMS_FILE)):
+                with contextlib.suppress(OSError):
+                    os.remove(os.path.join(path, entry))
 
     def _write_delta(
         self, df: DataFrame, table: str, months: list[str],
@@ -1783,26 +1751,17 @@ class PipelineRunner:
         after the flip.  A crash before the flip leaves the previous
         snapshot live and the staging an orphan.
 
-        Bounds sidecar discipline (``bounds_cols``): WIDEN before the
-        flip (old ∪ staged per rewritten month), EXACT after it.  A
-        crash on either side of the flip therefore leaves bounds that
-        cover both the old and the new content of every month — the
-        superset invariant _make_probe_reader's pruning relies on; a
-        missed month here would be a silently-unretracted row forever.
-        Looseness from an interrupted sync is repaired by the exact
-        pass of the next successful one.
+        Bounds sidecar (``bounds_cols``): the new snapshot's sidecar is
+        computed in the staged epoch (_month_sidecar) and named by the
+        same flip, so the live snapshot's bounds always describe
+        exactly the live content — the superset invariant
+        _make_probe_reader's pruning relies on holds at every instant,
+        across crashes and concurrent writers alike.
 
         File-level carry (r9, ``carry``): the carry is PURE METADATA —
         untouched files' relpaths stay in the new month lists (no
         hardlink, no copy: the object-store-safe form) — so write I/O
-        scales with touched FILES.  For carried months the widen pass
-        DROPS the "files" entries (a crash leaves the month's file list
-        unknown — stale per-file bounds must not survive into the next
-        sync's touched-file computation; that sync month-grain-rewrites
-        instead, conservative) and the final pass records carried ∪
-        staged file entries with month ranges/Blooms kept WIDENED (the
-        carried files' exact population is deliberately never re-read;
-        exactness returns at the next full-month rewrite)."""
+        scales with touched FILES."""
         if not months:
             return
         carry = carry or {}
@@ -1822,137 +1781,114 @@ class PipelineRunner:
                 int(man_old["epoch"]) if man_old
                 else snapshot.raw_epoch(path)
             )
-        epoch, tmp = snapshot.next_epoch_dir(path, man_old)
-        writer = df.write.mode("overwrite").partitionBy(self.PARTITION_COL)
-        if self._TARGET_FILE_ROWS:
-            writer = writer.option(
-                "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
+
+        def write(edir: str) -> dict:
+            writer = df.write.mode("overwrite").partitionBy(
+                self.PARTITION_COL
             )
-        writer.parquet(tmp)
-        staged_bounds: dict = {}
-        old_bounds: dict = {}
-        if bounds_cols:
-            staged_bounds = self._compute_month_sidecar(
-                tmp, bounds_cols, bloom_cols, pk=pk
-            )
-            self._rebase_file_entries(staged_bounds, tmp)
-            old_bounds = self._load_sidecar_dir(path) or {}
-            widened = dict(old_bounds)
+            if self._TARGET_FILE_ROWS:
+                writer = writer.option(
+                    "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
+                )
+            writer.parquet(edir)
+            staged_files = self._staged_month_files(edir)
+            new_months = dict(live_months)
             for m in months:
-                if m in staged_bounds:
-                    if old_bounds.get(m) is None and m in live_months:
-                        # pre-bounds upgrade month (live data, no
-                        # recorded entry): recording the staged tight
-                        # ranges before the flip could prune the old
-                        # rows out of a recovery sync's probe — omit;
-                        # no entry = unconditional candidate (review
-                        # finding r10)
-                        widened.pop(m, None)
-                        continue
-                    # _widen_bounds carries ranges and Blooms only —
-                    # "files" is dropped here BY DESIGN (see docstring)
-                    widened[m] = self._widen_bounds(
-                        old_bounds.get(m), staged_bounds[m], bounds_cols
-                    )
-                elif carry.get(m):
-                    # pure-carry month (all staged rows deleted, some
-                    # files untouched): old ranges cover the carried
-                    # subset; only the file list is unknown mid-flip
-                    widened[m] = {
-                        k: v
-                        for k, v in (old_bounds.get(m) or {}).items()
-                        if k != "files"
-                    }
-                # month being deleted (no staged rows, no carry): keep
-                # the old entry until the snapshot stops naming it
-            self._write_bounds(path, widened)
-        staged_files = self._staged_month_files(tmp)
-        new_months = dict(live_months)
-        for m in months:
-            fl = staged_files.get(m, []) + sorted(carry.get(m) or ())
-            if fl:
-                new_months[m] = sorted(fl)
-            else:
-                new_months.pop(m, None)
-        man_new = {"epoch": epoch, "months": new_months}
-        snapshot.flip(path, man_new, parent_epoch=parent_epoch, staged=tmp)
-        self._record_run_commit(table, epoch)
-        if bounds_cols:
-            # The flip committed: tighten to the exact staged bounds
-            # (plus carried file entries for file-level months) and
-            # drop entries for months the snapshot no longer names.
-            final = dict(old_bounds)
-            for m in months:
-                staged = staged_bounds.get(m)
-                carried = carry.get(m) or {}
-                if staged is None and not carried:
-                    final.pop(m, None)
-                    continue
-                if carried:
-                    if staged is not None:
-                        # carried content ⊆ old entry, staged content =
-                        # staged entry: the union is the exact superset
-                        ent = dict(
-                            self._widen_bounds(
-                                old_bounds.get(m), staged, bounds_cols
-                            )
-                        )
-                        files = dict(staged.get("files", {}))
-                    else:
-                        ent = {
-                            k: v
-                            for k, v in (old_bounds.get(m) or {}).items()
-                            if k != "files"
-                        }
-                        files = {}
-                    files.update(carried)
-                    n_fl = int(
-                        (old_bounds.get(m) or {}).get("fl_syncs") or 0
-                    ) + 1
-                    ent.pop("fl_syncs", None)
-                    if n_fl >= self._PERSON_RETIGHTEN_EVERY:
-                        # Cadence re-tighten (r10, VERDICT r9 item 3):
-                        # every Nth consecutive file-level sync of a
-                        # month pays ONE column-pruned scan of exactly
-                        # that month's current files to restore EXACT
-                        # ranges and Blooms for every bounds column —
-                        # person-probe pruning would otherwise erode
-                        # monotonically (widen never un-ORs a purged
-                        # person, never narrows a range) until a
-                        # full-month rewrite that month-local deltas
-                        # may never trigger.
-                        ent = self._exact_month_entries(
-                            path, m, sorted(files), bounds_cols,
-                            bloom_cols,
-                        )
-                        ent["files"] = files
-                    else:
-                        ent["files"] = files
-                        ent["fl_syncs"] = n_fl
-                        # Re-tighten the PK range from the per-file
-                        # entries (pure metadata — the files map IS the
-                        # month's current content, each entry exact):
-                        # without this, repeated month-local deltas
-                        # never tighten the widened range until a
-                        # full-month rewrite.  person_id ranges and
-                        # Blooms stay widened between cadence scans
-                        # (their exact values need the carried files'
-                        # data).
-                        if pk is not None and pk in dict(bounds_cols):
-                            rng = self._pk_range_from_files(
-                                files, dict(bounds_cols).get(pk)
-                            )
-                            if rng == "omit":
-                                ent.pop(pk, None)
-                            elif rng is not None:
-                                ent[pk] = rng
-                    final[m] = ent
+                fl = staged_files.get(m, []) + sorted(carry.get(m) or ())
+                if fl:
+                    new_months[m] = sorted(fl)
                 else:
-                    final[m] = staged
-            self._write_bounds(path, final)
+                    new_months.pop(m, None)
+            fields = {"months": new_months}
+            if bounds_cols:
+                staged = self._compute_month_sidecar(
+                    edir, bounds_cols, bloom_cols, pk=pk
+                )
+                fields["aux"] = self._write_bounds(edir, self._month_sidecar(
+                    path, self._load_sidecar(path, man_old) or {}, staged,
+                    months, carry, bounds_cols, bloom_cols, pk,
+                ))
+            return fields
+
+        man_new = snapshot.publish(path, man_old, parent_epoch, write)
+        self._record_run_commit(table, man_new["epoch"])
         # replaced touched files (and the old epoch's _SUCCESS markers)
         # are now unreferenced
         snapshot.gc(path, man_new, keep=self.keep_snapshots)
+
+    def _month_sidecar(
+        self, path: str, old: dict, staged: dict, months: list[str],
+        carry: dict, bounds_cols, bloom_cols, pk,
+    ) -> dict:
+        """The sidecar of a month-scoped write's new snapshot: ``old``
+        (the parent snapshot's sidecar) for untouched months, the exact
+        ``staged`` entry for each rewritten month, and no entry for a
+        month left with neither staged rows nor carry.  A month that
+        carries files keeps its ranges and Blooms as old ∪ staged (the
+        carried files' exact population is deliberately never re-read)
+        and records carried ∪ staged file entries; exactness returns
+        at the next full-month rewrite or cadence re-tighten."""
+        final = dict(old)
+        for m in months:
+            ent_staged = staged.get(m)
+            carried = carry.get(m) or {}
+            if ent_staged is None and not carried:
+                final.pop(m, None)
+                continue
+            if not carried:
+                final[m] = ent_staged
+                continue
+            if ent_staged is not None:
+                # carried content ⊆ old entry, staged content = staged
+                # entry: the union is the exact superset
+                ent = dict(
+                    self._widen_bounds(old.get(m), ent_staged, bounds_cols)
+                )
+                files = dict(ent_staged.get("files", {}))
+            else:
+                ent = {
+                    k: v
+                    for k, v in (old.get(m) or {}).items()
+                    if k != "files"
+                }
+                files = {}
+            files.update(carried)
+            n_fl = int((old.get(m) or {}).get("fl_syncs") or 0) + 1
+            ent.pop("fl_syncs", None)
+            if n_fl >= self._PERSON_RETIGHTEN_EVERY:
+                # Cadence re-tighten (r10, VERDICT r9 item 3): every Nth
+                # consecutive file-level sync of a month pays ONE
+                # column-pruned scan of exactly that month's next files
+                # (carried + staged) to restore EXACT ranges and Blooms
+                # for every bounds column — person-probe pruning would
+                # otherwise erode monotonically (widen never un-ORs a
+                # purged person, never narrows a range) until a
+                # full-month rewrite that month-local deltas may never
+                # trigger.
+                ent = self._exact_month_entries(
+                    path, m, sorted(files), bounds_cols, bloom_cols,
+                )
+                ent["files"] = files
+            else:
+                ent["files"] = files
+                ent["fl_syncs"] = n_fl
+                # Re-tighten the PK range from the per-file entries
+                # (pure metadata — the files map IS the month's next
+                # content, each entry exact): without this, repeated
+                # month-local deltas never tighten the widened range
+                # until a full-month rewrite.  person_id ranges and
+                # Blooms stay widened between cadence scans (their
+                # exact values need the carried files' data).
+                if pk is not None and pk in dict(bounds_cols):
+                    rng = self._pk_range_from_files(
+                        files, dict(bounds_cols).get(pk)
+                    )
+                    if rng == "omit":
+                        ent.pop(pk, None)
+                    elif rng is not None:
+                        ent[pk] = rng
+            final[m] = ent
+        return final
 
     # -------------------------------------------------------------- runs
 
@@ -2262,14 +2198,13 @@ class PipelineRunner:
             c: (v.isoformat() if isinstance(v, dt.date) else v)
             for c, v in maxes.items()
         }
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            # last_staged_rows: observability for the scale probe —
-            # None means a full copy, an int means that many delta
-            # rows crossed the JDBC pipe this sync (survivor rows of
-            # touched files are local rewrites, not pipe traffic)
-            json.dump({"maxes": enc, "last_staged_rows": n_staged}, f)
-        os.replace(tmp, path)
+        # last_staged_rows: observability for the scale probe — None
+        # means a full copy, an int means that many delta rows crossed
+        # the JDBC pipe this sync (survivor rows of touched files are
+        # local rewrites, not pipe traffic)
+        snapshot.write_json(
+            path, {"maxes": enc, "last_staged_rows": n_staged}
+        )
 
     def run(self, sources: dict, mode: str = "sync") -> None:
         """Run all stages in dependency order.
@@ -2689,10 +2624,7 @@ class PipelineRunner:
             return None  # never matches -> no skipping until written
 
     def _save_person_fingerprint(self, fp: dict) -> None:
-        tmp = self._person_fp_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(fp, f)
-        os.replace(tmp, self._person_fp_path())
+        snapshot.write_json(self._person_fp_path(), fp)
 
     # ------------------------------------------------------ signal store
 
@@ -2728,10 +2660,7 @@ class PipelineRunner:
             k: v.isoformat() if v is not None else None
             for k, v in sig.items()
         }
-        tmp = self._signals_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(store, f, sort_keys=True)
-        os.replace(tmp, self._signals_path())
+        snapshot.write_json(self._signals_path(), store)
 
     def _stage(
         self, table: str, plan, data_wm, change_signal=None,
@@ -2847,6 +2776,7 @@ class PipelineRunner:
         wm = self.watermarks.last_update(version, fallback=target)
         part_src = self._PARTITION_SRC.get(table) if self.partitioned else None
         out: dict = out_sink if out_sink is not None else {}
+        reader = None
         if part_src and target is not None:
             # Only the two-phase delta path re-runs the plan; request
             # the recompute pin solely when that second pass can happen
@@ -2881,7 +2811,15 @@ class PipelineRunner:
             out["vp_stable"] = vp_stable
         merged = plan(target, wm, out)
         months_df = out.get("affected_months")
-        if part_src and months_df is not None and target is not None:
+        if (
+            part_src and months_df is not None and target is not None
+            # A live snapshot naming no readable sidecar (a table
+            # written before the sidecar moved into the snapshot, or a
+            # lost bounds file) takes the full write below: it rebuilds
+            # the table with exact bounds, where a delta write would
+            # leave it unpruned for good.
+            and (reader is not None or not self._BOUNDS_COLS.get(table))
+        ):
             # Bounded driver action: distinct storage months (tens of
             # rows for years of data — the watermark-store precedent).
             months = sorted(r["p_month"] for r in months_df.collect())

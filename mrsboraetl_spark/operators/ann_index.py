@@ -51,6 +51,7 @@ from mrsboraetl_spark.operators.similarity import (
     cosine,
     nearest_cells_kernel,
 )
+from mrsboraetl_spark.sources import snapshot
 
 
 class IvfIndex:
@@ -127,17 +128,14 @@ class IvfIndex:
         """Atomic manifest write — the COMMIT POINT tying (epoch,
         centroids, cells directory) together so readers never see a
         quantizer/assignment mismatch."""
-        tmp = self.cent_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "epoch": self.epoch,
-                    "cells_dir": os.path.basename(self.cells_path),
-                    "centroids": self.centroids,
-                },
-                f,
-            )
-        os.replace(tmp, self.cent_path)
+        snapshot.write_json(
+            self.cent_path,
+            {
+                "epoch": self.epoch,
+                "cells_dir": os.path.basename(self.cells_path),
+                "centroids": self.centroids,
+            },
+        )
 
     def is_empty(self) -> bool:
         return not os.path.exists(self.cells_path)

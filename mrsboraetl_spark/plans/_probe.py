@@ -15,11 +15,12 @@ VersionedTable.merge_delta's per-file accounting in
 sources/versioned.py), the probe reads ONLY the month
 directories whose recorded key range can contain a probe key; planning-
 time partition pruning means the other directories are never opened.
-The bounds are maintained as strict supersets across crash windows
-(widen-before-swap), so a pruned probe can return extra months but
-never miss one — the correctness contract the affected-month superset
-needs.  Without a reader (unpartitioned layout, pre-bounds table,
-cold start) the probe falls back to the full column-pruned scan.
+Each snapshot names the bounds staged with its own data (one flip
+publishes both), so the bounds always cover the live content and a
+pruned probe can return extra months but never miss one — the
+correctness contract the affected-month superset needs.  Without a
+reader (unpartitioned layout, pre-bounds table, cold start) the probe
+falls back to the full column-pruned scan.
 """
 
 from __future__ import annotations

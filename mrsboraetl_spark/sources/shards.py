@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.operators.order import epoch_shuffle
+from mrsboraetl_spark.sources import snapshot
 
 MANIFEST = "_shard_manifest.json"
 
@@ -123,10 +124,7 @@ def write_training_shards(
         manifest["shard_weight"] = [
             int(stats[i]["w"]) if i in stats else 0 for i in range(n_shards)
         ]
-    tmp = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    os.replace(tmp, os.path.join(path, MANIFEST))
+    snapshot.write_json(os.path.join(path, MANIFEST), manifest)
     return manifest
 
 

@@ -3,20 +3,28 @@
 A table is a directory whose content is defined by ONE pointer file,
 ``_snapshot.json``::
 
-    {"epoch": N, "months": {group: [relpath, ...]}, ...extra fields}
+    {"epoch": N, "months": {group: [relpath, ...]},
+     "aux": {name: relpath}, ...extra fields}
 
 Every relpath names a file inside an immutable hidden epoch directory
 (``_e{N}_{uuid}``) of the same table directory.  The file map is kept
 under the key ``months`` because the engine's groups are storage
-months; a ``VersionedTable`` has a single group.  Extra fields a writer
-puts in the snapshot (``note``, ``rows``, ``file_stats``, counters) ride
-along untouched — in the pointer, in the history and in every read.
+months; a ``VersionedTable`` has a single group and an
+``AppendOnlyTable`` one group per committed batch.  ``aux`` (optional)
+names auxiliary files that describe the snapshot — the engine's
+bounds/Bloom sidecar — so they commit with the data in the same flip;
+``gc`` keeps and sweeps them exactly like data files, and ``files``
+never returns them (``aux`` resolves one by name).  Extra fields a
+writer puts in the snapshot (``note``, ``rows``, ``file_stats``,
+counters) ride along untouched — in the pointer, in the history and in
+every read.
 
 The protocol (the Iceberg shape, on plain files):
 
 * **stage** — a writer creates a uniquely named epoch directory
-  (``next_epoch_dir``) and writes its new data files there; files it
-  keeps are carried by relpath, never copied, linked or renamed;
+  (``next_epoch_dir``) and writes its new data and aux files there;
+  files it keeps are carried by relpath, never copied, linked or
+  renamed;
 * **flip** — ``flip`` durably flushes the staged tree, compare-and-swaps
   the pointer against the epoch the writer planned from, records the
   snapshot as ``_snap_{epoch}.json`` history FIRST, then replaces the
@@ -30,6 +38,11 @@ The protocol (the Iceberg shape, on plain files):
   files outside the window.  A never-flipped staging directory may be a
   concurrent writer's work in progress and is swept only once older
   than ``_SCRATCH_ORPHAN_SECONDS``.
+
+``publish`` is stage + flip as one call, the helper every writer uses:
+it stages into ``next_epoch_dir``, lets the writer fill the directory
+and name the snapshot's fields, flips against the writer's CAS parent
+and removes its own staging when the commit fails.
 
 Past ``_MANIFEST_SPLIT_BYTES`` of inline file lists a snapshot stores
 each group's list in its own content-addressed ``_man_{group}_{sha}.json``
@@ -48,6 +61,7 @@ import datetime as dt
 import hashlib
 import json
 import os
+import shutil
 import uuid
 
 SNAPSHOT_FILE = "_snapshot.json"
@@ -218,6 +232,32 @@ def files(
     return [os.path.join(table_dir, rp) for _g, fl in sel for rp in fl]
 
 
+def _aux_files(man: dict | None) -> set[str]:
+    """Relpaths of the auxiliary files snapshot ``man`` names."""
+    aux = (man or {}).get("aux")
+    if not isinstance(aux, dict):
+        return set()
+    return {rp for rp in aux.values() if isinstance(rp, str)}
+
+
+def aux(table_dir: str, name: str, man: dict | None = None) -> str | None:
+    """Absolute path of the auxiliary file ``name`` of snapshot ``man``
+    (default: the live one), or None when the snapshot names none.  A
+    relpath outside the table's epoch directories reads as None, never
+    as a path escape."""
+    if man is None:
+        man = load(table_dir)
+    entries = (man or {}).get("aux")
+    rp = entries.get(name) if isinstance(entries, dict) else None
+    if (
+        not isinstance(rp, str)
+        or not rp.startswith(EPOCH_PREFIX)
+        or ".." in rp.split("/")
+    ):
+        return None
+    return os.path.join(table_dir, rp)
+
+
 def _history_epochs(table_dir: str) -> dict[int, str]:
     """{epoch: history-file path} of recorded snapshots on disk."""
     out: dict[int, str] = {}
@@ -344,6 +384,18 @@ def next_epoch_dir(
     )
 
 
+def staged_files(edir: str) -> list[str]:
+    """Relpaths (from the table directory) of the data files a writer
+    staged directly inside ``edir``: every name that is not hidden
+    (``_SUCCESS`` markers, ``.crc`` checksums)."""
+    name = os.path.basename(edir)
+    return [
+        f"{name}/{f}"
+        for f in sorted(os.listdir(edir))
+        if not f.startswith(("_", "."))
+    ]
+
+
 def _fsync_path(path: str) -> None:
     """Best-effort fsync of a file or directory by path: some
     network/FUSE mounts reject fsync (notably on a directory fd), and
@@ -468,6 +520,33 @@ def flip(
     _fsync_path(table_dir)
 
 
+def publish(
+    table_dir: str, man: dict | None, parent_epoch: int, write,
+) -> dict:
+    """Stage and flip one commit; returns the published snapshot.
+
+    ``write(edir)`` stages the new files into a fresh epoch directory
+    (``next_epoch_dir``, numbered from ``man``, the snapshot the writer
+    planned from) and returns the new snapshot's fields: ``months``
+    plus any ``aux`` and extra fields (the epoch is added here).
+    ``flip`` then publishes them with ``parent_epoch`` as the CAS
+    parent.  A failed commit removes its own staging unless the pointer
+    already names it; a killed one leaves an orphan ``gc`` sweeps once
+    provably dead."""
+    epoch, edir = next_epoch_dir(table_dir, man)
+    try:
+        new = {**write(edir), "epoch": epoch}
+        flip(table_dir, new, parent_epoch=parent_epoch, staged=edir)
+    except BaseException as exc:
+        if (
+            isinstance(exc, ConcurrentCommitError)
+            or raw_epoch(table_dir) != epoch
+        ):
+            shutil.rmtree(edir, ignore_errors=True)
+        raise
+    return new
+
+
 # ------------------------------------------------------------------ GC
 
 
@@ -479,8 +558,9 @@ def _refs(groups) -> set[str]:
 
 
 def gc(table_dir: str, man: dict | None = None, keep: int = 1) -> list[int]:
-    """Delete epoch-directory files not referenced by any RETAINED
-    snapshot (the live one plus the ``keep - 1`` before it): replaced
+    """Delete epoch-directory files (data and aux alike) not referenced
+    by any RETAINED snapshot (the live one plus the ``keep - 1`` before
+    it): replaced
     files past the retention window, orphans from a crash before a flip.
     ``man``: pass the just-flipped snapshot to skip a reload.  History
     files above the live epoch are crash orphans (their flip never
@@ -507,7 +587,7 @@ def gc(table_dir: str, man: dict | None = None, keep: int = 1) -> list[int]:
         rp
         for fl in (man or {"months": {}})["months"].values()
         for rp in fl
-    }
+    } | _aux_files(man)
     # Ref names are collected from the RAW retained history files (the
     # in-memory ``man`` always carries resolved inline lists, but the
     # on-disk pointer/history may hold the split form — its _man_ files
@@ -525,12 +605,14 @@ def gc(table_dir: str, man: dict | None = None, keep: int = 1) -> list[int]:
     for e in retained:
         try:
             with open(hist[e]) as f:
-                raw_groups = json.load(f)["months"]
+                raw = json.load(f)
+            raw_groups = raw["months"]
             live_refs |= _refs(raw_groups)
             if man is not None and e == live_epoch:
-                continue  # data files already unioned above
+                continue  # data and aux files already unioned above
             for fl in (_resolve(table_dir, raw_groups) or {}).values():
                 live.update(fl)
+            live |= _aux_files(raw)
         except (OSError, ValueError, KeyError, TypeError):
             continue  # unreadable history: retains nothing extra
             # (the live snapshot's refs/data are protected above
@@ -553,9 +635,10 @@ def gc(table_dir: str, man: dict | None = None, keep: int = 1) -> list[int]:
             continue  # retained epochs already unioned into live
         try:
             with open(hp) as f:
-                raw_groups = json.load(f)["months"]
-            for fl in (_resolve(table_dir, raw_groups) or {}).values():
+                raw = json.load(f)
+            for fl in (_resolve(table_dir, raw["months"]) or {}).values():
                 committed.update(fl)
+            committed |= _aux_files(raw)
         except (OSError, ValueError, KeyError, TypeError):
             continue  # unreadable: its files stay age-gated
     dropped = sorted(e for e in hist if e not in retained and e <= live_epoch)

@@ -8,7 +8,8 @@ three properties a 100 TB deployment needs from its sink:
 
 * **atomic commit** — every commit writes its data files into a fresh,
   uniquely named epoch directory (``_e{N}_{uuid}``) and publishes them
-  with one compare-and-swap flip of ``_snapshot.json``.  A crash
+  with one compare-and-swap flip of ``_snapshot.json``
+  (``snapshot.publish``).  A crash
   mid-write leaves an orphan epoch directory that no snapshot names:
   readers never see a partial table, and GC sweeps the orphan once it
   is provably dead.
@@ -32,7 +33,6 @@ per-file key bounds (``file_stats``) that later merges prune with.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,40 +125,6 @@ class VersionedTable:
             for r in rows
         }
 
-    def _publish(
-        self, man: dict | None, parent: int, write, fields,
-    ) -> int:
-        """Stage-and-flip: ``write(edir)`` lands the new data files in a
-        fresh epoch directory, ``fields(edir, new_files)`` returns the
-        snapshot's file list and audit fields, and the flip publishes
-        them with ``parent`` as the CAS parent.  A failed commit removes
-        its own staging unless the pointer already names it; a killed
-        one leaves an orphan GC sweeps once provably dead."""
-        epoch, edir = snapshot.next_epoch_dir(self.root, man)
-        try:
-            write(edir)
-            name = os.path.basename(edir)
-            new_files = [
-                f"{name}/{f}"
-                for f in sorted(os.listdir(edir))
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-            file_list, extra = fields(edir, new_files)
-            snapshot.flip(
-                self.root,
-                {"epoch": epoch, "months": {_GROUP: file_list}, **extra},
-                parent_epoch=parent,
-                staged=edir,
-            )
-        except BaseException as exc:
-            if (
-                isinstance(exc, ConcurrentCommitError)
-                or snapshot.raw_epoch(self.root) != epoch
-            ):
-                shutil.rmtree(edir, ignore_errors=True)
-            raise
-        return epoch
-
     # Default bounded retry budget for a LOSING concurrent writer: on
     # ConcurrentCommitError the operation re-reads the live snapshot,
     # re-plans against it, and re-commits — up to this many extra
@@ -246,24 +212,26 @@ class VersionedTable:
             )
         spark = df.sparkSession
 
-        def write(edir: str) -> None:
+        def write(edir: str) -> dict:
             writer = df.write.mode("errorifexists")
             if max_records_per_file:
                 writer = writer.option(
                     "maxRecordsPerFile", str(max_records_per_file)
                 )
             writer.parquet(edir)
-
-        def fields(edir: str, new_files: list[str]):
-            extra = {"rows": spark.read.parquet(edir).count(), "note": note}
+            fields = {
+                "months": {_GROUP: snapshot.staged_files(edir)},
+                "rows": spark.read.parquet(edir).count(),
+                "note": note,
+            }
             if stats_key is not None:
-                extra["stats_key"] = stats_key
-                extra["file_stats"] = self._file_key_stats(
+                fields["stats_key"] = stats_key
+                fields["file_stats"] = self._file_key_stats(
                     spark, edir, stats_key
                 )
-            return new_files, extra
+            return fields
 
-        return self._publish(None, parent, write, fields)
+        return snapshot.publish(self.root, None, parent, write)["epoch"]
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The live snapshot, or the retained snapshot ``version``
@@ -471,10 +439,8 @@ class VersionedTable:
             else survivors.unionByName(delta.select(*survivors.columns))
         )
 
-        def write(edir: str) -> None:
+        def write(edir: str) -> dict:
             new_rows.write.mode("errorifexists").parquet(edir)
-
-        def fields(edir: str, new_files: list[str]):
             n_new = spark.read.parquet(edir).count()
             # Untouched-side row count: from the snapshot's per-file
             # record counts when every reused file has them (zero I/O),
@@ -498,7 +464,10 @@ class VersionedTable:
             # ones.
             new_stats = self._file_key_stats(spark, edir, keys[0])
             carried = {f: file_stats[f] for f in untouched if f in file_stats}
-            return [*untouched, *new_files], {
+            return {
+                "months": {
+                    _GROUP: [*untouched, *snapshot.staged_files(edir)]
+                },
                 "rows": n_untouched + n_new,
                 "note": note,
                 "rewrote_files": len(touched),
@@ -512,7 +481,9 @@ class VersionedTable:
 
         # the snapshot read ONCE at the top stays the plan's authority:
         # base files, stats and the CAS parent all derive from it
-        return self._publish(man, int(man["epoch"]), write, fields)
+        return snapshot.publish(
+            self.root, man, int(man["epoch"]), write
+        )["epoch"]
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Retain only the last ``keep_last`` versions: GC every file no

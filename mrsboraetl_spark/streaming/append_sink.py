@@ -6,95 +6,90 @@ at-least-once — data append and marker are two filesystem operations
 with a crash window between them — and the versioned merge sink
 (streaming/versioned_sink.py) is exactly-once but rewrites the FULL
 snapshot per commit, which its own docstring rules out for unbounded
-appends.  This module closes the gap (VERDICT r5 item 3):
+appends.  This module closes the gap (VERDICT r5 item 3).
 
-* each micro-batch writes to a DETERMINISTIC staging directory keyed by
-  its batch id (``data/batch=<id>``, overwrite mode) — a replay of a
-  half-written batch simply overwrites the same directory;
-* the commit point is one ``os.replace`` of a manifest listing the
-  committed batch ids.  Crash AFTER the data write but BEFORE the
-  manifest commit: the directory exists but is invisible (readers go
-  through the manifest), the replay overwrites and commits it — no
-  loss, no duplicate.  Crash after the commit: the replay sees the id
-  and no-ops;
-* write cost is O(|batch|) per batch — no snapshot rewrite, the
-  append-sink property the versioned sink cannot give.
+An ``AppendOnlyTable`` is a manifest-committed table on the one
+snapshot protocol (sources/snapshot.py), one file group per committed
+batch:
 
-Reads open exactly the committed directories (an explicit path list, so
-an uncommitted orphan or a stray file can never leak into results).
-Single writer per table, as with every persistent index here —
-Structured Streaming serializes foreachBatch calls.
+* each micro-batch is one ``snapshot.publish`` against the live epoch:
+  its rows land in a fresh epoch directory and one durable CAS flip of
+  ``_snapshot.json`` adds the batch's group and raises the snapshot's
+  ``max_committed_id``; a ``gc`` then drops the previous snapshot's
+  history file, so one history file stays however long the stream
+  runs.  A crash before the flip leaves a staged epoch directory no
+  snapshot names — invisible to readers, swept by a later GC once
+  provably dead; the replay stages the batch afresh and commits it, no
+  loss, no duplicate.  A crash after the flip: the replay sees the id
+  at or below the watermark and no-ops;
+* data write cost is O(|batch|) per batch — carried groups are
+  relpaths in the snapshot, never rewritten: the append-sink property
+  the versioned sink cannot give.  The metadata cost (pointer and
+  history rewrite, the GC's walk of the epoch directories) is
+  O(committed groups) per batch, which ``compact()`` bounds.
 
-Scale shape: one directory per micro-batch grows the listing over time;
-``compact()`` folds committed batches into one directory behind the
-same manifest commit (the id list collapses to a single synthetic
-entry), bounding reader fan-out for long-lived streams.  On an object
-store, swap the two ``os.replace`` sites for the store's put-if-absent
-primitive — same contract, nothing else changes (the versioned table
-documents the identical port).
+Reads open exactly the snapshot's file list (``snapshot.files``), so an
+uncommitted orphan or a stray file can never leak into results.  Single
+writer per table, as with every persistent index here — Structured
+Streaming serializes foreachBatch calls.
+
+Scale shape: one epoch directory per micro-batch grows the listing over
+time; ``compact()`` folds the committed batches into one group behind
+one more publish and then GCs the folded directories, bounding reader
+fan-out for long-lived streams.  On an object store only the snapshot
+protocol's pointer replace changes (a conditional PUT); nothing here
+does.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mrsboraetl_spark.sources import snapshot
+
+
+# Commit file of the retired pre-snapshot layout: a directory holding it
+# and no snapshot pointer is refused rather than read as empty.
+_LEGACY_MANIFEST = "_manifest.json"
+
+
+def _last_id(batch_key: str) -> int:
+    """Last batch id a group holds: the id itself for one batch, the
+    suffix of a ``compact-{n}-{id}`` fold."""
+    return int(batch_key.rsplit("-", 1)[-1])
+
 
 class AppendOnlyTable:
-    """Manifest-committed append-only parquet table."""
+    """Snapshot-committed append-only parquet table."""
 
     def __init__(self, root: str):
         self.root = root
-        self.data_root = os.path.join(root, "data")
-        os.makedirs(self.data_root, exist_ok=True)
-
-    # ---------------------------------------------------------- manifest
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "_manifest.json")
-
-    def _read_manifest(self) -> dict:
-        if os.path.exists(self._manifest_path()):
-            with open(self._manifest_path()) as f:
-                m = json.load(f)
-            if "max_committed_id" not in m:
-                # Pre-watermark manifests: recover the high-water mark
-                # from the batch keys — plain int keys, and compact
-                # keys whose suffix is the last folded batch id.
-                mx = None
-                for k in m["batches"]:
-                    tail = k.rsplit("-", 1)[-1]
-                    if tail.isdigit():
-                        mx = int(tail) if mx is None else max(mx, int(tail))
-                m["max_committed_id"] = mx
-            return m
-        return {"batches": [], "max_committed_id": None}
-
-    def _commit_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # the atomic commit point
+        if os.path.exists(
+            os.path.join(root, _LEGACY_MANIFEST)
+        ) and not os.path.exists(os.path.join(root, snapshot.SNAPSHOT_FILE)):
+            raise ValueError(
+                f"{root}: pre-snapshot append table ({_LEGACY_MANIFEST}) "
+                "— re-create it from its source"
+            )
+        os.makedirs(root, exist_ok=True)
 
     def committed(self) -> list[str]:
-        return list(self._read_manifest()["batches"])
+        """Committed batch keys, oldest first."""
+        man = snapshot.load(self.root)
+        return sorted((man or {"months": {}})["months"], key=_last_id)
 
     # -------------------------------------------------------------- I/O
-
-    def _batch_dir(self, batch_key: str) -> str:
-        return os.path.join(self.data_root, f"batch={batch_key}")
 
     def append_batch(self, df: DataFrame, batch_id: int) -> bool:
         """Write-and-commit one micro-batch; returns False (no-op) when
         the batch id is already committed — the replay path.
 
         The replay check is a MONOTONIC watermark (`max_committed_id`),
-        not the data-directory list: compact() collapses that list to
-        one synthetic entry, and it is not a per-id ledger either —
-        a ledger for an unbounded stream would grow (and be linearly
+        not the group list: compact() collapses that list to one
+        synthetic entry, and it is not a per-id ledger either — a
+        ledger for an unbounded stream would grow (and be linearly
         scanned) forever inside the foreachBatch hot path.  The
         watermark is sound because Structured Streaming batch ids are
         strictly increasing per checkpoint, so a replayed batch always
@@ -104,51 +99,57 @@ class AppendOnlyTable:
         RESETTING the streaming checkpoint without resetting the table
         restarts ids at 0 and every batch no-ops; manual callers must
         likewise feed increasing ids."""
-        key = str(batch_id)
-        manifest = self._read_manifest()
-        mx = manifest["max_committed_id"]
+        man = snapshot.load(self.root)
+        mx = (man or {}).get("max_committed_id")
         if mx is not None and batch_id <= mx:
             return False
-        # Deterministic staging dir + overwrite: a replay of a batch
-        # that crashed mid-write lands on the same path and simply
-        # overwrites the partial output.
-        df.write.mode("overwrite").parquet(self._batch_dir(key))
-        manifest["batches"].append(key)
-        manifest["max_committed_id"] = batch_id
-        self._commit_manifest(manifest)
+
+        def write(edir: str) -> dict:
+            df.write.mode("errorifexists").parquet(edir)
+            groups = dict((man or {"months": {}})["months"])
+            groups[str(batch_id)] = snapshot.staged_files(edir)
+            return {"months": groups, "max_committed_id": batch_id}
+
+        parent = int(man["epoch"]) if man else snapshot.raw_epoch(self.root)
+        snapshot.gc(self.root, snapshot.publish(self.root, man, parent, write))
         return True
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        """Union of exactly the COMMITTED batches (explicit path list —
-        uncommitted orphans are invisible), or None when empty."""
-        keys = self.committed()
-        if not keys:
-            return None
-        return spark.read.parquet(*[self._batch_dir(k) for k in keys])
+        """Union of exactly the COMMITTED batches (the snapshot's file
+        list — uncommitted orphans are invisible), or None when empty."""
+        paths = snapshot.files(self.root)
+        return spark.read.parquet(*paths) if paths else None
 
     def compact(self, spark: SparkSession, n_files: int | None = None) -> None:
-        """Fold all committed batches into one directory and commit a
-        manifest pointing only at it — bounds reader fan-out for
-        long-lived streams.  The fold is crash-safe: the new directory
-        is written under a staging name first and the manifest swap is
-        the commit; old batch directories are dropped only AFTER the
-        commit (a crash in between leaves harmless invisible orphans)."""
-        keys = self.committed()
-        if len(keys) <= 1:
+        """Fold all committed batches into one group and publish a
+        snapshot naming only it — bounds reader fan-out for long-lived
+        streams.  The folded batches' epoch directories are deleted by
+        the GC after the flip (a crash before it leaves them live, a
+        crash after it leaves unreferenced files the next GC sweeps)."""
+        man = snapshot.load(self.root)
+        if man is None or len(man["months"]) <= 1:
             return
-        new_key = f"compact-{len(keys)}-{keys[-1]}"
-        df = self.read(spark)
+        paths = snapshot.files(self.root, man=man)
+        if not paths:
+            return
+        df = spark.read.parquet(*paths)
         if n_files:
             df = df.coalesce(n_files)
-        df.write.mode("overwrite").parquet(self._batch_dir(new_key))
         # The replay WATERMARK survives compaction untouched: it is
-        # what keeps a replayed batch id a no-op after its directory
-        # was folded away.
-        manifest = self._read_manifest()
-        manifest["batches"] = [new_key]
-        self._commit_manifest(manifest)
-        for k in keys:
-            shutil.rmtree(self._batch_dir(k), ignore_errors=True)
+        # what keeps a replayed batch id a no-op after its group was
+        # folded away.
+        mx = man["max_committed_id"]
+        key = f"compact-{len(man['months'])}-{mx}"
+
+        def write(edir: str) -> dict:
+            df.write.mode("errorifexists").parquet(edir)
+            return {
+                "months": {key: snapshot.staged_files(edir)},
+                "max_committed_id": mx,
+            }
+
+        new = snapshot.publish(self.root, man, int(man["epoch"]), write)
+        snapshot.gc(self.root, new)
 
 
 def exactly_once_append_sink(

@@ -20,8 +20,8 @@ downstream consumers should treat the pair sink as at-least-once and
 edges anyway).  Exactly-once needs the data append and the marker
 in one atomic commit — implemented twice: streaming/versioned_sink.py
 (manifest-swap MERGE, for state tables) and streaming/append_sink.py
-(deterministic per-batch staging dir + manifest append commit, for
-unbounded fact streams at O(batch) write cost).
+(one snapshot publish per batch, for unbounded fact streams at
+O(batch) write cost).
 """
 
 from __future__ import annotations

@@ -31,8 +31,8 @@ matched keys are rewritten, untouched files are shared forward in the
 manifest — so the per-batch write is O(touched files + batch), not a
 full snapshot.  Right for dimension/state tables fed by streams (the
 watermark store, decode dimensions, corpus-stats rollups); unbounded
-fact appends use streaming/append_sink.py (deterministic per-batch
-staging dir + manifest append commit, no key semantics needed).
+fact appends use streaming/append_sink.py (one snapshot publish per
+batch, no key semantics needed).
 """
 
 from __future__ import annotations

@@ -81,7 +81,7 @@ _SLOW_TESTS = {
     "test_manifest_layout.py::test_gc_protects_live_refs_when_history_missing",
     "test_manifest_layout.py::test_manifest_crash_at_flip_keeps_contract",
     "test_manifest_layout.py::test_manifest_crash_orphan_epoch_not_time_travelable",
-    "test_manifest_layout.py::test_manifest_crash_with_preexisting_unbounded_month_stays_conservative",
+    "test_manifest_layout.py::test_legacy_table_without_sidecar_is_rebuilt_by_next_sync",
     "test_manifest_layout.py::test_manifest_file_level_sync_carries_by_reference",
     "test_manifest_layout.py::test_manifest_gc_and_probe_pruning",
     "test_manifest_layout.py::test_manifest_incremental_matches_rebuild_and_dir_mode",

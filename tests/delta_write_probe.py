@@ -242,13 +242,7 @@ def run_probe(n: int) -> None:
         target_bytes = tree_bytes(root)
         if mode == "delta_no_bounds":
             # r6 behavior: no sidecar -> full-target phase-1 probe
-            for t in list(runner._BOUNDS_COLS):
-                for p in (
-                    runner._bounds_path(t),
-                    os.path.join(runner._path(t), runner._BLOOMS_FILE),
-                ):
-                    if os.path.exists(p):
-                        os.remove(p)
+            runner._load_bounds = lambda table: None
         t0 = time.time()
         time.sleep(0.05)  # mtime resolution guard
         t_sync = time.time()

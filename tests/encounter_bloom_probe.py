@@ -123,15 +123,14 @@ def main() -> None:
 
     # A/B: the same probe with the encounter Blooms stripped from the
     # sidecar (ranges-only — the pre-r11 configuration)
-    path = runner._path("flat_obs")
-    b = runner._load_sidecar_dir(path)
+    b = runner._load_bounds("flat_obs")
     stripped = {
         m: {k: v for k, v in ent.items() if k != "bloom:encounter_id"}
         for m, ent in b.items()
     }
-    runner._write_bounds(path, stripped)
+    runner._load_bounds = lambda table: stripped
     n_ro, _ = probe_months(runner, "flat_obs", keys_df, "encounter_id")
-    runner._write_bounds(path, b)  # restore
+    del runner._load_bounds  # restore the class method
     print(
         f"[fresh]  aged-encounter probe: true={len(tm)} {tm} | "
         f"ranges-only={n_ro} | ranges+bloom={n_cand} {cand} | "

@@ -11,8 +11,9 @@ The pins here are the verdict's done-criteria:
   ``shutil.copy2`` monkeypatched to raise) writes only touched bytes —
   carried files are never linked, copied, moved, or rewritten;
 * the crash contract: a crash at the flip leaves the OLD snapshot
-  readable and the widened sidecar free of per-file entries for the
-  affected months, and the next sync converges to the rebuild state;
+  readable with exactly the sidecar it names (per-file entries equal
+  to its month lists), and the next sync converges to the rebuild
+  state;
 * replaced/orphaned files are garbage-collected; a raw
   ``spark.read.parquet(path)`` sees NO data (fail-safe, Delta-like) —
   manifest-mode consumers read through the runner.
@@ -173,11 +174,11 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     """A crash AT the snapshot flip of flat_obs's file-level delta
     write leaves (a) the OLD snapshot
     as live content — the flip is all-or-nothing, there is no partial
-    state to rescue — and (b) a widened sidecar whose affected months
-    carry NO per-file entries (their pre-crash entries would no longer
-    match any post-crash content list, so the next sync month-grain
-    rewrites instead of trusting them).  Recovery + re-sync converges
-    to the rebuild state and GCs the orphaned staged epoch."""
+    state to rescue — and (b) the old snapshot's own sidecar, whose
+    per-file entries name exactly the live month lists (the staged
+    sidecar was never published).  The failed write removes its
+    staging; recovery + re-sync converges to the rebuild state and
+    leaves disk holding exactly the referenced files."""
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(
@@ -185,6 +186,7 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     )
     rows_before = _rows(r, "flat_obs")
     man_before = _manifest(r, "flat_obs")
+    bounds_before = r._load_bounds("flat_obs")
     pdfs2 = _small_delta(pdfs)
 
     real_flip = snapshot.flip
@@ -214,15 +216,13 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     assert _manifest(r, "flat_obs") == man_before
     assert _rows(r, "flat_obs") == rows_before
 
-    # (b) widened sidecar: no trustable per-file entries for the months
-    # the crashed write was about to change
+    # (b) the old snapshot's own sidecar: file entries == month lists
     bounds = r._load_bounds("flat_obs")
+    assert bounds == bounds_before
     live = man_before["months"]
-    for m in blown["months"]:
-        ent = bounds.get(m, {}).get("files")
-        assert ent is None or sorted(ent) != sorted(
-            live.get(m, [])
-        ), (m, "stale per-file bounds would be trusted next sync")
+    assert {m for m, ent in bounds.items() if "files" in ent} == set(live)
+    for m, ent in bounds.items():
+        assert sorted(ent["files"]) == sorted(live[m]), m
 
     # recovery: next sync converges
     r.run(to_spark(spark, pdfs2), mode="sync")
@@ -244,27 +244,12 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
                         ))
         return out
 
+    man = _manifest(r, "flat_obs")
     referenced = {
-        rp
-        for fl in _manifest(r, "flat_obs")["months"].values()
-        for rp in fl
-    }
-    # The crashed staging is a NEVER-flipped epoch dir: since r13 GC
-    # age-gates those (it cannot distinguish a crash orphan from a
-    # CONCURRENT runner's in-progress staging — sweeping the latter
-    # crashed the two-runner race pin), the orphan survives the
-    # recovery sync's young GC...
-    fresh_leaks = files_on_disk() - referenced
-    assert all(e.split("/")[0].startswith("_e") for e in fresh_leaks)
-    # ...but once provably dead (older than the orphan window) the
-    # next GC sweeps it and disk holds exactly the referenced set.
-    import time as _time
-
-    old = _time.time() - snapshot._SCRATCH_ORPHAN_SECONDS - 60
-    base = r._path("flat_obs")
-    for entry in set(e.split("/")[0] for e in fresh_leaks):
-        os.utime(os.path.join(base, entry), (old, old))
-    snapshot.gc(r._path("flat_obs"), keep=r.keep_snapshots)
+        rp for fl in man["months"].values() for rp in fl
+    } | set(man["aux"].values())
+    # the crashed write removed its own staging (snapshot.publish), and
+    # the recovery sync's GC swept every replaced file
     on_disk = files_on_disk()
     assert on_disk == referenced, (
         "disk holds unreferenced (leaked) or missing files",
@@ -745,61 +730,128 @@ def test_manifest_crash_orphan_epoch_not_time_travelable(
     assert _raw_snapshot(r, "flat_obs")["epoch"] > e0
 
 
-def test_manifest_crash_with_preexisting_unbounded_month_stays_conservative(
+def test_legacy_table_without_sidecar_is_rebuilt_by_next_sync(
     spark, tmp_path, monkeypatch
 ):
-    """Review finding r10 (widen-pass upgrade hole): a month holding
-    live data but NO sidecar entry (pre-bounds table) must not gain
-    the staged delta's TIGHT ranges before the flip — a crash in the
-    window would let them prune the month's old rows out of the
-    recovery probe.  The pre-flip sidecar must leave such a month
-    entry-less (unconditional candidate), and the recovery sync must
-    converge to the rebuild state."""
-    from tests.fixtures import to_spark
-    from tests.test_file_level_writes import _mk_state as _mk
+    """A partitioned table whose live snapshot names no sidecar —
+    written while the sidecar still lived at the table root — is not
+    left unpruned: the next sync that runs its stage rewrites it in
+    full with the sidecar inside the new snapshot, sweeps the root
+    sidecar files (and their .tmp leftovers), and converges to the
+    rebuild state."""
+    import shutil
 
-    r, pdfs = _mk(
+    from tests.fixtures import to_spark
+
+    r, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
     )
-    # simulate the pre-bounds upgrade: drop sidecar + blooms entirely
-    for p in (
-        r._bounds_path("flat_obs"),
-        os.path.join(r._path("flat_obs"), r._BLOOMS_FILE),
-    ):
-        if os.path.exists(p):
-            os.remove(p)
+    path = r._path("flat_obs")
+    raw = _raw_snapshot(r, "flat_obs")
+    aux = raw.pop("aux")
+    for name, fn in (("bounds", r._BOUNDS_FILE), ("blooms", r._BLOOMS_FILE)):
+        shutil.copy(os.path.join(path, aux[name]), os.path.join(path, fn))
+        with open(os.path.join(path, fn + ".tmp"), "w") as f:
+            f.write("torn")
+    snapshot.write_json(
+        os.path.join(path, f"_snap_{raw['epoch']:08d}.json"), raw
+    )
+    snapshot.write_json(os.path.join(path, snapshot.SNAPSHOT_FILE), raw)
+    assert r._load_bounds("flat_obs") is None
 
-    real_replace = os.replace
+    full: list[str] = []
+    real_full = r._write_manifest_full
 
-    def crash_at_flip(src, dst):
-        if dst.endswith(
-            os.path.join("flat_obs.parquet", snapshot.SNAPSHOT_FILE)
-        ):
-            raise RuntimeError("crash at flip")
-        return real_replace(src, dst)
+    def spy_full(df, table, *a, **kw):
+        full.append(table)
+        return real_full(df, table, *a, **kw)
 
-    monkeypatch.setattr(snapshot.os, "replace", crash_at_flip)
+    monkeypatch.setattr(r, "_write_manifest_full", spy_full)
     pdfs2 = _small_delta(pdfs)
-    with pytest.raises(RuntimeError, match="crash at flip"):
-        r.run(to_spark(spark, pdfs2), mode="sync")
-    monkeypatch.setattr(snapshot.os, "replace", real_replace)
-
-    # the pre-flip sidecar recorded NOTHING for the live months the
-    # delta touched (no entry = cannot prune = conservative)
-    sidecar = r._load_sidecar_dir(r._path("flat_obs")) or {}
-    live_months = set(_raw_snapshot(r, "flat_obs")["months"])
-    for m, ent in sidecar.items():
-        assert m not in live_months or ent == {}, (m, ent)
-
-    # recovery converges to a fresh rebuild
     r.run(to_spark(spark, pdfs2), mode="sync")
-    from tests.fixtures import to_spark as _ts
-
+    assert "flat_obs" in full, full
+    assert r._load_bounds("flat_obs")
+    assert not [
+        e for e in os.listdir(path)
+        if e.startswith((r._BOUNDS_FILE, r._BLOOMS_FILE))
+    ]
     rf = PipelineRunner(
         spark, str(tmp_path / "fresh_ub"), partitioned=True
     )
-    rf.run(_ts(spark, pdfs2), mode="rebuild")
+    rf.run(to_spark(spark, pdfs2), mode="rebuild")
     assert _rows(r, "flat_obs") == _rows(rf, "flat_obs")
+
+
+def test_losing_writer_never_publishes_its_sidecar(
+    spark, tmp_path, monkeypatch
+):
+    """Two runners on one root.  Runner B stages a write of one month;
+    while B writes its sidecar, runner A completes a write of another
+    month whose new encounter_id lies above that month's recorded
+    range, and B's flip then loses the CAS.  Every live month's
+    recorded encounter_id range must still cover that month's live
+    rows: a sidecar the loser derived from the old snapshot must never
+    describe the winner's data."""
+    from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
+    from mrsboraetl_spark.engine import ConcurrentCommitError
+    from mrsboraetl_spark.plans.flat_obs import build_flat_obs
+    from tests.fixtures import make_sources, to_spark
+    from tests.test_file_level_writes import _live_with_month
+
+    table = "flat_obs"
+    dfs = to_spark(spark, make_sources(n_persons=20, seed=13))
+    rA = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    rB = PipelineRunner(spark, rA.root, partitioned=True)
+    rA._write(
+        build_flat_obs(dfs["obs"], dfs["encounter"], dfs["person"]), table
+    )
+    live = _live_with_month(rA, table).localCheckpoint()
+    bounds = rA._load_bounds(table)
+    m_a, m_b = sorted(bounds)[:2]
+    hi = bounds[m_a]["encounter_id"][1]
+    a_rows = live.filter(F.col("p_month") == m_a)
+    moved = (
+        a_rows.filter(F.col("encounter_id") < SYNTHETIC_ENCOUNTER_OFFSET)
+        .limit(1)
+        .withColumn("encounter_id", F.lit(hi + 1000).cast("long"))
+    )
+    delta_a = a_rows.unionByName(moved).localCheckpoint()
+    delta_b = live.filter(F.col("p_month") == m_b).localCheckpoint()
+    cols = rA._BOUNDS_COLS[table]
+
+    real_write_bounds = rB._write_bounds
+    fired: list[bool] = []
+
+    def write_bounds_after_winner(*a, **kw):
+        if not fired:
+            fired.append(True)
+            rA._write_months(delta_a, table, [m_a], bounds_cols=cols)
+        return real_write_bounds(*a, **kw)
+
+    monkeypatch.setattr(rB, "_write_bounds", write_bounds_after_winner)
+    with pytest.raises(ConcurrentCommitError):
+        rB._write_months(delta_b, table, [m_b], bounds_cols=cols)
+    assert fired
+
+    bounds = rA._load_bounds(table)
+    real = F.when(
+        F.col("encounter_id") < SYNTHETIC_ENCOUNTER_OFFSET,
+        F.col("encounter_id"),
+    )
+    per_month = (
+        _live_with_month(rA, table)
+        .groupBy("p_month")
+        .agg(F.min(real).alias("lo"), F.max(real).alias("hi"))
+        .collect()
+    )
+    assert any(r["hi"] == hi + 1000 for r in per_month)
+    for r in per_month:
+        if r["lo"] is None:
+            continue
+        lo_b, hi_b = bounds[r["p_month"]]["encounter_id"]
+        assert lo_b <= r["lo"] and r["hi"] <= hi_b, (
+            r["p_month"], [r["lo"], r["hi"]], [lo_b, hi_b]
+        )
 
 
 def test_concurrent_flip_raises_and_preserves_winner(

@@ -2,7 +2,8 @@
 phase-1 retraction probe must open only candidate months —
 read I/O scaling with the delta — while the bounds stay a strict
 superset of reality across every crash window (a missed month would be
-a silently-unretracted row forever)."""
+a silently-unretracted row forever): each snapshot names the sidecar
+staged with its own data."""
 
 from __future__ import annotations
 
@@ -257,9 +258,9 @@ def test_sync_probe_reads_scale_with_delta(spark, built, monkeypatch):
 
 
 def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
-    """Crash AT the snapshot flip of a month-scoped write: bounds must
-    still cover both old and new month content (widen-before-flip), the
-    old snapshot stays live, and the next write converges."""
+    """Crash AT the snapshot flip of a month-scoped write: the old
+    snapshot stays live with exactly the sidecar it names (the staged
+    one was never published), and the next write converges."""
     runner = built["runner"]
     table = "flat_obs"
     pre = runner._load_bounds(table)
@@ -298,14 +299,9 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     finally:
         os.replace = orig_replace
 
-    # The sidecar on disk is the WIDENED one: for the affected months it
-    # must cover the old range AND the shifted range.
-    mid = runner._load_bounds(table)
-    for m in months:
-        old_lo, old_hi = pre[m]["encounter_id"]
-        assert mid[m]["encounter_id"][0] <= old_lo
-        assert mid[m]["encounter_id"][1] >= old_hi + 7
-    # The flip never happened: the old snapshot is still the table.
+    # The flip never happened: the old snapshot is still the table,
+    # and its sidecar is exactly the one it had.
+    assert runner._load_bounds(table) == pre
     assert snapshot.load(runner._path(table))["epoch"] == epoch0
     restored = runner.read_target(table)
     assert restored.count() == n_before
@@ -327,30 +323,42 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
 
 
 def test_bounds_file_invisible_to_spark(spark, built):
-    """The underscore-prefixed sidecar (and its tmp) must never surface
-    as data: the snapshot names only data files, and a raw read of the
-    table root still finds no data file at all."""
+    """The underscore-prefixed sidecar lives in an epoch directory,
+    named by the live snapshot's ``aux`` and never by its file list; no
+    sidecar file is left at the table root, and a raw read of the table
+    root still finds no data file at all."""
     runner = built["runner"]
     path = runner._path("flat_obs")
-    assert os.path.exists(os.path.join(path, "_month_bounds.json"))
-    files = snapshot.files(runner._path("flat_obs"))
+    man = snapshot.load(path)
+    files = snapshot.files(path, man=man)
     assert files and all(f.endswith(".parquet") for f in files)
+    for name in ("bounds", "blooms"):
+        p = snapshot.aux(path, name, man)
+        assert p is not None and os.path.isfile(p), name
+        assert os.path.dirname(p) != path and p not in files
+    assert not [
+        e for e in os.listdir(path)
+        if e.startswith((runner._BOUNDS_FILE, runner._BLOOMS_FILE))
+    ]
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
         spark.read.parquet(path).count()
     assert runner.read_target("flat_obs").count() > 0
 
 
-def test_missing_bounds_falls_back_to_full_probe(built):
+def test_missing_bounds_falls_back_to_full_probe(built, monkeypatch):
+    """A snapshot naming no sidecar, or naming one that cannot be read,
+    gives no probe reader: the full-target probe, never a wrong prune."""
     runner = built["runner"]
-    p = runner._bounds_path("flat_obs")
-    with open(p) as f:
-        saved = f.read()
-    try:
-        os.remove(p)
-        assert runner._make_probe_reader("flat_obs") is None
-    finally:
-        with open(p, "w") as f:
-            f.write(saved)
+    real_load = snapshot.load
+    aux = real_load(runner._path("flat_obs"))["aux"]
+    for swap in ({}, {**aux, "bounds": aux["bounds"] + ".missing"}):
+        monkeypatch.setattr(
+            snapshot, "load",
+            lambda d, swap=swap: {**real_load(d), "aux": swap},
+        )
+        assert runner._make_probe_reader("flat_obs") is None, swap
+    monkeypatch.undo()
+    assert runner._make_probe_reader("flat_obs") is not None
 
 
 def test_widen_bounds_missing_column_is_unprunable():
@@ -379,7 +387,7 @@ def test_bloom_sidecar_prunes_person_probe(spark, built):
     assert isinstance(b["w"], bytes)
     assert b["m"] % 64 == 0 and len(b["w"]) == b["m"] // 8
     # and the JSON sidecar itself carries no bloom payload any more
-    with open(runner._bounds_path("flat_obs")) as f:
+    with open(snapshot.aux(runner._path("flat_obs"), "bounds")) as f:
         assert "bloom:" not in f.read()
 
     tgt = _live_with_month(runner, "flat_obs")

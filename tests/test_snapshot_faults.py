@@ -7,16 +7,19 @@ and ``os.rmdir`` — are counted, and the sweep crashes one commit
 (``flip`` + ``gc``) at the N-th call for every N.  After each crash:
 
 * ``load()`` is exactly the old snapshot or exactly the new one;
-* every file it names exists;
+* every file it names exists, ``aux`` files included;
 * the live epoch is retained, and every retained epoch still reads,
-  naming only existing files;
+  naming only existing files — GC never removes a retained ``aux``
+  file;
 * re-running the interrupted publish converges to the new snapshot,
   and the next commit lands with the same invariants.
 
 Covered for the inline and the split (per-group ``_man_`` files) forms
-of the pointer, each with ``keep`` 1 and 2.  The hand-enumerated crash
-windows of the engine's pipeline are pinned end to end in
-tests/test_manifest_layout.py.
+of the pointer, each with ``keep`` 1 and 2, and for a swept commit that
+stages a new ``aux`` file or carries the previous one by relpath.
+``publish``'s failure leg (a raising writer, a lost CAS) is pinned
+below the sweep.  The hand-enumerated crash windows of the engine's
+pipeline are pinned end to end in tests/test_manifest_layout.py.
 """
 
 from __future__ import annotations
@@ -103,10 +106,14 @@ def _stage(table_dir: str, man: dict | None, files: dict) -> tuple:
     return epoch, edir, out
 
 
-def _prepare(table_dir: str, step: int) -> tuple[dict, str]:
+def _prepare(
+    table_dir: str, step: int, carry_aux: bool = False
+) -> tuple[dict, str]:
     """Stage one commit: rewrite one group (carrying one of its old
     files by relpath), carry the others untouched, drop a group on step
-    3.  Returns the snapshot to publish and its staged dir."""
+    3.  The snapshot names one ``aux`` file: staged afresh, or with
+    ``carry_aux`` the previous snapshot's, kept by relpath.  Returns the
+    snapshot to publish and its staged dir."""
     old = snapshot.load(table_dir)
     groups = dict((old or {"months": {}})["months"])
     touched = {_GROUPS[step % len(_GROUPS)]: 2}
@@ -117,7 +124,15 @@ def _prepare(table_dir: str, step: int) -> tuple[dict, str]:
         groups[g] = sorted(list(groups.get(g, ()))[:1] + fl)
     if step == 3:
         groups.pop(_GROUPS[1], None)
-    return {"epoch": epoch, "months": groups, "note": f"step {step}"}, edir
+    if carry_aux and old is not None:
+        aux = old["aux"]
+    else:
+        aux = {"side": f"{os.path.basename(edir)}/_side.json"}
+        with open(os.path.join(table_dir, aux["side"]), "w") as f:
+            f.write(f"{step}\n")
+    return {
+        "epoch": epoch, "months": groups, "aux": aux, "note": f"step {step}",
+    }, edir
 
 
 def _publish(table_dir: str, new: dict, edir: str, keep: int) -> None:
@@ -127,8 +142,10 @@ def _publish(table_dir: str, new: dict, edir: str, keep: int) -> None:
     snapshot.gc(table_dir, new, keep=keep)
 
 
-def _commit(table_dir: str, step: int, keep: int) -> dict:
-    new, edir = _prepare(table_dir, step)
+def _commit(
+    table_dir: str, step: int, keep: int, carry_aux: bool = False
+) -> dict:
+    new, edir = _prepare(table_dir, step, carry_aux)
     _publish(table_dir, new, edir, keep)
     return new
 
@@ -137,22 +154,24 @@ def _check(table_dir: str, allowed: list[dict]) -> None:
     snapshot._man_cache.clear()  # read every per-group manifest from disk
     live = snapshot.load(table_dir)
     assert live in allowed, (live, allowed)
-    for p in snapshot.files(table_dir, man=live):
-        assert os.path.exists(p), p
     assert live["epoch"] in snapshot.snapshots(table_dir)
     for e in snapshot.snapshots(table_dir):
         at = snapshot.load_at(table_dir, e)
         for p in snapshot.files(table_dir, man=at):
             assert os.path.exists(p), (e, p)
+        side = snapshot.aux(table_dir, "side", at)
+        assert side is not None and os.path.exists(side), (e, side)
+        assert side not in snapshot.files(table_dir, man=at)
 
 
 def _build(table_dir: str, keep: int) -> dict:
-    """Three committed epochs, a dead orphan staging (older than the
-    age gate) and a young one for GC to sweep and to spare."""
+    """Three committed epochs (the second carries the first's aux
+    file), a dead orphan staging (older than the age gate) and a young
+    one for GC to sweep and to spare."""
     os.makedirs(table_dir)
     man = None
     for step in range(3):
-        man = _commit(table_dir, step, keep)
+        man = _commit(table_dir, step, keep, carry_aux=step == 1)
     for tag, age in (("0000dead", snapshot._SCRATCH_ORPHAN_SECONDS + 60),
                      ("0000beef", 0)):
         d = os.path.join(table_dir, f"_e{man['epoch'] + 1:08d}_{tag}")
@@ -172,24 +191,66 @@ def test_crash_at_every_call_of_flip_and_gc(
     if split:
         monkeypatch.setattr(snapshot, "_MANIFEST_SPLIT_BYTES", 0)
 
-    # dry run: how many file-system calls one commit makes
-    dry = str(tmp_path / "dry")
-    _build(dry, keep)
-    new, edir = _prepare(dry, 3)
-    with _Faults() as counter:
-        _publish(dry, new, edir, keep)
-    _check(dry, [new])
-    assert counter.calls > 10, counter.calls
+    for carry_aux in (False, True):
+        # dry run: how many file-system calls one commit makes
+        dry = str(tmp_path / f"dry{carry_aux}")
+        _build(dry, keep)
+        new, edir = _prepare(dry, 3, carry_aux)
+        with _Faults() as counter:
+            _publish(dry, new, edir, keep)
+        _check(dry, [new])
+        assert counter.calls > 10, counter.calls
 
-    for n in range(1, counter.calls + 1):
-        d = str(tmp_path / f"crash{n}")
-        old = _build(d, keep)
-        new, edir = _prepare(d, 3)
-        with pytest.raises(Crash), _Faults(crash_at=n):
+        for n in range(1, counter.calls + 1):
+            d = str(tmp_path / f"crash{carry_aux}{n}")
+            old = _build(d, keep)
+            new, edir = _prepare(d, 3, carry_aux)
+            with pytest.raises(Crash), _Faults(crash_at=n):
+                _publish(d, new, edir, keep)
+            _check(d, [old, new])
+            # the table is never wedged: retrying the same publish lands
+            # it, and the next commit lands on top with the same
+            # guarantees
             _publish(d, new, edir, keep)
-        _check(d, [old, new])
-        # the table is never wedged: retrying the same publish lands
-        # it, and the next commit lands on top with the same guarantees
-        _publish(d, new, edir, keep)
-        _check(d, [new])
-        _check(d, [_commit(d, 4, keep)])
+            _check(d, [new])
+            _check(d, [_commit(d, 4, keep)])
+
+
+def _staging_dirs(table_dir: str) -> set[str]:
+    return {
+        e for e in os.listdir(table_dir)
+        if e.startswith(snapshot.EPOCH_PREFIX)
+    }
+
+
+def test_publish_failure_removes_its_staging(tmp_path):
+    """``publish``'s failure leg: a writer that raises, or a commit
+    that loses the CAS, leaves no staging directory behind and the
+    live snapshot untouched."""
+    d = str(tmp_path / "t")
+    os.makedirs(d)
+
+    def write(edir):
+        os.makedirs(edir)
+        with open(os.path.join(edir, "part-0.dat"), "w") as f:
+            f.write("x\n")
+        return {"months": {"g": snapshot.staged_files(edir)}}
+
+    def failing(edir):
+        write(edir)
+        raise Crash("writer failed")
+
+    with pytest.raises(Crash):
+        snapshot.publish(d, None, -1, failing)
+    assert _staging_dirs(d) == set() and snapshot.load(d) is None
+
+    first = snapshot.publish(d, None, -1, write)
+    assert snapshot.load(d) == first
+    kept = _staging_dirs(d)
+    # planned against the cold table, but epoch 0 is live now
+    with pytest.raises(snapshot.ConcurrentCommitError):
+        snapshot.publish(d, None, -1, write)
+    assert _staging_dirs(d) == kept
+    assert snapshot.load(d) == first
+    for p in snapshot.files(d):
+        assert os.path.exists(p), p

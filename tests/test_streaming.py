@@ -272,9 +272,10 @@ def test_streaming_decontaminate_matches_batch(spark, sf_dir, tmp_path):
 
 def test_append_sink_crash_replay_no_dup_no_loss(spark, tmp_path):
     """Exactly-once APPEND (VERDICT r5 item 3): a batch whose data wrote
-    but whose manifest commit crashed is invisible until its replay
+    but whose snapshot flip crashed is invisible until its replay
     commits it — no loss; a replay of a committed batch is a no-op — no
     duplicate."""
+    from mrsboraetl_spark.sources import snapshot
     from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
 
     table = AppendOnlyTable(str(tmp_path / "facts"))
@@ -287,12 +288,14 @@ def test_append_sink_crash_replay_no_dup_no_loss(spark, tmp_path):
     assert table.append_batch(batch(0, 5), 0) is True
     assert table.append_batch(batch(5, 9), 1) is True
 
-    # Crash window: batch 2's data landed, manifest commit never ran.
-    batch(9, 12).write.mode("overwrite").parquet(table._batch_dir("2"))
+    # Crash window: batch 2's data landed in its staged epoch, the
+    # flip never ran.
+    _e, orphan = snapshot.next_epoch_dir(table.root)
+    batch(9, 12).write.parquet(orphan)
     ids = {r.id for r in table.read(spark).collect()}
     assert ids == set(range(9))  # orphan invisible: no phantom reads
 
-    # Replay of the crashed batch overwrites the orphan and commits it.
+    # Replay of the crashed batch stages it afresh and commits it.
     assert table.append_batch(batch(9, 12), 2) is True
     ids = {r.id for r in table.read(spark).collect()}
     assert ids == set(range(12))
@@ -309,7 +312,7 @@ def test_append_sink_crash_replay_no_dup_no_loss(spark, tmp_path):
     assert len(rows) == 12 and {r.id for r in rows} == set(range(12))
 
     # The exactly-once contract must survive compaction: a batch whose
-    # streaming checkpoint lagged its manifest commit is replayed AFTER
+    # streaming checkpoint lagged its snapshot commit is replayed AFTER
     # a restart-time compact folded its directory away — the committed-
     # id ledger must still make it a no-op (review finding r6).
     assert table.append_batch(batch(5, 9), 1) is False
@@ -417,8 +420,7 @@ def test_append_sink_auto_compacts_and_replay_survives(spark, tmp_path):
     pre-compaction batch id still no-ops AFTER its directory was folded
     away (the watermark, not the directory list, carries the
     exactly-once contract across the boundary)."""
-    import os
-
+    from mrsboraetl_spark.sources import snapshot
     from mrsboraetl_spark.streaming.append_sink import (
         AppendOnlyTable,
         exactly_once_append_sink,
@@ -427,6 +429,12 @@ def test_append_sink_auto_compacts_and_replay_survives(spark, tmp_path):
     def batch(lo, hi):
         return spark.range(lo, hi).selectExpr("id", "id * 2 AS v")
 
+    def epoch_dirs():
+        return [
+            d for d in os.listdir(table.root)
+            if d.startswith(snapshot.EPOCH_PREFIX)
+        ]
+
     table = AppendOnlyTable(str(tmp_path / "facts"))
     sink = exactly_once_append_sink(table, compact_every_n=3, compact_n_files=1)
     for i in range(7):
@@ -434,6 +442,10 @@ def test_append_sink_auto_compacts_and_replay_survives(spark, tmp_path):
         # the fold triggers at >=3 committed dirs, so the listing never
         # exceeds compact_every_n
         assert len(table.committed()) <= 3, table.committed()
+    # batch 6 triggered a fold: compact's own GC left only the folded
+    # group's directory on disk
+    assert len(table.committed()) == 1
+    assert len(epoch_dirs()) == 1, epoch_dirs()
 
     got = table.read(spark)
     assert got.count() == 70
@@ -450,10 +462,91 @@ def test_append_sink_auto_compacts_and_replay_survives(spark, tmp_path):
     # A fresh id after the storm appends normally.
     sink(batch(70, 75), 7)
     assert table.read(spark).count() == 75
-    data_dirs = [
-        d for d in os.listdir(table.data_root) if d.startswith("batch=")
+    # every committed group lives in its own epoch dir; no other is left
+    assert len(epoch_dirs()) == len(table.committed()) == 2
+
+
+def test_append_batch_keeps_one_history_file(spark, tmp_path):
+    """Without compaction each append still GCs after its flip: one
+    ``_snap_*.json`` history file stays (not one per micro-batch, each
+    naming every group), and a dead crash orphan is swept."""
+    from mrsboraetl_spark.sources import snapshot
+    from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
+
+    table = AppendOnlyTable(str(tmp_path / "facts"))
+    # a crashed attempt's staging, older than the orphan age gate
+    _e, orphan = snapshot.next_epoch_dir(table.root)
+    spark.range(0, 2).write.parquet(orphan)
+    old = os.path.getmtime(orphan) - snapshot._SCRATCH_ORPHAN_SECONDS - 60
+    os.utime(orphan, (old, old))
+
+    for i in range(4):
+        assert table.append_batch(spark.range(i * 3, i * 3 + 3), i) is True
+    hist = [
+        f for f in os.listdir(table.root)
+        if f.startswith("_snap_") and f.endswith(".json")
     ]
-    assert len(data_dirs) == len(table.committed())
+    assert len(hist) == 1, hist
+    assert not os.path.exists(orphan)
+    assert len(table.committed()) == 4
+    assert {r.id for r in table.read(spark).collect()} == set(range(12))
+
+
+def test_append_batch_syncs_data_and_pointer_before_it_returns(
+    spark, tmp_path, monkeypatch
+):
+    """Durability: before append_batch returns, the staged data files,
+    the staged directory and the pointer contents were fsync'd ahead of
+    the pointer replace, and the table directory after it — compact's
+    GC can then never leave a durable pointer naming unwritten pages."""
+    from mrsboraetl_spark.sources import snapshot
+    from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
+
+    if not os.path.isdir("/proc/self/fd"):
+        pytest.skip("needs /proc/self/fd to name fsync'd descriptors")
+    table = AppendOnlyTable(str(tmp_path / "facts"))
+    df = spark.range(0, 4).selectExpr("id", "id * 2 AS v")
+    events: list[tuple[str, str]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.path.realpath(dst)))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    assert table.append_batch(df, 0) is True
+    monkeypatch.undo()
+
+    root = os.path.realpath(table.root)
+    ptr = os.path.join(root, snapshot.SNAPSHOT_FILE)
+    staged = [os.path.realpath(p) for p in snapshot.files(table.root)]
+    assert staged and table.committed() == ["0"]
+    i_ptr = events.index(("replace", ptr))
+    before = {p for kind, p in events[:i_ptr] if kind == "fsync"}
+    assert set(staged) <= before, (staged, before)
+    assert os.path.dirname(staged[0]) in before
+    assert ptr + ".tmp" in before
+    assert ("fsync", root) in events[i_ptr + 1:]
+
+
+def test_append_table_refuses_legacy_manifest(tmp_path):
+    """A directory holding the retired layout's ``_manifest.json`` and
+    no snapshot pointer is refused at construction — never read as an
+    empty table."""
+    from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
+
+    root = tmp_path / "facts"
+    root.mkdir()
+    (root / "_manifest.json").write_text(
+        '{"batches": ["0"], "max_committed_id": 0}'
+    )
+    with pytest.raises(ValueError, match="_manifest.json"):
+        AppendOnlyTable(str(root))
 
 
 def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
@@ -618,6 +711,7 @@ def test_streaming_pipeline_sync_manifest_mode_crash_and_gc(
             raw = _json.load(f)
         months = snapshot._resolve(base, raw["months"])
         referenced = {rp for fl in months.values() for rp in fl}
+        referenced |= set(raw.get("aux", {}).values())
         on_disk = set()
         for entry in os.listdir(base):
             if entry.startswith(snapshot.EPOCH_PREFIX):
