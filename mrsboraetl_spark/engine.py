@@ -258,7 +258,10 @@ class PipelineRunner:
     # the partition datetime, so its plan never month-probes the target
     # — the entry exists for the per-FILE person bounds that drive its
     # file-level delta writes (r10; the sidecar "files" machinery
-    # piggybacks on a non-empty bounds config).
+    # piggybacks on a non-empty bounds config).  Every column here has
+    # a Bloom (_BLOOM_COLS), whose build pass yields its range too, or
+    # is the table's sentinel-free pk, whose range is the union of the
+    # per-file footer entries; _build_sidecar raises on anything else.
     _BOUNDS_COLS = {
         "flat_obs": {
             "encounter_id": SYNTHETIC_ENCOUNTER_OFFSET,
@@ -284,16 +287,17 @@ class PipelineRunner:
     # queue probes open only the months actually holding a probed
     # person.  Build and probe share one deterministic double-hash
     # (xxhash64 + odd-stepped crc32, j positions mod m) evaluated
-    # JVM-side in both directions; the driver only ever transfers
-    # month-bounded word lists.  False positives open an extra month
-    # (harmless); false NEGATIVES are impossible because each snapshot
-    # names the sidecar staged with its own data (a carried month's
-    # filter is the bitwise OR of old and staged — exact set union for
-    # equal (m, j)), same as the ranges.  m is sized per
-    # month from the observed distinct count (~16 bits/key, capped):
-    # a month that outgrows the cap saturates toward all-ones and
-    # prunes nothing — conservative, never wrong; raise the cap (or
-    # move the sidecar to parquet) for production-scale months.
+    # JVM-side in both directions; the driver only ever receives one
+    # packed filter per (month, column).  False positives open an extra
+    # month (harmless); false NEGATIVES are impossible because each
+    # snapshot names the sidecar staged with its own data (a carried
+    # month's filter is the bitwise OR of old and staged, folded to
+    # the smaller m when the sizes differ — exact set union), same as
+    # the ranges.  m is sized per month from the month's row count
+    # (~16 bits/key, capped; rows >= distinct keys): a month that
+    # outgrows the cap saturates toward all-ones and prunes nothing —
+    # conservative, never wrong; raise the cap (or move the sidecar to
+    # parquet) for production-scale months.
     # encounter_id added r11 (VERDICT r10 item 5, decided by
     # measurement — tests/encounter_bloom_probe.py): the time-
     # correlation claim behind range-only encounter pruning does not
@@ -301,9 +305,9 @@ class PipelineRunner:
     # models it; production backdated data entry does the same) — an
     # aged-encounter retraction probe opened 12/12 months where 3 held
     # the keys.  With the Bloom the same probe opens exactly the true
-    # months.  Cost: one more per-month filter built per write (the
-    # staged-parquet build path, O(months) driver transfer) and ≤1 MB
-    # per month per column of sidecar at the cap.
+    # months.  Cost: one more column in each write's single sidecar
+    # pass (_build_sidecar, O(months x columns) driver transfer) and
+    # ≤1 MB per month per column of sidecar at the cap.
     _BLOOM_COLS = {
         "flat_obs": ("person_id", "encounter_id"),
         "flat_orders": ("person_id", "encounter_id"),
@@ -324,12 +328,12 @@ class PipelineRunner:
     # and keeps the range verdict.
     _BLOOM_PROBE_MAX_KEYS = 1_000_000
     # Every Nth CONSECUTIVE file-level sync of a month re-derives that
-    # month's ranges and Blooms exactly from its current files (one
-    # column-pruned single-month scan), instead of keeping the widened
-    # union (r10, VERDICT r9 item 3).  Between cadence scans the pk
+    # month's ranges and Blooms exactly from its current files (read by
+    # the write's one sidecar pass), instead of keeping the widened
+    # union (r10, VERDICT r9 item 3).  Between cadence reads the pk
     # range still re-tightens from file metadata every sync; person
     # entries are what erode — a purged person is never un-OR'd from a
-    # widened Bloom.  Amortized cost: 1/N of a month scan per sync.  A
+    # widened Bloom.  Amortized cost: 1/N of a month read per sync.  A
     # full-month rewrite resets the counter (its sidecar is exact).
     _PERSON_RETIGHTEN_EVERY = 8
 
@@ -537,34 +541,6 @@ class PipelineRunner:
 
     _PIPELINE_SNAPSHOT_FILE = "_pipeline_snapshot.json"
 
-    # Uuid-suffixed bloom word-agg staging dirs (see _compute_blooms)
-    # and the age gate for sweeping their hard-crash orphans: a bloom
-    # build lasts seconds, so anything hours old is provably dead —
-    # but a CONCURRENT run's live staging is never this old, which is
-    # why the sweep cannot be unconditional (r13 race pin).
-    _BLOOM_SCRATCH_PREFIX = "_bloom_agg_tmp_"
-
-    def _sweep_scratch(self) -> None:
-        """Remove bloom-staging orphans left by hard crashes — only
-        dirs older than the snapshot protocol's orphan age gate
-        (snapshot._SCRATCH_ORPHAN_SECONDS), so a concurrent runner's
-        live staging survives."""
-        now = dt.datetime.now().timestamp()
-        try:
-            entries = os.listdir(self.root)
-        except OSError:
-            return
-        for entry in entries:
-            if not entry.startswith(self._BLOOM_SCRATCH_PREFIX):
-                continue
-            p = os.path.join(self.root, entry)
-            try:
-                age = now - os.path.getmtime(p)
-                if age > snapshot._SCRATCH_ORPHAN_SECONDS:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
-
     def _record_run_commit(self, table: str, v: int) -> None:
         """Remember the epoch/version THIS run just committed for
         ``table`` (ADVICE r12: _write_pipeline_snapshot used to re-read
@@ -675,37 +651,6 @@ class PipelineRunner:
         man = snapshot.load(self._path(table))
         return sorted((man or {"months": {}})["months"])
 
-    def _compute_month_bounds(self, src, cols: dict) -> dict:
-        """Exact per-month [min, max] of each bounds column over its
-        REAL (below-sentinel) rows, from the staged parquet itself (a
-        column-pruned O(staged-data) scan — bounded by what the
-        surrounding write already shuffled).  Bounded driver action:
-        one row per storage month.  A month whose real population is
-        empty for a column omits it — unconditionally a candidate.
-        ``src``: a staged directory path, or a DataFrame already
-        carrying PARTITION_COL (the cadence re-tighten's single-month
-        read)."""
-        df = (
-            self.spark.read.parquet(src) if isinstance(src, str) else src
-        )
-        aggs = []
-        for c, sentinel in cols.items():
-            v = (
-                F.when(F.col(c) < sentinel, F.col(c))
-                if sentinel is not None
-                else F.col(c)
-            )
-            aggs += [F.min(v).alias(f"{c}__lo"), F.max(v).alias(f"{c}__hi")]
-        out: dict = {}
-        for r in df.groupBy(self.PARTITION_COL).agg(*aggs).collect():
-            ent = {}
-            for c in cols:
-                lo, hi = r[f"{c}__lo"], r[f"{c}__hi"]
-                if lo is not None and hi is not None:
-                    ent[c] = [int(lo), int(hi)]
-            out[str(r[self.PARTITION_COL])] = ent
-        return out
-
     @staticmethod
     def _normalized_keys(keys_df: DataFrame, col: str) -> DataFrame:
         """THE normalized probe-key frame, shared by every key-driven
@@ -744,196 +689,19 @@ class PipelineRunner:
         )
         return F.pmod(h1 + F.col("_i") * step, m)
 
-    def _bloom_m_bits(self, n_distinct: int) -> int:
-        """Power-of-two filter size targeting ~16 bits/key, clamped."""
-        target = max(self._BLOOM_MIN_BITS, 16 * max(int(n_distinct), 1))
+    def _bloom_m_bits(self, n_rows: int) -> int:
+        """Power-of-two filter size targeting ~16 bits/key, clamped.
+        Sized from the month's ROW count (parquet footers plus the
+        carried files' recorded counts — no sizing job): rows >=
+        distinct keys, so a filter is never denser than 16 bits per
+        distinct key below the cap, and a delta write of a month
+        builds at the size a rebuild of that month would choose."""
+        target = max(self._BLOOM_MIN_BITS, 16 * max(int(n_rows), 1))
         return min(1 << (target - 1).bit_length(), self._BLOOM_MAX_BITS)
 
-    # Build-side transfer knob (r10, VERDICT r9 item 2): False stages
-    # the occupied-word aggregate as parquet and assembles each month's
-    # filter from its file (driver py4j transfer = O(months): one
-    # approx-distinct row per month; the word data reaches the driver
-    # as ONE bulk columnar file read per month, not months x 131k
-    # Python row objects).  True restores the row-collect build — kept
-    # as the byte-identity oracle in tests/test_partitioned_bounds.py.
-    _BLOOM_BUILD_COLLECT = False
-
-    def _compute_month_blooms(
-        self, parquet_dir: str, col: str, sentinel
-    ) -> dict:
-        """{month: {"m": bits, "j": rounds, "w": raw word bytes}} over the
-        REAL (below-sentinel) non-null values of ``col`` in the staged
-        parquet.  Two jobs: an approx-distinct per month (sizes m),
-        then explode j positions per value and OR the 64-bit words
-        JVM-side (partial aggregation makes the shuffle volume the
-        OCCUPIED word count, not the value count).  The word aggregate
-        is repartitioned to one file per month and STAGED as parquet
-        (never collected): a wide rebuild touching 120 cap-sized months
-        would otherwise ship ~16M (month, word, bits) rows (~600 MB)
-        through py4j row-at-a-time; the driver instead bulk-reads each
-        month's single columnar file while packing its sidecar bytes —
-        I/O it must do anyway to write the .bin.
-
-        ``parquet_dir`` may also be a DataFrame already carrying
-        PARTITION_COL (the cadence re-tighten's single-month read)."""
-        import struct
-
-        src = (
-            self.spark.read.parquet(parquet_dir)
-            if isinstance(parquet_dir, str)
-            else parquet_dir
-        )
-        df = (
-            src.select(
-                self.PARTITION_COL,
-                F.col(col).cast("long").alias("_k"),
-            )
-            .where(F.col("_k").isNotNull())
-        )
-        if sentinel is not None:
-            df = df.where(F.col("_k") < sentinel)
-        sizes = {
-            str(r[self.PARTITION_COL]): int(r["n"])
-            for r in df.groupBy(self.PARTITION_COL)
-            .agg(F.approx_count_distinct("_k").alias("n"))
-            .collect()
-        }
-        if not sizes:
-            return {}
-        m_of = {mo: self._bloom_m_bits(n) for mo, n in sizes.items()}
-        m_expr = None
-        for mo, mm in m_of.items():
-            cond = F.col(self.PARTITION_COL) == mo
-            m_expr = (
-                F.when(cond, F.lit(mm))
-                if m_expr is None
-                else m_expr.when(cond, F.lit(mm))
-            )
-        agg = (
-            df.withColumn("_m", m_expr.cast("long"))
-            .withColumn(
-                "_i",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(self._BLOOM_J - 1))
-                ),
-            )
-            .withColumn("_pos", self._bloom_pos_expr())
-            .select(
-                self.PARTITION_COL,
-                F.floor(F.col("_pos") / 64).cast("long").alias("word"),
-                F.expr(
-                    "shiftleft(CAST(1 AS BIGINT),"
-                    " CAST(pmod(_pos, 64) AS INT))"
-                ).alias("mask"),
-            )
-            .groupBy(self.PARTITION_COL, "word")
-            .agg(F.bit_or("mask").alias("bits"))
-        )
-        words = {
-            mo: bytearray(mm // 8) for mo, mm in m_of.items()
-        }
-        if self._BLOOM_BUILD_COLLECT:
-            for r in agg.collect():
-                mo = str(r[self.PARTITION_COL])
-                struct.pack_into(
-                    ">Q",
-                    words[mo],
-                    int(r["word"]) * 8,
-                    int(r["bits"]) & 0xFFFFFFFFFFFFFFFF,
-                )
-        else:
-            import shutil as _shutil
-
-            import numpy as np
-            import pyarrow.parquet as pq
-
-            import uuid
-
-            # Staged under self.root, NOT a tempfile dir: on a real
-            # cluster executors write through the shared filesystem the
-            # storage root lives on — a driver-local /tmp path would be
-            # written node-locally and the driver's read-back would
-            # silently pack all-zero filters (false-negative pruning =
-            # unretracted rows).  Uuid-suffixed (r13): the fixed name
-            # was the one scratch path two CONCURRENT runs over the
-            # same root both wrote — the loser's cleanup rmtree'd the
-            # winner's staging mid-read, crashing both full runs in
-            # the end-to-end race pin.  Hard-crash orphans are swept
-            # age-gated at the next run() start (_sweep_scratch: old
-            # enough that no live run can still own them).
-            stage = os.path.join(
-                self.root,
-                f"{self._BLOOM_SCRATCH_PREFIX}{uuid.uuid4().hex[:8]}",
-            )
-            try:
-                # one shuffle of the occupied-word rows (the same
-                # volume the collect shipped) -> exactly one data file
-                # per month for the driver's bulk read
-                (
-                    agg.repartition(F.col(self.PARTITION_COL))
-                    .write.mode("overwrite")
-                    .partitionBy(self.PARTITION_COL)
-                    .parquet(stage)
-                )
-                # Every month in m_of holds >= 1 word row, so a visible
-                # staging MUST contain every month directory.  The
-                # _SUCCESS marker is NOT evidence: commitJob runs on
-                # the driver and writes it even when every task's
-                # output stayed on executor-local disks (second review
-                # pass).  Missing months = write landed somewhere the
-                # driver can't see: fail loudly, never pack zeros.
-                staged_months = {
-                    e.split("=", 1)[1]
-                    for e in (
-                        os.listdir(stage) if os.path.isdir(stage) else ()
-                    )
-                    if e.startswith(self.PARTITION_COL + "=")
-                }
-                if not staged_months >= set(m_of):
-                    raise RuntimeError(
-                        "bloom word-agg staging not visible to the "
-                        f"driver: {stage} is missing months "
-                        f"{sorted(set(m_of) - staged_months)} (is the "
-                        "storage root on a filesystem all executors "
-                        "share?)"
-                    )
-                for entry in os.listdir(stage):
-                    if not entry.startswith(self.PARTITION_COL + "="):
-                        continue
-                    mo = entry.split("=", 1)[1]
-                    buf = words.get(mo)
-                    if buf is None:  # pragma: no cover - sizes cover all
-                        continue
-                    t = pq.read_table(
-                        os.path.join(stage, entry),
-                        columns=["word", "bits"],
-                    )
-                    w64 = np.zeros(len(buf) // 8, dtype=np.uint64)
-                    w64[t["word"].to_numpy()] = (
-                        t["bits"].to_numpy().astype(np.int64)
-                        .view(np.uint64)
-                    )
-                    # big-endian words at offset word*8: identical
-                    # layout to the struct.pack_into('>Q') path, pinned
-                    # byte-for-byte in tests
-                    words[mo] = bytearray(
-                        w64.astype(">u8").tobytes()
-                    )
-            finally:
-                _shutil.rmtree(stage, ignore_errors=True)
-        return {
-            mo: {"m": m_of[mo], "j": self._BLOOM_J, "w": bytes(w)}
-            for mo, w in words.items()
-        }
-
-    def _compute_month_sidecar(
-        self, parquet_dir: str, bounds_cols, bloom_cols=(), pk=None
-    ) -> dict:
-        """Full per-month sidecar for a staged directory: [min, max]
-        ranges for ``bounds_cols``, "bloom:<col>" membership filters
-        for ``bloom_cols`` (sentinels shared with the range config),
-        and — when ``pk`` is given — per-FILE pk entries
-        ``{"files": {relpath: [lo, hi, n_rows]}}`` keyed by the
+    def _staged_file_stats(self, edir: str, pk: str) -> dict:
+        """Per-FILE pk entries of a freshly staged epoch directory:
+        ``{month: {relpath: [lo, hi, n_rows]}}`` keyed by the
         snapshot's relpath, so sidecar entries, month lists, touched
         sets and carry maps all speak the same key (r9, VERDICT r8
         item 2: the partitioned-layout lift of
@@ -947,69 +715,173 @@ class PipelineRunner:
         range-partitioned without the carried files — but every
         recorded [lo, hi, n] stays EXACT for its file, which is what
         _plan_touched_files's correctness argument uses.)"""
-        out = self._compute_month_bounds(parquet_dir, bounds_cols)
-        for c in bloom_cols:
-            blooms = self._compute_month_blooms(
-                parquet_dir, c, dict(bounds_cols).get(c)
-            )
-            for mo, ent in blooms.items():
-                out.setdefault(mo, {})[f"bloom:{c}"] = ent
-        if pk is not None:
-            stats = self._file_pk_stats_from_footers(parquet_dir, pk)
-            if stats is None:
-                # footer stats unprovable for some file: one
-                # column-pruned distributed pass gives the same answer
-                from urllib.parse import unquote, urlparse
+        stats = self._file_pk_stats_from_footers(edir, pk)
+        if stats is None:
+            # footer stats unprovable for some file: one column-pruned
+            # distributed pass gives the same answer
+            from urllib.parse import unquote, urlparse
 
-                rows = (
-                    self.spark.read.parquet(parquet_dir)
-                    .groupBy(
-                        self.PARTITION_COL,
-                        F.input_file_name().alias("_f"),
-                    )
-                    .agg(
-                        F.min(pk).alias("lo"),
-                        F.max(pk).alias("hi"),
-                        F.count(F.lit(1)).alias("n"),
-                    )
-                    .collect()
+            rows = (
+                self.spark.read.parquet(edir)
+                .groupBy(
+                    self.PARTITION_COL, F.input_file_name().alias("_f")
                 )
-                stats = {}
-                for r in rows:
-                    name = os.path.basename(
-                        unquote(urlparse(r["_f"]).path)
-                    )
-                    stats.setdefault(str(r[self.PARTITION_COL]), {})[
-                        name
-                    ] = [int(r["lo"]), int(r["hi"]), int(r["n"])]
-            ename = os.path.basename(parquet_dir)
-            for m, files in stats.items():
-                out.setdefault(m, {})["files"] = {
-                    f"{ename}/{self.PARTITION_COL}={m}/{fn}": v
-                    for fn, v in files.items()
-                }
-        return out
-
-    def _exact_month_entries(
-        self, path: str, m: str, file_names, bounds_cols, bloom_cols
-    ) -> dict:
-        """Exact range + Bloom entries for ONE month of the snapshot
-        being staged, from a column-pruned scan of exactly its data
-        files (carried and staged) — the cadence re-tighten's read.
-        ``file_names`` are snapshot relpaths."""
-        df = self.spark.read.parquet(
-            *[os.path.join(path, rp) for rp in file_names]
-        )
-        # leaf-file reads carry no p_month column
-        df = df.withColumn(self.PARTITION_COL, F.lit(m))
-        ent = dict(self._compute_month_bounds(df, bounds_cols).get(m, {}))
-        for c in bloom_cols:
-            bl = self._compute_month_blooms(
-                df, c, dict(bounds_cols).get(c)
+                .agg(
+                    F.min(pk).alias("lo"),
+                    F.max(pk).alias("hi"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .collect()
             )
-            if m in bl:
-                ent[f"bloom:{c}"] = bl[m]
-        return ent
+            stats = {}
+            for r in rows:
+                name = os.path.basename(unquote(urlparse(r["_f"]).path))
+                stats.setdefault(str(r[self.PARTITION_COL]), {})[name] = [
+                    int(r["lo"]), int(r["hi"]), int(r["n"]),
+                ]
+        ename = os.path.basename(edir)
+        return {
+            m: {
+                f"{ename}/{self.PARTITION_COL}={m}/{fn}": v
+                for fn, v in files.items()
+            }
+            for m, files in stats.items()
+        }
+
+    def _build_sidecar(
+        self, table: str, path: str, files: dict, rows: dict
+    ) -> dict:
+        """Every range and Bloom entry of one write, from ONE grouped
+        pass over the files it names: ``{month: {col: [lo, hi],
+        "bloom:<col>": {"m", "j", "w"}}}``.  ``files`` is ``{month:
+        {relpath: [lo, hi, n]}}`` (exact per-file pk entries, relpaths
+        under the table directory ``path``) — the staged files of a
+        write, or every file of a month the cadence re-tightens;
+        ``rows`` is each month's row count in the snapshot being
+        staged, which sizes its filters (_bloom_m_bits).
+
+        A bounds column with a Bloom gets its exact range from the same
+        aggregate as its filter, over the REAL keys (non-null, below
+        the sentinel); a month with no real key omits both entries —
+        unconditionally a candidate.  The only other kind of bounds
+        column is the table's sentinel-free pk, whose month range is the
+        union of the per-file entries (no job); any other config
+        raises.  The pass: stack the Bloom columns into (month, col,
+        key) rows, explode the j positions of the shared
+        _bloom_pos_expr (build and probe evaluate one JVM expression),
+        ``bit_or`` the 64-bit words per (month, col, word) with partial
+        aggregation (the shuffle carries OCCUPIED words, not keys), and
+        pack each (month, col) group into its big-endian filter bytes
+        in an Arrow kernel — so the driver receives one row per
+        (month, col), whose bytes are the sidecar's bytes."""
+        bounds_cols = self._BOUNDS_COLS[table]
+        bloom_cols = self._BLOOM_COLS.get(table, ())
+        pk = self._CLUSTER_BY[table][0]
+        for c, sentinel in bounds_cols.items():
+            if c not in bloom_cols and (c != pk or sentinel is not None):
+                raise ValueError(
+                    f"{table}.{c}: a bounds column needs a Bloom or must "
+                    f"be the sentinel-free pk {pk!r} (its range comes "
+                    "from the per-file entries alone)"
+                )
+        out: dict = {}
+        for m, fent in files.items():
+            ent = out.setdefault(m, {})
+            for c in bounds_cols:
+                if c not in bloom_cols:
+                    rng = self._pk_range_from_files(fent, None)
+                    if rng != "omit":
+                        ent[c] = rng
+        paths = [
+            os.path.join(path, rp) for fent in files.values() for rp in fent
+        ]
+        if not bloom_cols or not paths:
+            return out
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        m_of = {m: self._bloom_m_bits(rows[m]) for m in files}
+
+        def pack(key, t):
+            import numpy as np
+
+            # key = (month, col, m): OR every word row of the group into
+            # its m-bit filter, 64-bit words big-endian at byte word*8
+            w64 = np.zeros(key[2].as_py() // 64, dtype=np.uint64)
+            np.bitwise_or.at(
+                w64,
+                t.column("word").to_numpy(),
+                t.column("bits").to_numpy().view(np.uint64),
+            )
+            return pa.table({
+                "p_month": [key[0].as_py()],
+                "_c": [key[1].as_py()],
+                "lo": [int(t.column("lo").to_numpy().min())],
+                "hi": [int(t.column("hi").to_numpy().max())],
+                "w": pa.array([w64.astype(">u8").tobytes()], pa.binary()),
+            })
+
+        def real(c):
+            k = F.col(c).cast("long")
+            s = bounds_cols[c]
+            return k if s is None else F.when(k < s, k)
+
+        month = F.regexp_extract(
+            F.col("_metadata.file_path"),
+            f"{self.PARTITION_COL}=([^/]+)/[^/]+$", 1,
+        )
+        m_map = F.create_map(
+            *[F.lit(x) for mo, mm in m_of.items() for x in (mo, mm)]
+        )
+        mask = F.expr(
+            "shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, 64) AS INT))"
+        )
+        # the Bloom columns' types from one footer: an explicit read
+        # schema spares Spark its schema-inference job
+        footer = pq.read_schema(paths[0])
+        schema = from_arrow_schema(
+            pa.schema([footer.field(c) for c in bloom_cols])
+        )
+        res = (
+            self.spark.read.schema(schema).parquet(*paths)
+            .select(
+                month.alias(self.PARTITION_COL),
+                F.explode(F.array(*[
+                    F.struct(F.lit(c).alias("_c"), real(c).alias("_k"))
+                    for c in bloom_cols
+                ])).alias("_s"),
+            )
+            .select(self.PARTITION_COL, "_s._c", "_s._k")
+            .where(F.col("_k").isNotNull())
+            .withColumn("_m", m_map[F.col(self.PARTITION_COL)].cast("long"))
+            .withColumn(
+                "_i",
+                F.explode(F.sequence(F.lit(0), F.lit(self._BLOOM_J - 1))),
+            )
+            .withColumn("_pos", self._bloom_pos_expr())
+            .groupBy(
+                self.PARTITION_COL, "_c", "_m",
+                F.floor(F.col("_pos") / 64).cast("long").alias("word"),
+            )
+            .agg(
+                F.bit_or(mask).alias("bits"),
+                F.min("_k").alias("lo"),
+                F.max("_k").alias("hi"),
+            )
+            .groupBy(self.PARTITION_COL, "_c", "_m")
+            .applyInArrow(
+                pack, "p_month string, _c string, lo long, hi long, w binary"
+            )
+            .toArrow()
+        )
+        for r in res.to_pylist():
+            m, c = r["p_month"], r["_c"]
+            out[m][c] = [r["lo"], r["hi"]]
+            out[m][f"bloom:{c}"] = {
+                "m": m_of[m], "j": self._BLOOM_J, "w": r["w"],
+            }
+        return out
 
     @staticmethod
     def _pk_range_from_files(files: dict, sentinel):
@@ -1018,7 +890,7 @@ class PipelineRunner:
         bounds are exact, and the files map is the month's exact
         content in the snapshot being staged.  Returns "omit" when no file
         holds a provable real row (synthetic-only month — same
-        semantics as the exact scan pass), or None when a file
+        semantics as _build_sidecar's ranges), or None when a file
         STRADDLES the sentinel (its real max is unknowable from bounds
         — keep the widened entry, conservative)."""
         los: list[int] = []
@@ -1101,11 +973,16 @@ class PipelineRunner:
         """Union of two month entries: per column, the covering range —
         or the column OMITTED when either side lacks it (an absent
         column means 'cannot prune on this', never 'empty range').
-        Bloom entries ("bloom:<col>") union by bitwise OR — EXACT set
-        union for equal (m, j); a parameter mismatch (the month's
-        filter was resized) omits the entry, unprunable until the
-        month's next exact entry (full-month rewrite or cadence
-        re-tighten)."""
+        Bloom entries ("bloom:<col>") union by bitwise OR at the smaller
+        of the two sizes m': a power-of-two filter folds EXACTLY onto a
+        smaller power of two (the shared position expression at m bits,
+        taken mod m', is its position at m' bits), so each side's m/m'
+        segments are OR'd onto one first — the exact union at m'.  A j
+        mismatch, or an m that is not a power of two, omits the entry,
+        unprunable until the month's next exact entry (full-month
+        rewrite or cadence re-tighten)."""
+        import numpy as np
+
         if old is None:
             return new
         merged = {}
@@ -1117,18 +994,27 @@ class PipelineRunner:
             if not key.startswith("bloom:"):
                 continue
             a, b = old.get(key), new.get(key)
-            if (
-                a is not None
-                and b is not None
-                and a["m"] == b["m"]
-                and a["j"] == b["j"]
+            if a is None or b is None or a["j"] != b["j"]:
+                continue
+            ws = [
+                bytes.fromhex(e["w"]) if isinstance(e["w"], str)
+                else bytes(e["w"])
+                for e in (a, b)
+            ]
+            m = min(a["m"], b["m"])
+            if any(
+                e["m"] < 64 or e["m"] & (e["m"] - 1) or len(w) * 8 != e["m"]
+                for e, w in zip((a, b), ws)
             ):
-                wa, wb = (
-                    bytes.fromhex(w) if isinstance(w, str) else bytes(w)
-                    for w in (a["w"], b["w"])
+                continue
+            u = np.zeros(m // 8, dtype=np.uint8)
+            for w in ws:
+                # 64-bit big-endian words: a fold segment of m'/8 bytes
+                # is whole words, so byte-wise OR is word-wise OR
+                u |= np.bitwise_or.reduce(
+                    np.frombuffer(w, dtype=np.uint8).reshape(-1, m // 8)
                 )
-                u = bytes(x | y for x, y in zip(wa, wb))
-                merged[key] = {"m": a["m"], "j": a["j"], "w": u}
+            merged[key] = {"m": m, "j": a["j"], "w": u.tobytes()}
         return merged
 
     def _make_probe_reader(self, table: str):
@@ -1609,7 +1495,7 @@ class PipelineRunner:
             df = df.repartitionByRange(
                 self.PARTITION_COL, *pk
             ).sortWithinPartitions(self.PARTITION_COL, *pk)
-            self._write_manifest_full(df, table, pk[0], parent_epoch=parent)
+            self._write_manifest_full(df, table, parent_epoch=parent)
             return
         # unpartitioned target: VersionedTable IS the manifest layout
         # for the whole-table case — commit + retain the runner's
@@ -1630,8 +1516,7 @@ class PipelineRunner:
         vt.vacuum(keep_last=self.keep_snapshots)
 
     def _write_manifest_full(
-        self, df: DataFrame, table: str, pk: str,
-        parent_epoch: int | None = None,
+        self, df: DataFrame, table: str, parent_epoch: int | None = None,
     ) -> None:
         """Full rewrite under the partitioned layout: stage a complete
         new epoch — the data and its exact sidecar — flip the snapshot
@@ -1654,7 +1539,6 @@ class PipelineRunner:
                 int(man_old["epoch"]) if man_old
                 else snapshot.raw_epoch(path)
             )
-        bounds_cols = self._BOUNDS_COLS.get(table, ())
 
         def write(edir: str) -> dict:
             writer = df.write.mode("overwrite").partitionBy(
@@ -1666,14 +1550,12 @@ class PipelineRunner:
                 )
             writer.parquet(edir)
             fields = {"months": self._staged_month_files(edir)}
-            if bounds_cols:
-                # exact: a full rewrite's content is exactly the staged set
-                fields["aux"] = self._write_bounds(
-                    edir, self._compute_month_sidecar(
-                        edir, bounds_cols, self._BLOOM_COLS.get(table, ()),
-                        pk=pk,
-                    ),
-                )
+            if table in self._BOUNDS_COLS:
+                # exact: a full rewrite's content is exactly the staged
+                # set — every month is rewritten, nothing carried
+                fields["aux"] = self._write_bounds(edir, self._month_sidecar(
+                    table, edir, {}, sorted(fields["months"]), {},
+                ))
             return fields
 
         man_new = snapshot.publish(path, man_old, parent_epoch, write)
@@ -1724,18 +1606,12 @@ class PipelineRunner:
             .sortWithinPartitions(self.PARTITION_COL, *pk)
         )
         self._write_months(
-            delta, table, months,
-            bounds_cols=self._BOUNDS_COLS.get(table, ()),
-            bloom_cols=self._BLOOM_COLS.get(table, ()),
-            pk=pk[0],
-            carry=carry,
-            parent_epoch=parent,
+            delta, table, months, carry=carry, parent_epoch=parent
         )
 
     def _write_months(
         self, df: DataFrame, table: str, months: list[str],
-        bounds_cols=(), bloom_cols=(), pk=None, carry=None,
-        parent_epoch: int | None = None,
+        carry=None, parent_epoch: int | None = None,
     ) -> None:
         """Rewrite ONLY the given months of an existing partitioned
         target from ``df`` (already filtered to those months,
@@ -1751,10 +1627,10 @@ class PipelineRunner:
         after the flip.  A crash before the flip leaves the previous
         snapshot live and the staging an orphan.
 
-        Bounds sidecar (``bounds_cols``): the new snapshot's sidecar is
-        computed in the staged epoch (_month_sidecar) and named by the
-        same flip, so the live snapshot's bounds always describe
-        exactly the live content — the superset invariant
+        Bounds sidecar (tables in _BOUNDS_COLS): the new snapshot's
+        sidecar is computed in the staged epoch (_month_sidecar) and
+        named by the same flip, so the live snapshot's bounds always
+        describe exactly the live content — the superset invariant
         _make_probe_reader's pruning relies on holds at every instant,
         across crashes and concurrent writers alike.
 
@@ -1800,13 +1676,10 @@ class PipelineRunner:
                 else:
                     new_months.pop(m, None)
             fields = {"months": new_months}
-            if bounds_cols:
-                staged = self._compute_month_sidecar(
-                    edir, bounds_cols, bloom_cols, pk=pk
-                )
+            if table in self._BOUNDS_COLS:
                 fields["aux"] = self._write_bounds(edir, self._month_sidecar(
-                    path, self._load_sidecar(path, man_old) or {}, staged,
-                    months, carry, bounds_cols, bloom_cols, pk,
+                    table, edir, self._load_sidecar(path, man_old) or {},
+                    months, carry,
                 ))
             return fields
 
@@ -1817,76 +1690,76 @@ class PipelineRunner:
         snapshot.gc(path, man_new, keep=self.keep_snapshots)
 
     def _month_sidecar(
-        self, path: str, old: dict, staged: dict, months: list[str],
-        carry: dict, bounds_cols, bloom_cols, pk,
+        self, table: str, edir: str, old: dict, months: list[str],
+        carry: dict,
     ) -> dict:
-        """The sidecar of a month-scoped write's new snapshot: ``old``
-        (the parent snapshot's sidecar) for untouched months, the exact
-        ``staged`` entry for each rewritten month, and no entry for a
-        month left with neither staged rows nor carry.  A month that
-        carries files keeps its ranges and Blooms as old ∪ staged (the
-        carried files' exact population is deliberately never re-read)
-        and records carried ∪ staged file entries; exactness returns
-        at the next full-month rewrite or cadence re-tighten."""
+        """The sidecar of the snapshot staged in ``edir``: ``old`` (the
+        parent snapshot's sidecar) for untouched months, the exact
+        staged entry for each rewritten month, and no entry for a month
+        left with neither staged rows nor carry.  A month that carries
+        files keeps its ranges and Blooms as old ∪ staged (the carried
+        files' exact population is deliberately never re-read) and
+        records carried ∪ staged file entries; exactness returns at the
+        next full-month rewrite or cadence re-tighten.  One
+        _build_sidecar call covers every month of the write."""
+        bounds_cols = self._BOUNDS_COLS[table]
+        pk = self._CLUSTER_BY[table][0]
+        staged = self._staged_file_stats(edir, pk)
+        files_of, rows, n_fl, read = {}, {}, {}, {}
+        for m in months:
+            carried = carry.get(m) or {}
+            files_of[m] = {**staged.get(m, {}), **carried}
+            rows[m] = sum(int(n) for _lo, _hi, n in files_of[m].values())
+            n_fl[m] = int((old.get(m) or {}).get("fl_syncs") or 0) + 1
+            if carried and n_fl[m] >= self._PERSON_RETIGHTEN_EVERY:
+                # Cadence re-tighten (r10, VERDICT r9 item 3): every Nth
+                # consecutive file-level sync of a month reads exactly
+                # that month's next files (carried + staged) to restore
+                # EXACT ranges and Blooms for every bounds column —
+                # person-probe pruning would otherwise erode
+                # monotonically (widen never un-ORs a purged person,
+                # never narrows a range) until a full-month rewrite
+                # that month-local deltas may never trigger.
+                read[m] = files_of[m]
+                n_fl[m] = 0  # exact again: the streak restarts
+            elif m in staged:
+                read[m] = staged[m]
+        built = self._build_sidecar(table, self._path(table), read, rows)
         final = dict(old)
         for m in months:
-            ent_staged = staged.get(m)
             carried = carry.get(m) or {}
-            if ent_staged is None and not carried:
+            if m not in staged and not carried:
                 final.pop(m, None)
                 continue
-            if not carried:
-                final[m] = ent_staged
-                continue
-            if ent_staged is not None:
-                # carried content ⊆ old entry, staged content = staged
-                # entry: the union is the exact superset
-                ent = dict(
-                    self._widen_bounds(old.get(m), ent_staged, bounds_cols)
-                )
-                files = dict(ent_staged.get("files", {}))
-            else:
-                ent = {
-                    k: v
-                    for k, v in (old.get(m) or {}).items()
-                    if k != "files"
-                }
-                files = {}
-            files.update(carried)
-            n_fl = int((old.get(m) or {}).get("fl_syncs") or 0) + 1
-            ent.pop("fl_syncs", None)
-            if n_fl >= self._PERSON_RETIGHTEN_EVERY:
-                # Cadence re-tighten (r10, VERDICT r9 item 3): every Nth
-                # consecutive file-level sync of a month pays ONE
-                # column-pruned scan of exactly that month's next files
-                # (carried + staged) to restore EXACT ranges and Blooms
-                # for every bounds column — person-probe pruning would
-                # otherwise erode monotonically (widen never un-ORs a
-                # purged person, never narrows a range) until a
-                # full-month rewrite that month-local deltas may never
-                # trigger.
-                ent = self._exact_month_entries(
-                    path, m, sorted(files), bounds_cols, bloom_cols,
-                )
-                ent["files"] = files
-            else:
-                ent["files"] = files
-                ent["fl_syncs"] = n_fl
+            ent = dict(built.get(m, {}))
+            if carried and n_fl[m]:
+                if m in staged:
+                    # carried content ⊆ old entry, staged content =
+                    # staged entry: the union is the exact superset
+                    ent = self._widen_bounds(old.get(m), ent, bounds_cols)
+                else:
+                    ent = {
+                        k: v
+                        for k, v in (old.get(m) or {}).items()
+                        if k != "files"
+                    }
+                ent["fl_syncs"] = n_fl[m]
                 # Re-tighten the PK range from the per-file entries
                 # (pure metadata — the files map IS the month's next
                 # content, each entry exact): without this, repeated
                 # month-local deltas never tighten the widened range
                 # until a full-month rewrite.  person_id ranges and
-                # Blooms stay widened between cadence scans (their
+                # Blooms stay widened between cadence reads (their
                 # exact values need the carried files' data).
-                if pk is not None and pk in dict(bounds_cols):
+                if pk in bounds_cols:
                     rng = self._pk_range_from_files(
-                        files, dict(bounds_cols).get(pk)
+                        files_of[m], bounds_cols[pk]
                     )
                     if rng == "omit":
                         ent.pop(pk, None)
                     elif rng is not None:
                         ent[pk] = rng
+            ent["files"] = files_of[m]
             final[m] = ent
         return final
 
@@ -2094,9 +1967,9 @@ class PipelineRunner:
             import uuid
 
             # uuid-suffixed: two concurrent runs staging the same
-            # source must not clobber each other's fetch (same hazard
-            # class as the bloom scratch, r13); merge_delta's CAS then
-            # serializes the actual snapshot commits
+            # source must not clobber each other's fetch (r13);
+            # merge_delta's CAS then serializes the actual snapshot
+            # commits
             fetch_dir = os.path.join(
                 snap, f"_delta_fetch_{uuid.uuid4().hex[:8]}"
             )
@@ -2235,7 +2108,6 @@ class PipelineRunner:
         # One run() per engine instance at a time (the instance caches
         # make that a standing assumption, stated here).
         self._run_commit_map: dict[str, int] = {}
-        self._sweep_scratch()
         raw = dict(sources)
         snap_prefix = "_src_snapshot_"
         for entry in os.listdir(self.root):

@@ -93,13 +93,43 @@ def _file_map(runner, table):
 
 
 def _live_with_month(runner, table):
-    """The live target with its storage month column, for the
-    scan-derived bounds recompute (``_compute_month_bounds``)."""
+    """The live target with its storage month column, for checks that
+    recompute per-month truths with Spark."""
     from mrsboraetl_spark.schemas import p_month_of
 
     return runner.read_target(table).withColumn(
         runner.PARTITION_COL, p_month_of(runner._PARTITION_SRC[table])
     )
+
+
+def _live_exact_bounds(runner, table):
+    """{month: {col: [lo, hi]}} of the live snapshot's REAL (non-null,
+    below-sentinel) keys, read with pyarrow from the month's files — the
+    reference the sidecar ranges must equal; a column with no real key
+    in a month is omitted, as the sidecar omits it."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    base = runner._path(table)
+    cols = runner._BOUNDS_COLS[table]
+    out: dict = {}
+    for m, files in snapshot.load(base)["months"].items():
+        ent = out.setdefault(m, {})
+        for c, sentinel in cols.items():
+            vals = [
+                pq.read_table(os.path.join(base, rp), columns=[c])[c]
+                for rp in files
+            ]
+            keep = [v.drop_null() for v in vals]
+            if sentinel is not None:
+                keep = [v.filter(pc.less(v, sentinel)) for v in keep]
+            keep = [v for v in keep if len(v)]
+            if keep:
+                ent[c] = [
+                    min(pc.min(v).as_py() for v in keep),
+                    max(pc.max(v).as_py() for v in keep),
+                ]
+    return out
 
 
 def _live_footer_stats(runner, table, pk):
@@ -170,9 +200,7 @@ def test_file_level_sync_rewrites_only_touched_files(
     # tightened from the per-file entries), not stuck widened: compare
     # to a fresh scan-derived recompute over the live table.
     bounds = r._load_bounds("flat_obs")
-    exact = r._compute_month_bounds(
-        _live_with_month(r, "flat_obs"), r._BOUNDS_COLS["flat_obs"]
-    )
+    exact = _live_exact_bounds(r, "flat_obs")
     for m, (_c, rw) in per_month.items():
         if rw and "encounter_id" in exact.get(m, {}):
             assert (
@@ -417,10 +445,8 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
     assert r._bloom_hit_months(
         kdf, None, {modal: b3[modal]["bloom:person_id"]}
     ) == set()
-    # ...and the exact recompute matches a fresh scan-derived truth
-    exact = r._compute_month_bounds(
-        _live_with_month(r, "flat_obs"), r._BOUNDS_COLS["flat_obs"]
-    )
+    # ...and the exact recompute matches the live files' truth
+    exact = _live_exact_bounds(r, "flat_obs")
     assert b3[modal]["person_id"] == exact[modal]["person_id"]
 
     # a fresh probe for the victim opens only their OWN months — modal

@@ -817,7 +817,6 @@ def test_losing_writer_never_publishes_its_sidecar(
     )
     delta_a = a_rows.unionByName(moved).localCheckpoint()
     delta_b = live.filter(F.col("p_month") == m_b).localCheckpoint()
-    cols = rA._BOUNDS_COLS[table]
 
     real_write_bounds = rB._write_bounds
     fired: list[bool] = []
@@ -825,12 +824,12 @@ def test_losing_writer_never_publishes_its_sidecar(
     def write_bounds_after_winner(*a, **kw):
         if not fired:
             fired.append(True)
-            rA._write_months(delta_a, table, [m_a], bounds_cols=cols)
+            rA._write_months(delta_a, table, [m_a])
         return real_write_bounds(*a, **kw)
 
     monkeypatch.setattr(rB, "_write_bounds", write_bounds_after_winner)
     with pytest.raises(ConcurrentCommitError):
-        rB._write_months(delta_b, table, [m_b], bounds_cols=cols)
+        rB._write_months(delta_b, table, [m_b])
     assert fired
 
     bounds = rA._load_bounds(table)

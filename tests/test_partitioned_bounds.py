@@ -292,10 +292,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     os.replace = exploding_replace
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            runner._write_months(
-                delta, table, months,
-                bounds_cols=runner._BOUNDS_COLS[table],
-            )
+            runner._write_months(delta, table, months)
     finally:
         os.replace = orig_replace
 
@@ -307,9 +304,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     assert restored.count() == n_before
     restored = restored.localCheckpoint()  # same hazard for the cleanup
     # A clean rewrite of the same months lands exact bounds again.
-    runner._write_months(
-        delta, table, months, bounds_cols=runner._BOUNDS_COLS[table]
-    )
+    runner._write_months(delta, table, months)
     post = runner._load_bounds(table)
     for m in months:
         old_lo, old_hi = pre[m]["encounter_id"]
@@ -413,34 +408,255 @@ def test_bloom_sidecar_prunes_person_probe(spark, built):
     assert miss.count() == 0
 
 
+def _set_bits(w: bytes) -> set[int]:
+    """Bit positions set in a filter of 64-bit big-endian words: bit p
+    lives in word p // 64, byte 7 - (p % 64) // 8 of it, bit p % 8."""
+    return {
+        (i // 8) * 64 + (7 - i % 8) * 8 + b
+        for i, byte in enumerate(w)
+        if byte
+        for b in range(8)
+        if byte >> b & 1
+    }
+
+
+def _sparse_filter(m: int, seed: int, n_bits: int = 40) -> bytes:
+    import random
+
+    rng = random.Random(seed)
+    w = bytearray(m // 8)
+    for p in rng.sample(range(m), n_bits):
+        w[(p // 64) * 8 + 7 - (p % 64) // 8] |= 1 << (p % 8)
+    return bytes(w)
+
+
 def test_bloom_widen_is_exact_union_or_omission():
     """Widen-before-swap for Blooms: equal (m, j) => bitwise OR (the
-    EXACT set union, so no key of either side can test negative);
-    resized filters cannot be merged => the entry is omitted, leaving
+    EXACT set union, so no key of either side can test negative).
+    Power-of-two filters of different sizes FOLD onto the smaller m
+    (position p at m bits, taken mod m', is the position at m' bits),
+    so the union keeps a filter at m = min holding every bit of both
+    folded inputs and nothing else.  A j mismatch, or an m that is not
+    a power of two, cannot be merged => the entry is omitted, leaving
     the month unprunable (conservative) until the exact pass."""
     w = PipelineRunner._widen_bounds
     a = {"bloom:person_id": {"m": 1024, "j": 7, "w": b"\x0f" + b"\x00" * 127}}
     b = {"bloom:person_id": {"m": 1024, "j": 7, "w": b"\xf0" + b"\x00" * 127}}
     merged = w(a, b, {})
-    assert merged["bloom:person_id"]["w"].startswith(b"\xff")
-    # parameter mismatch: omit, never guess
-    c = {"bloom:person_id": {"m": 2048, "j": 7, "w": b"\xff" + b"\x00" * 255}}
+    assert merged["bloom:person_id"]["w"] == b"\xff" + b"\x00" * 127
+
+    def fold_union(small_m, big_m, seed):
+        x = {"m": small_m, "j": 7, "w": _sparse_filter(small_m, seed)}
+        y = {"m": big_m, "j": 7, "w": _sparse_filter(big_m, seed + 1)}
+        want = {p % small_m for e in (x, y) for p in _set_bits(e["w"])}
+        for old, new in ((x, y), (y, x)):  # either side may be larger
+            got = w({"bloom:person_id": old}, {"bloom:person_id": new}, {})
+            e = got["bloom:person_id"]
+            assert (e["m"], e["j"]) == (small_m, 7)
+            assert len(e["w"]) == small_m // 8
+            assert _set_bits(e["w"]) == want
+
+    fold_union(1024, 2048, 1)
+    fold_union(1024, 1 << 14, 3)
+    # r9 resize boundary (VERDICT r8 item 3): a month whose filter was
+    # re-sized across the old 2^17 cap and the new 2^23 cap folds too
+    fold_union(1 << 17, 1 << 23, 5)
+    # j mismatch: omit, never guess
+    c = {"bloom:person_id": {"m": 2048, "j": 5, "w": b"\xff" + b"\x00" * 255}}
     assert "bloom:person_id" not in w(a, c, {})
+    # an m that is not a power of two does not fold: omit
+    d = {"bloom:person_id": {"m": 1536, "j": 7, "w": b"\xff" + b"\x00" * 191}}
+    assert "bloom:person_id" not in w(a, d, {})
+    assert "bloom:person_id" not in w(d, a, {})
     # one-sided: omit
     assert "bloom:person_id" not in w(a, {}, {})
     # old None: the staged entry stands alone
     assert w(None, b, {}) is b
-    # r9 resize boundary (VERDICT r8 item 3): a month whose filter was
-    # re-sized across the old 2^17 cap and the new 2^23 cap meets the
-    # same rule — unmergeable, omitted, unprunable until the exact pass
-    old_cap = {"bloom:person_id": {"m": 1 << 17, "j": 7, "w": b"\xff" * (1 << 14)}}
-    new_cap = {"bloom:person_id": {"m": 1 << 23, "j": 7, "w": b"\xff" * (1 << 20)}}
-    assert "bloom:person_id" not in w(old_cap, new_cap, {})
     # legacy hex entries (pre-r9 sidecar read during an upgrade window)
-    # still merge with byte entries of equal (m, j)
+    # still merge with byte entries
     hx = {"bloom:person_id": {"m": 1024, "j": 7, "w": "f0" + "00" * 127}}
     merged2 = w(hx, a, {})
     assert merged2["bloom:person_id"]["w"].startswith(b"\xff")
+
+
+def _stage(spark, tmp_path, rows, schema: str):
+    """A staged epoch directory of a flat_obs-shaped table under a
+    fresh table directory: (table dir, epoch dir)."""
+    base = str(tmp_path / "table")
+    edir = os.path.join(base, "_e00000001_test")
+    spark.createDataFrame(rows, schema).write.partitionBy(
+        "p_month"
+    ).parquet(edir)
+    return base, edir
+
+
+def _build(runner, table, base, edir, rows=None):
+    """_build_sidecar over every staged file, sized from the footer row
+    counts unless ``rows`` ({month: n}) says otherwise."""
+    stats = runner._staged_file_stats(edir, runner._CLUSTER_BY[table][0])
+    n = {m: sum(v[2] for v in fent.values()) for m, fent in stats.items()}
+    return runner._build_sidecar(table, base, stats, rows or n)
+
+
+def test_bloom_fold_equals_smaller_build(spark, tmp_path):
+    """The fold is exact against the builder itself: the same keys
+    built at m and at m/4 — the m-bit filter folded onto m/4 bits (a
+    union with an empty m/4 filter) is the m/4 build byte for byte."""
+    from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
+
+    rows = [
+        ("2024-01", pid, 1000 + 3 * pid) for pid in range(-40, 150)
+    ] + [("2024-01", 7, SYNTHETIC_ENCOUNTER_OFFSET + 5)]
+    r = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    base, edir = _stage(
+        spark, tmp_path, rows,
+        "p_month string, person_id long, encounter_id long",
+    )
+    big = _build(r, "flat_obs", base, edir, rows={"2024-01": 256})
+    small = _build(r, "flat_obs", base, edir, rows={"2024-01": 64})
+    for c in ("person_id", "encounter_id"):
+        eb, es = big["2024-01"][f"bloom:{c}"], small["2024-01"][f"bloom:{c}"]
+        assert (eb["m"], es["m"]) == (4096, 1024)
+        empty = {"m": 1024, "j": es["j"], "w": bytes(128)}
+        folded = PipelineRunner._widen_bounds(
+            {f"bloom:{c}": eb}, {f"bloom:{c}": empty}, {}
+        )[f"bloom:{c}"]
+        assert folded == es, c
+
+
+def test_bloom_build_matches_python_reference_and_transfer(
+    spark, tmp_path, monkeypatch
+):
+    """The one sidecar build against a pure-Python reference: the
+    (month, position) pairs of the real keys — non-null, below the
+    sentinel — from the shared _bloom_pos_expr, packed as 64-bit
+    big-endian words with struct.pack_into('>Q'), must equal the
+    built filter byte for byte at the same m, and the ranges must be
+    the real keys' min/max.  The driver receives at most one row per
+    (month, Bloom column): the filters arrive packed, never as word
+    rows."""
+    import struct
+
+    from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET as S
+
+    rows = [
+        (f"2024-{m:02d}", pid, None if pid % 11 == 0 else 10 * pid + m)
+        for m in (1, 2, 3)
+        for pid in range(1, 200 + m * 37)
+    ] + [("2024-02", 5, S + 3), ("2024-03", 6, S)]  # synthetic: excluded
+    schema = "p_month string, person_id long, encounter_id long"
+    r = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    base, edir = _stage(spark, tmp_path, rows, schema)
+
+    cls = type(spark.range(1))  # the CONCRETE DataFrame class
+    received = {"rows": 0}
+    real_collect, real_arrow = cls.collect, cls.toArrow
+
+    def counting_collect(self):
+        out = real_collect(self)
+        received["rows"] += len(out)
+        return out
+
+    def counting_arrow(self):
+        out = real_arrow(self)
+        received["rows"] += out.num_rows
+        return out
+
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    monkeypatch.setattr(cls, "toArrow", counting_arrow)
+    built = _build(r, "flat_obs", base, edir)
+    monkeypatch.undo()
+    assert 0 < received["rows"] <= 3 * 2, received
+
+    cols = r._BOUNDS_COLS["flat_obs"]
+    real = {
+        c: [
+            (row[0], row[i])
+            for row in rows
+            if row[i] is not None and (cols[c] is None or row[i] < cols[c])
+        ]
+        for c, i in (("person_id", 1), ("encounter_id", 2))
+    }
+    for c, keys in real.items():
+        m_of = {mo: built[mo][f"bloom:{c}"]["m"] for mo, _k in keys}
+        pos = (
+            spark.createDataFrame(
+                [(mo, k, m_of[mo]) for mo, k in keys],
+                "p_month string, _k long, _m long",
+            )
+            .withColumn("_i", F.explode(F.sequence(F.lit(0), F.lit(6))))
+            .select("p_month", r._bloom_pos_expr().alias("_pos"))
+            .collect()
+        )
+        want = {mo: bytearray(m // 8) for mo, m in m_of.items()}
+        for row in pos:
+            buf, p = want[row["p_month"]], int(row["_pos"])
+            word = struct.unpack_from(">Q", buf, (p // 64) * 8)[0]
+            struct.pack_into(">Q", buf, (p // 64) * 8, word | 1 << (p % 64))
+        for mo, m in m_of.items():
+            e = built[mo][f"bloom:{c}"]
+            assert e["j"] == 7 and e["m"] == m
+            assert e["w"] == bytes(want[mo]), (mo, c)
+            ks = [k for mo2, k in keys if mo2 == mo]
+            assert built[mo][c] == [min(ks), max(ks)], (mo, c)
+
+
+def test_sidecar_config_precondition_is_checked(monkeypatch):
+    """The builder takes a range without a Bloom only from the per-file
+    pk entries, which is exact only for a sentinel-free pk: any other
+    bounds column without a Bloom raises instead of being skipped."""
+    r = PipelineRunner.__new__(PipelineRunner)
+    for bad in (
+        {"person_id": None, "test_datetime": None},  # not the pk
+        {"person_id": 100},  # the pk, but with a sentinel
+    ):
+        monkeypatch.setitem(PipelineRunner._BOUNDS_COLS, "flat_lab_obs", bad)
+        with pytest.raises(ValueError, match="flat_lab_obs"):
+            r._build_sidecar("flat_lab_obs", "/nonexistent", {}, {})
+    monkeypatch.setitem(
+        PipelineRunner._BLOOM_COLS, "flat_obs", ("person_id",)
+    )
+    with pytest.raises(ValueError, match="flat_obs.encounter_id"):
+        r._build_sidecar("flat_obs", "/nonexistent", {}, {})
+
+
+def test_rebuild_sidecar_job_budget(spark, built, tmp_path, monkeypatch):
+    """Job budget of the one sidecar pass in a partitioned rebuild:
+    at most 3 Spark jobs per Bloom-table write (two shuffle map stages
+    and the result), none for flat_lab_obs (its only range is footer
+    metadata), and no staging directory written anywhere."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs: dict[str, list[int]] = {}
+    real_build = PipelineRunner._build_sidecar
+
+    def counting_build(self, table, *a, **kw):
+        j0 = int(dag.numTotalJobs())
+        out = real_build(self, table, *a, **kw)
+        jobs.setdefault(table, []).append(int(dag.numTotalJobs()) - j0)
+        return out
+
+    written: list[str] = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *a, **kw):
+        written.append(str(path))
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(PipelineRunner, "_build_sidecar", counting_build)
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    runner = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    runner.run(built["dfs"], mode="rebuild")
+
+    assert sorted(jobs) == sorted(PipelineRunner._BOUNDS_COLS), jobs
+    for table, per_write in jobs.items():
+        cap = 3 if table in PipelineRunner._BLOOM_COLS else 0
+        assert per_write and max(per_write) <= cap, (table, per_write)
+    assert written and not [p for p in written if "_bloom_agg_tmp_" in p]
+    assert not [
+        e for e in os.listdir(runner.root) if e.startswith("_bloom_agg_tmp_")
+    ]
 
 
 def test_bloom_probe_driver_transfer_is_month_bounded(
@@ -587,22 +803,24 @@ def test_bloom_prunes_at_production_month_cardinality(spark, tmp_path):
     cap such a month saturated toward all-ones and pruned nothing
     (conservative but useless at the 100x target); the binary sidecar
     carries filters up to 2^23 bits (~500k keys at 16 bits/key)."""
-    import pyspark.sql.functions as SF
-
     runner = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
     n = 120_000
     big = spark.range(0, n).select(
         F.lit("2024-01").alias("p_month"),
         F.col("id").cast("long").alias("person_id"),
+        F.col("id").cast("long").alias("encounter_id"),
     )
     small = spark.range(n, n + 500).select(
         F.lit("2024-02").alias("p_month"),
         F.col("id").cast("long").alias("person_id"),
+        F.col("id").cast("long").alias("encounter_id"),
     )
-    pdir = str(tmp_path / "staged")
-    big.unionByName(small).write.partitionBy("p_month").parquet(pdir)
+    base = str(tmp_path / "table")
+    edir = os.path.join(base, "_e00000001_test")
+    big.unionByName(small).write.partitionBy("p_month").parquet(edir)
 
-    blooms = runner._compute_month_blooms(pdir, "person_id", None)
+    side = _build(runner, "flat_obs", base, edir)
+    blooms = {m: e["bloom:person_id"] for m, e in side.items()}
     m_big = blooms["2024-01"]["m"]
     assert m_big > (1 << 17), "big month must outgrow the old cap"
     assert m_big <= runner._BLOOM_MAX_BITS
@@ -620,53 +838,3 @@ def test_bloom_prunes_at_production_month_cardinality(spark, tmp_path):
     kdf2 = spark.createDataFrame([(77,), (99_000,)], "_k long")
     keep2 = runner._bloom_hit_months(kdf2, None, blooms)
     assert "2024-01" in keep2, keep2
-    _ = SF  # silence unused-import lint paths
-
-
-def test_bloom_build_staged_matches_collect_and_transfer(
-    spark, tmp_path, monkeypatch
-):
-    """r10 (VERDICT r9 item 2): the Bloom BUILD stages its occupied-
-    word aggregate as parquet and assembles each month's filter from
-    one bulk columnar read — the driver's py4j row transfer must be
-    O(months) (the approx-distinct sizing row per month), NOT
-    O(months x occupied words), and the sidecar bytes must be
-    IDENTICAL to the legacy row-collect build (kept behind
-    _BLOOM_BUILD_COLLECT as the oracle)."""
-    rows = [
-        (f"2024-{m:02d}", pid)
-        for m in (1, 2, 3)
-        for pid in range(1, 200 + m * 37)
-    ]
-    df = spark.createDataFrame(rows, "p_month string, person_id long")
-    d = str(tmp_path / "staged")
-    df.write.partitionBy("p_month").parquet(d)
-    r = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
-
-    counted = {"rows": 0}
-    cls = type(df)  # the CONCRETE DataFrame class (classic/connect)
-    real_collect = cls.collect
-
-    def counting_collect(self):
-        out = real_collect(self)
-        counted["rows"] += len(out)
-        return out
-
-    monkeypatch.setattr(cls, "collect", counting_collect)
-    staged = r._compute_month_blooms(d, "person_id", None)
-    staged_rows = counted["rows"]
-
-    monkeypatch.setattr(PipelineRunner, "_BLOOM_BUILD_COLLECT", True)
-    counted["rows"] = 0
-    legacy = r._compute_month_blooms(d, "person_id", None)
-    legacy_rows = counted["rows"]
-
-    assert staged == legacy, "staged build must be byte-identical"
-    assert staged_rows == 3, (
-        "staged build must collect exactly one sizing row per month",
-        staged_rows,
-    )
-    assert legacy_rows > 3 * 10, (
-        "oracle path no longer transfers word rows — spy broken?",
-        legacy_rows,
-    )
