@@ -64,6 +64,7 @@ from mrsboraetl_spark.plans.flat_visit_summary import (
     incremental_flat_visit_summary,
 )
 from mrsboraetl_spark.sources import snapshot
+from mrsboraetl_spark.sources.footer_stats import footer_schema, read_files
 from mrsboraetl_spark.sources.snapshot import ConcurrentCommitError
 from mrsboraetl_spark.sources.versioned import VersionedTable
 from mrsboraetl_spark.sources.watermark import WatermarkStore
@@ -181,9 +182,7 @@ class PipelineRunner:
             files = snapshot.files(self._path(table))
             # zero-month snapshot reads as cold (no schema to serve);
             # the next run rebuilds
-            return (
-                self.spark.read.parquet(*files) if files else None
-            )
+            return read_files(self.spark, files) if files else None
         if not self._recover_fs(table):
             return None
         return self.spark.read.parquet(self._path(table))
@@ -387,14 +386,12 @@ class PipelineRunner:
         path = self._path(table)
         sel = snapshot.files(path, months) if months else []
         if sel:
-            return self.spark.read.parquet(*sel)
+            return read_files(self.spark, sel)
         # no candidate months (or months absent from the snapshot): an
         # empty frame with the target schema keeps downstream joins
         # well-typed — read one live file's schema, no rows
         all_files = snapshot.files(path)
-        return (
-            self.spark.read.parquet(*all_files[:1]).filter(F.lit(False))
-        )
+        return read_files(self.spark, all_files[:1]).filter(F.lit(False))
 
     # ------------------------------------------------- month key bounds
 
@@ -519,8 +516,8 @@ class PipelineRunner:
         """Time travel: the target as of a RETAINED snapshot (see
         keep_snapshots); ValueError for an epoch out of retention."""
         path = self._path(table)
-        return self.spark.read.parquet(
-            *snapshot.files(path, man=snapshot.load_at(path, epoch))
+        return read_files(
+            self.spark, snapshot.files(path, man=snapshot.load_at(path, epoch))
         )
 
     # ------------------------------------------ pipeline-level snapshot
@@ -798,8 +795,6 @@ class PipelineRunner:
         if not bloom_cols or not paths:
             return out
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
 
         m_of = {m: self._bloom_m_bits(rows[m]) for m in files}
 
@@ -839,10 +834,7 @@ class PipelineRunner:
         )
         # the Bloom columns' types from one footer: an explicit read
         # schema spares Spark its schema-inference job
-        footer = pq.read_schema(paths[0])
-        schema = from_arrow_schema(
-            pa.schema([footer.field(c) for c in bloom_cols])
-        )
+        schema = footer_schema(paths[0], bloom_cols)
         res = (
             self.spark.read.schema(schema).parquet(*paths)
             .select(
@@ -1356,7 +1348,7 @@ class PipelineRunner:
         if not sel:
             return self.read_target_months(table, [])
         # explicit leaf files: no partition inference, no p_month
-        return self.spark.read.parquet(*sel)
+        return read_files(self.spark, sel)
 
     def _merge_latest_summary(self, vs: DataFrame, queue: DataFrame) -> bool:
         """Incremental flat_latest_hiv_summary (r10; measured: the

@@ -1,11 +1,13 @@
 """SparkSession factory.
 
-Defaults are tuned for the local[32] test harness but every knob is the one
-you would also set on a 1000-executor cluster: AQE on (runtime re-plan +
-skew-join handling), shuffle partitions sized to cores locally (set to
-~2-3x total cluster cores in prod), UTC session timezone so results are
-stable across environments and comparable to the DuckDB oracle, and Arrow
-enabled for the few Pandas-UDF operators (similarity / multimodal).
+Every knob is one you would also set on a 1000-executor cluster: AQE on
+(runtime re-plan + skew-join handling), shuffle partitions sized to cores
+locally (set to ~2-3x total cluster cores in prod), UTC session timezone so
+results are stable across environments and comparable to the DuckDB oracle,
+Arrow enabled for the Arrow/Pandas kernels, and a driver JIT policy sized
+for the engine's main run shape: a scheduled batch in a fresh JVM, where
+compiling framework code costs more CPU than the pipeline itself
+(see ``DRIVER_JIT_FLAGS``).
 """
 
 from __future__ import annotations
@@ -13,6 +15,28 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# C2 (tier-4) compile thresholds for the driver JVM, 4-10x the JDK 17
+# defaults (5000 / 600 / 15000 / 40000).  A cold batch run spends most
+# of its CPU compiling, not working: per-thread CPU of a cold
+# partitioned rebuild (600 persons, 4 vCPUs) was 65-71 s in the C1/C2
+# compiler threads (C2 56-60 s) out of 106-127 s, against 11-12 s of
+# executor tasks and 19-23 s of planning, py4j and scheduler threads.
+# About 80% of the compile time is tier 4, spent on framework code
+# that runs only a few thousand times per session (Janino, the closure
+# cleaner's ASM reader, Java serialization, Catalyst); generated row
+# loops are ~3%.  Raising the tier-4 thresholds keeps C2 for code that
+# is actually hot: C2 time fell to 19-22 s, and warm 20k-person
+# rebuilds in one JVM kept their wall.  C1 only
+# (-XX:TieredStopAtLevel=1) cuts cold CPU further but slows warm
+# 20k-person rebuilds from ~28 s to 45-50 s, so tiering still reaches
+# C2; ~30x thresholds saved no more CPU than 10x and slowed the wall.
+DRIVER_JIT_FLAGS = {
+    "Tier4InvocationThreshold": "50000",
+    "Tier4MinInvocationThreshold": "6000",
+    "Tier4CompileThreshold": "60000",
+    "Tier4BackEdgeThreshold": "400000",
+}
 
 
 def get_spark(
@@ -78,23 +102,24 @@ def get_spark(
         # Production drivers size the same way: to the workload, not the
         # machine.  Env-overridable for heavy ad-hoc work.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # Dozens of wide codegen'd plans (blob packing, minhash, decode
-        # ladders) overflow the default 240 MB JIT code cache; once full the
-        # JVM stops compiling and whichever query runs next executes
-        # interpreted (measured 0.8s -> 30s on the same plan).  Huge
-        # generated methods (> 8k bytecode) are also excluded from JIT by
-        # default — let them compile.
-        # CICompilerCount=4: the JVM sizes its C2 pool from the 32 visible
-        # CPUs, and on this box the resulting compile storm runs 4-6 C2
-        # threads at full core for the first ~minute of a session while the
-        # 32 executor threads run semi-starved/interpreted — measured up to
-        # 28s wall (60 JVM-CPU-s) for a 28k-row broadcast-join+distinct that
-        # takes 0.65s once compilation settles.  Capping the pool at 4
-        # bounds the worst observed query at ~2s with steady state intact.
+        # The driver JVM's JIT compile policy.
+        # * Code cache 1g: dozens of wide codegen'd plans (blob packing,
+        #   minhash, decode ladders) overflow the default 240 MB; once
+        #   full the JVM stops compiling and the next query runs
+        #   interpreted (measured 0.8s -> 30s on the same plan).
+        # * Huge generated methods (> 8k bytecode) are excluded from JIT
+        #   by default — let them compile.
+        # * CICompilerCount=4: the JVM sizes its compiler pool from the
+        #   visible CPUs; on a 32-CPU host 4-6 C2 threads ran at full
+        #   core for a session's first minute while executor threads
+        #   ran interpreted (a 28k-row broadcast-join+distinct took up
+        #   to 28s wall, 0.65s once compilation settled).
+        # * Tier-4 thresholds: DRIVER_JIT_FLAGS above.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
-            "-XX:-DontCompileHugeMethods -XX:CICompilerCount=4",
+            "-XX:-DontCompileHugeMethods -XX:CICompilerCount=4 "
+            + " ".join(f"-XX:{k}={v}" for k, v in DRIVER_JIT_FLAGS.items()),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

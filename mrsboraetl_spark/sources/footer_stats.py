@@ -58,6 +58,46 @@ def _parquet_files(path: str) -> list[str]:
     return out
 
 
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _as_nullable(j):
+    if isinstance(j, list):
+        return [_as_nullable(v) for v in j]
+    if isinstance(j, dict):
+        return {
+            k: True if k in _NULLABLE_KEYS else _as_nullable(v)
+            for k, v in j.items()
+        }
+    return j
+
+
+def footer_schema(file: str, cols=None):
+    """The schema Spark reads one parquet file (or its ``cols``) with,
+    from its footer alone: zero Spark jobs.  Spark reads every file
+    source as nullable at every nesting level, so the footer's
+    required fields are relaxed the same way."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    s = pq.read_schema(file)
+    if cols is not None:
+        s = pa.schema([s.field(c) for c in cols])
+    return StructType.fromJson(_as_nullable(from_arrow_schema(s).jsonValue()))
+
+
+def read_files(spark, files):
+    """``spark.read.parquet(*files)`` for files the engine wrote itself
+    (one schema per table), with the schema taken from the first file's
+    footer: an explicit schema spares Spark its schema-inference job,
+    which runs even with mergeSchema off.  Not for external sources,
+    whose footers may carry types Spark reads differently
+    (TIMESTAMP(NANOS) under nanosAsLong)."""
+    return spark.read.schema(footer_schema(files[0])).parquet(*files)
+
+
 def parquet_row_count(path: str, files=None) -> int | None:
     """Exact row count of the parquet files under ``path`` from footer
     metadata alone (sum of per-file num_rows — the same number Spark's

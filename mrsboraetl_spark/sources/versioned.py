@@ -38,6 +38,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from mrsboraetl_spark.sources import snapshot
+from mrsboraetl_spark.sources.footer_stats import parquet_row_count, read_files
 from mrsboraetl_spark.sources.snapshot import ConcurrentCommitError
 
 __all__ = ["ConcurrentCommitError", "VersionedTable"]
@@ -75,6 +76,15 @@ class VersionedTable:
             for s in snapshot.history(self.root)
         ]
 
+    def _row_count(self, spark: SparkSession, relpaths: list[str]) -> int:
+        """Rows of the given data files from their footers (zero Spark
+        jobs); a scan only when some footer is unreadable."""
+        paths = [os.path.join(self.root, f) for f in relpaths]
+        n = parquet_row_count(self.root, paths)
+        if n is None:
+            n = spark.read.parquet(*paths).count()
+        return n
+
     def _relpath(self, file_uri: str) -> str:
         """input_file_name() URI -> snapshot relpath.
 
@@ -93,7 +103,7 @@ class VersionedTable:
         return os.path.relpath(os.path.abspath(p), os.path.abspath(self.root))
 
     def _file_key_stats(
-        self, spark: SparkSession, data_dir: str, key: str
+        self, spark: SparkSession, relpaths: list[str], key: str
     ) -> dict:
         """{relpath: [min, max, n_rows]} of ``key`` per data file just
         written — one bounded pass over the NEW data (Iceberg's per-file
@@ -105,7 +115,7 @@ class VersionedTable:
         from pyspark.sql import functions as F
 
         rows = (
-            spark.read.parquet(data_dir)
+            read_files(spark, [os.path.join(self.root, f) for f in relpaths])
             .groupBy(F.input_file_name().alias("_f"))
             .agg(
                 F.min(key).alias("lo"),
@@ -219,15 +229,16 @@ class VersionedTable:
                     "maxRecordsPerFile", str(max_records_per_file)
                 )
             writer.parquet(edir)
+            staged = snapshot.staged_files(edir)
             fields = {
-                "months": {_GROUP: snapshot.staged_files(edir)},
-                "rows": spark.read.parquet(edir).count(),
+                "months": {_GROUP: staged},
+                "rows": self._row_count(spark, staged),
                 "note": note,
             }
             if stats_key is not None:
                 fields["stats_key"] = stats_key
                 fields["file_stats"] = self._file_key_stats(
-                    spark, edir, stats_key
+                    spark, staged, stats_key
                 )
             return fields
 
@@ -246,7 +257,7 @@ class VersionedTable:
             paths = snapshot.files(
                 self.root, man=snapshot.load_at(self.root, version)
             )
-        return spark.read.parquet(*paths)
+        return read_files(spark, paths)
 
     def merge(
         self, spark: SparkSession, delta: DataFrame, keys: Sequence[str],
@@ -360,8 +371,8 @@ class VersionedTable:
             # the whole merge against the winner's base, not blind-land)
             return self._commit_once(delta, note=note, stats_key=keys[0])
         base_files = list(man["months"].get(_GROUP, ()))
-        base = spark.read.parquet(
-            *[os.path.join(self.root, f) for f in base_files]
+        base = read_files(
+            spark, [os.path.join(self.root, f) for f in base_files]
         )
         if dict(base.dtypes) != dict(delta.dtypes):
             # Full dtype comparison, not just column names: a same-named
@@ -411,8 +422,8 @@ class VersionedTable:
             candidates += [r["_f"] for r in hit]
         touched_rel: set[str] = set()
         if candidates:
-            tagged = spark.read.parquet(
-                *[os.path.join(self.root, f) for f in candidates]
+            tagged = read_files(
+                spark, [os.path.join(self.root, f) for f in candidates]
             ).withColumn("_file", F.input_file_name())
             # Bounded driver action: one row per data file with a match.
             touched_rel = {
@@ -428,8 +439,8 @@ class VersionedTable:
         survivors = None
         if touched:
             survivors = anti_delete(
-                spark.read.parquet(
-                    *[os.path.join(self.root, f) for f in touched]
+                read_files(
+                    spark, [os.path.join(self.root, f) for f in touched]
                 ),
                 key_rows,
                 list(keys),
@@ -441,33 +452,25 @@ class VersionedTable:
 
         def write(edir: str) -> dict:
             new_rows.write.mode("errorifexists").parquet(edir)
-            n_new = spark.read.parquet(edir).count()
+            staged = snapshot.staged_files(edir)
+            n_new = self._row_count(spark, staged)
             # Untouched-side row count: from the snapshot's per-file
             # record counts when every reused file has them (zero I/O),
-            # else one count() over the untouched files (stats-less
-            # bases).
+            # else the untouched files' footers (stats-less bases).
             if untouched and all(
                 f in file_stats and len(file_stats[f]) >= 3
                 for f in untouched
             ):
                 n_untouched = sum(int(file_stats[f][2]) for f in untouched)
             else:
-                n_untouched = (
-                    spark.read.parquet(
-                        *[os.path.join(self.root, f) for f in untouched]
-                    ).count()
-                    if untouched
-                    else 0
-                )
+                n_untouched = self._row_count(spark, untouched)
             # Stats for the new version: fresh bounds for the new files,
             # the base's recorded bounds carried forward for the reused
             # ones.
-            new_stats = self._file_key_stats(spark, edir, keys[0])
+            new_stats = self._file_key_stats(spark, staged, keys[0])
             carried = {f: file_stats[f] for f in untouched if f in file_stats}
             return {
-                "months": {
-                    _GROUP: [*untouched, *snapshot.staged_files(edir)]
-                },
+                "months": {_GROUP: [*untouched, *staged]},
                 "rows": n_untouched + n_new,
                 "note": note,
                 "rewrote_files": len(touched),

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from mrsboraetl_spark.config import WATERMARK_EPOCH
 from mrsboraetl_spark.schemas import FLAT_LOG_SCHEMA
+from mrsboraetl_spark.sources.footer_stats import _parquet_files, _to_naive_utc
 
 EPOCH = dt.datetime.fromisoformat(WATERMARK_EPOCH)
 
@@ -42,21 +43,42 @@ class WatermarkStore:
         self, table_name: str, fallback: DataFrame | None = None,
         fallback_col: str = "max_date_created",
     ) -> dt.datetime:
-        """Three-level watermark coalesce (flat_obs_v1.0.sql:61-70)."""
-        log = self._read()
-        if log is not None:
-            row = (
-                log.filter(F.col("table_name") == table_name)
-                .agg(F.max("date_updated").alias("wm"))
-                .first()
-            )
-            if row and row["wm"] is not None:
-                return row["wm"]
+        """Three-level watermark coalesce (flat_obs_v1.0.sql:61-70).
+        The log leg reads flat_log with pyarrow on the driver: it is a
+        few rows per run, and a Spark aggregate over it cost two jobs
+        per stage."""
+        wm = self._logged_max(table_name)
+        if wm is not None:
+            return wm
         if fallback is not None:
             row = fallback.agg(F.max(fallback_col).alias("wm")).first()
             if row and row["wm"] is not None:
                 return row["wm"]
         return EPOCH
+
+    def _logged_max(self, table_name: str) -> dt.datetime | None:
+        """max(date_updated) over ``table_name``'s rows, as naive UTC
+        (the form a UTC-pinned Spark session collects); None when the
+        log is absent or holds no non-NULL value for the table."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        best = None
+        for f in _parquet_files(self.path):
+            t = pq.read_table(f, columns=["date_updated", "table_name"])
+            # legacy Spark-written files may hold INT96 (read as naive
+            # nanoseconds, UTC-based): truncate to micros as Spark does
+            ts = pc.cast(
+                t["date_updated"], pa.timestamp("us", tz="UTC"), safe=False
+            )
+            mx = _to_naive_utc(
+                pc.max(ts.filter(pc.equal(t["table_name"], table_name)))
+                .as_py()
+            )
+            if mx is not None and (best is None or mx > best):
+                best = mx
+        return best
 
     def log_run(
         self,

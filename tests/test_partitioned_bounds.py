@@ -624,7 +624,10 @@ def test_rebuild_sidecar_job_budget(spark, built, tmp_path, monkeypatch):
     """Job budget of the one sidecar pass in a partitioned rebuild:
     at most 3 Spark jobs per Bloom-table write (two shuffle map stages
     and the result), none for flat_lab_obs (its only range is footer
-    metadata), and no staging directory written anywhere."""
+    metadata), and no staging directory written anywhere.  The whole
+    rebuild takes at most 55 jobs (66-68 while target reads inferred
+    their schema with a job, flat_log's watermark read was a Spark
+    aggregate and versioned commits counted their rows with one)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
@@ -647,7 +650,9 @@ def test_rebuild_sidecar_job_budget(spark, built, tmp_path, monkeypatch):
     monkeypatch.setattr(PipelineRunner, "_build_sidecar", counting_build)
     monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
     runner = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
+    j0 = int(dag.numTotalJobs())
     runner.run(built["dfs"], mode="rebuild")
+    assert int(dag.numTotalJobs()) - j0 <= 55
 
     assert sorted(jobs) == sorted(PipelineRunner._BOUNDS_COLS), jobs
     for table, per_write in jobs.items():
@@ -657,6 +662,40 @@ def test_rebuild_sidecar_job_budget(spark, built, tmp_path, monkeypatch):
     assert not [
         e for e in os.listdir(runner.root) if e.startswith("_bloom_agg_tmp_")
     ]
+
+
+def test_target_reads_take_schema_from_one_footer(spark, built):
+    """Every frame the engine builds over its own snapshot files — each
+    pipeline table and the latest table — has the schema Spark infers
+    from the same files, nullability included, and building it runs no
+    Spark job: the schema comes from one footer, not an inference job."""
+    from mrsboraetl_spark.sources.footer_stats import footer_schema
+
+    runner = built["runner"]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for table in PipelineRunner._CLUSTER_BY:
+        path = runner._path(table)
+        files = snapshot.files(path)
+        assert files, table
+        inferred = spark.read.parquet(*files).schema
+        assert footer_schema(files[0]) == inferred, table
+        j0 = int(dag.numTotalJobs())
+        frames = [
+            runner.read_target(table),
+            runner.read_target_at(table, runner.snapshots(table)[-1]),
+        ]
+        if table in PipelineRunner._PARTITION_SRC:
+            m = sorted(snapshot.load(path)["months"])[0]
+            frames += [
+                runner.read_target_months(table, [m]),
+                runner.read_target_months(table, []),
+                runner._read_target_files(table, [m], {m: None}),
+            ]
+        else:
+            frames.append(runner._versioned(table).read(spark))
+        for df in frames:
+            assert df.schema == inferred, table
+        assert int(dag.numTotalJobs()) == j0, table
 
 
 def test_bloom_probe_driver_transfer_is_month_bounded(

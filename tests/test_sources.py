@@ -302,3 +302,65 @@ def test_footer_signal_pins_listing_against_live_writer(spark, tmp_path):
     sig = r._signal_maxes(path, df, "date_created")[0]
     assert sig == pinned_max, (sig, pinned_max)
     assert sig < late, "signal must not cover the unprocessed late file"
+
+
+def test_watermark_log_read_matches_spark_spelling(spark, tmp_path):
+    """``last_update`` reads flat_log with pyarrow and returns what the
+    Spark aggregate over the same log collects: max(date_updated) per
+    table as naive UTC, NULL rows ignored, other tables' rows ignored,
+    Spark-written INT96 files included — at zero Spark jobs.  The
+    fallback and epoch legs are unchanged."""
+    import datetime as dt
+
+    from mrsboraetl_spark.schemas import FLAT_LOG_SCHEMA
+    from mrsboraetl_spark.sources.watermark import EPOCH, WatermarkStore
+
+    path = str(tmp_path / "flat_log")
+    ws = WatermarkStore(spark, path)
+    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
+    ws.log_run("flat_obs", t0, dt.datetime(2024, 2, 1, 8, 30, 0, 123456))
+    ws.log_run("flat_obs", t0, dt.datetime(2024, 2, 3, 0, 0, 1))
+    ws.log_run("flat_obs", t0, None)
+    ws.log_run("flat_orders", t0, dt.datetime(2025, 1, 1))
+    ws.log_run("flat_lab_obs", t0, None)
+    # a legacy Spark-written log file in INT96, holding the table max
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.createDataFrame(
+            [
+                (t0, dt.datetime(2024, 2, 5, 23, 59, 59, 999999),
+                 "flat_obs", 3),
+                (t0, None, "flat_visit_summary", 1),
+            ],
+            FLAT_LOG_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(path)
+    finally:
+        spark.conf.set(
+            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        )
+
+    log = ws._read()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for table in ("flat_obs", "flat_orders"):
+        want = (
+            log.filter(F.col("table_name") == table)
+            .agg(F.max("date_updated").alias("wm"))
+            .first()["wm"]
+        )
+        j0 = int(dag.numTotalJobs())
+        got = ws.last_update(table)
+        assert int(dag.numTotalJobs()) == j0, table
+        assert got == want and got.tzinfo is None, (table, got, want)
+    assert ws.last_update("flat_obs") == dt.datetime(
+        2024, 2, 5, 23, 59, 59, 999999
+    )
+    # NULL-only and absent tables fall through to fallback, then epoch
+    fb = spark.createDataFrame(
+        [(dt.datetime(2023, 7, 1),)], "max_date_created timestamp"
+    )
+    for table in ("flat_lab_obs", "flat_visit_summary", "no_such_table"):
+        assert ws.last_update(table) == EPOCH, table
+        assert ws.last_update(table, fallback=fb) == dt.datetime(2023, 7, 1)
+    assert WatermarkStore(spark, str(tmp_path / "absent")).last_update(
+        "flat_obs", fallback=fb
+    ) == dt.datetime(2023, 7, 1)

@@ -592,3 +592,33 @@ def test_pinned_parent_commit_rejects_plan_phase_conflict(spark, vt):
     )
     assert v == 2
     assert [r.v for r in vt.read(spark).collect()] == ["replanned"]
+
+
+def test_recorded_rows_come_from_footers(spark, vt, monkeypatch):
+    """``rows`` of a commit and of merge_delta over a base without
+    per-file stats equals a scan of the snapshot, and no count job
+    computes it: the staged and reused files' footers hold it."""
+    try:
+        import pyspark.sql.classic.dataframe as _dfmod
+    except ImportError:  # pragma: no cover - pyspark < 4
+        import pyspark.sql.dataframe as _dfmod
+
+    counted: list[int] = []
+    real_count = _dfmod.DataFrame.count
+
+    def spy(self):
+        counted.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(_dfmod.DataFrame, "count", spy)
+    base = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(300)], "pk long, v string"
+    ).repartition(4)
+    vt.commit(base, note="no stats")
+    vt.merge_delta(spark, _df(spark, [(5, "x"), (1000, "y")]), ["pk"])
+    vt.merge_delta(spark, _df(spark, [(7, "z")]), ["pk"])
+    assert not counted, counted
+    monkeypatch.setattr(_dfmod.DataFrame, "count", real_count)
+    for h in vt.history():
+        assert h["rows"] == vt.read(spark, version=h["version"]).count(), h
+    assert vt.rows() == 301
