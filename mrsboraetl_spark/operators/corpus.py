@@ -115,6 +115,16 @@ def curate_corpus(
       (id, stream, seq_idx, tok_offset, n_tokens).
 
     ``eval_df=None`` skips decontamination (no benchmark to protect).
+
+    Unlike the rest of this package's operators, the call is not lazy:
+    it runs the verdict jobs before it returns.  The quality survivors
+    and the contaminated ids are id-only tables materialized once,
+    eagerly (a lazy checkpoint misbehaves under more than one consumer;
+    see dedup.minhash_lsh_pairs); the duplicate ids are a join against
+    the cluster labels connected_components has already materialized.
+    The next stage's input, ``kept``, ``audit`` and ``packed`` are then
+    scans of the documents joined to those tables, so no action on them
+    re-runs the quality, decontam or near-dup kernels.
     """
     cfg = cfg or CurationConfig()
     ids = docs.select(F.col(id_col).alias("id"))
@@ -182,7 +192,7 @@ def curate_corpus(
     q = quality_filter(
         docs, id_col, wcol, min_tokens=cfg.min_tokens, langs=cfg.langs
     )
-    q_keep_ids = q.filter(F.col("keep")).select("id")
+    q_keep_ids = q.filter(F.col("keep")).select("id").localCheckpoint()
     survivors = docs.join(
         q_keep_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
     )
@@ -199,7 +209,7 @@ def curate_corpus(
         )
         contaminated = contamination_counts(
             survivors, eval_for_probe, id_col, wcol, n=cfg.decontam_n
-        ).select(F.col(id_col).alias("id"))
+        ).select(F.col(id_col).alias("id")).localCheckpoint()
         survivors = survivors.join(
             contaminated.withColumnRenamed("id", id_col),
             id_col,
@@ -243,14 +253,7 @@ def curate_corpus(
         "_wtext", "_full_tok"
     )
 
-    # 5. pack the train split
-    packed = pack_sequences(
-        kept.filter(F.col("split") == "train"),
-        id_col,
-        text_col,
-        budget=cfg.pack_budget,
-        n_streams=cfg.pack_streams,
-    )
+    packed = _pack_train(kept, id_col, text_col, cfg)
 
     # audit: disposition per input doc, first matching stage wins
     audit = (
@@ -281,6 +284,19 @@ def curate_corpus(
     return kept, audit, packed
 
 
+def _pack_train(
+    kept: DataFrame, id_col: str, text_col: str, cfg: CurationConfig
+) -> DataFrame:
+    """5. PACK: the packing assignment of ``kept``'s train split."""
+    return pack_sequences(
+        kept.filter(F.col("split") == "train"),
+        id_col,
+        text_col,
+        budget=cfg.pack_budget,
+        n_streams=cfg.pack_streams,
+    )
+
+
 def curate_and_export(
     docs: DataFrame,
     eval_df: DataFrame | None,
@@ -306,7 +322,14 @@ def curate_and_export(
 
     Returns {'manifest': ..., 'dispositions': {...}} — both from
     bounded driver actions (the shard manifest's n_shards rows and one
-    disposition groupBy).
+    disposition groupBy of the written audit).
+
+    Every stage runs once per call: curate_corpus materializes the
+    per-stage verdicts, ``kept`` is materialized once and everything
+    below is cut from it (the packing, the sequences, val and test),
+    the sequences are materialized once for the shard writer's three
+    reads (weight total, write, per-shard stats), and the dispositions
+    are counted from the audit as written.
     """
     import os
 
@@ -314,23 +337,28 @@ def curate_and_export(
     from mrsboraetl_spark.sources.shards import write_training_shards
 
     cfg = cfg or CurationConfig()
-    kept, audit, packed = curate_corpus(
+    kept, audit, _ = curate_corpus(
         docs, eval_df, id_col=id_col, text_col=text_col, cfg=cfg
     )
-    kept = kept.localCheckpoint()  # consumed three times below
-    seqs = materialize_sequences(
-        packed,
-        kept.withColumnRenamed("id", id_col)
-        if id_col not in kept.columns
-        else kept,
-        id_col,
-        text_col,
-        cfg.pack_budget,
-    ).withColumn(
-        "id", F.concat_ws(":", F.col("stream"), F.col("seq_idx"))
+    kept = kept.localCheckpoint()
+    seqs = (
+        materialize_sequences(
+            _pack_train(kept, id_col, text_col, cfg),
+            kept,
+            id_col,
+            text_col,
+            cfg.pack_budget,
+        )
+        .select(
+            F.concat_ws(":", F.col("stream"), F.col("seq_idx")).alias("id"),
+            "seq_text",
+            "seq_tokens",
+            "boundaries",
+        )
+        .localCheckpoint()
     )
     manifest = write_training_shards(
-        seqs.select("id", "seq_text", "seq_tokens", "boundaries"),
+        seqs,
         "id",
         os.path.join(out_dir, "train_shards"),
         n_shards,
@@ -341,10 +369,12 @@ def curate_and_export(
         kept.filter(F.col("split") == split).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, split))
-    audit.write.mode("overwrite").parquet(os.path.join(out_dir, "audit"))
+    audit_dir = os.path.join(out_dir, "audit")
+    audit.write.mode("overwrite").parquet(audit_dir)
     dispositions = {
         r.disposition: r.c
-        for r in audit.groupBy("disposition")
+        for r in kept.sparkSession.read.parquet(audit_dir)
+        .groupBy("disposition")
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
     }

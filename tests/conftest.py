@@ -56,7 +56,6 @@ def sf_dir_mid():
 _SLOW_TESTS = {
     "test_ann_index.py::test_retrain_flattens_skew_and_keeps_contracts",
     "test_ann_index.py::test_streaming_skew_triggers_exactly_one_retrain",
-    "test_corpus_pipeline.py::test_curate_and_export_end_to_end",
     "test_corpus_pipeline.py::test_priority_keeper_policy_in_composed_pipeline",
     "test_file_level_writes.py::test_file_level_sync_rewrites_only_touched_files",
     "test_file_level_writes.py::test_lab_file_level_sync_rewrites_only_touched_files",

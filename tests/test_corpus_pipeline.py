@@ -4,6 +4,7 @@ own; these tests pin the COMPOSITION)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.operators.corpus import CurationConfig, curate_corpus
@@ -156,22 +157,57 @@ def test_optin_stages_default_off_matches_previous_behavior(spark, sf_dir):
     assert "boilerplate" not in {d for _, d in a}
 
 
-def test_curate_and_export_end_to_end(spark, tmp_path):
-    """Raw docs -> curate -> exact-cut sequences -> token-balanced
-    shards + val/test + audit, all on disk with a committed manifest."""
-    import os
+# Spark jobs one curate_and_export of the ``export`` fixture may run:
+# measured 101 with the verdicts, the kept corpus and the sequences each
+# materialized once and the dispositions counted from the written audit
+# (106-129 without any one of the last three; 160-163 when every action on
+# the outputs re-ran the curation lineage), plus two jobs of headroom.
+EXPORT_JOBS = 103
 
+
+@pytest.fixture(scope="module")
+def export(spark, tmp_path_factory):
+    """One curate_and_export of a 120-document corpus, shared by the
+    tests below, with every stage dropping something: every 12th
+    document is too short, the next repeats an eval document, the next
+    is a near copy of its successor.  Returns the input, the output
+    directory, the result, and the call's Spark jobs and kernel queries
+    (SQL executions whose plan runs an Arrow kernel, MapInPandas)."""
     from mrsboraetl_spark.operators.corpus import curate_and_export
-    from mrsboraetl_spark.sources.shards import read_manifest
+
+    def text(i):
+        return " ".join(f"w{i}x{j}" for j in range(12 + i % 9))
+
+    def eval_text(k):
+        return " ".join(f"e{k}x{j}" for j in range(12))
 
     rows = [
-        (i, " ".join(f"w{i}x{j}" for j in range(12 + i % 9)), "src0")
+        (
+            i,
+            {0: f"w{i} short", 1: eval_text(i % 5), 2: text(i + 1) + " end"}
+            .get(i % 12, text(i)),
+            "src0",
+        )
         for i in range(120)
     ]
-    docs = spark.createDataFrame(rows, "doc_id int, text string, source string")
-    eval_df = docs.filter(F.col("doc_id") % 31 == 0)
-    train = docs.filter(F.col("doc_id") % 31 != 0)
-    out = str(tmp_path / "export")
+    train = spark.createDataFrame(
+        rows, "doc_id int, text string, source string"
+    )
+    eval_df = spark.createDataFrame(
+        [(1000 + k, eval_text(k), "eval") for k in range(5)],
+        "doc_id int, text string, source string",
+    )
+    out = str(tmp_path_factory.mktemp("export"))
+    sc = spark.sparkContext._jsc.sc()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty()
+        execs = sql_store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = {int(e.executionId()) for e in executions()}
+    j0 = int(sc.dagScheduler().numTotalJobs())
     res = curate_and_export(
         train,
         eval_df,
@@ -179,6 +215,24 @@ def test_curate_and_export_end_to_end(spark, tmp_path):
         n_shards=3,
         cfg=CurationConfig(min_tokens=5, pack_budget=32, pack_streams=4),
     )
+    jobs = int(sc.dagScheduler().numTotalJobs()) - j0
+    kernel_queries = sum(
+        "MapInPandas" in e.physicalPlanDescription()
+        for e in executions()
+        if int(e.executionId()) not in before
+    )
+    return dict(train=train, out=out, res=res, jobs=jobs,
+                kernel_queries=kernel_queries)
+
+
+def test_curate_and_export_end_to_end(spark, export):
+    """Raw docs -> curate -> exact-cut sequences -> token-balanced
+    shards + val/test + audit, all on disk with a committed manifest."""
+    import os
+
+    from mrsboraetl_spark.sources.shards import read_manifest
+
+    train, out, res = export["train"], export["out"], export["res"]
     assert sum(res["dispositions"].values()) == train.count()
     man = read_manifest(os.path.join(out, "train_shards"))
     assert man["n_shards"] == 3 and man["weight_col"] == "seq_tokens"
@@ -214,6 +268,46 @@ def test_curate_and_export_end_to_end(spark, tmp_path):
     assert set(shards.columns) == {
         "id", "seq_text", "seq_tokens", "boundaries", "pos", "shard"
     }
+
+
+def test_curate_and_export_runs_each_stage_once(spark, export):
+    """Every curation stage is evaluated once per export: each of the
+    three Arrow kernels (quality, decontamination, LSH signatures) runs
+    in one query, and the call stays within EXPORT_JOBS.  The outputs
+    still agree with each other: the dispositions are the written
+    audit's, every stage fired, and the kept documents are exactly
+    val + test + the documents the train shards carry."""
+    import os
+
+    out, res = export["out"], export["res"]
+    assert export["kernel_queries"] == 3
+    assert export["jobs"] <= EXPORT_JOBS
+    audit = spark.read.parquet(os.path.join(out, "audit"))
+    assert res["dispositions"] == {
+        r.disposition: r["count"]
+        for r in audit.groupBy("disposition").count().collect()
+    }
+    assert set(res["dispositions"]) == {
+        "quality", "contaminated", "duplicate", "kept"
+    }
+    kept_ids = {
+        r.id for r in audit.filter(F.col("disposition") == "kept").collect()
+    }
+    held_out = {
+        r.doc_id
+        for split in ("val", "test")
+        for r in spark.read.parquet(os.path.join(out, split))
+        .select("doc_id")
+        .collect()
+    }
+    in_shards = {
+        r.id
+        for r in spark.read.parquet(os.path.join(out, "train_shards"))
+        .select(F.explode("boundaries.id").alias("id"))
+        .collect()
+    }
+    assert held_out and in_shards
+    assert kept_ids == held_out | in_shards
 
 
 def test_priority_keeper_policy_in_composed_pipeline(spark):
