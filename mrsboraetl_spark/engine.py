@@ -1640,6 +1640,15 @@ class PipelineRunner:
         # epoch never collide; post-flip GC sweeps orphans.
         man_old = snapshot.load(path)
         live_months = (man_old or {"months": {}})["months"]
+        live = snapshot.files(path, man=man_old)
+        if live:
+            # Stage in the live files' column order: read_files takes a
+            # table's schema from ONE file's footer, and a plan's delta
+            # may list the same columns in another order.
+            order = footer_schema(live[0]).fieldNames()
+            order.append(self.PARTITION_COL)
+            if sorted(order) == sorted(df.columns):
+                df = df.select(*order)
         # CAS parent: the caller's plan-time pin when given (ADVICE
         # r12, medium), else captured here; raw-pointer fallback keeps
         # the heal flip of an unresolvable snapshot possible (ADVICE

@@ -1,22 +1,22 @@
-"""The rename-aside atomic swap and its crash rescue, shared by the
-engine's plain-layout table writer and the persistent incremental
-indexes (span_index, lsh_index, ann_index, stats_index).
+"""The rename-aside atomic swap and its crash rescue, for the two
+writers whose output must stay a plain parquet directory that any
+``spark.read.parquet(path)`` reads: the engine's plain-layout table
+writer (``PipelineRunner._write``) and ``sources/layout.compact_parquet``.
+Everything else commits through the snapshot protocol
+(sources/snapshot.py).
 
 ``swap_in`` commits a staged directory with ``os.replace(data,
 data.old)`` then ``os.replace(new, data)``.  A process crash BETWEEN the
 two replaces leaves no data directory at all — the committed state sits
-intact at ``.old``.  Without rescue the next open would see
-``is_empty()``, a subsequent ingest would start a fresh table, and the
-following compact's cleanup of ``.old`` would permanently delete the
-original corpus state (the silent-data-loss chain the round-5 advisor
-flagged).
+intact at ``.old``.  Without rescue the next run would see no table,
+rebuild from scratch, and the following swap's cleanup of ``.old``
+would delete the state it could have recovered.
 
 ``rescue_orphan`` is that recovery: restore ``.old`` when the data path
-is missing.  It runs at index OPEN (and before the engine reads or skips
-a plain-layout target), before any is_empty / ingest / compact can
-observe the orphaned state.  If both the data path and ``.old`` exist,
-the crash happened after the second replace (commit complete) — the
-``.old`` is stale garbage and the next swap's cleanup of it is safe.
+is missing.  It runs before the engine reads or skips a plain-layout
+target.  If both the data path and ``.old`` exist, the crash happened
+after the second replace (commit complete) — the ``.old`` is stale
+garbage and the next swap's cleanup of it is safe.
 """
 
 from __future__ import annotations

@@ -8,8 +8,9 @@ re-assigns every vector to its coarse cell per run; at 100 TB the
 corpus assignment pass is the avoidable cost, because cell assignment
 is a pure function of (vector, centroids) once the quantizer is pinned.
 
-* The CENTROIDS are fixed at index creation and stored next to the data
-  (``_centroids.json``).  That makes the incremental contract EXACT:
+* The CENTROIDS are fixed at index creation and pinned, with their
+  epoch, in the snapshot of the cell table.  That makes the incremental
+  contract EXACT:
   ingesting a corpus in any batch split yields the identical cell table
   as one-shot assignment, so ``topk`` equals the batch operator on the
   same centroids bit-for-bit (pytest-pinned) — the same
@@ -18,8 +19,8 @@ is a pure function of (vector, centroids) once the quantizer is pinned.
   The trade-off is drift: a pinned quantizer slowly mismatches a
   shifting embedding distribution.  That is the standard IVF operating
   model (FAISS-style: retrain offline, re-assign, swap) — ``retrain``
-  is deliberately a NEW index + bulk re-ingest, never an in-place
-  mutation.
+  re-assigns the whole table under a NEW centroid epoch, never an
+  in-place mutation.
 
 * ``ingest`` appends (id, cell, vec) with the assignment done by the
   same broadcast-centroid expression as the batch operator — one
@@ -30,28 +31,38 @@ is a pure function of (vector, centroids) once the quantizer is pinned.
   index), candidates rank by exact cosine per query.
 
 * ``compact`` folds the per-ingest files AND clusters the layout by
-  cell (repartition on the cell key behind the rename-aside swap), so
-  post-compaction probes read ~nprobe/n_centroids of the files — the
-  file-layout half of the IVF bargain.
+  cell (repartition on the cell key), so post-compaction probes read
+  ~nprobe/n_centroids of the files — the file-layout half of the IVF
+  bargain.
+
+* The cell table is an ``AppendOnlyTable`` (sources/append_table.py)
+  under ``cells``: each ingest, the compaction and a retrain are one
+  snapshot flip each, so a crash anywhere before a flip leaves the
+  index exactly as it was.  A retrain's flip names the re-assigned
+  cells AND the new centroids and epoch, so a reader can never pair
+  cells with the wrong quantizer.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.similarity import (
     _nearest_cells_expr,
     cosine,
     nearest_cells_kernel,
 )
-from mrsboraetl_spark.sources import snapshot
+from mrsboraetl_spark.sources.append_table import (
+    AppendOnlyTable,
+    refuse_pre_snapshot,
+)
+
+
+def _norm(centroids) -> list[tuple[int, list[float]]]:
+    return [(int(c), [float(x) for x in v]) for c, v in centroids]
 
 
 class IvfIndex:
@@ -66,79 +77,30 @@ class IvfIndex:
         required when creating; when opening an existing index it may be
         omitted (loaded from disk) — passing a DIFFERENT set raises."""
         self.path = path
-        self.cent_path = os.path.join(path, "_centroids.json")
+        self.cells_path = os.path.join(path, "cells")
         self.id_col = id_col
         self.vec_col = vec_col
-        if os.path.exists(self.cent_path):
-            with open(self.cent_path) as f:
-                manifest = json.load(f)
-            # Back-compat: pre-epoch manifests are a bare centroid list
-            # with the data always under "cells".
-            if isinstance(manifest, list):
-                manifest = {
-                    "epoch": 0, "cells_dir": "cells", "centroids": manifest
-                }
-            stored = [
-                (int(c), [float(x) for x in v])
-                for c, v in manifest["centroids"]
-            ]
-            if centroids is not None:
-                given = [
-                    (int(c), [float(x) for x in v]) for c, v in centroids
-                ]
-                if given != stored:
-                    raise ValueError(
-                        f"index at {path} has pinned centroids; "
-                        "call retrain() for a quantizer refresh"
-                    )
-            self.centroids = stored
-            self.epoch = int(manifest["epoch"])
-            self.cells_path = os.path.join(path, manifest["cells_dir"])
-        else:
+        refuse_pre_snapshot(
+            os.path.join(path, "_centroids.json"), self.cells_path
+        )
+        pinned = AppendOnlyTable(self.cells_path).params
+        if pinned is None:
             if centroids is None:
                 raise ValueError("creating an index requires centroids")
-            self.centroids = [
-                (int(c), [float(x) for x in v]) for c, v in centroids
-            ]
-            self.epoch = 0
-            self.cells_path = os.path.join(path, "cells")
-        # Restore a compact() crash's '.old' before is_empty can lie;
-        # drop cell directories no committed epoch references (retrain
-        # crash orphans — invisible, but disk they need not hold).
-        rescue_orphan(self.cells_path)
-        current = os.path.basename(self.cells_path)
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                if (
-                    d.startswith("cells")
-                    and d != current
-                    and not d.endswith(".old")
-                    and os.path.isdir(os.path.join(self.path, d))
-                ):
-                    shutil.rmtree(
-                        os.path.join(self.path, d), ignore_errors=True
-                    )
-
-    def _commit_centroids(self) -> None:
-        if not os.path.exists(self.cent_path):
-            os.makedirs(self.path, exist_ok=True)
-            self._write_manifest()
-
-    def _write_manifest(self) -> None:
-        """Atomic manifest write — the COMMIT POINT tying (epoch,
-        centroids, cells directory) together so readers never see a
-        quantizer/assignment mismatch."""
-        snapshot.write_json(
-            self.cent_path,
-            {
-                "epoch": self.epoch,
-                "cells_dir": os.path.basename(self.cells_path),
-                "centroids": self.centroids,
-            },
-        )
+            pinned = {"epoch": 0, "centroids": _norm(centroids)}
+        elif centroids is not None and _norm(centroids) != _norm(
+            pinned["centroids"]
+        ):
+            raise ValueError(
+                f"index at {path} has pinned centroids; "
+                "call retrain() for a quantizer refresh"
+            )
+        self.table = AppendOnlyTable(self.cells_path, pinned)
+        self.centroids = _norm(pinned["centroids"])
+        self.epoch = int(pinned["epoch"])
 
     def is_empty(self) -> bool:
-        return not os.path.exists(self.cells_path)
+        return not self.table.committed()
 
     def assign_cells(self, vectors: DataFrame) -> DataFrame:
         """(id, cell, vec) — the pure-function assignment every ingest
@@ -164,13 +126,12 @@ class IvfIndex:
         O(|batch|) agg over the pinned assignment) — lets a streaming
         caller maintain running occupancy without ever re-scanning the
         index (see streaming/ann.py's retrain trigger)."""
-        self._commit_centroids()
         assigned = self.assign_cells(new_vectors)
         if not return_cell_counts:
-            assigned.write.mode("append").parquet(self.cells_path)
+            self.table.append(assigned)
             return None
         assigned = assigned.localCheckpoint()
-        assigned.write.mode("append").parquet(self.cells_path)
+        self.table.append(assigned)
         return {
             int(r["cell"]): int(r["n"])
             for r in assigned.groupBy("cell")
@@ -179,9 +140,7 @@ class IvfIndex:
         }
 
     def cells(self, spark: SparkSession) -> DataFrame | None:
-        if self.is_empty():
-            return None
-        return spark.read.parquet(self.cells_path)
+        return self.table.read(spark)
 
     def cell_occupancy(self, spark: SparkSession) -> DataFrame:
         """(cell, n) over the persisted assignment — the quantizer-skew
@@ -242,22 +201,17 @@ class IvfIndex:
         self, spark: SparkSession, n_files: int | None = None
     ) -> None:
         """Fold per-ingest files into a cell-clustered layout (one hash
-        shuffle on the cell key) behind the rename-aside atomic swap.
+        shuffle on the cell key), published by one snapshot flip.
         Cells are disjoint across output files, so a probe of nprobe
         cells opens ~nprobe/n_centroids of them."""
         if self.is_empty():
             return
         n = n_files or max(len(self.centroids) // 4, 1)
-        tmp = self.cells_path + f".compact-{uuid.uuid4().hex[:8]}"
-        (
+        self.table.replace(
             self.cells(spark)
             .repartition(n, F.col("cell"))
             .sortWithinPartitions("cell")
-            .write.mode("overwrite")
-            .parquet(tmp)
         )
-        swap_in(tmp, self.cells_path)
-
 
     def skew_ratio(self, spark: SparkSession) -> float:
         """Hottest cell's occupancy over the ALL-CENTROID mean
@@ -328,11 +282,11 @@ class IvfIndex:
         per-plan at the boundary case where a true mean sits exactly
         on a rounding edge — in practice identical across configs).
         Within an epoch, batch-split ingestion still equals one-shot
-        assignment bit-for-bit — the epoch is IN the manifest, so a
-        reader can never pair new cells with old centroids: the staged
-        reassignment directory becomes visible only through the atomic
-        manifest swap (crash before it leaves the old epoch fully
-        intact; the orphaned staging dir is swept at next open).
+        assignment bit-for-bit — the centroids and epoch are pinned in
+        the cell table's snapshot, and one flip publishes them with
+        the reassigned cells, so a reader can never pair new cells
+        with old centroids (a crash before the flip leaves the old
+        epoch fully intact; its staging is an orphan the GC sweeps).
 
         Returns the new epoch number.  Cost: iters+1 passes over the
         sample + ONE pass over the full table — the FAISS operating
@@ -392,8 +346,7 @@ class IvfIndex:
             cents = [(c, means.get(c, v)) for c, v in cents]
 
         new_epoch = self.epoch + 1
-        new_dir = os.path.join(self.path, f"cells.e{new_epoch}")
-        (
+        self.table.replace(
             nearest_cells_kernel(
                 stored.select(self.id_col, self.vec_col),
                 self.vec_col, cents, 1,
@@ -404,16 +357,10 @@ class IvfIndex:
                 F.col(self.vec_col),
             )
             .repartition(max(k // 4, 1), F.col("cell"))
-            .sortWithinPartitions("cell")
-            .write.mode("overwrite")
-            .parquet(new_dir)
+            .sortWithinPartitions("cell"),
+            params={"epoch": new_epoch, "centroids": cents},
         )
-        old_dir = self.cells_path
-        self.centroids, self.epoch, self.cells_path = (
-            cents, new_epoch, new_dir
-        )
-        self._write_manifest()  # the commit point
-        shutil.rmtree(old_dir, ignore_errors=True)
+        self.centroids, self.epoch = cents, new_epoch
         return new_epoch
 
     def pairs_above(

@@ -27,27 +27,30 @@ the banded-minhash state on storage between runs:
 
 At cluster scale the band table is the thing you would bucket
 (``writers.saveAsTable(..., bucketBy(bk))``) so the per-ingest probe
-join is co-located instead of a shuffle; the parquet-append layout here
-keeps the same plan shape with one extra exchange.  Appends are
-crash-safe in the same sense as Spark's parquet append (a failed job
-leaves no committed files); parameters are pinned in ``_meta.json`` so
-an index can never be probed with a mismatched hash family.  One writer
-at a time: concurrent ingests into the same index would interleave
-appends without coordination (the streaming driver in
-streaming/dedup.py serializes batches; for multi-writer setups put a
-VersionedTable in front of the band table).
+join is co-located instead of a shuffle; the snapshot-committed layout
+here keeps the same plan shape with one extra exchange.  The band table
+is an ``AppendOnlyTable`` (sources/append_table.py) under ``bands``:
+each ingest is one snapshot flip, so a crash anywhere before it leaves
+the batch invisible and the index exactly as it was; ``compact`` is one
+more flip, the old or the new layout and never a mix.  The parameters
+are pinned in the same snapshot, so an index can never be probed with a
+mismatched hash family.  One writer at a time: a concurrent ingest
+fails the snapshot's compare-and-swap instead of landing (the streaming
+driver in streaming/dedup.py serializes batches).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.dedup import bands_from_sig, hashed_sig_docs
+from mrsboraetl_spark.sources.append_table import (
+    AppendOnlyTable,
+    refuse_pre_snapshot,
+)
 
 
 class LshBandIndex:
@@ -60,38 +63,23 @@ class LshBandIndex:
     ):
         self.path = path
         self.bands_path = os.path.join(path, "bands")
-        # Restore a compact() crash's '.old' before is_empty can lie.
-        rescue_orphan(self.bands_path)
-        self.meta_path = os.path.join(path, "_meta.json")
         self.params = {
             "num_hashes": num_hashes,
             "k": k,
             "rows_per_band": rows_per_band,
         }
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                stored = json.load(f)
-            if stored != self.params:
-                raise ValueError(
-                    f"index at {path} was built with {stored}, "
-                    f"asked to open with {self.params}"
-                )
-
-    def _commit_meta(self) -> None:
-        if not os.path.exists(self.meta_path):
-            os.makedirs(self.path, exist_ok=True)
-            with open(self.meta_path, "w") as f:
-                json.dump(self.params, f)
+        refuse_pre_snapshot(
+            os.path.join(path, "_meta.json"), self.bands_path
+        )
+        self.table = AppendOnlyTable(self.bands_path, self.params)
 
     def is_empty(self) -> bool:
-        return not os.path.exists(self.bands_path)
+        return not self.table.committed()
 
     def bands(self, spark: SparkSession) -> DataFrame | None:
         """The accumulated (doc, band, bk) table, or None if nothing has
         been ingested yet."""
-        if self.is_empty():
-            return None
-        return spark.read.parquet(self.bands_path)
+        return self.table.read(spark)
 
     def ingest(
         self,
@@ -116,12 +104,11 @@ class LshBandIndex:
         new_bands = bands_from_sig(
             sigged, self.params["num_hashes"], self.params["rows_per_band"]
         )
-        self._commit_meta()
-        new_bands.write.mode("append").parquet(self.bands_path)
+        self.table.append(new_bands)
         # Probe AFTER the append: the committed files already include this
         # batch, so one scan serves as both materialized new side and the
         # full index (new-vs-new pairs come from the same join).
-        all_bands = spark.read.parquet(self.bands_path)
+        all_bands = self.table.read(spark)
         probe = new_bands  # small side: this batch only (sig checkpointed)
         if max_band_freq is not None:
             keep = (
@@ -152,22 +139,16 @@ class LshBandIndex:
     ) -> None:
         """Fold the per-ingest band files into a band-key-clustered
         layout (one hash shuffle on (band, bk), bk-sorted within files
-        so parquet row-group stats prune probe reads) behind the same
-        rename-aside atomic swap as the other persistent indexes.  Pair
-        semantics are untouched — compaction only moves rows."""
-        import uuid
-
+        so parquet row-group stats prune probe reads), published by one
+        snapshot flip.  Pair semantics are untouched — compaction only
+        moves rows."""
         if self.is_empty():
             return
         n = n_files or max(
             spark.sparkContext.defaultParallelism // 2, 1
         )
-        tmp = self.bands_path + f".compact-{uuid.uuid4().hex[:8]}"
-        (
-            spark.read.parquet(self.bands_path)
+        self.table.replace(
+            self.bands(spark)
             .repartition(n, F.col("band"), F.col("bk"))
             .sortWithinPartitions("band", "bk")
-            .write.mode("overwrite")
-            .parquet(tmp)
         )
-        swap_in(tmp, self.bands_path)

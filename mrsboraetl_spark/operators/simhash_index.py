@@ -16,19 +16,26 @@ run suppresses a subset of what the batch cap suppresses).
 The band table is denormalized with the 32-char fingerprint on every
 band row (n_bands copies per doc) so the probe verifies Hamming
 IN-ROW after the band equi-join — no second fingerprint join against
-the accumulated corpus.  Single writer; streaming drains reuse the
-foreachBatch pattern of streaming/dedup.py verbatim.
+the accumulated corpus.  The band table is an ``AppendOnlyTable``
+(sources/append_table.py) under ``bands``, committed exactly like the
+LSH index's: one snapshot flip per ingest (a crash before it leaves the
+batch invisible), the band geometry pinned in the same snapshot.
+Single writer; streaming drains reuse the foreachBatch pattern of
+streaming/dedup.py verbatim.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.operators.dedup import simhash_bits, token_hashes
+from mrsboraetl_spark.sources.append_table import (
+    AppendOnlyTable,
+    refuse_pre_snapshot,
+)
 
 
 class SimhashIndex:
@@ -45,25 +52,14 @@ class SimhashIndex:
             )
         self.path = path
         self.bands_path = os.path.join(path, "bands")
-        self.meta_path = os.path.join(path, "_meta.json")
         self.params = {"num_bits": num_bits, "n_bands": n_bands}
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                stored = json.load(f)
-            if stored != self.params:
-                raise ValueError(
-                    f"index at {path} was built with {stored}, "
-                    f"asked to open with {self.params}"
-                )
-
-    def _commit_meta(self) -> None:
-        if not os.path.exists(self.meta_path):
-            os.makedirs(self.path, exist_ok=True)
-            with open(self.meta_path, "w") as f:
-                json.dump(self.params, f, sort_keys=True)
+        refuse_pre_snapshot(
+            os.path.join(path, "_meta.json"), self.bands_path
+        )
+        self.table = AppendOnlyTable(self.bands_path, self.params)
 
     def is_empty(self) -> bool:
-        return not os.path.exists(self.bands_path)
+        return not self.table.committed()
 
     def ingest(
         self,
@@ -108,9 +104,8 @@ class SimhashIndex:
                 )
             ).alias("band", "bk"),
         )
-        self._commit_meta()
-        new_bands.write.mode("append").parquet(self.bands_path)
-        all_bands = spark.read.parquet(self.bands_path)
+        self.table.append(new_bands)
+        all_bands = self.table.read(spark)
         probe = new_bands
         if max_band_freq is not None:
             keep = (
@@ -152,6 +147,4 @@ class SimhashIndex:
         )
 
     def bands(self, spark: SparkSession) -> DataFrame | None:
-        if self.is_empty():
-            return None
-        return spark.read.parquet(self.bands_path)
+        return self.table.read(spark)

@@ -22,65 +22,53 @@ per-batch partial counts on storage:
   two-pass pattern (ingest everything, then re-clean) closes the gap
   exactly; pipelines that can tolerate late boilerplate use one pass.
 
-The partial-counts table grows by one small file per ingest;
-``compact()`` folds it to one aggregated table via the same
-rename-aside atomic swap the engine's parquet compaction uses — crash
-before the final rename leaves the original committed state visible.
-Parameters are pinned in ``_meta.json`` so an index can never be probed
-with a mismatched span size.  Single writer at a time, as with the
-other persistent indexes (streaming/spans.py serializes micro-batches).
+The partial-counts table is an ``AppendOnlyTable``
+(sources/append_table.py) under ``counts``, growing by one small group
+per ingest, each committed by one snapshot flip (a crash before it
+leaves the batch's counts invisible); ``compact()`` folds it to one
+aggregated group in one more flip — a crash anywhere leaves the old or
+the new counts, never a mix.  The span size is pinned in the same
+snapshot, so an index can never be probed with a mismatched one.
+Single writer at a time, as with the other persistent indexes
+(streaming/spans.py serializes micro-batches).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.spans import clean_spans, doc_spans
+from mrsboraetl_spark.sources.append_table import (
+    AppendOnlyTable,
+    refuse_pre_snapshot,
+)
 
 
 class SpanFrequencyIndex:
     def __init__(self, path: str, span_tokens: int = 10):
         self.path = path
         self.counts_path = os.path.join(path, "counts")
-        # A compact() crash between its two os.replace calls leaves the
-        # committed counts only at '.old' — restore BEFORE anything can
-        # observe is_empty() and silently restart the index.
-        rescue_orphan(self.counts_path)
-        self.meta_path = os.path.join(path, "_meta.json")
         self.params = {"span_tokens": span_tokens}
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                stored = json.load(f)
-            if stored != self.params:
-                raise ValueError(
-                    f"index at {path} was built with {stored}, "
-                    f"asked to open with {self.params}"
-                )
-
-    def _commit_meta(self) -> None:
-        if not os.path.exists(self.meta_path):
-            os.makedirs(self.path, exist_ok=True)
-            with open(self.meta_path, "w") as f:
-                json.dump(self.params, f, sort_keys=True)
+        refuse_pre_snapshot(
+            os.path.join(path, "_meta.json"), self.counts_path
+        )
+        self.table = AppendOnlyTable(self.counts_path, self.params)
 
     def is_empty(self) -> bool:
-        return not os.path.exists(self.counts_path)
+        return not self.table.committed()
 
     def frequencies(self, spark: SparkSession) -> DataFrame | None:
         """(span, freq) — exact corpus-wide counts over everything
         ingested so far (partials folded at read; ``compact()`` folds
         them at rest)."""
-        if self.is_empty():
+        counts = self.table.read(spark)
+        if counts is None:
             return None
         return (
-            spark.read.parquet(self.counts_path)
-            .groupBy("span")
+            counts.groupBy("span")
             .agg(F.sum("cnt").alias("freq"))
         )
 
@@ -101,12 +89,8 @@ class SpanFrequencyIndex:
         spans = doc_spans(
             new_docs, id_col, text_col, self.params["span_tokens"]
         ).localCheckpoint()  # spanning runs once: counted AND cleaned
-        self._commit_meta()
-        (
-            spans.groupBy("span")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("append")
-            .parquet(self.counts_path)
+        self.table.append(
+            spans.groupBy("span").agg(F.count(F.lit(1)).alias("cnt"))
         )
         bad = self.frequencies(spark).filter(F.col("freq") > max_freq)
         return clean_spans(spans, bad, broadcast_bad)
@@ -131,18 +115,11 @@ class SpanFrequencyIndex:
         return clean_spans(spans, bad, broadcast_bad)
 
     def compact(self, spark: SparkSession) -> None:
-        """Fold the per-ingest partial files into one aggregated table
-        with the rename-aside atomic swap: write aggregated counts to a
-        fresh directory, move the old table aside, move the new one in,
-        drop the old.  A crash before the final rename leaves the
-        original committed state in place."""
+        """Fold the per-ingest partial counts into one aggregated group,
+        published by one snapshot flip: a crash before it leaves the
+        partials committed, after it the fold."""
         if self.is_empty():
             return
-        tmp = self.counts_path + f".compact-{uuid.uuid4().hex[:8]}"
-        (
-            self.frequencies(spark)
-            .select("span", F.col("freq").alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(tmp)
+        self.table.replace(
+            self.frequencies(spark).select("span", F.col("freq").alias("cnt"))
         )
-        swap_in(tmp, self.counts_path)

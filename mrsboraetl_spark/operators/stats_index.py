@@ -16,26 +16,27 @@ keeps mergeable per-group state on storage between runs:
   for pairs).
 
 Per-ingest cost is O(|batch|) plus a sketch-table merge whose size is
-(groups x k) — never O(|corpus|).  State promotion uses the engine's
-rename-aside swap, so readers never observe a partial state directory
-and a crash leaves the previous state at ``.old``.  Single writer at a
-time, like the band index (front with a VersionedTable for
-multi-writer setups).
+(groups x k) — never O(|corpus|).  The state is an ``AppendOnlyTable``
+(sources/append_table.py) under ``state.parquet``, and each ingest's
+fold is one ``replace``: one snapshot flip names the merged state, so a
+reader sees the previous state or the new one, and a crash anywhere
+before the flip leaves the previous state live.  ``group_col`` and
+``k`` are pinned in the same snapshot when the index is created.
+Single writer at a time, like the band index.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.operators.sketch import _hash_frac
-
-_STATE = "state.parquet"
-_META = "_meta.json"
+from mrsboraetl_spark.sources.append_table import (
+    AppendOnlyTable,
+    refuse_pre_snapshot,
+)
 
 
 class StatsIndex:
@@ -45,29 +46,9 @@ class StatsIndex:
         self.path = path
         self.group_col = group_col
         self.k = k
-        os.makedirs(path, exist_ok=True)
-        # An ingest() crash between its two os.replace calls leaves the
-        # committed state only at '.old' — restore it (the in-flight
-        # batch was never committed; its '.tmp' is overwritten next run).
-        rescue_orphan(self._state_path())
-        meta_path = os.path.join(path, _META)
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-            if meta != self._meta():
-                raise ValueError(
-                    f"index at {path} was built with {meta}, "
-                    f"got {self._meta()}"
-                )
-        else:
-            with open(meta_path, "w") as f:
-                json.dump(self._meta(), f)
-
-    def _meta(self) -> dict:
-        return {"group_col": self.group_col, "k": self.k}
-
-    def _state_path(self) -> str:
-        return os.path.join(self.path, _STATE)
+        state = os.path.join(path, "state.parquet")
+        refuse_pre_snapshot(os.path.join(path, "_meta.json"), state)
+        self.table = AppendOnlyTable(state, {"group_col": group_col, "k": k})
 
     def _batch_state(
         self, docs: DataFrame, id_col: str, text_col: str
@@ -140,25 +121,21 @@ class StatsIndex:
     def ingest(
         self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     ) -> None:
-        """Fold one batch into the persisted state (rename-aside swap)."""
-        spark = docs.sparkSession
+        """Fold one batch into the persisted state: one snapshot flip."""
         batch = self._batch_state(docs, id_col, text_col)
-        state_path = self._state_path()
-        if os.path.exists(state_path):
-            merged = self._merge(
-                spark.read.parquet(state_path), batch, self.group_col, self.k
-            )
-        else:
-            merged = batch
-        tmp = state_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_in(tmp, state_path)
+        state = self.table.read(docs.sparkSession)
+        self.table.replace(
+            batch if state is None
+            else self._merge(state, batch, self.group_col, self.k)
+        )
 
     def stats(self, spark: SparkSession) -> DataFrame:
         """(group, n_docs, n_tokens, est_distinct_tokens) from the
         persisted state — groups with fewer than k sketch entries are
         exact, exactly like kmv_distinct."""
-        st = spark.read.parquet(self._state_path())
+        st = self.table.read(spark)
+        if st is None:
+            raise ValueError(f"index at {self.path} is empty")
         n_kept = F.size("sketch")
         h_k = F.element_at("sketch", n_kept)
         return st.select(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from mrsboraetl_spark.config import WATERMARK_EPOCH
 from mrsboraetl_spark.schemas import FLAT_LOG_SCHEMA
+from mrsboraetl_spark.sources import snapshot
 from mrsboraetl_spark.sources.footer_stats import _parquet_files, _to_naive_utc
 
 EPOCH = dt.datetime.fromisoformat(WATERMARK_EPOCH)
@@ -138,4 +139,8 @@ class WatermarkStore:
         name = f"part-{uuid.uuid4().hex}-wmlog.parquet"
         tmp = os.path.join(self.path, f".{name}.tmp")
         pq.write_table(table, tmp)
+        # durable before it is visible: a torn part file would make
+        # every later _logged_max raise
+        snapshot._fsync_path(tmp)
         os.replace(tmp, os.path.join(self.path, name))
+        snapshot._fsync_path(self.path)

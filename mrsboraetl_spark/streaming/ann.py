@@ -50,7 +50,7 @@ def streaming_ingest_vectors(
     index is append-only between retrains, the accumulated counts ARE
     the occupancy, so the trigger makes the identical decision a
     ``retrain_if_skewed`` full scan would (pytest-pinned).  The retrain
-    commits a new centroid EPOCH atomically (manifest swap); batches
+    commits a new centroid EPOCH atomically (one snapshot flip); batches
     after it are assigned under the new centroids, and once occupancy
     is flat the trigger stays quiet — a single skewed regime causes
     exactly one retrain, not one per batch.  The check runs strictly

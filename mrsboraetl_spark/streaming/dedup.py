@@ -9,19 +9,20 @@ is exact (pytest-pinned in test_llmdata.py), the UNION of all emitted
 micro-batch pair sets equals the batch operator's output on the full
 corpus — arrival order and batch boundaries do not change the result.
 
-Delivery semantics: foreachBatch replays a micro-batch after a failure,
-which would re-append its bands (self-pairs are excluded by doc-id
-inequality, but a replayed batch duplicates band rows and re-emits its
-pairs).  ``_done`` batch markers give best-effort idempotence — a batch
-whose marker exists is skipped on replay; a crash BETWEEN the band
-append and the marker write still duplicates that one batch's bands, so
-downstream consumers should treat the pair sink as at-least-once and
-``distinct()`` it (dedup_cluster_keepers is insensitive to duplicate
-edges anyway).  Exactly-once needs the data append and the marker
-in one atomic commit — implemented twice: streaming/versioned_sink.py
-(manifest-swap MERGE, for state tables) and streaming/append_sink.py
-(one snapshot publish per batch, for unbounded fact streams at
-O(batch) write cost).
+Delivery semantics: foreachBatch replays a micro-batch after a failure.
+The index commits each ingest with one snapshot flip of its band table
+(sources/append_table.py), so a batch that failed before the flip left
+nothing visible and its replay ingests it once.  ``_done`` batch
+markers skip a replay whose marker exists; a crash BETWEEN the flip and
+the marker write still re-ingests that one batch under a new batch id
+(self-pairs are excluded by doc-id inequality, but its band rows are
+duplicated and its pairs re-emitted), so downstream consumers should
+treat the pair sink as at-least-once and ``distinct()`` it
+(dedup_cluster_keepers is insensitive to duplicate edges anyway).
+Exactly-once needs the replay to be recognised inside that same flip —
+the streaming batch id as the table's batch id, as the append sink
+(streaming/append_sink.py) and the versioned merge sink
+(streaming/versioned_sink.py) do for their tables.
 """
 
 from __future__ import annotations

@@ -110,7 +110,8 @@ _SLOW_TESTS = {
     "test_properties.py::test_replace_into_idempotent",
     "test_sources.py::test_engine_path_sources_equal_dataframe_sources",
     "test_sources.py::test_partitioned_engine_with_path_sources_noop_sync",
-    "test_span_index.py::test_lsh_index_compact_crash_orphan_is_rescued",
+    "test_snapshot_faults.py::test_crash_at_every_call_of_index_ingest_and_compact[ingest]",
+    "test_snapshot_faults.py::test_crash_at_every_call_of_index_ingest_and_compact[compact]",
     "test_span_index.py::test_simhash_index_batch_split_equals_batch_operator",
     "test_streaming.py::test_append_mode_finalizes_once_and_drops_late",
     "test_streaming.py::test_streaming_pipeline_sync_equals_batch_rebuild",

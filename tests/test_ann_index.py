@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from mrsboraetl_spark.operators.ann_index import IvfIndex
 from mrsboraetl_spark.queries import table
+from mrsboraetl_spark.sources import snapshot
 
 
 def _centroids(spark, sf_dir, n=16):
@@ -96,7 +97,7 @@ def test_compact_preserves_results_and_clusters_cells(
         for r in idx.topk(q, k=3, nprobe=4).collect()
     }
     n_files_before = sum(
-        f.endswith(".parquet") for f in os.listdir(idx.cells_path)
+        f.endswith(".parquet") for f in snapshot.files(idx.cells_path)
     )
     idx.compact(spark, n_files=2)
     after = {
@@ -104,7 +105,7 @@ def test_compact_preserves_results_and_clusters_cells(
         for r in idx.topk(q, k=3, nprobe=4).collect()
     }
     files = [
-        f for f in os.listdir(idx.cells_path) if f.endswith(".parquet")
+        f for f in snapshot.files(idx.cells_path) if f.endswith(".parquet")
     ]
     assert after == before
     assert len(files) < n_files_before
@@ -113,9 +114,7 @@ def test_compact_preserves_results_and_clusters_cells(
     cell_sets = [
         {
             r.cell
-            for r in spark.read.parquet(
-                os.path.join(idx.cells_path, f)
-            ).collect()
+            for r in spark.read.parquet(f).collect()
         }
         for f in files
     ]

@@ -877,3 +877,31 @@ def test_bloom_prunes_at_production_month_cardinality(spark, tmp_path):
     kdf2 = spark.createDataFrame([(77,), (99_000,)], "_k long")
     keep2 = runner._bloom_hit_months(kdf2, None, blooms)
     assert "2024-01" in keep2, keep2
+
+
+def test_delta_write_stages_months_in_the_live_column_order(spark, built):
+    """A sync's merged months reach the delta writer in the plan's
+    column order, which need not be the rebuild files' order (a
+    flat_visit_summary sync and its rebuild list the same columns in
+    two orders; here the month comes back reversed).  The writer
+    stages them in the live files' footer order, so every pipeline
+    table keeps ONE footer column order — ``read_files`` takes its
+    schema from the first file, which is then the schema Spark infers
+    over all of them, whichever file sorts first.  Rewrites one month
+    with its own rows, so the shared fixture's content is unchanged."""
+    import pyarrow.parquet as pq
+
+    runner = built["runner"]
+    table = "flat_visit_summary"
+    path = runner._path(table)
+    before = snapshot.load(path)
+    m = sorted(before["months"])[0]
+    rows = runner.read_target_months(table, [m])
+    runner._write_delta(rows.select(*reversed(rows.columns)), table, [m])
+    assert snapshot.load(path)["months"][m] != before["months"][m]
+    for t in PipelineRunner._CLUSTER_BY:
+        orders = {
+            tuple(pq.read_schema(f).names)
+            for f in snapshot.files(runner._path(t))
+        }
+        assert len(orders) == 1, (t, orders)

@@ -1,5 +1,6 @@
 """Deterministic fault-injection sweep over the snapshot protocol
-(sources/snapshot.py), Spark-free.
+(sources/snapshot.py): Spark-free for the protocol itself, and through
+a persistent index's ingest and compaction.
 
 Small "data" files are staged by hand; the module's file-system calls —
 opening a file for writing, ``os.fsync``, ``os.replace``, ``os.remove``
@@ -18,14 +19,20 @@ Covered for the inline and the split (per-group ``_man_`` files) forms
 of the pointer, each with ``keep`` 1 and 2, and for a swept commit that
 stages a new ``aux`` file or carries the previous one by relpath.
 ``publish``'s failure leg (a raising writer, a lost CAS) is pinned
-below the sweep.  The hand-enumerated crash windows of the engine's
-pipeline are pinned end to end in tests/test_manifest_layout.py.
+below the sweep.  The index leg crashes
+``SpanFrequencyIndex.ingest_and_clean`` and ``compact`` (an
+``AppendOnlyTable`` append and replace) at every counted call the same
+way: the reopened index reads exactly the old state or the new one,
+and finishing the operation converges.  The hand-enumerated crash
+windows of the engine's pipeline are pinned end to end in
+tests/test_manifest_layout.py.
 """
 
 from __future__ import annotations
 
 import builtins
 import os
+import shutil
 import time
 
 import pytest
@@ -254,3 +261,70 @@ def test_publish_failure_removes_its_staging(tmp_path):
     assert snapshot.load(d) == first
     for p in snapshot.files(d):
         assert os.path.exists(p), p
+
+
+def _span_state(spark, path: str) -> tuple:
+    """(committed group count, span frequencies) of the index reopened
+    at ``path``, after checking that every file its snapshot names
+    exists."""
+    from mrsboraetl_spark.operators.span_index import SpanFrequencyIndex
+
+    snapshot._man_cache.clear()
+    idx = SpanFrequencyIndex(path, span_tokens=2)
+    for p in snapshot.files(idx.counts_path):
+        assert os.path.exists(p), p
+    freqs = idx.frequencies(spark)
+    return len(idx.table.committed()), sorted(
+        tuple(r) for r in freqs.collect()
+    )
+
+
+@pytest.mark.parametrize("op", ["ingest", "compact"])
+def test_crash_at_every_call_of_index_ingest_and_compact(
+    spark, tmp_path, op
+):
+    from mrsboraetl_spark.operators.span_index import SpanFrequencyIndex
+
+    def batch(lo):
+        return spark.createDataFrame(
+            [(i, f"x y w{i % 2} z") for i in range(lo, lo + 3)],
+            "doc_id int, text string",
+        )
+
+    def run(path: str) -> None:
+        idx = SpanFrequencyIndex(path, span_tokens=2)
+        if op == "ingest":
+            idx.ingest_and_clean(batch(10), "doc_id", "text")
+        else:
+            idx.compact(spark)
+
+    base = str(tmp_path / "base")
+    idx = SpanFrequencyIndex(base, span_tokens=2)
+    for lo in (0, 3):
+        idx.ingest_and_clean(batch(lo), "doc_id", "text")
+    old = _span_state(spark, base)
+
+    dry = str(tmp_path / "dry")
+    shutil.copytree(base, dry)
+    with _Faults() as counter:
+        run(dry)
+    new = _span_state(spark, dry)
+    assert new != old and counter.calls > 10, counter.calls
+
+    for n in range(1, counter.calls + 1):
+        d = str(tmp_path / f"crash{n}")
+        shutil.copytree(base, d)
+        with pytest.raises(Crash), _Faults(crash_at=n):
+            run(d)
+        got = _span_state(spark, d)
+        assert got in (old, new), n
+        # a crash before the flip lost the operation, one after it only
+        # its cleanup: finishing it converges, and the index takes the
+        # next ingest
+        if got == old or op == "compact":
+            run(d)
+        assert _span_state(spark, d) == new, n
+        SpanFrequencyIndex(d, span_tokens=2).ingest_and_clean(
+            batch(20), "doc_id", "text"
+        )
+        assert _span_state(spark, d)[0] == new[0] + 1, n

@@ -364,3 +364,39 @@ def test_watermark_log_read_matches_spark_spelling(spark, tmp_path):
     assert WatermarkStore(spark, str(tmp_path / "absent")).last_update(
         "flat_obs", fallback=fb
     ) == dt.datetime(2023, 7, 1)
+
+
+def test_watermark_log_row_is_durable_before_visible(tmp_path, monkeypatch):
+    """``log_run`` fsyncs its part file before the replace that makes it
+    visible, and the log directory after it: a power loss can never
+    leave a torn ``part-*-wmlog.parquet`` that every later
+    ``_logged_max`` read would raise on.  No Spark job runs."""
+    import datetime as dt
+    import os
+
+    from mrsboraetl_spark.sources.watermark import WatermarkStore
+
+    if not os.path.isdir("/proc/self/fd"):
+        pytest.skip("needs /proc/self/fd to name fsync'd descriptors")
+    events: list[tuple[str, str]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.path.realpath(src)))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    log = str(tmp_path / "flat_log")
+    WatermarkStore(None, log).log_run(
+        "flat_obs", dt.datetime(2024, 1, 1), None
+    )
+    monkeypatch.undo()
+
+    [i] = [n for n, (kind, _p) in enumerate(events) if kind == "replace"]
+    assert ("fsync", events[i][1]) in events[:i], events
+    assert ("fsync", os.path.realpath(log)) in events[i + 1:], events

@@ -1,7 +1,8 @@
 """Persistent span-frequency index (operators/span_index.py) and its
 streaming driver (streaming/spans.py): exact count mergeability,
 batch-parity of the re-clean pass, the documented subset semantics of
-ingest-time cleaning, meta pinning, and compaction's atomic fold."""
+ingest-time cleaning, meta pinning, compaction's atomic fold, and the
+refusal of every index's pre-snapshot layout."""
 
 from __future__ import annotations
 
@@ -10,12 +11,17 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from mrsboraetl_spark.operators.ann_index import IvfIndex
+from mrsboraetl_spark.operators.lsh_index import LshBandIndex
+from mrsboraetl_spark.operators.simhash_index import SimhashIndex
 from mrsboraetl_spark.operators.span_index import SpanFrequencyIndex
 from mrsboraetl_spark.operators.spans import (
     doc_spans,
     remove_repeated_spans,
 )
+from mrsboraetl_spark.operators.stats_index import StatsIndex
 from mrsboraetl_spark.queries import table
+from mrsboraetl_spark.sources import snapshot
 
 
 def _clean_map(df):
@@ -106,12 +112,12 @@ def test_compact_preserves_frequencies_and_folds_files(
         ).count()
     before = {r.span: r.freq for r in idx.frequencies(spark).collect()}
     n_files_before = sum(
-        f.endswith(".parquet") for f in os.listdir(idx.counts_path)
+        f.endswith(".parquet") for f in snapshot.files(idx.counts_path)
     )
     idx.compact(spark)
     after = {r.span: r.freq for r in idx.frequencies(spark).collect()}
     n_files_after = sum(
-        f.endswith(".parquet") for f in os.listdir(idx.counts_path)
+        f.endswith(".parquet") for f in snapshot.files(idx.counts_path)
     )
     assert after == before
     assert n_files_after < n_files_before
@@ -253,43 +259,24 @@ def test_streaming_driver_is_index_generic(spark, sf_dir, tmp_path):
     assert got == want and got
 
 
-def test_compact_crash_orphan_is_rescued_on_reopen(spark, tmp_path):
-    """A compact() crash between its two os.replace calls leaves the
-    committed counts only at '.old'.  Reopening the index must restore
-    them — NOT report empty and let the next ingest/compact silently
-    destroy the corpus state (ADVICE r5 item 2)."""
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta " * 5) for i in range(6)],
-        "doc_id int, text string",
-    )
-    path = str(tmp_path / "idx")
-    idx = SpanFrequencyIndex(path)
-    idx.ingest_and_clean(docs, "doc_id", "text").count()
-    want = {r.span: r.freq for r in idx.frequencies(spark).collect()}
-
-    # Simulate the crash window: data moved aside, replacement never
-    # promoted (plus an orphan staging dir from the dying compact).
-    os.replace(idx.counts_path, idx.counts_path + ".old")
-    os.makedirs(idx.counts_path + ".compact-deadbeef")
-
-    reopened = SpanFrequencyIndex(path)
-    assert not reopened.is_empty()
-    got = {r.span: r.freq for r in reopened.frequencies(spark).collect()}
-    assert got == want
-
-
-def test_lsh_index_compact_crash_orphan_is_rescued(spark, tmp_path):
-    from mrsboraetl_spark.operators.lsh_index import LshBandIndex
-
-    docs = spark.createDataFrame(
-        [(i, f"some shared text body number {i % 2}") for i in range(6)],
-        "doc_id int, text string",
-    )
-    path = str(tmp_path / "lsh")
-    idx = LshBandIndex(path)
-    idx.ingest(docs, "doc_id", "text").count()
-    want = idx.bands(spark).count()
-    os.replace(idx.bands_path, idx.bands_path + ".old")
-    reopened = LshBandIndex(path)
-    assert not reopened.is_empty()
-    assert reopened.bands(spark).count() == want
+@pytest.mark.parametrize(
+    "make, marker",
+    [
+        (SpanFrequencyIndex, "_meta.json"),
+        (LshBandIndex, "_meta.json"),
+        (SimhashIndex, "_meta.json"),
+        (StatsIndex, "_meta.json"),
+        (lambda p: IvfIndex(p, [(0, [1.0, 0.0])]), "_centroids.json"),
+    ],
+    ids=["span", "lsh", "simhash", "stats", "ivf"],
+)
+def test_pre_snapshot_index_layout_is_refused(tmp_path, make, marker):
+    """An index directory written by the retired layout (parameters in
+    ``_meta.json`` / ``_centroids.json``, data in a plain parquet
+    directory, no snapshot pointer) is refused at open — reading it as
+    an empty index would let the next ingest silently drop its data."""
+    path = tmp_path / "idx"
+    path.mkdir()
+    (path / marker).write_text("{}")
+    with pytest.raises(ValueError, match="re-create"):
+        make(str(path))

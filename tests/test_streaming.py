@@ -276,7 +276,7 @@ def test_append_sink_crash_replay_no_dup_no_loss(spark, tmp_path):
     commits it — no loss; a replay of a committed batch is a no-op — no
     duplicate."""
     from mrsboraetl_spark.sources import snapshot
-    from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
+    from mrsboraetl_spark.sources.append_table import AppendOnlyTable
 
     table = AppendOnlyTable(str(tmp_path / "facts"))
 
@@ -323,8 +323,8 @@ def test_append_sink_crash_replay_no_dup_no_loss(spark, tmp_path):
 def test_streaming_append_sink_equals_source(spark, sf_dir, tmp_path):
     """Driving the sink from a real bounded file stream: the drained
     table holds exactly the source rows, once each."""
+    from mrsboraetl_spark.sources.append_table import AppendOnlyTable
     from mrsboraetl_spark.streaming.append_sink import (
-        AppendOnlyTable,
         streaming_exactly_once_append,
     )
     from mrsboraetl_spark.streaming.dedup import stream_documents
@@ -421,8 +421,8 @@ def test_append_sink_auto_compacts_and_replay_survives(spark, tmp_path):
     away (the watermark, not the directory list, carries the
     exactly-once contract across the boundary)."""
     from mrsboraetl_spark.sources import snapshot
+    from mrsboraetl_spark.sources.append_table import AppendOnlyTable
     from mrsboraetl_spark.streaming.append_sink import (
-        AppendOnlyTable,
         exactly_once_append_sink,
     )
 
@@ -471,7 +471,7 @@ def test_append_batch_keeps_one_history_file(spark, tmp_path):
     ``_snap_*.json`` history file stays (not one per micro-batch, each
     naming every group), and a dead crash orphan is swept."""
     from mrsboraetl_spark.sources import snapshot
-    from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
+    from mrsboraetl_spark.sources.append_table import AppendOnlyTable
 
     table = AppendOnlyTable(str(tmp_path / "facts"))
     # a crashed attempt's staging, older than the orphan age gate
@@ -500,7 +500,7 @@ def test_append_batch_syncs_data_and_pointer_before_it_returns(
     the pointer replace, and the table directory after it — compact's
     GC can then never leave a durable pointer naming unwritten pages."""
     from mrsboraetl_spark.sources import snapshot
-    from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
+    from mrsboraetl_spark.sources.append_table import AppendOnlyTable
 
     if not os.path.isdir("/proc/self/fd"):
         pytest.skip("needs /proc/self/fd to name fsync'd descriptors")
@@ -538,7 +538,7 @@ def test_append_table_refuses_legacy_manifest(tmp_path):
     """A directory holding the retired layout's ``_manifest.json`` and
     no snapshot pointer is refused at construction — never read as an
     empty table."""
-    from mrsboraetl_spark.streaming.append_sink import AppendOnlyTable
+    from mrsboraetl_spark.sources.append_table import AppendOnlyTable
 
     root = tmp_path / "facts"
     root.mkdir()
