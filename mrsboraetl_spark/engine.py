@@ -6,19 +6,19 @@ flat_visit_summary, flat_latest_hiv_summary.  The engine form is a driver
 loop: for each stage, resolve the watermark (I1), build the incremental (or
 full-rebuild) plan, write the target atomically, log the run.
 
-Storage is parquet, one of two layouts per runner, each target at
-``<root>/<table>.parquet``:
+Storage is parquet, each target at ``<root>/<table>.parquet``, and every
+target commits through the one snapshot protocol (sources/snapshot.py):
+data files land in immutable hidden epoch directories and one atomic
+``_snapshot.json`` flip publishes them.  The runner's layout chooses only
+how a target's files are grouped:
 
-* plain (default) — the target is rewritten whole behind one
-  rename-aside swap (operators/_swap.swap_in);
-* partitioned (``partitioned=True``) — every target is a
-  manifest-committed table on the one snapshot protocol
-  (sources/snapshot.py): a month's content is a file list in an atomic
-  ``_snapshot.json``, and a sync rewrites ONLY the files its delta
-  touches (the plans report an affected-month superset via their
-  ``out`` side-channel), then flips the snapshot: write I/O scales with
-  the delta, not the target — the reference's ``REPLACE INTO`` cost
-  model.
+* plain (default) — one file group per target (a ``VersionedTable``),
+  rewritten whole by each stage write;
+* partitioned (``partitioned=True``) — the large targets are grouped by
+  storage month, and a sync rewrites ONLY the files its delta touches
+  (the plans report an affected-month superset via their ``out``
+  side-channel), then flips the snapshot: write I/O scales with the
+  delta, not the target — the reference's ``REPLACE INTO`` cost model.
 
 The upsert algebra in operators/upsert.py computes the merged state; a
 Delta MERGE writer can slot in without touching the plans.  Writes are
@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET, TABLE_VERSIONS
-from mrsboraetl_spark.operators._swap import rescue_orphan, swap_in
 from mrsboraetl_spark.plans.flat_lab_obs import (
     build_flat_lab_obs,
     incremental_flat_lab_obs,
@@ -64,7 +63,11 @@ from mrsboraetl_spark.plans.flat_visit_summary import (
     incremental_flat_visit_summary,
 )
 from mrsboraetl_spark.sources import snapshot
-from mrsboraetl_spark.sources.footer_stats import footer_schema, read_files
+from mrsboraetl_spark.sources.footer_stats import (
+    footer_schema,
+    parquet_key_stats,
+    read_files,
+)
 from mrsboraetl_spark.sources.snapshot import ConcurrentCommitError
 from mrsboraetl_spark.sources.versioned import VersionedTable
 from mrsboraetl_spark.sources.watermark import WatermarkStore
@@ -82,58 +85,60 @@ class PipelineRunner:
         manifest: bool | None = None,
         keep_snapshots: int = 1,
     ):
-        """Two layouts, one per table shape.
+        """One commit protocol, two groupings of a target's files.
 
-        The default (plain) layout keeps only the latest state of each
-        target: every write stages the whole table and promotes it with
-        one rename-aside swap.
+        Every target is a manifest-committed table on the snapshot
+        protocol (sources/snapshot.py): data files land in immutable
+        hidden epoch directories (``_e{N}``) and one compare-and-swap
+        flip of ``_snapshot.json`` publishes them (``os.replace``
+        locally; a single-key conditional PUT on an object store).
+        Replaced files are garbage-collected after the flip.  A losing
+        concurrent writer's stage re-plans and retries (_stage), and
+        ``snapshots``, ``read_target_at`` and ``read_pipeline`` serve
+        retained snapshots.  Trade-off, same as Delta/Iceberg: readers
+        go through ``read_target``/``read_pipeline`` — a raw
+        ``spark.read.parquet(path)`` sees NO data (hidden epoch dirs
+        are skipped by Spark's listing), fail-safe rather than silently
+        stale or duplicated.
 
-        ``partitioned=True`` is the manifest layout.  The large targets
-        are clustered by ``p_month=YYYY-MM`` (month of the encounter
-        datetime) and PK-range-sorted within each month, but a month's
-        content is a FILE LIST in an atomic ``_snapshot.json``, not a
-        directory listing: data files land in immutable hidden epoch
-        directories (``_e{N}``), a file-level delta's untouched files
-        are carried forward as MANIFEST ENTRIES (zero data-file renames,
-        links, or copies — the object-store story: S3/GCS/ABFS have no
-        hardlinks and a rename is a full physical copy there), and the
-        swap is ONE snapshot pointer flip (``os.replace`` locally; a
-        single-key conditional PUT on an object store).  Replaced files
-        are garbage-collected after the flip.  Trade-off, same as
-        Delta/Iceberg: readers go through ``read_target``/
-        ``read_target_months`` — a raw ``spark.read.parquet(path)`` sees
-        NO data (hidden epoch dirs are skipped by Spark's listing),
-        fail-safe rather than silently stale/duplicated.
+        The default (plain) layout keeps each target as ONE file group
+        (a VersionedTable): a stage write replaces the whole group.
+
+        ``partitioned=True`` groups the large targets by
+        ``p_month=YYYY-MM`` (month of the encounter datetime), each
+        month PK-range-sorted.  A file-level delta stages only its
+        touched files and carries the untouched ones forward as
+        MANIFEST ENTRIES (zero data-file renames, links, or copies —
+        the object-store story: S3/GCS/ABFS have no hardlinks and a
+        rename is a full physical copy there).
         ``read_target_months`` selects a month window's exact file
         lists, so date-range consumers open ~1/N of the files.  The
-        unpartitioned target (flat_latest_hiv_summary) is a
-        VersionedTable in the same kind of directory: one file group
-        instead of months, the same snapshot protocol
-        (sources/snapshot.py) for commit, time travel and GC.
+        unpartitioned target (flat_latest_hiv_summary) stays one group.
 
         ``manifest`` selects nothing: it is accepted for callers written
         when the manifest layout was a separate switch, and must agree
         with ``partitioned`` when given (``manifest=True`` alone, or
         ``manifest=False`` with ``partitioned=True``, raises).
 
-        ``keep_snapshots`` (partitioned layout): how many recent
-        snapshots' files survive GC (default 1 = only the live one,
-        swap-layout semantics).  With N > 1 a concurrent reader holding
-        a snapshot up to N-1 flips old never loses files mid-job — the
-        snapshot-isolation knob the immediate-GC contract lacks — and
-        ``read_target_at(table, epoch)`` time-travels to any retained
-        snapshot.  Each flip records its content as
-        ``_snap_{epoch}.json``; retention cost is exactly the data
-        unique to the retained window (carried files are shared across
-        snapshots by reference, so steady-state overhead is the
-        TOUCHED files of the last N-1 syncs, not N copies).
+        ``keep_snapshots`` (both layouts): how many recent snapshots'
+        files survive GC (default 1 = only the live one).  With N > 1
+        a concurrent reader holding a snapshot up to N-1 flips old
+        never loses files mid-job, and ``read_target_at(table, epoch)``
+        time-travels to any retained snapshot.  Each flip records its
+        content as ``_snap_{epoch}.json``; retention cost is exactly
+        the data unique to the retained window (carried files are
+        shared across snapshots by reference).
 
-        Past ``snapshot._MANIFEST_SPLIT_BYTES`` of inline month lists
-        the snapshot splits Iceberg-style into per-month
+        Past ``snapshot._MANIFEST_SPLIT_BYTES`` of inline file lists
+        the snapshot splits Iceberg-style into per-group
         content-addressed ``_man_*.json`` manifest files: the hot
         pointer stays one small PUT at any table size, an untouched
         month's manifest carries forward by NAME, and GC treats
-        manifest files exactly like the data they reference."""
+        manifest files exactly like the data they reference.
+
+        A target written by the retired whole-directory swap (data
+        files at the table root, no ``_snapshot.json``) is refused with
+        ``ValueError``: read as cold it would be quietly rebuilt."""
         if manifest is not None and bool(manifest) != bool(partitioned):
             raise ValueError(
                 "manifest is the partitioned layout, not a separate "
@@ -145,6 +150,8 @@ class PipelineRunner:
         self.partitioned = partitioned
         self.keep_snapshots = max(1, int(keep_snapshots))
         os.makedirs(storage_root, exist_ok=True)
+        for table in TABLE_VERSIONS:
+            self._refuse_pre_snapshot(table)
         self.watermarks = WatermarkStore(
             spark, os.path.join(storage_root, "flat_log.parquet")
         )
@@ -157,35 +164,37 @@ class PipelineRunner:
     def _versioned(self, table: str) -> VersionedTable:
         return VersionedTable(self._path(table))
 
-    def _recover_fs(self, table: str) -> bool:
-        """Crash-window filesystem recovery for a target, WITHOUT
-        reading any data: promote a demoted ``.old`` whole table.
-        Returns True when the live target exists afterwards.  Every
-        skip decision must route through this (not a bare existence
-        test): a stage left demoted by a crashed swap would otherwise
-        stay invisible to external path readers across arbitrarily many
-        skipping syncs."""
-        if self.partitioned:
-            # The snapshot flip is atomic: whatever pointer is on disk
-            # IS the table — no demoted state can exist, nothing to
-            # rescue.  Crash orphans (staged-but-never-flipped epochs)
-            # are invisible to snapshot readers and GC'd later.
-            return snapshot.load(self._path(table)) is not None
-        # _write crashed inside its demote->promote window (old moved
-        # aside, tmp not yet promoted): recover the previous table so
-        # the next run is an incremental, not a silent cold rebuild.
-        rescue_orphan(self._path(table))
-        return os.path.exists(self._path(table))
+    def _refuse_pre_snapshot(self, table: str) -> None:
+        """Raise ``ValueError`` for a target the retired whole-directory
+        swap wrote (data files at the table root, or at a demoted
+        ``.old``, and no snapshot pointer): read as cold, its state
+        would be quietly rebuilt and its watermarks would no longer
+        describe it."""
+        path = self._path(table)
+        for d in (path, path + ".old"):
+            if (
+                os.path.isdir(d)
+                and not os.path.exists(os.path.join(d, snapshot.SNAPSHOT_FILE))
+                and any(e.endswith(".parquet") for e in os.listdir(d))
+            ):
+                raise ValueError(
+                    f"{d}: written by the retired whole-directory swap "
+                    f"(no {snapshot.SNAPSHOT_FILE}) — re-create the "
+                    "store from its sources"
+                )
+
+    def _is_live(self, table: str) -> bool:
+        """Whether ``table`` has a live snapshot, WITHOUT reading any
+        data.  The flip is atomic: whatever pointer is on disk IS the
+        table, and crash orphans (staged-but-never-flipped epochs) are
+        invisible to snapshot readers and GC'd later."""
+        return snapshot.load(self._path(table)) is not None
 
     def read_target(self, table: str) -> DataFrame | None:
-        if self.partitioned:
-            files = snapshot.files(self._path(table))
-            # zero-month snapshot reads as cold (no schema to serve);
-            # the next run rebuilds
-            return read_files(self.spark, files) if files else None
-        if not self._recover_fs(table):
-            return None
-        return self.spark.read.parquet(self._path(table))
+        files = snapshot.files(self._path(table))
+        # a cold table, or a zero-month snapshot, reads as None (no
+        # schema to serve); the next run rebuilds
+        return read_files(self.spark, files) if files else None
 
     # PK per target: writes are repartitioned + sorted on it, so parquet
     # row-group min/max statistics prune key probes (the engine's stand-in
@@ -362,10 +371,6 @@ class PipelineRunner:
     # fixture scale.
     _TARGET_FILE_ROWS: int | None = None
 
-    # Stage-level no-op short-circuit (see _stage's change_signal):
-    # probe/debug knob — False restores the run-every-stage behavior.
-    _STAGE_SKIP = True
-
     # Bounded retry budget for a stage write that LOSES an optimistic-
     # concurrency race (VERDICT r11 item 1): on ConcurrentCommitError
     # the stage re-reads the target from the winner's live snapshot,
@@ -492,17 +497,18 @@ class PipelineRunner:
         return aux
 
     # ------------------------------------------------ manifest layout
-    # A partitioned-layout table is a manifest-committed table on the
-    # one snapshot protocol (sources/snapshot.py), keyed on its
-    # directory: the groups of its file map are storage months (the
-    # unpartitioned flat_latest_hiv_summary is a VersionedTable, one
-    # group, in the same kind of directory).  Writes stage a new epoch
-    # — data plus the bounds/Bloom sidecar that describes it, named
-    # under the snapshot's ``aux`` — then flip the snapshot
-    # (snapshot.publish); a carried file is just a relpath kept in the
-    # new month list.  No data file is ever renamed, linked, or
-    # copied after its initial write, so the layout costs the same on a
-    # filesystem without hardlinks or cheap renames (no-hardlink pin:
+    # Every target is a manifest-committed table on the one snapshot
+    # protocol (sources/snapshot.py), keyed on its directory: under the
+    # partitioned layout the groups of its file map are storage months;
+    # a one-group target (every target of the plain layout, and
+    # flat_latest_hiv_summary) is a VersionedTable in the same kind of
+    # directory.  A month-grouped write stages a new epoch — data plus
+    # the bounds/Bloom sidecar that describes it, named under the
+    # snapshot's ``aux`` — then flips the snapshot (snapshot.publish);
+    # a carried file is just a relpath kept in the new month list.  No
+    # data file is ever renamed, linked, or copied after its initial
+    # write, so the layout costs the same on a filesystem without
+    # hardlinks or cheap renames (no-hardlink pin:
     # tests/test_manifest_layout.py).  What stays here is the engine's
     # own part: month staging, the bounds/Bloom sidecar and the
     # pipeline epoch map.
@@ -555,9 +561,7 @@ class PipelineRunner:
         """Record, as one atomic pointer, the epoch/version of every
         pipeline table AS THIS RUN COMMITTED IT — called by run()
         strictly after all stages (and the latest-summary table)
-        committed.  Partitioned layout only: it is the layout with
-        retained-epoch reads; the plain layout keeps the documented
-        self-healing contract instead.
+        committed, under both layouts.
 
         Sources, in precedence order (ADVICE r12): (1) the in-memory
         record of what this run itself committed — immune to a
@@ -567,8 +571,6 @@ class PipelineRunner:
         skip by definition required no change to; (3) the live pointer
         (cold map / table never recorded — single-runner bootstrap,
         where live IS this run's state)."""
-        if not self.partitioned:
-            return
         committed = getattr(self, "_run_commit_map", None) or {}
         prev = self.pipeline_snapshot()
         prev_tables = (prev or {}).get("tables", {})
@@ -612,13 +614,14 @@ class PipelineRunner:
         """Cross-table-consistent read: ``table`` at the epoch the last
         COMPLETED run committed (or an explicit map from
         pipeline_snapshot(), so a caller can pin one map across many
-        reads).  Raises when no completed-run map exists or the pinned
-        epoch fell out of retention (read_target_at's contract)."""
+        reads).  Both layouts record the map.  Raises when no
+        completed-run map exists or the pinned epoch fell out of
+        retention (read_target_at's contract)."""
         snap = snapshot if snapshot is not None else self.pipeline_snapshot()
         if snap is None:
             raise ValueError(
                 f"{self.root}: no pipeline snapshot — no run has "
-                "completed on the manifest layout"
+                "completed on this store"
             )
         return self.read_target_at(table, int(snap["tables"][table]))
 
@@ -701,8 +704,10 @@ class PipelineRunner:
         ``{month: {relpath: [lo, hi, n_rows]}}`` keyed by the
         snapshot's relpath, so sidecar entries, month lists, touched
         sets and carry maps all speak the same key (r9, VERDICT r8
-        item 2: the partitioned-layout lift of
-        VersionedTable._file_key_stats in sources/versioned.py).
+        item 2).  Read from the staged files' footers
+        (footer_stats.parquet_key_stats, the reader VersionedTable's
+        file_stats use too); one column-pruned grouped pass over the
+        epoch only when some footer cannot prove its range.
         Per-file ranges include synthetic rows (no sentinel clipping):
         a full-month range-partitioned write keeps per-file ranges
         DISJOINT, so a bimodal population just means the tail file(s)
@@ -712,38 +717,47 @@ class PipelineRunner:
         range-partitioned without the carried files — but every
         recorded [lo, hi, n] stays EXACT for its file, which is what
         _plan_touched_files's correctness argument uses.)"""
-        stats = self._file_pk_stats_from_footers(edir, pk)
-        if stats is None:
-            # footer stats unprovable for some file: one column-pruned
-            # distributed pass gives the same answer
-            from urllib.parse import unquote, urlparse
+        table_dir = os.path.dirname(edir)
+        months = self._staged_month_files(edir)
+        stats = parquet_key_stats(
+            [os.path.join(table_dir, rp) for fl in months.values()
+             for rp in fl],
+            pk,
+        )
+        out: dict = {}
+        if stats is not None:
+            for m, fl in months.items():
+                for rp in fl:
+                    # a zero-row file has no entry: a data file the
+                    # sidecar does not list makes _plan_touched_files
+                    # fall back to month grain — conservative
+                    st = stats.get(os.path.join(table_dir, rp))
+                    if st is not None:
+                        out.setdefault(m, {})[rp] = st
+            return out
+        # footer stats unprovable for some file: one column-pruned
+        # distributed pass gives the same answer
+        from urllib.parse import unquote, urlparse
 
-            rows = (
-                self.spark.read.parquet(edir)
-                .groupBy(
-                    self.PARTITION_COL, F.input_file_name().alias("_f")
-                )
-                .agg(
-                    F.min(pk).alias("lo"),
-                    F.max(pk).alias("hi"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .collect()
+        rows = (
+            self.spark.read.parquet(edir)
+            .groupBy(self.PARTITION_COL, F.input_file_name().alias("_f"))
+            .agg(
+                F.min(pk).alias("lo"),
+                F.max(pk).alias("hi"),
+                F.count(F.lit(1)).alias("n"),
             )
-            stats = {}
-            for r in rows:
-                name = os.path.basename(unquote(urlparse(r["_f"]).path))
-                stats.setdefault(str(r[self.PARTITION_COL]), {})[name] = [
-                    int(r["lo"]), int(r["hi"]), int(r["n"]),
-                ]
+            .collect()
+        )
         ename = os.path.basename(edir)
-        return {
-            m: {
-                f"{ename}/{self.PARTITION_COL}={m}/{fn}": v
-                for fn, v in files.items()
-            }
-            for m, files in stats.items()
-        }
+        for r in rows:
+            m = str(r[self.PARTITION_COL])
+            name = os.path.basename(unquote(urlparse(r["_f"]).path))
+            rp = f"{ename}/{self.PARTITION_COL}={m}/{name}"
+            out.setdefault(m, {})[rp] = [
+                int(r["lo"]), int(r["hi"]), int(r["n"]),
+            ]
+        return out
 
     def _build_sidecar(
         self, table: str, path: str, files: dict, rows: dict
@@ -898,67 +912,6 @@ class PipelineRunner:
         if not los:
             return "omit"
         return [min(los), max(his)]
-
-    def _file_pk_stats_from_footers(
-        self, parquet_dir: str, pk: str
-    ) -> dict | None:
-        """{month: {fname: [lo, hi, n]}} from parquet FOOTER metadata —
-        no data pages read (r9 review finding: the per-file entries
-        previously cost a second distributed scan of the staged data).
-        pk is an integer column (INT32/INT64 statistics are exact and
-        never truncated, unlike strings); any file without provable
-        stats returns None and the caller falls back to the scan."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover - pyarrow is baked in
-            return None
-        out: dict = {}
-        for entry in sorted(os.listdir(parquet_dir)):
-            if not entry.startswith(self.PARTITION_COL + "="):
-                continue
-            m = entry.split("=", 1)[1]
-            d = os.path.join(parquet_dir, entry)
-            for fn in sorted(os.listdir(d)):
-                if not fn.endswith(".parquet") or fn.startswith(
-                    ("_", ".")
-                ):
-                    continue
-                try:
-                    md = pq.ParquetFile(os.path.join(d, fn)).metadata
-                except Exception:
-                    return None
-                lo = hi = None
-                for rg_i in range(md.num_row_groups):
-                    rg = md.row_group(rg_i)
-                    idx = {
-                        rg.column(i).path_in_schema: i
-                        for i in range(rg.num_columns)
-                    }
-                    if pk not in idx:
-                        return None
-                    col = rg.column(idx[pk])
-                    if col.num_values == 0 and rg.num_rows == 0:
-                        # zero-row chunk: contributes nothing — same
-                        # rule as parquet_column_maxes; abandoning the
-                        # footer path here would silently re-pay the
-                        # distributed scan every sync
-                        continue
-                    if col.physical_type not in ("INT32", "INT64"):
-                        return None
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if lo is None:
-                    # zero-row file: no entry (a data file the sidecar
-                    # does not list makes _plan_touched_files fall back
-                    # to month grain — conservative)
-                    continue
-                out.setdefault(m, {})[fn] = [
-                    int(lo), int(hi), int(md.num_rows),
-                ]
-        return out
 
     @staticmethod
     def _widen_bounds(old: dict | None, new: dict, cols) -> dict:
@@ -1367,32 +1320,27 @@ class PipelineRunner:
         person is purged from visit_summary without entering the
         queue, so only the fingerprint-gated path may reach here.
 
-        Write cost: under the partitioned layout this is
-        VersionedTable.merge_delta — O(files holding queued persons),
-        the person-clustered layout makes those ranges tight; the
-        plain layout still swaps the whole (small) table but skips the
-        full-table window+aggregate recompute.  The read of
-        visit_summary is person-probe pruned (Bloom/bounds sidecar)
-        to the months that can hold a queued person.  Reference cost
-        model being replaced: flat_latest_hiv_summary_v1.0.sql:21-37
-        rebuilds the whole table per run.
+        Write cost: VersionedTable.merge_delta under both layouts —
+        O(files holding queued persons), the person-clustered layout
+        makes those ranges tight.  Under the partitioned layout the
+        read of visit_summary is person-probe pruned (Bloom/bounds
+        sidecar) to the months that can hold a queued person.
+        Reference cost model being replaced:
+        flat_latest_hiv_summary_v1.0.sql:21-37 rebuilds the whole table
+        per run.
 
         Returns False to request the caller's full-build fallback when
         the queue covers most of the table (a catch-up sync): past
         _LATEST_MERGE_MAX_FRACTION of the table's persons, one window
         over everything beats per-person merge + delete — the latest
         analogue of _DELTA_WRITE_MAX_FRACTION.  The row count comes
-        free from the VersionedTable manifest; the plain layout pays
-        one count of the (small) table."""
+        free from the VersionedTable snapshot."""
         table = "flat_latest_hiv_summary"
         keys = queue.select("person_id").distinct()
         n_queue = keys.count()
         if n_queue == 0:
             return True  # empty queue: latest state already consistent
-        if self.partitioned:
-            n_latest = self._versioned(table).rows()
-        else:
-            n_latest = self.read_target(table).count()
+        n_latest = self._versioned(table).rows()
         if n_latest and n_queue > self._LATEST_MERGE_MAX_FRACTION * n_latest:
             return False
         rdr = self._make_probe_reader("flat_visit_summary")
@@ -1404,28 +1352,20 @@ class PipelineRunner:
             src.join(keys, "person_id", "left_semi")
         )
         pk = self._CLUSTER_BY[table]
-        if self.partitioned:
-            delta = delta.repartition(*pk).sortWithinPartitions(*pk)
-            vt = self._versioned(table)
-            self._record_run_commit(table, vt.merge_delta(
-                self.spark, delta, keys=pk,
-                note=f"{table} queue merge", delete_keys=keys,
-            ))
-            # honor the runner's retention window exactly like the
-            # partitioned flip's GC does (review finding r10: a
-            # hard-coded keep_last=1 silently broke keep_snapshots and
-            # read_target_at for the unpartitioned table)
-            vt.vacuum(keep_last=self.keep_snapshots)
-            return True
-        from mrsboraetl_spark.operators.upsert import anti_delete
-
-        old = self.read_target(table)
-        self._write(
-            anti_delete(old, keys, pk).unionByName(delta), table
-        )
+        delta = delta.repartition(*pk).sortWithinPartitions(*pk)
+        vt = self._versioned(table)
+        self._record_run_commit(table, vt.merge_delta(
+            self.spark, delta, keys=pk,
+            note=f"{table} queue merge", delete_keys=keys,
+        ))
+        # honor the runner's retention window exactly like the
+        # stage writes' GC does (review finding r10: a hard-coded
+        # keep_last=1 silently broke keep_snapshots and read_target_at
+        # for this table)
+        vt.vacuum(keep_last=self.keep_snapshots)
         return True
 
-    def _pin_commit_parent(self, table: str) -> int | None:
+    def _pin_commit_parent(self, table: str) -> int:
         """The live commit parent of ``table`` — its raw snapshot
         pointer epoch (a VersionedTable's version) — captured at PLAN
         time, i.e. before read_target pins the plan base (ADVICE r12,
@@ -1439,38 +1379,20 @@ class PipelineRunner:
         the plan base is read closes that window from the safe side: a
         commit between the pin and read_target makes the plan actually
         CURRENT yet the flip still raises, costing one spurious (safe,
-        idempotent) retry.  None for the plain layout, which has no CAS
-        (documented single-runner contract)."""
-        if not self.partitioned:
-            return None
+        idempotent) retry."""
         return snapshot.raw_epoch(self._path(table))
 
     def _write(
         self, df: DataFrame, table: str, parent: int | None = None
     ) -> None:
-        """Full write: cluster, stage, publish — one rename-aside swap
-        (plain layout) or one snapshot flip (partitioned layout).
+        """Full write: cluster, stage, publish with one snapshot flip.
         ``parent``: plan-time commit parent from _pin_commit_parent —
-        threaded into the layout's CAS so a commit that landed during
-        the caller's plan phase raises instead of being overwritten;
-        None keeps the capture-at-staging behavior for callers outside
-        the optimistic-retry loop."""
+        threaded into the CAS so a commit that landed during the
+        caller's plan phase raises instead of being overwritten; None
+        keeps the capture-at-staging behavior for callers outside the
+        optimistic-retry loop."""
         pk = self._CLUSTER_BY.get(table)
-        if not self.partitioned:
-            if pk:
-                df = df.repartition(*pk).sortWithinPartitions(*pk)
-            tmp = self._path(table) + ".tmp"
-            writer = df.write.mode("overwrite")
-            if self._TARGET_FILE_ROWS:
-                writer = writer.option(
-                    "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
-                )
-            writer.parquet(tmp)
-            # A crash inside the swap leaves the previous table intact
-            # at `.old`; _recover_fs restores it.
-            swap_in(tmp, self._path(table))
-            return
-        part_src = self._PARTITION_SRC.get(table)
+        part_src = self._PARTITION_SRC.get(table) if self.partitioned else None
         if part_src:
             from mrsboraetl_spark.schemas import p_month_of
 
@@ -1489,13 +1411,13 @@ class PipelineRunner:
             ).sortWithinPartitions(self.PARTITION_COL, *pk)
             self._write_manifest_full(df, table, parent_epoch=parent)
             return
-        # unpartitioned target: VersionedTable IS the manifest layout
-        # for the whole-table case — commit + retain the runner's
-        # snapshot window (keep_snapshots=1 default = swap-layout
-        # semantics; review finding r10).  stats_key + bounded file
-        # grain: merge_delta's per-file pruning and reuse need per-file
-        # key ranges and more than one file to exist (an AQE-coalesced
-        # small table would otherwise land whole in a single file).
+        # one file group (every target of the plain layout, and
+        # flat_latest_hiv_summary under both): a VersionedTable commit
+        # that retains the runner's snapshot window (review finding
+        # r10).  stats_key + bounded file grain: merge_delta's per-file
+        # pruning and reuse need per-file key ranges and more than one
+        # file to exist (an AQE-coalesced small table would otherwise
+        # land whole in a single file).
         if pk:
             df = df.repartition(*pk).sortWithinPartitions(*pk)
         vt = self._versioned(table)
@@ -1861,15 +1783,17 @@ class PipelineRunner:
 
     def _stage_jdbc_snapshot(self, key: str, src, mode: str):
         """Stage a JdbcSource to a frozen local snapshot and return the
-        reader DataFrame.
+        reader DataFrame.  The snapshot is a VersionedTable: every
+        staging commits through the snapshot protocol and keeps only
+        the live version.
 
-        Without ``delta_key``/``delta_cols`` on the source, this is the
-        r10 behavior: one full partitioned scan overwritten in place —
-        disk and pipe both equal to the source table per changed table
-        per run (the documented AUTO cost).
+        Without ``delta_key``/``delta_cols`` on the source, every
+        resolution is a full restage: one partitioned scan committed
+        as the new version — disk and pipe both equal to the source
+        table per changed table per run (the documented AUTO cost).
 
-        With them declared (VERDICT r11 item 3), the snapshot becomes a
-        VersionedTable and a sync stages ONLY the watermark delta:
+        With them declared (VERDICT r11 item 3), a sync stages ONLY the
+        watermark delta:
 
         * the previous snapshot's per-column change maxes (persisted in
           ``_delta_state.json`` beside the manifest) build a pushed-down
@@ -1903,15 +1827,12 @@ class PipelineRunner:
         can mutate without a dated column moving must leave
         delta_key/delta_cols undeclared (person)."""
         snap = os.path.join(self.root, f"_src_snapshot_{key}")
-        if not (src.delta_key and src.delta_cols):
-            src.load(self.spark).write.mode("overwrite").parquet(snap)
-            return self.spark.read.parquet(snap)
-
-        cols = list(src.delta_cols)
+        delta_staged = bool(src.delta_key and src.delta_cols)
+        cols = list(src.delta_cols or ())
         vt = VersionedTable(snap)
         state_path = os.path.join(snap, "_delta_state.json")
         state = None
-        if mode == "sync" and vt.version() >= 0:
+        if delta_staged and mode == "sync" and vt.version() >= 0:
             try:
                 with open(state_path) as f:
                     raw_state = json.load(f)["maxes"]
@@ -1938,6 +1859,8 @@ class PipelineRunner:
             # copies on disk)
             vt.vacuum(keep_last=1)
             out = vt.read(self.spark)
+            if not delta_staged:
+                return out
             maxes = dict(zip(cols, self._maxes(out, *cols)))
             n_staged = None  # full copy: the table itself
         else:
@@ -2096,8 +2019,9 @@ class PipelineRunner:
         Disk note (ADVICE r10): a JdbcSource with snapshot AUTO/True
         stages a full local-parquet copy of each RESOLVED table under
         ``storage_root/_src_snapshot_{key}`` — budget disk equal to
-        the resolved source tables' size.  Copies are overwritten in
-        place on the next resolution; copies whose key is absent from
+        the resolved source tables' size.  The next resolution commits
+        a new version of the copy and GCs the old one (the peak is two
+        copies for a full restage); copies whose key is absent from
         this run's mapping (a renamed/removed source) are swept at run
         start so they cannot linger indefinitely."""
         from mrsboraetl_spark.sources.readers import JdbcSource
@@ -2266,14 +2190,13 @@ class PipelineRunner:
         vs_version = TABLE_VERSIONS["flat_visit_summary"]
         vs_ran = True
         if (
-            self._STAGE_SKIP
-            and allow_skip
+            allow_skip
             and self._signal_covered(
                 obs_enc_sig, self._load_signal(vs_version)
             )
             and not obs_ran
             and not lab_ran
-            and self._recover_fs("flat_visit_summary")
+            and self._is_live("flat_visit_summary")
         ):
             # visit_summary's change classes (encounter edits, upstream
             # flat_obs advance, obs voids, person voids) are all covered
@@ -2284,9 +2207,11 @@ class PipelineRunner:
         vs_out: dict = {}
         if not self.partitioned:
             # The latest-summary merge consumes the plan's queue in a
-            # separate action after the stage's own write; the plain
-            # layout never sets pin_recomputed (no two-phase re-run), so
-            # it would otherwise never publish the key, leaving
+            # separate action after the stage's own write, whose GC
+            # deletes the visit-summary files the queue's lineage
+            # reads.  One-group targets never set pin_recomputed (no
+            # month-scoped two-phase re-run), so without this pin the
+            # plan would never publish the key, leaving
             # _merge_latest_summary's merge leg unreachable and those
             # deployments silently on the full latest-table rewrite
             # (ADVICE r10; plain-layout gap ADVICE r11).
@@ -2331,7 +2256,7 @@ class PipelineRunner:
         # default-path sync write bytes at the 50k probe); any other
         # shape — rebuild, cold target, unstable void set — keeps the
         # full overwrite.
-        if vs_ran or not self._recover_fs("flat_latest_hiv_summary"):
+        if vs_ran or not self._is_live("flat_latest_hiv_summary"):
             started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
             vs = self.read_target("flat_visit_summary")
             queue = vs_out.get("queue_keys")
@@ -2339,7 +2264,7 @@ class PipelineRunner:
                 mode == "sync"
                 and queue is not None
                 and person_stable
-                and self._recover_fs("flat_latest_hiv_summary")
+                and self._is_live("flat_latest_hiv_summary")
                 and self._merge_latest_summary(vs, queue)
             ):
                 # same value the full path's _max_ts(vs) yields: vs
@@ -2592,13 +2517,9 @@ class PipelineRunner:
         started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         version = TABLE_VERSIONS[table]
         if (
-            self._STAGE_SKIP
-            and allow_skip
+            allow_skip
             and change_signal is not None
-            # _recover_fs, not a bare existence test: a skip honored on
-            # a `.old`-demoted table would leave it invisible to
-            # external path readers across every skipping sync.
-            and self._recover_fs(table)
+            and self._is_live(table)
             and self._signal_covered(
                 change_signal, self._load_signal(version)
             )

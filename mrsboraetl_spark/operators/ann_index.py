@@ -207,10 +207,10 @@ class IvfIndex:
         if self.is_empty():
             return
         n = n_files or max(len(self.centroids) // 4, 1)
+        cells, parent = self.table.read_pinned(spark)
         self.table.replace(
-            self.cells(spark)
-            .repartition(n, F.col("cell"))
-            .sortWithinPartitions("cell")
+            cells.repartition(n, F.col("cell")).sortWithinPartitions("cell"),
+            parent,
         )
 
     def skew_ratio(self, spark: SparkSession) -> float:
@@ -292,7 +292,7 @@ class IvfIndex:
         sample + ONE pass over the full table — the FAISS operating
         model (retrain offline, re-assign, swap) expressed as jobs.
         """
-        stored = self.cells(spark)
+        stored, parent = self.table.read_pinned(spark)
         if stored is None:
             raise ValueError(f"index at {self.path} is empty")
         k = len(self.centroids)
@@ -358,6 +358,7 @@ class IvfIndex:
             )
             .repartition(max(k // 4, 1), F.col("cell"))
             .sortWithinPartitions("cell"),
+            parent,
             params={"epoch": new_epoch, "centroids": cents},
         )
         self.centroids, self.epoch = cents, new_epoch

@@ -147,8 +147,9 @@ class LshBandIndex:
         n = n_files or max(
             spark.sparkContext.defaultParallelism // 2, 1
         )
+        bands, parent = self.table.read_pinned(spark)
         self.table.replace(
-            self.bands(spark)
-            .repartition(n, F.col("band"), F.col("bk"))
-            .sortWithinPartitions("band", "bk")
+            bands.repartition(n, F.col("band"), F.col("bk"))
+            .sortWithinPartitions("band", "bk"),
+            parent,
         )

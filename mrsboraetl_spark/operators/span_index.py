@@ -65,12 +65,11 @@ class SpanFrequencyIndex:
         ingested so far (partials folded at read; ``compact()`` folds
         them at rest)."""
         counts = self.table.read(spark)
-        if counts is None:
-            return None
-        return (
-            counts.groupBy("span")
-            .agg(F.sum("cnt").alias("freq"))
-        )
+        return None if counts is None else self._fold(counts)
+
+    @staticmethod
+    def _fold(counts: DataFrame) -> DataFrame:
+        return counts.groupBy("span").agg(F.sum("cnt").alias("freq"))
 
     def ingest_and_clean(
         self,
@@ -118,8 +117,10 @@ class SpanFrequencyIndex:
         """Fold the per-ingest partial counts into one aggregated group,
         published by one snapshot flip: a crash before it leaves the
         partials committed, after it the fold."""
-        if self.is_empty():
+        counts, parent = self.table.read_pinned(spark)
+        if counts is None:
             return
         self.table.replace(
-            self.frequencies(spark).select("span", F.col("freq").alias("cnt"))
+            self._fold(counts).select("span", F.col("freq").alias("cnt")),
+            parent,
         )

@@ -123,10 +123,11 @@ class StatsIndex:
     ) -> None:
         """Fold one batch into the persisted state: one snapshot flip."""
         batch = self._batch_state(docs, id_col, text_col)
-        state = self.table.read(docs.sparkSession)
+        state, parent = self.table.read_pinned(docs.sparkSession)
         self.table.replace(
             batch if state is None
-            else self._merge(state, batch, self.group_col, self.k)
+            else self._merge(state, batch, self.group_col, self.k),
+            parent,
         )
 
     def stats(self, spark: SparkSession) -> DataFrame:

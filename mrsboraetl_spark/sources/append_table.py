@@ -21,7 +21,10 @@ of every persistent index (operators/*_index.py):
   O(committed groups) per batch, which ``compact()`` bounds;
 * ``replace`` publishes a snapshot naming only a new frame's files — a
   compaction, an index's fold, a re-assignment — in the same single
-  flip, so a reader sees the old content or the new, never a mix;
+  flip, so a reader sees the old content or the new, never a mix.  Its
+  CAS parent is the epoch the folded read resolved (``read_pinned``),
+  so a batch committed between the read and the flip raises
+  ``ConcurrentCommitError`` instead of being dropped;
 * ``params`` (optional) are pinned in the snapshot by the first
   publish, which opening a cold table with them performs; opening a
   table pinned with different params raises ``ValueError``, so an
@@ -146,19 +149,40 @@ class AppendOnlyTable:
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Union of exactly the COMMITTED batches (the snapshot's file
         list — uncommitted orphans are invisible), or None when empty."""
-        paths = snapshot.files(self.root)
-        return spark.read.parquet(*paths) if paths else None
+        return self.read_pinned(spark)[0]
 
-    def replace(self, df: DataFrame, params: dict | None = None) -> None:
-        """Publish a snapshot naming only ``df``'s files, with ``params``
-        as the new pin when given.  The replay watermark is kept — it is
-        what keeps a replayed batch id a no-op after its group was
-        folded away — and the CAS parent is the epoch read here.  The
-        replaced files are deleted by the GC after the flip (a crash
-        before it leaves them live, a crash after it leaves
-        unreferenced files the next GC sweeps).  ``df`` may read the
-        table itself: it is written before anything is deleted."""
+    def read_pinned(self, spark: SparkSession) -> tuple[DataFrame | None, int]:
+        """``read`` plus the epoch it resolved: the CAS parent a fold
+        of this frame passes to ``replace``."""
         man = snapshot.load(self.root)
+        if man is None:
+            return None, snapshot.raw_epoch(self.root)
+        paths = snapshot.files(self.root, man=man)
+        return (spark.read.parquet(*paths) if paths else None), int(
+            man["epoch"]
+        )
+
+    def replace(
+        self, df: DataFrame, parent: int, params: dict | None = None
+    ) -> None:
+        """Publish a snapshot naming only ``df``'s files, with ``params``
+        as the new pin when given.  ``parent`` is the epoch the read
+        ``df`` folds resolved (``read_pinned``): a commit that landed
+        since raises ``ConcurrentCommitError`` instead of being
+        overwritten by a fold that never saw it.  The replay watermark
+        is kept — it is what keeps a replayed batch id a no-op after
+        its group was folded away.  The replaced files are deleted by
+        the GC after the flip (a crash before it leaves them live, a
+        crash after it leaves unreferenced files the next GC sweeps).
+        ``df`` may read the table itself: it is written before anything
+        is deleted."""
+        man = snapshot.load(self.root)
+        live = int(man["epoch"]) if man else snapshot.raw_epoch(self.root)
+        if live != parent:  # fail before writing; the flip re-checks
+            raise snapshot.ConcurrentCommitError(
+                f"{self.root}: folded epoch {parent} but live is {live}"
+                " — a concurrent commit landed; re-read and re-fold"
+            )
         groups = (man or {"months": {}})["months"]
         key = f"compact-{len(groups)}-{(man or {}).get('max_committed_id')}"
 
@@ -171,7 +195,6 @@ class AppendOnlyTable:
                 fields["params"] = params
             return fields
 
-        parent = int(man["epoch"]) if man else snapshot.raw_epoch(self.root)
         snapshot.gc(self.root, snapshot.publish(self.root, man, parent, write))
 
     def compact(self, spark: SparkSession, n_files: int | None = None) -> None:
@@ -179,5 +202,5 @@ class AppendOnlyTable:
         fan-out for long-lived streams."""
         if len(self.committed()) <= 1:
             return
-        df = self.read(spark)
-        self.replace(df.coalesce(n_files) if n_files else df)
+        df, parent = self.read_pinned(spark)
+        self.replace(df.coalesce(n_files) if n_files else df, parent)

@@ -121,6 +121,52 @@ def parquet_row_count(path: str, files=None) -> int | None:
     return total
 
 
+def parquet_key_stats(files, key: str) -> dict | None:
+    """{file: [lo, hi, n_rows]} of the integer column ``key`` per data
+    file, from FOOTER metadata alone — no data pages read, zero Spark
+    jobs; keyed by the strings given.  The same entries a grouped
+    min/max/count pass over the files yields: a zero-row file gets no
+    entry.  Integer statistics are exact and never truncated, unlike
+    strings; any file whose footer cannot prove its range (key absent,
+    a key whose statistics are not plain integers, no statistics, an
+    all-null chunk) returns None and the caller falls back to that
+    pass."""
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:  # pragma: no cover - pyarrow is baked in
+        return None
+    out: dict = {}
+    for f in files:
+        try:
+            md = pq.ParquetFile(f).metadata
+        except Exception:
+            return None
+        lo = hi = None
+        for rg_i in range(md.num_row_groups):
+            rg = md.row_group(rg_i)
+            idx = {
+                rg.column(i).path_in_schema: i
+                for i in range(rg.num_columns)
+            }
+            if key not in idx:
+                return None
+            col = rg.column(idx[key])
+            if col.num_values == 0 and rg.num_rows == 0:
+                # zero-row chunk: contributes nothing — same rule as
+                # parquet_column_maxes
+                continue
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                return None
+            if not all(type(v) is int for v in (st.min, st.max)):
+                return None  # not a plain integer (DATE, TIMESTAMP, ...)
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        if lo is not None:
+            out[f] = [int(lo), int(hi), int(md.num_rows)]
+    return out
+
+
 def parquet_column_maxes(path: str, cols, files=None) -> dict:
     """{col: max-or-None} for every column of ``cols`` whose maximum is
     PROVABLE from footer statistics alone; columns that are not are

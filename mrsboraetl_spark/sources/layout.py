@@ -129,11 +129,14 @@ def compact_parquet(
     The small-files problem is the classic 100 TB operational failure
     mode (per-file open/footer/task overhead dominating the scan); this
     is the stock compaction: size the output from the ACTUAL on-disk
-    bytes, one repartition, then promote via the shared rename-aside
-    swap (operators/_swap.swap_in: write to `.tmp`, demote current to
-    `.old`, promote, drop `.old`) so readers never observe a partial
-    directory and a crash leaves the previous data recoverable at
-    `.old`.
+    bytes, one repartition, then promote with a rename-aside swap
+    (write to `.tmp`, demote current to `.old`, promote, drop `.old`)
+    so readers never observe a partial directory.  The output stays a
+    plain parquet directory any ``spark.read.parquet(path)`` reads —
+    the one contract here a snapshot pointer would break.  A promote
+    that fails restores `.old` and re-raises (the staged `.tmp` is
+    kept); a process killed between the two renames leaves the
+    previous data intact at `.old` for the operator to move back.
 
     ``zorder_cols`` re-clusters along the Morton curve while compacting
     (the OPTIMIZE-ZORDER composition — plain round-robin compaction
@@ -144,8 +147,7 @@ def compact_parquet(
     """
     import math
     import os
-
-    from mrsboraetl_spark.operators._swap import swap_in
+    import shutil
 
     if target_bytes < 1:
         raise ValueError(f"target_bytes must be >= 1, got {target_bytes}")
@@ -162,5 +164,13 @@ def compact_parquet(
         write_zordered(df, tmp, zorder_cols, n_files=n_files, bits=bits)
     else:
         df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    swap_in(tmp, path)
+    old = path + ".old"
+    shutil.rmtree(old, ignore_errors=True)  # leftover of a prior crash
+    os.replace(path, old)
+    try:
+        os.replace(tmp, path)
+    except OSError:
+        os.replace(old, path)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
     return n_files

@@ -29,8 +29,9 @@ permutation instead).
 
 The manifest (one tiny JSON, written last) records seed, shard count and
 per-shard row counts (plus per-shard weight when weighted) — the commit
-marker the reader checks, mirroring the atomic-swap protocol of
-engine.py (a crashed export leaves no manifest and is invisible).
+marker the reader checks, written last like a snapshot pointer
+(sources/snapshot.py): a crashed export leaves no manifest and is
+invisible.
 """
 
 from __future__ import annotations

@@ -1,9 +1,9 @@
 """Versioned parquet tables: atomic commits, snapshot reads, time travel.
 
-The reference's REPLACE INTO mutates its target in place; the engine's
-plain layout swaps whole directories.  Both give the LATEST state only.
-A ``VersionedTable`` is a manifest-committed table on the one snapshot
-protocol (sources/snapshot.py) with a single file group, and adds the
+The reference's REPLACE INTO mutates its target in place and gives the
+LATEST state only.  A ``VersionedTable`` is a manifest-committed table
+on the one snapshot protocol (sources/snapshot.py) with a single file
+group — every target of the engine's plain layout is one — and adds the
 three properties a 100 TB deployment needs from its sink:
 
 * **atomic commit** — every commit writes its data files into a fresh,
@@ -38,7 +38,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from mrsboraetl_spark.sources import snapshot
-from mrsboraetl_spark.sources.footer_stats import parquet_row_count, read_files
+from mrsboraetl_spark.sources.footer_stats import (
+    parquet_key_stats,
+    parquet_row_count,
+    read_files,
+)
 from mrsboraetl_spark.sources.snapshot import ConcurrentCommitError
 
 __all__ = ["ConcurrentCommitError", "VersionedTable"]
@@ -106,16 +110,23 @@ class VersionedTable:
         self, spark: SparkSession, relpaths: list[str], key: str
     ) -> dict:
         """{relpath: [min, max, n_rows]} of ``key`` per data file just
-        written — one bounded pass over the NEW data (Iceberg's per-file
-        column bounds + record counts, recorded at write time so later
-        merges can prune their touched-file probe AND account reused
-        rows without scanning the table).  Only JSON-native key types
-        (int/float/str/bool) are recorded; anything else returns {} and
-        merges fall back to the full probe."""
+        written (Iceberg's per-file column bounds + record counts,
+        recorded at write time so later merges can prune their
+        touched-file probe AND account reused rows without scanning the
+        table).  An integer key's entries come from the files' footers
+        (footer_stats.parquet_key_stats, no job); any other key, or a
+        footer that cannot prove its range, costs one grouped pass over
+        the NEW data.  Only JSON-native key types (int/float/str/bool)
+        are recorded; anything else returns {} and merges fall back to
+        the full probe."""
         from pyspark.sql import functions as F
 
+        paths = {os.path.join(self.root, f): f for f in relpaths}
+        stats = parquet_key_stats(paths, key)
+        if stats is not None:
+            return {paths[p]: v for p, v in stats.items()}
         rows = (
-            read_files(spark, [os.path.join(self.root, f) for f in relpaths])
+            read_files(spark, list(paths))
             .groupBy(F.input_file_name().alias("_f"))
             .agg(
                 F.min(key).alias("lo"),

@@ -24,6 +24,7 @@ def spark():
         },
     )
     yield s
+    s.stop()
 
 
 @pytest.fixture(scope="session")
@@ -76,7 +77,8 @@ _SLOW_TESTS = {
     "test_llmdata.py::test_ivf_pq_recall",
     "test_manifest_layout.py::test_commit_during_plan_phase_raises_then_converges",
     "test_manifest_layout.py::test_concurrent_flip_raises_and_preserves_winner",
-    "test_manifest_layout.py::test_concurrent_flip_retries_and_both_land",
+    "test_manifest_layout.py::test_concurrent_flip_retries_and_both_land[False]",
+    "test_manifest_layout.py::test_concurrent_flip_retries_and_both_land[True]",
     "test_manifest_layout.py::test_gc_protects_live_refs_when_history_missing",
     "test_manifest_layout.py::test_manifest_crash_at_flip_keeps_contract",
     "test_manifest_layout.py::test_manifest_crash_orphan_epoch_not_time_travelable",
@@ -101,7 +103,6 @@ _SLOW_TESTS = {
     "test_pipeline.py::test_incremental_sync_catches_up",
     "test_pipeline.py::test_masked_column_advance_defeats_skip",
     "test_pipeline.py::test_noop_sync_skips_every_stage",
-    "test_pipeline.py::test_skip_recovers_demoted_old_table",
     "test_pipeline.py::test_sync_purges_voided_person",
     "test_pipeline.py::test_undated_person_void_defeats_skip",
     "test_plans.py::test_no_registry_query_plans_a_nested_loop",

@@ -14,10 +14,10 @@ and partitioned), then times three kinds of incremental sync:
 * a NO-OP sync (nothing new) — every stage skips; the whole sync is
   the four source signal scans.
 
-Each wave is also timed with the short-circuit DISABLED
-(_STAGE_SKIP=False): the r6 behavior, where every sync pays all five
-stages' plan building, probes, and the latest-table rebuild even when a
-wave touches one table.
+Each wave is also timed with the short-circuit DISABLED (the runner's
+``_signal_covered`` answering False): the r6 behavior, where every sync
+pays all five stages' plan building, probes, and the latest-table
+rebuild even when a wave touches one table.
 
 Usage: python tests/pipeline_sync_probe.py [n_persons]   # default 4800
 Results land in PERF.md by hand.
@@ -96,11 +96,12 @@ def main(n: int) -> None:
     results = {"n_persons": n}
     for layout in ("plain", "partitioned"):
         for skip in (True, False):
-            PipelineRunner._STAGE_SKIP = skip
             root = tempfile.mkdtemp(prefix=f"psp_{layout}_{skip}_")
             runner = PipelineRunner(
                 spark, root, partitioned=layout == "partitioned"
             )
+            if not skip:
+                runner._signal_covered = lambda new, stored: False
             base = to_spark(spark, pdfs)
             runner.run(base, mode="rebuild")
             runner.run(base, mode="sync")  # drain watermark stragglers
@@ -115,7 +116,6 @@ def main(n: int) -> None:
                 runner.run(dfs, mode="sync")
                 res[wave_name + "_sec"] = round(time.time() - t0, 1)
             results[label] = res
-    PipelineRunner._STAGE_SKIP = True
     print(json.dumps(results), flush=True)
 
 

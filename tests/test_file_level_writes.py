@@ -28,7 +28,8 @@ def _mk_state(
 ):
     """Partitioned pipeline with several files per month (small
     maxRecordsPerFile) through rebuild + a draining sync.
-    ``runner_kw`` forwards runner options (keep_snapshots, ...)."""
+    ``runner_kw`` forwards runner options (keep_snapshots, ...;
+    ``partitioned=False`` for the plain layout)."""
     from tests.fixtures import make_sources, to_spark
 
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", file_rows)
@@ -42,7 +43,7 @@ def _mk_state(
     pdfs = dict(pdfs, encounter=enc)
     dfs = to_spark(spark, pdfs)
     r = PipelineRunner(
-        spark, str(tmp_path / "store"), partitioned=True, **runner_kw
+        spark, str(tmp_path / "store"), **{"partitioned": True, **runner_kw}
     )
     r.run(dfs, mode="rebuild")
     r.run(dfs, mode="sync")
@@ -134,23 +135,17 @@ def _live_exact_bounds(runner, table):
 
 def _live_footer_stats(runner, table, pk):
     """{month: {relpath: [lo, hi, n]}} from the parquet footers of the
-    live snapshot's files, read per epoch directory."""
-    live = {
-        rp for fl in snapshot.load(runner._path(table))["months"].values()
-        for rp in fl
-    }
+    live snapshot's files."""
+    from mrsboraetl_spark.sources.footer_stats import parquet_key_stats
+
     base = runner._path(table)
     out: dict = {}
-    for edir in sorted({rp.split("/", 1)[0] for rp in live}):
-        stats = runner._file_pk_stats_from_footers(
-            os.path.join(base, edir), pk
-        )
-        assert stats is not None, edir
-        for m, fent in stats.items():
-            for fn, st in fent.items():
-                rp = f"{edir}/{runner.PARTITION_COL}={m}/{fn}"
-                if rp in live:
-                    out.setdefault(m, {})[rp] = st
+    for m, fl in snapshot.load(base)["months"].items():
+        paths = {os.path.join(base, rp): rp for rp in fl}
+        stats = parquet_key_stats(paths, pk)
+        assert stats is not None, m
+        if stats:
+            out[m] = {paths[p]: st for p, st in stats.items()}
     return out
 
 

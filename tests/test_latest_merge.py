@@ -87,7 +87,8 @@ def test_latest_merge_runs_and_matches_full_build(
 ):
     """Plain layout: the plan publishes queue_keys through
     out["pin_keys"] (no two-phase re-run there), and the latest table
-    merges by anti-delete + whole-table swap."""
+    merges through VersionedTable.merge_delta, as under the partitioned
+    layout."""
     r, pdfs, wm = _base(spark, tmp_path, "plainmode", partitioned=False)
     latest0 = r.read_target("flat_latest_hiv_summary")
     n_persons_total = latest0.count()

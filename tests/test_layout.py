@@ -117,6 +117,47 @@ def test_compact_parquet_reduces_files_and_preserves_rows(spark, sf_dir, tmp_pat
     assert not os.path.exists(path + ".tmp")
 
 
+def test_compact_parquet_restores_old_on_failed_promote(
+    spark, tmp_path, monkeypatch
+):
+    """compact_parquet's rename-aside swap: a stale `.old` is dropped
+    first, and a promote that fails puts the compacted directory's
+    previous files back at the path (the staged `.tmp` is kept) before
+    re-raising; the next compaction then succeeds."""
+    import os
+
+    import pytest
+
+    from mrsboraetl_spark.sources.layout import compact_parquet
+
+    path = str(tmp_path / "data")
+    spark.range(40).repartition(4).write.parquet(path)
+    before = sorted(os.listdir(path))
+    os.makedirs(path + ".old")
+    open(os.path.join(path + ".old", "stale"), "w").close()
+
+    real_replace = os.replace
+
+    def failing_promote(src, dst):
+        if src == path + ".tmp":
+            raise OSError("injected promote failure")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_promote)
+    with pytest.raises(OSError, match="injected"):
+        compact_parquet(spark, path, target_bytes=1 << 30)
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert sorted(os.listdir(path)) == before
+    assert not os.path.exists(path + ".old")
+    assert glob.glob(f"{path}.tmp/*.parquet")
+
+    assert compact_parquet(spark, path, target_bytes=1 << 30) == 1
+    assert len(glob.glob(f"{path}/*.parquet")) == 1
+    assert spark.read.parquet(path).count() == 40
+    assert not os.path.exists(path + ".tmp")
+    assert not os.path.exists(path + ".old")
+
+
 def test_compact_parquet_respects_target_size(spark, sf_dir, tmp_path):
     from mrsboraetl_spark.sources.layout import compact_parquet
 

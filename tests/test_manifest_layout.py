@@ -918,8 +918,9 @@ def test_concurrent_flip_raises_and_preserves_winner(
     assert _rows(rA, "flat_obs") == _rows(rf, "flat_obs")
 
 
+@pytest.mark.parametrize("partitioned", [False, True])
 def test_concurrent_flip_retries_and_both_land(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, partitioned
 ):
     """VERDICT r11 item 1 (engine half): the CAS now has a CONSUMER.
     Same interleave as test_concurrent_flip_raises_and_preserves_winner
@@ -929,15 +930,15 @@ def test_concurrent_flip_retries_and_both_land(
     re-commits: ONE rA.run() call converges, both writers' commits are
     in the epoch history, and the final state equals a serial
     execution (B's rewrite, then A's delta == a fresh rebuild on the
-    delta'd sources)."""
+    delta'd sources).  Both layouts: the plain layout's one-group
+    targets commit through the same CAS and retry."""
     from tests.fixtures import to_spark
 
     rA, pdfs = _mk_state(
         spark, tmp_path, monkeypatch, n_persons=40, seed=47,
+        partitioned=partitioned,
     )
-    rB = PipelineRunner(
-        spark, rA.root, partitioned=True
-    )
+    rB = PipelineRunner(spark, rA.root, partitioned=partitioned)
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
     real_flip = snapshot.flip
@@ -967,7 +968,7 @@ def test_concurrent_flip_retries_and_both_land(
 
     # serial-equivalent: final state == fresh rebuild on the sources
     rf = PipelineRunner(
-        spark, str(tmp_path / "fresh_rl"), partitioned=True
+        spark, str(tmp_path / "fresh_rl"), partitioned=partitioned
     )
     rf.run(to_spark(spark, pdfs2), mode="rebuild")
     for t in ("flat_obs", "flat_visit_summary",

@@ -23,8 +23,9 @@ def layouts(spark, tmp_path_factory):
     part = PipelineRunner(spark, str(tmp / "part"), partitioned=True)
     # Skip pinned off: this fixture's sync exists to run the incremental
     # plans against the partitioned layout with an unchanged source —
-    # exactly what the stage short-circuit would (correctly) elide.
-    part._STAGE_SKIP = False
+    # exactly what the stage short-circuit would (correctly) elide.  No
+    # stored signal ever covers this runner's sources.
+    part._signal_covered = lambda new, stored: False
     part.run(dfs, mode="rebuild")
     part.run(dfs, mode="sync")  # incremental must survive the layout
     return dict(plain=plain, part=part)

@@ -38,6 +38,21 @@ def built(spark, tmp_path_factory):
     return dict(runner=runner, pdfs=pdfs, dfs=dfs, wm=wm)
 
 
+@pytest.fixture(scope="module")
+def built_plain(spark, built, tmp_path_factory):
+    """``built``'s sources on the plain layout through a rebuild and a
+    no-op sync, with the Spark jobs each run took."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    root = str(tmp_path_factory.mktemp("bounds_plain") / "store")
+    runner = PipelineRunner(spark, root)
+    jobs = {}
+    for mode in ("rebuild", "sync"):
+        j0 = int(dag.numTotalJobs())
+        runner.run(built["dfs"], mode=mode)
+        jobs[mode] = int(dag.numTotalJobs()) - j0
+    return dict(runner=runner, jobs=jobs)
+
+
 def test_bounds_sidecar_exact_after_rebuild(spark, built):
     from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
 
@@ -664,16 +679,33 @@ def test_rebuild_sidecar_job_budget(spark, built, tmp_path, monkeypatch):
     ]
 
 
-def test_target_reads_take_schema_from_one_footer(spark, built):
+def test_plain_rebuild_and_noop_sync_job_budget(built_plain):
+    """Committing every plain-layout target through the snapshot
+    protocol costs no Spark job over the whole-directory swap it
+    replaced: that layout took 42-43 jobs for this rebuild and 8 for
+    the no-op sync (its target reads inferred their schema with a
+    job; the one-group commits take their file stats from footers)."""
+    assert built_plain["jobs"]["rebuild"] <= 42, built_plain["jobs"]
+    assert built_plain["jobs"]["sync"] <= 8, built_plain["jobs"]
+
+
+def test_target_reads_take_schema_from_one_footer(
+    spark, built, built_plain
+):
     """Every frame the engine builds over its own snapshot files — each
-    pipeline table and the latest table — has the schema Spark infers
-    from the same files, nullability included, and building it runs no
-    Spark job: the schema comes from one footer, not an inference job."""
+    pipeline table and the latest table, under both layouts — has the
+    schema Spark infers from the same files, nullability included, and
+    building it runs no Spark job: the schema comes from one footer,
+    not an inference job.  The plain runner's last run was a no-op
+    sync, so its pipeline map still names the rebuild's cut: the live
+    epochs."""
     from mrsboraetl_spark.sources.footer_stats import footer_schema
 
-    runner = built["runner"]
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    for table in PipelineRunner._CLUSTER_BY:
+    for runner, table in (
+        (r, t) for r in (built["runner"], built_plain["runner"])
+        for t in PipelineRunner._CLUSTER_BY
+    ):
         path = runner._path(table)
         files = snapshot.files(path)
         assert files, table
@@ -684,7 +716,11 @@ def test_target_reads_take_schema_from_one_footer(spark, built):
             runner.read_target(table),
             runner.read_target_at(table, runner.snapshots(table)[-1]),
         ]
-        if table in PipelineRunner._PARTITION_SRC:
+        if not runner.partitioned:
+            live = runner.snapshots(table)[-1]
+            assert runner.pipeline_snapshot()["tables"][table] == live
+            frames.append(runner.read_pipeline(table))
+        if runner.partitioned and table in PipelineRunner._PARTITION_SRC:
             m = sorted(snapshot.load(path)["months"])[0]
             frames += [
                 runner.read_target_months(table, [m]),

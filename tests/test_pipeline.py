@@ -36,6 +36,32 @@ def pipeline(spark, tmp_path_factory):
     return dict(runner=runner, sources=pdfs, dfs=dfs, first=first)
 
 
+def test_swap_written_store_is_refused(spark, tmp_path):
+    """A target the retired whole-directory swap wrote — data files
+    directly in ``<table>.parquet/``, or in the ``.old`` a crash inside
+    the swap left, and no snapshot pointer — is refused with
+    ValueError, not read as cold and quietly rebuilt."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "swap_store"
+    target = root / "flat_orders.parquet"
+    os.makedirs(target)
+    pq.write_table(
+        pa.table({"encounter_id": [1, 2]}), target / "part-00000.parquet"
+    )
+    demoted = root / "flat_orders.parquet.old"
+    for d in (target, demoted):
+        if d == demoted:
+            os.replace(target, demoted)
+        for partitioned in (False, True):
+            with pytest.raises(ValueError, match="re-create the store"):
+                PipelineRunner(spark, str(root), partitioned=partitioned)
+        assert os.listdir(d) == ["part-00000.parquet"]
+
+
 def _sorted_rows(pdf, cols):
     return sorted(
         (tuple(str(v) for v in row) for row in pdf[cols].itertuples(index=False)),
@@ -452,29 +478,3 @@ def test_crash_before_latest_write_reconciles_next_sync(
     expected = real_build(vs).toPandas()
     cols = sorted(c for c in expected.columns if c != "obs_map")
     assert _sorted_rows(latest, cols) == _sorted_rows(expected, cols)
-
-
-def test_skip_recovers_demoted_old_table(spark, tmp_path_factory):
-    """A stage left `.old`-demoted by a crashed whole-table swap must be
-    promoted back even on a sync that SKIPS the stage: the skip
-    short-circuit routes through _recover_fs, so external consumers
-    reading the path directly never see a missing table across
-    arbitrarily many skipping no-op syncs."""
-    import os
-
-    pdfs = make_sources(n_persons=12, seed=41)
-    dfs = to_spark(spark, pdfs)
-    root = str(tmp_path_factory.mktemp("demoted"))
-    runner = PipelineRunner(spark, root)
-    runner.run(dfs, mode="rebuild")
-    runner.run(dfs, mode="sync")  # drain stragglers; signals stored
-
-    path = runner._path("flat_orders")
-    os.replace(path, path + ".old")  # simulate crash mid-swap
-    before = runner.watermarks._read().count()
-    runner.run(dfs, mode="sync")  # pure no-op: every stage skips
-    assert os.path.exists(path), "skip must promote the demoted table"
-    assert not os.path.exists(path + ".old")
-    # Still a skip (no watermark logged), and the table reads clean.
-    assert runner.watermarks._read().count() == before
-    assert runner.read_target("flat_orders").count() > 0

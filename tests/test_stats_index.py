@@ -108,34 +108,3 @@ def test_state_swap_leaves_no_staging(spark, sf_dir, tmp_path):
     assert os.path.exists(state)
     assert not os.path.exists(state + ".tmp")
     assert not os.path.exists(state + ".old")
-
-
-def test_swap_in_restores_old_on_failed_promote(tmp_path, monkeypatch):
-    """The shared rename-aside swap: a stale `.old` is dropped first, and
-    a promote that fails puts the committed state back at the data path
-    (the staged directory is kept) before re-raising."""
-    from mrsboraetl_spark.operators import _swap
-
-    data, tmp = str(tmp_path / "data"), str(tmp_path / "data.tmp")
-    for d, name in ((data, "live"), (data + ".old", "stale"), (tmp, "new")):
-        os.makedirs(d)
-        open(os.path.join(d, name), "w").close()
-
-    real_replace = os.replace
-
-    def failing_promote(src, dst):
-        if src == tmp:
-            raise OSError("injected promote failure")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(_swap.os, "replace", failing_promote)
-    with pytest.raises(OSError, match="injected"):
-        _swap.swap_in(tmp, data)
-    monkeypatch.setattr(_swap.os, "replace", real_replace)
-    assert os.listdir(data) == ["live"]
-    assert not os.path.exists(data + ".old")
-    assert os.listdir(tmp) == ["new"]
-
-    _swap.swap_in(tmp, data)
-    assert os.listdir(data) == ["new"]
-    assert not os.path.exists(tmp) and not os.path.exists(data + ".old")

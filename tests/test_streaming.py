@@ -320,6 +320,39 @@ def test_append_sink_crash_replay_no_dup_no_loss(spark, tmp_path):
     assert len(rows) == 12 and {r.id for r in rows} == set(range(12))
 
 
+def test_compact_raises_on_a_batch_committed_after_its_read(
+    spark, tmp_path, monkeypatch
+):
+    """A fold publishes against the epoch its read resolved: a batch
+    committed between a compact's read and its replace makes the
+    compact raise ConcurrentCommitError instead of overwriting the
+    batch, and the batch stays readable."""
+    from mrsboraetl_spark.sources.append_table import AppendOnlyTable
+    from mrsboraetl_spark.sources.snapshot import ConcurrentCommitError
+
+    table = AppendOnlyTable(str(tmp_path / "facts"))
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [(i, f"e{i}") for i in range(lo, hi)], "id int, payload string"
+        )
+
+    table.append_batch(batch(0, 5), 0)
+    table.append_batch(batch(5, 9), 1)
+    real_replace = AppendOnlyTable.replace
+
+    def append_then_replace(self, *a, **kw):
+        self.append_batch(batch(9, 12), 2)
+        return real_replace(self, *a, **kw)
+
+    monkeypatch.setattr(AppendOnlyTable, "replace", append_then_replace)
+    with pytest.raises(ConcurrentCommitError):
+        table.compact(spark)
+    monkeypatch.setattr(AppendOnlyTable, "replace", real_replace)
+    assert table.committed() == ["0", "1", "2"]
+    assert {r.id for r in table.read(spark).collect()} == set(range(12))
+
+
 def test_streaming_append_sink_equals_source(spark, sf_dir, tmp_path):
     """Driving the sink from a real bounded file stream: the drained
     table holds exactly the source rows, once each."""
