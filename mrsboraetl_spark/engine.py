@@ -20,6 +20,15 @@ how a target's files are grouped:
   side-channel), then flips the snapshot: write I/O scales with the
   delta, not the target — the reference's ``REPLACE INTO`` cost model.
 
+One writer, ``_write``, serves both groupings: a full write (the
+reference rebuilds flat_latest_hiv_summary whole,
+flat_latest_hiv_summary_v1.0.sql:21-37) or, given the affected months,
+a delta write that carries every other month and untouched file
+forward.  Each stage attempt plans from ONE snapshot of its table and
+flips against that snapshot's epoch.  A store written by a retired
+layout (data files or hive ``p_month=`` directories at a table root, no
+``_snapshot.json``) is refused at construction, never rebuilt.
+
 The upsert algebra in operators/upsert.py computes the merged state; a
 Delta MERGE writer can slot in without touching the plans.  Writes are
 staged then published — the source parquet is re-read lazily, so
@@ -34,7 +43,6 @@ Modes (flat_visit_summary_v1.0.sql:6 @query_type):
 
 from __future__ import annotations
 
-import contextlib
 import datetime as dt
 import json
 import os
@@ -136,9 +144,11 @@ class PipelineRunner:
         month's manifest carries forward by NAME, and GC treats
         manifest files exactly like the data they reference.
 
-        A target written by the retired whole-directory swap (data
-        files at the table root, no ``_snapshot.json``) is refused with
-        ``ValueError``: read as cold it would be quietly rebuilt."""
+        A target written by a retired layout — the whole-directory swap
+        (data files at the table root) or the hive-directory layout
+        (root-level ``p_month=*``/``_old.*`` directories) — with no
+        ``_snapshot.json`` is refused with ``ValueError``: read as cold
+        it would be quietly rebuilt."""
         if manifest is not None and bool(manifest) != bool(partitioned):
             raise ValueError(
                 "manifest is the partitioned layout, not a separate "
@@ -165,23 +175,32 @@ class PipelineRunner:
         return VersionedTable(self._path(table))
 
     def _refuse_pre_snapshot(self, table: str) -> None:
-        """Raise ``ValueError`` for a target the retired whole-directory
-        swap wrote (data files at the table root, or at a demoted
-        ``.old``, and no snapshot pointer): read as cold, its state
-        would be quietly rebuilt and its watermarks would no longer
-        describe it."""
+        """Raise ``ValueError`` for a target a retired layout wrote and
+        no snapshot pointer describes: data files at the table root or
+        at a demoted ``.old`` (the whole-directory swap), or root-level
+        ``p_month=*``/``_old.*`` directories (the hive-directory
+        layout).  Read as cold, its state would be quietly rebuilt and
+        its watermarks would no longer describe it."""
         path = self._path(table)
         for d in (path, path + ".old"):
-            if (
-                os.path.isdir(d)
-                and not os.path.exists(os.path.join(d, snapshot.SNAPSHOT_FILE))
-                and any(e.endswith(".parquet") for e in os.listdir(d))
+            if not os.path.isdir(d) or os.path.exists(
+                os.path.join(d, snapshot.SNAPSHOT_FILE)
             ):
-                raise ValueError(
-                    f"{d}: written by the retired whole-directory swap "
-                    f"(no {snapshot.SNAPSHOT_FILE}) — re-create the "
-                    "store from its sources"
-                )
+                continue
+            entries = os.listdir(d)
+            if any(e.endswith(".parquet") for e in entries):
+                layout = "the retired whole-directory swap"
+            elif any(
+                e.startswith((self.PARTITION_COL + "=", "_old."))
+                for e in entries
+            ):
+                layout = "the retired hive-directory layout"
+            else:
+                continue
+            raise ValueError(
+                f"{d}: written by {layout} (no {snapshot.SNAPSHOT_FILE})"
+                " — re-create the store from its sources"
+            )
 
     def _is_live(self, table: str) -> bool:
         """Whether ``table`` has a live snapshot, WITHOUT reading any
@@ -190,11 +209,25 @@ class PipelineRunner:
         invisible to snapshot readers and GC'd later."""
         return snapshot.load(self._path(table)) is not None
 
-    def read_target(self, table: str) -> DataFrame | None:
-        files = snapshot.files(self._path(table))
+    def read_target(
+        self, table: str, man: dict | None = None
+    ) -> DataFrame | None:
+        """The live target, or the target as of snapshot ``man``."""
+        files = snapshot.files(self._path(table), man=man)
         # a cold table, or a zero-month snapshot, reads as None (no
         # schema to serve); the next run rebuilds
         return read_files(self.spark, files) if files else None
+
+    def _plan_base(self, table: str) -> dict:
+        """The snapshot a write plans from, loaded once: the live one,
+        or — cold table or a pointer whose file map cannot be resolved
+        — an empty map at the RAW pointer epoch, so the heal flip
+        compare-and-swaps against the epoch the pointer still speaks,
+        not -1 (ADVICE r11, high; see snapshot.raw_epoch)."""
+        path = self._path(table)
+        return snapshot.load(path) or {
+            "epoch": snapshot.raw_epoch(path), "months": {},
+        }
 
     # PK per target: writes are repartitioned + sorted on it, so parquet
     # row-group min/max statistics prune key probes (the engine's stand-in
@@ -234,9 +267,6 @@ class PipelineRunner:
         "flat_visit_summary": "encounter_datetime",
     }
     PARTITION_COL = "p_month"
-    # Demoted month directories of the retired directory layout (the
-    # migration sweep in _write_manifest_full removes them).
-    _OLD_PREFIX = "_old."
     # Delta-scoped writes stop paying off when the delta touches most of
     # the target anyway: past this fraction of months the single-pass
     # full rewrite (one job, one flip) wins over a month-scoped one, so
@@ -380,22 +410,25 @@ class PipelineRunner:
     _COMMIT_RETRIES = 2
 
     def read_target_months(
-        self, table: str, months: list[str]
+        self, table: str, months: list[str], man: dict | None = None
     ) -> DataFrame:
         """The target restricted to the given storage months: the
-        months' exact file lists from the snapshot, so only those
-        files are opened — the read-side complement of the
-        delta-scoped write (at 100 TB this is what makes a sync
-        O(delta months) end to end instead of an O(target) scan
-        feeding an O(delta) write).  Partitioned layout only."""
+        months' exact file lists from the snapshot (``man``, default
+        the live one), so only those files are opened — the read-side
+        complement of the delta-scoped write (at 100 TB this is what
+        makes a sync O(delta months) end to end instead of an
+        O(target) scan feeding an O(delta) write).  Partitioned layout
+        only."""
         path = self._path(table)
-        sel = snapshot.files(path, months) if months else []
+        if man is None:
+            man = self._plan_base(table)
+        sel = snapshot.files(path, months, man=man) if months else []
         if sel:
             return read_files(self.spark, sel)
         # no candidate months (or months absent from the snapshot): an
         # empty frame with the target schema keeps downstream joins
         # well-typed — read one live file's schema, no rows
-        all_files = snapshot.files(path)
+        all_files = snapshot.files(path, man=man)
         return read_files(self.spark, all_files[:1]).filter(F.lit(False))
 
     # ------------------------------------------------- month key bounds
@@ -481,8 +514,7 @@ class PipelineRunner:
             hdr[m] = {}
             for c in sorted(blooms[m]):
                 e = blooms[m][c]
-                w = e["w"]
-                w = bytes.fromhex(w) if isinstance(w, str) else bytes(w)
+                w = bytes(e["w"])
                 hdr[m][c] = {
                     "m": e["m"], "j": e["j"], "off": off, "len": len(w),
                 }
@@ -502,16 +534,16 @@ class PipelineRunner:
     # partitioned layout the groups of its file map are storage months;
     # a one-group target (every target of the plain layout, and
     # flat_latest_hiv_summary) is a VersionedTable in the same kind of
-    # directory.  A month-grouped write stages a new epoch — data plus
-    # the bounds/Bloom sidecar that describes it, named under the
-    # snapshot's ``aux`` — then flips the snapshot (snapshot.publish);
-    # a carried file is just a relpath kept in the new month list.  No
-    # data file is ever renamed, linked, or copied after its initial
-    # write, so the layout costs the same on a filesystem without
-    # hardlinks or cheap renames (no-hardlink pin:
-    # tests/test_manifest_layout.py).  What stays here is the engine's
-    # own part: month staging, the bounds/Bloom sidecar and the
-    # pipeline epoch map.
+    # directory.  _write, the one writer, stages a new epoch of a
+    # month-grouped table — data plus the bounds/Bloom sidecar that
+    # describes it, named under the snapshot's ``aux`` — then flips the
+    # snapshot in one publish call; a carried file is just a relpath
+    # kept in the new month list.  No data file is ever renamed,
+    # linked, or copied after its initial write, so the layout costs
+    # the same on a filesystem without hardlinks or cheap renames
+    # (no-hardlink pin: tests/test_manifest_layout.py).  What stays
+    # here is the engine's own part: month staging, the bounds/Bloom
+    # sidecar and the pipeline epoch map.
 
     def snapshots(self, table: str) -> list[int]:
         """Retained snapshot epochs, oldest first (live one included).
@@ -582,6 +614,8 @@ class PipelineRunner:
                 tables[t] = int(prev_tables[t])
             else:
                 tables[t] = snapshot.raw_epoch(self._path(t))
+        if tables == prev_tables:
+            return  # the same cut is already published
         snapshot.write_json(
             os.path.join(self.root, self._PIPELINE_SNAPSHOT_FILE),
             {"tables": tables},
@@ -643,13 +677,6 @@ class PipelineRunner:
             if fl:
                 out[entry.split("=", 1)[1]] = fl
         return out
-
-    def _existing_months(self, table: str) -> list[str]:
-        """Storage months of the live table — the snapshot's keys (no
-        directory listing: the snapshot IS the content authority, and
-        disk may hold not-yet-GC'd orphans)."""
-        man = snapshot.load(self._path(table))
-        return sorted((man or {"months": {}})["months"])
 
     @staticmethod
     def _normalized_keys(keys_df: DataFrame, col: str) -> DataFrame:
@@ -941,11 +968,7 @@ class PipelineRunner:
             a, b = old.get(key), new.get(key)
             if a is None or b is None or a["j"] != b["j"]:
                 continue
-            ws = [
-                bytes.fromhex(e["w"]) if isinstance(e["w"], str)
-                else bytes(e["w"])
-                for e in (a, b)
-            ]
+            ws = [bytes(a["w"]), bytes(b["w"])]
             m = min(a["m"], b["m"])
             if any(
                 e["m"] < 64 or e["m"] & (e["m"] - 1) or len(w) * 8 != e["m"]
@@ -962,7 +985,10 @@ class PipelineRunner:
             merged[key] = {"m": m, "j": a["j"], "w": u.tobytes()}
         return merged
 
-    def _make_probe_reader(self, table: str):
+    def _make_probe_reader(
+        self, table: str, man: dict | None = None,
+        bounds: dict | None = None,
+    ):
         """A (keys_df, key_col) -> DataFrame|None closure for the plans'
         month_probe (plans/_probe.py), or None when this table keeps no
         bounds.  The closure range-joins the distinct probe keys against
@@ -971,12 +997,18 @@ class PipelineRunner:
         target restricted to those months' files (read_target_months).
         Months in the snapshot with no recorded bounds for the column
         are unconditionally candidates — pruning must only ever drop
-        months the bounds PROVE cannot hold a key."""
+        months the bounds PROVE cannot hold a key.  ``man``/``bounds``:
+        the snapshot and the sidecar it names, as a stage attempt
+        loaded them (both loaded here when ``man`` is None)."""
         cols = self._BOUNDS_COLS.get(table, ())
-        bounds = self._load_bounds(table) if cols else None
+        if not cols:
+            return None
+        if man is None:
+            man = self._plan_base(table)
+            bounds = self._load_sidecar(self._path(table), man)
         if bounds is None:
             return None
-        existing = self._existing_months(table)
+        existing = sorted(man["months"])
 
         def reader(keys_df, key_col):
             if key_col not in cols:
@@ -1024,7 +1056,9 @@ class PipelineRunner:
                     .collect()[0]
                 )
                 if hit["_over"]:
-                    return self.read_target_months(table, existing)
+                    return self.read_target_months(
+                        table, existing, man=man
+                    )
                 cand |= set(hit["_months"] or ())
                 n_keys = int(hit["_nk"] or 0)
             # Bloom refinement: months the range verdict kept but whose
@@ -1050,7 +1084,7 @@ class PipelineRunner:
                             m for m in cand
                             if m not in blooms or m in keep
                         }
-            out_df = self.read_target_months(table, sorted(cand))
+            out_df = self.read_target_months(table, sorted(cand), man=man)
             # Small-delta row-group skipping (the PERF.md "isin file
             # skipping" item): month pruning got the probe down to
             # candidate months' FILES; for a handful of keys, a pushed-
@@ -1101,16 +1135,9 @@ class PipelineRunner:
                 for mo, e in blooms.items()
             ]
         )
-        blob_rows = []
-        for mo, e in blooms.items():
-            raw = (
-                bytes.fromhex(e["w"])
-                if isinstance(e["w"], str)
-                else bytes(e["w"])
-            )
-            blob_rows.append((mo, bytearray(raw)))
         blob_df = self.spark.createDataFrame(
-            blob_rows, "mo string, blob binary"
+            [(mo, bytearray(e["w"])) for mo, e in blooms.items()],
+            "mo string, blob binary",
         )
         over_expr = (
             (F.col("_k") >= sentinel)
@@ -1175,10 +1202,13 @@ class PipelineRunner:
         return set(row["_keep"] or ())
 
     def _plan_touched_files(
-        self, table: str, months: list[str], out: dict
+        self, table: str, months: list[str], out: dict, man: dict,
+        bounds: dict | None,
     ) -> tuple[dict, dict] | None:
         """File-level write planning (r9, VERDICT r8 item 2): for each
-        affected month, which of its data files must be rewritten.
+        affected month, which of its data files must be rewritten, from
+        the snapshot ``man`` the stage attempt planned from and the
+        sidecar ``bounds`` it names.
 
         Returns ``(touched, carry)`` — ``touched`` maps each month to
         its set of file relpaths to rewrite, or None VALUE for a month
@@ -1216,10 +1246,8 @@ class PipelineRunner:
         if keys_df is None or not months:
             return None
         pk = self._CLUSTER_BY[table][0]
-        bounds = self._load_bounds(table) or {}
-        man_months = (
-            snapshot.load(self._path(table)) or {"months": {}}
-        )["months"]
+        bounds = bounds or {}
+        man_months = man["months"]
         sentinel = dict(self._BOUNDS_COLS.get(table, {})).get(pk)
         synth_months: set = set()
         sm = out.get("synthetic_delta_months")
@@ -1286,20 +1314,23 @@ class PipelineRunner:
         return plan_map, carry
 
     def _read_target_files(
-        self, table: str, months: list[str], touched: dict
+        self, table: str, months: list[str], touched: dict,
+        man: dict | None = None,
     ) -> DataFrame:
         """The target restricted to the touched FILES of the affected
-        months (full month lists for months whose file accounting fell
-        back) — the read-side half of the per-file cost model: phase 2
-        neither reads nor rewrites a carried file."""
+        months (full month lists, from snapshot ``man``, for months
+        whose file accounting fell back) — the read-side half of the
+        per-file cost model: phase 2 neither reads nor rewrites a
+        carried file."""
         path = self._path(table)
-        man = snapshot.load(path) or {"months": {}}
+        if man is None:
+            man = self._plan_base(table)
         sel: list[str] = []
         for m, t in touched.items():
             names = man["months"].get(m, ()) if t is None else sorted(t)
             sel += [os.path.join(path, rp) for rp in names]
         if not sel:
-            return self.read_target_months(table, [])
+            return self.read_target_months(table, [], man=man)
         # explicit leaf files: no partition inference, no p_month
         return read_files(self.spark, sel)
 
@@ -1365,204 +1396,92 @@ class PipelineRunner:
         vt.vacuum(keep_last=self.keep_snapshots)
         return True
 
-    def _pin_commit_parent(self, table: str) -> int:
-        """The live commit parent of ``table`` — its raw snapshot
-        pointer epoch (a VersionedTable's version) — captured at PLAN
-        time, i.e. before read_target pins the plan base (ADVICE r12,
-        medium).  The old
-        spelling captured the CAS parent inside _write/_write_delta when
-        STAGING began: a concurrent commit landing during the plan/probe
-        phase (the longest part of a sync) advanced the pointer first,
-        so the stale plan's flip passed the epoch check and silently
-        dropped the winner's rows in every recomputed month — exactly
-        the conflicts a long sync is most exposed to.  Capturing before
-        the plan base is read closes that window from the safe side: a
-        commit between the pin and read_target makes the plan actually
-        CURRENT yet the flip still raises, costing one spurious (safe,
-        idempotent) retry."""
-        return snapshot.raw_epoch(self._path(table))
-
     def _write(
-        self, df: DataFrame, table: str, parent: int | None = None
+        self, df: DataFrame, table: str, parent: dict | None = None,
+        months: list[str] | None = None, carry: dict | None = None,
+        sidecar: dict | None = None,
     ) -> None:
-        """Full write: cluster, stage, publish with one snapshot flip.
-        ``parent``: plan-time commit parent from _pin_commit_parent —
-        threaded into the CAS so a commit that landed during the
-        caller's plan phase raises instead of being overwritten; None
-        keeps the capture-at-staging behavior for callers outside the
-        optimistic-retry loop."""
+        """The one stage writer: cluster ``df``, stage it, publish it
+        with one snapshot flip.
+
+        ``parent``: the snapshot the caller planned ``df`` from
+        (_stage_attempt's one load, see _plan_base).  Its epoch is the
+        CAS parent, so a commit that landed anywhere in the caller's
+        plan/probe phase fails this flip instead of being silently
+        replaced by a plan that never saw it (ADVICE r12, medium).
+        None (callers outside the optimistic-retry loop) loads the
+        live snapshot here.
+
+        A one-group table (every target of the plain layout, and
+        flat_latest_hiv_summary under both) is a VersionedTable
+        commit.  A month-grouped table stages one epoch — data plus the
+        bounds/Bloom sidecar that describes it (_month_sidecar) — and
+        flips the snapshot to it:
+
+        * ``months=None`` — full write: the new month map is exactly
+          the staged months, with an exact sidecar;
+        * ``months=[...]`` — delta write: ``df`` is the merged state of
+          those months only (of their TOUCHED files on the file-level
+          path).  The new map is the parent's with each listed month
+          replaced by its staged files plus ``carry`` ({month:
+          {relpath: [lo, hi, n]}} of untouched files, kept by relpath —
+          no hardlink, no copy, so write I/O scales with touched
+          files); a month left with neither is dropped.  ``sidecar``:
+          the parent's sidecar, which untouched months keep (loaded
+          here when None).  ``[]`` writes nothing: a no-op sync has
+          zero write I/O.
+
+        Staging dirs are uniquely named (_e{N}_{uuid}), so crashed or
+        concurrent attempts never collide.  A crash before the flip
+        leaves the parent live with the sidecar it names — the
+        superset invariant _make_probe_reader's pruning relies on holds
+        at every instant; replaced files are GC'd after the flip."""
+        if months is not None and not months:
+            return
         pk = self._CLUSTER_BY.get(table)
         part_src = self._PARTITION_SRC.get(table) if self.partitioned else None
-        if part_src:
-            from mrsboraetl_spark.schemas import p_month_of
-
-            df = df.withColumn(self.PARTITION_COL, p_month_of(part_src))
-            # RANGE-shuffle on (month, pk) — r9: each output partition
-            # covers a contiguous (month, pk) span, so within a month
-            # the files carry DISJOINT pk ranges (recorded in the
-            # sidecar's per-file entries).  A hash shuffle would give
-            # every file ~the month's whole range and file-level delta
-            # pruning could never drop one.  Rows stay pk-sorted within
-            # each file for row-group statistics; a boundary partition
-            # straddling two months still writes one file per month
-            # (partitionBy splits on the partition value).
-            df = df.repartitionByRange(
-                self.PARTITION_COL, *pk
-            ).sortWithinPartitions(self.PARTITION_COL, *pk)
-            self._write_manifest_full(df, table, parent_epoch=parent)
+        if not part_src:
+            # one file group: a VersionedTable commit that retains the
+            # runner's snapshot window (review finding r10).  stats_key
+            # + bounded file grain: merge_delta's per-file pruning and
+            # reuse need per-file key ranges and more than one file to
+            # exist (an AQE-coalesced small table would otherwise land
+            # whole in a single file).
+            if pk:
+                df = df.repartition(*pk).sortWithinPartitions(*pk)
+            vt = self._versioned(table)
+            self._record_run_commit(table, vt.commit(
+                df, note=table, stats_key=pk[0] if pk else None,
+                max_records_per_file=self._TARGET_FILE_ROWS or None,
+                parent_version=None if parent is None
+                else int(parent["epoch"]),
+                retries=0 if parent is not None else None,
+            ))
+            vt.vacuum(keep_last=self.keep_snapshots)
             return
-        # one file group (every target of the plain layout, and
-        # flat_latest_hiv_summary under both): a VersionedTable commit
-        # that retains the runner's snapshot window (review finding
-        # r10).  stats_key + bounded file grain: merge_delta's per-file
-        # pruning and reuse need per-file key ranges and more than one
-        # file to exist (an AQE-coalesced small table would otherwise
-        # land whole in a single file).
-        if pk:
-            df = df.repartition(*pk).sortWithinPartitions(*pk)
-        vt = self._versioned(table)
-        self._record_run_commit(table, vt.commit(
-            df, note=table, stats_key=pk[0] if pk else None,
-            max_records_per_file=self._TARGET_FILE_ROWS or None,
-            parent_version=parent,
-            retries=0 if parent is not None else None,
-        ))
-        vt.vacuum(keep_last=self.keep_snapshots)
-
-    def _write_manifest_full(
-        self, df: DataFrame, table: str, parent_epoch: int | None = None,
-    ) -> None:
-        """Full rewrite under the partitioned layout: stage a complete
-        new epoch — the data and its exact sidecar — flip the snapshot
-        to it, GC everything older.  ``df`` is already
-        month-partitioned and PK-range-clustered by _write.  The flip
-        is the only promotion step: a crash anywhere before it leaves
-        the old snapshot live with the sidecar it names."""
-        path = self._path(table)
-        os.makedirs(path, exist_ok=True)
-        man_old = snapshot.load(path)  # loaded ONCE per write
-        # CAS parent: the caller's plan-time pin when given (ADVICE
-        # r12, medium — captured before read_target pinned the plan
-        # base, see _pin_commit_parent); else captured here — the
-        # resolved epoch, or the RAW pointer epoch for a
-        # parseable-but-unresolvable pointer whose heal flip must CAS
-        # against the epoch the pointer still speaks, not -1 (ADVICE
-        # r11, high).
-        if parent_epoch is None:
-            parent_epoch = (
-                int(man_old["epoch"]) if man_old
-                else snapshot.raw_epoch(path)
-            )
-
-        def write(edir: str) -> dict:
-            writer = df.write.mode("overwrite").partitionBy(
-                self.PARTITION_COL
-            )
-            if self._TARGET_FILE_ROWS:
-                writer = writer.option(
-                    "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
-                )
-            writer.parquet(edir)
-            fields = {"months": self._staged_month_files(edir)}
-            if table in self._BOUNDS_COLS:
-                # exact: a full rewrite's content is exactly the staged
-                # set — every month is rewritten, nothing carried
-                fields["aux"] = self._write_bounds(edir, self._month_sidecar(
-                    table, edir, {}, sorted(fields["months"]), {},
-                ))
-            return fields
-
-        man_new = snapshot.publish(path, man_old, parent_epoch, write)
-        self._record_run_commit(table, man_new["epoch"])
-        # previous epochs are now unreferenced
-        snapshot.gc(path, man_new, keep=self.keep_snapshots)
-        # Migration sweep (review finding r10): a table written by the
-        # retired directory layout still holds its pre-manifest hive
-        # dirs (p_month=M live, _old.M demoted) — the flip just
-        # committed the complete new state, so they are stale
-        # duplicates that a raw path reader would otherwise silently
-        # serve (breaking the advertised fail-safe) and that double
-        # storage forever.  Same for the sidecar files older tables
-        # kept at the table root (and their .tmp leftovers).  No writer
-        # produces these names any more.
-        for entry in os.listdir(path):
-            if entry.startswith(
-                (self.PARTITION_COL + "=", self._OLD_PREFIX)
-            ):
-                shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-            elif entry.startswith((self._BOUNDS_FILE, self._BLOOMS_FILE)):
-                with contextlib.suppress(OSError):
-                    os.remove(os.path.join(path, entry))
-
-    def _write_delta(
-        self, df: DataFrame, table: str, months: list[str],
-        carry: dict | None = None, parent: int | None = None,
-    ) -> None:
-        """Delta-scoped write: ``df`` is the merged state of the
-        affected months only (restricted to the TOUCHED files when the
-        file-level path is active); cluster it and publish just those
-        months (see _write_months for the crash contract).
-        ``carry``: {month: {relpath: [lo, hi, n]}} of untouched files
-        to carry forward as manifest entries.
-        ``parent``: plan-time CAS parent (see _pin_commit_parent)."""
         from mrsboraetl_spark.schemas import p_month_of
 
-        pk = self._CLUSTER_BY[table]
-        part_src = self._PARTITION_SRC[table]
-        delta = (
-            df.withColumn(self.PARTITION_COL, p_month_of(part_src))
+        path = self._path(table)
+        if parent is None:
+            parent = self._plan_base(table)
+        df = df.withColumn(self.PARTITION_COL, p_month_of(part_src))
+        if months is not None:
             # The plans' superset contract puts every merged row in an
             # affected month; the filter pins the staged write to the
             # exact publish set (rows outside it could never be named).
-            .filter(F.col(self.PARTITION_COL).isin(months))
-            # Same range layout as _write: disjoint per-file pk ranges
-            .repartitionByRange(self.PARTITION_COL, *pk)
-            .sortWithinPartitions(self.PARTITION_COL, *pk)
-        )
-        self._write_months(
-            delta, table, months, carry=carry, parent_epoch=parent
-        )
-
-    def _write_months(
-        self, df: DataFrame, table: str, months: list[str],
-        carry=None, parent_epoch: int | None = None,
-    ) -> None:
-        """Rewrite ONLY the given months of an existing partitioned
-        target from ``df`` (already filtered to those months,
-        month-partitioned and PK-sorted by _write_delta).
-
-        An empty ``months`` list means the sync changed nothing: skip
-        the write entirely (zero write I/O for a no-op sync).  The
-        new epoch is staged in a uniquely named hidden directory; ONE
-        atomic snapshot flip then publishes it: carried relpaths join
-        the freshly staged ones in the new month lists, untouched
-        months keep their entries verbatim, and months with neither
-        staged rows nor carry are dropped.  Replaced files are GC'd
-        after the flip.  A crash before the flip leaves the previous
-        snapshot live and the staging an orphan.
-
-        Bounds sidecar (tables in _BOUNDS_COLS): the new snapshot's
-        sidecar is computed in the staged epoch (_month_sidecar) and
-        named by the same flip, so the live snapshot's bounds always
-        describe exactly the live content — the superset invariant
-        _make_probe_reader's pruning relies on holds at every instant,
-        across crashes and concurrent writers alike.
-
-        File-level carry (r9, ``carry``): the carry is PURE METADATA —
-        untouched files' relpaths stay in the new month lists (no
-        hardlink, no copy: the object-store-safe form) — so write I/O
-        scales with touched FILES."""
-        if not months:
-            return
-        carry = carry or {}
-        path = self._path(table)
-        # content authority while staging: the CURRENT snapshot, loaded
-        # once per write.  Staging dirs are uniquely named
-        # (_e{N}_{uuid}): crashed or concurrent attempts of the same
-        # epoch never collide; post-flip GC sweeps orphans.
-        man_old = snapshot.load(path)
-        live_months = (man_old or {"months": {}})["months"]
-        live = snapshot.files(path, man=man_old)
+            df = df.filter(F.col(self.PARTITION_COL).isin(months))
+        # RANGE-shuffle on (month, pk) — r9: each output partition
+        # covers a contiguous (month, pk) span, so within a month the
+        # files carry DISJOINT pk ranges (recorded in the sidecar's
+        # per-file entries).  A hash shuffle would give every file ~the
+        # month's whole range and file-level delta pruning could never
+        # drop one.  Rows stay pk-sorted within each file for row-group
+        # statistics; a boundary partition straddling two months still
+        # writes one file per month (partitionBy splits on the value).
+        df = df.repartitionByRange(
+            self.PARTITION_COL, *pk
+        ).sortWithinPartitions(self.PARTITION_COL, *pk)
+        live = snapshot.files(path, man=parent) if months is not None else []
         if live:
             # Stage in the live files' column order: read_files takes a
             # table's schema from ONE file's footer, and a plan's delta
@@ -1571,15 +1490,12 @@ class PipelineRunner:
             order.append(self.PARTITION_COL)
             if sorted(order) == sorted(df.columns):
                 df = df.select(*order)
-        # CAS parent: the caller's plan-time pin when given (ADVICE
-        # r12, medium), else captured here; raw-pointer fallback keeps
-        # the heal flip of an unresolvable snapshot possible (ADVICE
-        # r11, high — see snapshot.raw_epoch)
-        if parent_epoch is None:
-            parent_epoch = (
-                int(man_old["epoch"]) if man_old
-                else snapshot.raw_epoch(path)
-            )
+        carry = carry or {}
+        if months is None:
+            sidecar = {}  # a full write's sidecar is exact: no carry
+        elif sidecar is None:
+            sidecar = self._load_sidecar(path, parent) or {}
+        os.makedirs(path, exist_ok=True)
 
         def write(edir: str) -> dict:
             writer = df.write.mode("overwrite").partitionBy(
@@ -1590,10 +1506,11 @@ class PipelineRunner:
                     "maxRecordsPerFile", str(self._TARGET_FILE_ROWS)
                 )
             writer.parquet(edir)
-            staged_files = self._staged_month_files(edir)
-            new_months = dict(live_months)
-            for m in months:
-                fl = staged_files.get(m, []) + sorted(carry.get(m) or ())
+            staged = self._staged_month_files(edir)
+            written = sorted(staged) if months is None else months
+            new_months = {} if months is None else dict(parent["months"])
+            for m in written:
+                fl = staged.get(m, []) + sorted(carry.get(m) or ())
                 if fl:
                     new_months[m] = sorted(fl)
                 else:
@@ -1601,15 +1518,14 @@ class PipelineRunner:
             fields = {"months": new_months}
             if table in self._BOUNDS_COLS:
                 fields["aux"] = self._write_bounds(edir, self._month_sidecar(
-                    table, edir, self._load_sidecar(path, man_old) or {},
-                    months, carry,
+                    table, edir, sidecar, written, carry,
                 ))
             return fields
 
-        man_new = snapshot.publish(path, man_old, parent_epoch, write)
+        man_new = snapshot.publish(path, parent, int(parent["epoch"]), write)
         self._record_run_commit(table, man_new["epoch"])
-        # replaced touched files (and the old epoch's _SUCCESS markers)
-        # are now unreferenced
+        # replaced files (and the old epoch's _SUCCESS markers) are now
+        # unreferenced
         snapshot.gc(path, man_new, keep=self.keep_snapshots)
 
     def _month_sidecar(
@@ -2292,8 +2208,11 @@ class PipelineRunner:
 
         # Commit the person-void fingerprint only after EVERY stage
         # completed: a crashed run leaves the old fingerprint, so the
-        # next run re-processes (idempotent) rather than skips.
-        self._save_person_fingerprint(person_fp)
+        # next run re-processes (idempotent) rather than skips.  An
+        # unchanged fingerprint is already on disk: a no-op sync
+        # writes nothing.
+        if not person_stable:
+            self._save_person_fingerprint(person_fp)
         # Publish the per-run epoch map LAST (VERDICT r11 item 5): a
         # crash anywhere above leaves the previous map — still a
         # consistent cross-table cut of a completed run.
@@ -2509,11 +2428,16 @@ class PipelineRunner:
            month-pruned target (only the affected months' files are
            even opened — rows elsewhere are neither retracted nor
            rewritten, so excluding them is exact) and publish just
-           those months.  An empty month set means a no-op sync:
-           nothing is read beyond the probe, nothing is written.  Falls
-           back to the full single-phase write when the delta spans
-           most months (or the layout is plain, the table
-           unpartitioned, or the target cold)."""
+           those months: ``_write`` with ``months`` given.  An empty
+           month set means a no-op sync: nothing is read beyond the
+           probe, nothing is written.  Falls back to the full
+           single-phase write (``_write`` with ``months=None``) when
+           the delta spans most months (or the layout is plain, the
+           table unpartitioned, the target cold, or its snapshot names
+           no readable sidecar).
+
+        Both phases, and the write, read the one snapshot the attempt
+        loaded (_stage_attempt)."""
         started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         version = TABLE_VERSIONS[table]
         if (
@@ -2560,17 +2484,23 @@ class PipelineRunner:
         """One optimistic attempt of a stage: read the live target,
         build the plan, write, log the watermark + signal.  Raises
         ConcurrentCommitError back to _stage's retry loop when the
-        commit loses a concurrent-writer race."""
-        # Commit parent pinned BEFORE the plan base is read: a
-        # concurrent commit landing anywhere in the (long) plan/probe
-        # phase must fail this attempt's flip, not be silently replaced
-        # by a plan that never saw it (ADVICE r12, medium).
-        parent = self._pin_commit_parent(table)
-        target = self.read_target(table)
+        commit loses a concurrent-writer race.
+
+        The attempt loads the table's snapshot ONCE (``base``) and
+        everything it reads comes from that one view: the target, the
+        probe reader and its month list, the touched-file plan, the
+        phase-2 read, the month universe and the writer's new month
+        map; the sidecar ``base`` names is likewise loaded once and
+        shared.  ``base``'s epoch is the flip's CAS parent, so a commit
+        landing anywhere in the (long) plan/probe phase fails this
+        attempt's flip instead of being silently replaced (ADVICE
+        r12, medium)."""
+        base = self._plan_base(table)
+        target = self.read_target(table, man=base)
         wm = self.watermarks.last_update(version, fallback=target)
         part_src = self._PARTITION_SRC.get(table) if self.partitioned else None
         out: dict = out_sink if out_sink is not None else {}
-        reader = None
+        reader = sidecar = None
         if part_src and target is not None:
             # Only the two-phase delta path re-runs the plan; request
             # the recompute pin solely when that second pass can happen
@@ -2582,7 +2512,8 @@ class PipelineRunner:
             # opens only months whose recorded key range can
             # contain a changed key, instead of scanning 3 columns of
             # the whole target every sync.
-            reader = self._make_probe_reader(table)
+            sidecar = self._load_sidecar(self._path(table), base)
+            reader = self._make_probe_reader(table, base, sidecar)
             if reader is not None:
                 out["probe_reader"] = reader
             # The voided-person probe's processed point (see
@@ -2617,7 +2548,7 @@ class PipelineRunner:
             # Bounded driver action: distinct storage months (tens of
             # rows for years of data — the watermark-store precedent).
             months = sorted(r["p_month"] for r in months_df.collect())
-            universe = set(self._existing_months(table)) | set(months)
+            universe = set(base["months"]) | set(months)
             if not universe or len(months) <= (
                 self._DELTA_WRITE_MAX_FRACTION * len(universe)
             ):
@@ -2629,28 +2560,30 @@ class PipelineRunner:
                     # entries — read and write both O(touched files),
                     # not O(touched months).
                     plan_files = self._plan_touched_files(
-                        table, months, out
+                        table, months, out, base, sidecar
                     )
                     if plan_files is None:
-                        pruned = self.read_target_months(table, months)
+                        pruned = self.read_target_months(
+                            table, months, man=base
+                        )
                         carry = None
                     else:
                         touched, carry = plan_files
                         pruned = self._read_target_files(
-                            table, months, touched
+                            table, months, touched, man=base
                         )
                     # Same out dict: the plan reuses its pinned
                     # recompute instead of re-running every source
                     # filter/join/reaggregation job a second time.
-                    self._write_delta(
-                        plan(pruned, wm, out), table, months,
-                        carry=carry, parent=parent,
+                    self._write(
+                        plan(pruned, wm, out), table, parent=base,
+                        months=months, carry=carry, sidecar=sidecar,
                     )
                 self.watermarks.log_run(version, started, data_wm)
                 if change_signal is not None:
                     self._save_signal(version, change_signal)
                 return True
-        self._write(merged, table, parent=parent)
+        self._write(merged, table, parent=base)
         self.watermarks.log_run(version, started, data_wm)
         if change_signal is not None:
             self._save_signal(version, change_signal)

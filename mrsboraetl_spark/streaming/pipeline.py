@@ -23,8 +23,8 @@ mode.  Delivery semantics come free from the engine's own contract:
   effectively exactly-once without any sink coordination;
 * a trigger with nothing new past the watermark is a NO-OP sync: the
   engine's stage skip writes zero bytes, and under the partitioned
-  layout a stage that does run writes nothing either
-  (engine._write_months's empty-month fast path).
+  layout a stage that does run writes nothing either (a delta write
+  of no months returns before staging, see engine._write).
 
 At 100 TB the trigger stream is a metadata-only file watch (the
 trigger rows are never used); each sync's cost is the incremental

@@ -86,7 +86,6 @@ _SLOW_TESTS = {
     "test_manifest_layout.py::test_manifest_file_level_sync_carries_by_reference",
     "test_manifest_layout.py::test_manifest_gc_and_probe_pruning",
     "test_manifest_layout.py::test_manifest_incremental_matches_rebuild_and_dir_mode",
-    "test_manifest_layout.py::test_manifest_migration_sweeps_legacy_hive_dirs",
     "test_manifest_layout.py::test_manifest_raw_path_read_sees_no_data",
     "test_manifest_layout.py::test_manifest_snapshot_retention_and_time_travel",
     "test_manifest_layout.py::test_manifest_split_crash_retention_and_time_travel",

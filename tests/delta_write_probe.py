@@ -170,9 +170,9 @@ def run_probe(n: int) -> None:
     probed_months: list[tuple[str, tuple]] = []
     orig_rtm = PipelineRunner.read_target_months
 
-    def spy_rtm(self, table, months):
+    def spy_rtm(self, table, months, **kw):
         probed_months.append((table, tuple(months)))
-        return orig_rtm(self, table, months)
+        return orig_rtm(self, table, months, **kw)
 
     PipelineRunner.read_target_months = spy_rtm
 
@@ -225,9 +225,7 @@ def run_probe(n: int) -> None:
             # disabled, so every affected month rewrites whole.
             runner._TARGET_FILE_ROWS = max(50, n // 200)
         if mode == "delta_month_grain":
-            runner._plan_touched_files = (
-                lambda table, months, out: None
-            )
+            runner._plan_touched_files = lambda *a: None
         src_rebuild = paths if mode == "delta_bounds_paths" else dfs
         src_sync = paths2 if mode == "delta_bounds_paths" else dfs2
         t0 = time.time()
@@ -242,7 +240,7 @@ def run_probe(n: int) -> None:
         target_bytes = tree_bytes(root)
         if mode == "delta_no_bounds":
             # r6 behavior: no sidecar -> full-target phase-1 probe
-            runner._load_bounds = lambda table: None
+            runner._load_sidecar = lambda table_dir, man: None
         t0 = time.time()
         time.sleep(0.05)  # mtime resolution guard
         t_sync = time.time()

@@ -71,6 +71,7 @@ def main() -> None:
 
     from mrsboraetl_spark.engine import PipelineRunner
     from mrsboraetl_spark.session import get_spark
+    from mrsboraetl_spark.sources import snapshot
     from tests.fixtures import make_sources, to_spark
 
     spark = get_spark(app_name="encounter_bloom_probe")
@@ -119,7 +120,7 @@ def main() -> None:
     n_cand, cand = probe_months(
         runner, "flat_obs", keys_df, "encounter_id"
     )
-    all_months = runner._existing_months("flat_obs")
+    all_months = sorted(snapshot.load(runner._path("flat_obs"))["months"])
 
     # A/B: the same probe with the encounter Blooms stripped from the
     # sidecar (ranges-only — the pre-r11 configuration)
@@ -128,9 +129,9 @@ def main() -> None:
         m: {k: v for k, v in ent.items() if k != "bloom:encounter_id"}
         for m, ent in b.items()
     }
-    runner._load_bounds = lambda table: stripped
+    runner._load_sidecar = lambda table_dir, man: stripped
     n_ro, _ = probe_months(runner, "flat_obs", keys_df, "encounter_id")
-    del runner._load_bounds  # restore the class method
+    del runner._load_sidecar  # restore the class method
     print(
         f"[fresh]  aged-encounter probe: true={len(tm)} {tm} | "
         f"ranges-only={n_ro} | ranges+bloom={n_cand} {cand} | "

@@ -264,10 +264,10 @@ def test_phase2_reads_only_touched_files_plus_fallback_months(
     reads: list = []
     orig = PipelineRunner._read_target_files
 
-    def spy(self, table, months, touched):
+    def spy(self, table, months, touched, **kw):
         reads.append((table, {m: sorted(v) if v is not None else None
                               for m, v in touched.items()}))
-        return orig(self, table, months, touched)
+        return orig(self, table, months, touched, **kw)
 
     monkeypatch.setattr(PipelineRunner, "_read_target_files", spy)
     r.run(to_spark(spark, pdfs2), mode="sync")
@@ -449,9 +449,9 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
     probed: list = []
     orig = PipelineRunner.read_target_months
 
-    def spy(self, table, months):
+    def spy(self, table, months, **kw):
         probed.append(tuple(months))
-        return orig(self, table, months)
+        return orig(self, table, months, **kw)
 
     monkeypatch.setattr(PipelineRunner, "read_target_months", spy)
     reader = r._make_probe_reader("flat_obs")

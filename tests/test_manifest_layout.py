@@ -637,57 +637,6 @@ def test_corrupt_ref_reads_as_cold_never_escapes(
     assert snapshot.load(r._path(table)) is None
 
 
-def test_manifest_migration_sweeps_legacy_hive_dirs(
-    spark, tmp_path, monkeypatch
-):
-    """Review finding r10: a table written by the retired directory
-    layout (hive ``p_month=*`` dirs, a demoted ``_old.M`` dir, no
-    snapshot) must not stay live after the manifest layout takes it
-    over — a raw path reader would silently serve the frozen old table
-    (breaking the advertised fail-safe) and storage doubles.  No writer
-    produces that layout any more, so the legacy dirs are built here by
-    hand; the first manifest full write sweeps them after its flip."""
-    import shutil
-
-    from mrsboraetl_spark.plans.flat_obs import build_flat_obs
-    from mrsboraetl_spark.schemas import p_month_of
-    from tests.fixtures import make_sources, to_spark
-
-    monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", 4)
-    pdfs = make_sources(n_persons=20, seed=13)
-    dfs = to_spark(spark, pdfs)
-    root = tmp_path / "migrate"
-    rm = PipelineRunner(spark, str(root), partitioned=True)
-    obs_dir = rm._path("flat_obs")
-    (
-        build_flat_obs(dfs["obs"], dfs["encounter"], dfs["person"])
-        .withColumn(rm.PARTITION_COL, p_month_of("encounter_datetime"))
-        .write.partitionBy(rm.PARTITION_COL)
-        .parquet(obs_dir)
-    )
-    hive = sorted(e for e in os.listdir(obs_dir) if e.startswith("p_month="))
-    assert hive, "legacy table must have hive dirs"
-    shutil.copytree(
-        os.path.join(obs_dir, hive[0]),
-        os.path.join(obs_dir, rm._OLD_PREFIX + hive[0].split("=", 1)[1]),
-    )
-    legacy = spark.read.parquet(obs_dir).drop(rm.PARTITION_COL)
-    cols = sorted(c for c in legacy.columns if c != "obs_map")
-    rows_before = sorted(
-        map(repr, legacy.toPandas()[cols].itertuples(index=False))
-    )
-
-    rm.run(dfs, mode="rebuild")
-    left = [
-        e for e in os.listdir(obs_dir)
-        if e.startswith(("p_month=", rm._OLD_PREFIX))
-    ]
-    assert left == [], left
-    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
-        spark.read.parquet(obs_dir).count()
-    assert _rows(rm, "flat_obs") == rows_before
-
-
 def test_manifest_crash_orphan_epoch_not_time_travelable(
     spark, tmp_path, monkeypatch
 ):
@@ -734,13 +683,11 @@ def test_legacy_table_without_sidecar_is_rebuilt_by_next_sync(
     spark, tmp_path, monkeypatch
 ):
     """A partitioned table whose live snapshot names no sidecar —
-    written while the sidecar still lived at the table root — is not
-    left unpruned: the next sync that runs its stage rewrites it in
-    full with the sidecar inside the new snapshot, sweeps the root
-    sidecar files (and their .tmp leftovers), and converges to the
-    rebuild state."""
-    import shutil
-
+    written while the sidecar still lived at the table root, or one
+    whose bounds file was lost — is not left unpruned: the next sync
+    that runs its stage rewrites it in full (``_write`` with
+    ``months=None``) with the sidecar inside the new snapshot, and
+    converges to the rebuild state."""
     from tests.fixtures import to_spark
 
     r, pdfs = _mk_state(
@@ -748,11 +695,7 @@ def test_legacy_table_without_sidecar_is_rebuilt_by_next_sync(
     )
     path = r._path("flat_obs")
     raw = _raw_snapshot(r, "flat_obs")
-    aux = raw.pop("aux")
-    for name, fn in (("bounds", r._BOUNDS_FILE), ("blooms", r._BLOOMS_FILE)):
-        shutil.copy(os.path.join(path, aux[name]), os.path.join(path, fn))
-        with open(os.path.join(path, fn + ".tmp"), "w") as f:
-            f.write("torn")
+    raw.pop("aux")
     snapshot.write_json(
         os.path.join(path, f"_snap_{raw['epoch']:08d}.json"), raw
     )
@@ -760,21 +703,18 @@ def test_legacy_table_without_sidecar_is_rebuilt_by_next_sync(
     assert r._load_bounds("flat_obs") is None
 
     full: list[str] = []
-    real_full = r._write_manifest_full
+    real_write = r._write
 
-    def spy_full(df, table, *a, **kw):
-        full.append(table)
-        return real_full(df, table, *a, **kw)
+    def spy_write(df, table, *a, **kw):
+        if kw.get("months") is None:
+            full.append(table)
+        return real_write(df, table, *a, **kw)
 
-    monkeypatch.setattr(r, "_write_manifest_full", spy_full)
+    monkeypatch.setattr(r, "_write", spy_write)
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
     assert "flat_obs" in full, full
     assert r._load_bounds("flat_obs")
-    assert not [
-        e for e in os.listdir(path)
-        if e.startswith((r._BOUNDS_FILE, r._BLOOMS_FILE))
-    ]
     rf = PipelineRunner(
         spark, str(tmp_path / "fresh_ub"), partitioned=True
     )
@@ -824,12 +764,12 @@ def test_losing_writer_never_publishes_its_sidecar(
     def write_bounds_after_winner(*a, **kw):
         if not fired:
             fired.append(True)
-            rA._write_months(delta_a, table, [m_a])
+            rA._write(delta_a, table, months=[m_a])
         return real_write_bounds(*a, **kw)
 
     monkeypatch.setattr(rB, "_write_bounds", write_bounds_after_winner)
     with pytest.raises(ConcurrentCommitError):
-        rB._write_months(delta_b, table, [m_b])
+        rB._write(delta_b, table, months=[m_b])
     assert fired
 
     bounds = rA._load_bounds(table)
@@ -1112,16 +1052,17 @@ def test_commit_during_plan_phase_raises_then_converges(
     spark, tmp_path, monkeypatch
 ):
     """ADVICE r12 (medium), engine half: the CAS parent used to be
-    captured inside _write/_write_delta when STAGING began — a
-    concurrent commit landing during the (long) plan/probe phase
-    advanced the pointer first, so the stale plan's flip passed the
-    epoch check and silently dropped the winner's rows.  The parent is
-    now pinned at the top of _stage_attempt, before read_target pins
-    the plan base.  Interleave: runner B lands a flat_obs epoch at
-    A's _write_delta ENTRY (i.e. after A's plan was built against the
-    old snapshot, before the old capture point would have run).  With
-    retries=0 A must RAISE (the old code silently passed); with the
-    default budget one run() converges and equals a fresh rebuild."""
+    captured inside the writer when STAGING began — a concurrent
+    commit landing during the (long) plan/probe phase advanced the
+    pointer first, so the stale plan's flip passed the epoch check and
+    silently dropped the winner's rows.  The parent is now the epoch of
+    the one snapshot _stage_attempt loads before it reads the plan
+    base.  Interleave: runner B lands a flat_obs epoch at the ENTRY of
+    A's delta write (``_write`` with ``months`` given, i.e. after A's
+    plan was built against the old snapshot, before the old capture
+    point would have run).  With retries=0 A must RAISE (the old code
+    silently passed); with the default budget one run() converges and
+    equals a fresh rebuild."""
     from mrsboraetl_spark.engine import ConcurrentCommitError
     from tests.fixtures import to_spark
 
@@ -1137,19 +1078,20 @@ def test_commit_during_plan_phase_raises_then_converges(
     )
     e0 = _raw_snapshot(rA, "flat_obs")["epoch"]
 
-    real_wd = PipelineRunner._write_delta
+    real_write = PipelineRunner._write
     fired: dict = {}
 
-    def interleaved_write_delta(self, df, table, months, **kw):
-        if self is rA and table == "flat_obs" and not fired:
+    def interleaved_write(self, df, table, *a, **kw):
+        if (
+            self is rA and table == "flat_obs"
+            and kw.get("months") is not None and not fired
+        ):
             fired["e_b"] = None
             rB._write(rB.read_target("flat_obs"), "flat_obs")
             fired["e_b"] = _raw_snapshot(rB, "flat_obs")["epoch"]
-        return real_wd(self, df, table, months, **kw)
+        return real_write(self, df, table, *a, **kw)
 
-    monkeypatch.setattr(
-        PipelineRunner, "_write_delta", interleaved_write_delta
-    )
+    monkeypatch.setattr(PipelineRunner, "_write", interleaved_write)
     monkeypatch.setattr(PipelineRunner, "_COMMIT_RETRIES", 0)
     pdfs2 = _small_delta(pdfs)
     with pytest.raises(ConcurrentCommitError, match="concurrent"):

@@ -179,11 +179,23 @@ def test_sync_rewrites_only_affected_months(spark, tmp_path_factory):
         sb = sorted(map(tuple, b[cols].astype(str).itertuples(index=False)))
         assert sa == sb, table
 
-    # A no-op sync (no new changes) must write NOTHING anywhere.
-    inv_vs = _month_inventory(runner, "flat_visit_summary")
+    # A no-op sync (no new changes) must write NOTHING anywhere: every
+    # file under the store root — tables, sidecars, watermark log,
+    # signal store, person-void fingerprint, pipeline map — keeps its
+    # path, size and mtime.
+    def root_inventory():
+        return {
+            (os.path.relpath(os.path.join(dp, fn), root), st.st_size,
+             st.st_mtime_ns)
+            for dp, _ds, fs in os.walk(root)
+            for fn in fs
+            for st in (os.stat(os.path.join(dp, fn)),)
+        }
+
+    before = root_inventory()
     runner.run(dfs2, mode="sync")
     assert _month_inventory(runner, "flat_obs") == inv1
-    assert _month_inventory(runner, "flat_visit_summary") == inv_vs
+    assert root_inventory() == before, root_inventory() ^ before
 
 
 def test_sync_covers_encounter_repointed_across_person_and_month(

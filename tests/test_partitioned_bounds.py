@@ -133,9 +133,9 @@ def test_probe_reader_prunes_to_candidate_months(spark, built, monkeypatch):
     opened: list = []
     orig_rtm = type(runner).read_target_months
 
-    def spy_rtm(self, table, months):
+    def spy_rtm(self, table, months, **kw):
         opened.append(tuple(months))
-        return orig_rtm(self, table, months)
+        return orig_rtm(self, table, months, **kw)
 
     monkeypatch.setattr(type(runner), "read_target_months", spy_rtm)
     miss = reader(
@@ -247,13 +247,13 @@ def test_sync_probe_reads_scale_with_delta(spark, built, monkeypatch):
     probed: list[tuple[str, tuple]] = []
     orig = PipelineRunner.read_target_months
 
-    def spy(self, table, months):
+    def spy(self, table, months, **kw):
         probed.append((table, tuple(months)))
-        return orig(self, table, months)
+        return orig(self, table, months, **kw)
 
     monkeypatch.setattr(PipelineRunner, "read_target_months", spy)
 
-    n_months_obs = len(runner._existing_months("flat_obs"))
+    n_months_obs = len(snapshot.load(runner._path("flat_obs"))["months"])
     runner.run(dfs2, mode="sync")
     obs_probe_months = {
         m for t, ms in probed if t == "flat_obs" for m in ms
@@ -282,7 +282,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     epoch0 = snapshot.load(runner._path(table))["epoch"]
     target = _live_with_month(runner, table)
     n_before = target.count()
-    months = sorted(runner._existing_months(table))[:2]
+    months = sorted(snapshot.load(runner._path(table))["months"])[:2]
     delta = (
         target.filter(F.col("p_month").isin(months))
         # shift every key so the staged bounds differ from the old ones
@@ -307,7 +307,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     os.replace = exploding_replace
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            runner._write_months(delta, table, months)
+            runner._write(delta, table, months=months)
     finally:
         os.replace = orig_replace
 
@@ -319,7 +319,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     assert restored.count() == n_before
     restored = restored.localCheckpoint()  # same hazard for the cleanup
     # A clean rewrite of the same months lands exact bounds again.
-    runner._write_months(delta, table, months)
+    runner._write(delta, table, months=months)
     post = runner._load_bounds(table)
     for m in months:
         old_lo, old_hi = pre[m]["encounter_id"]
@@ -487,11 +487,6 @@ def test_bloom_widen_is_exact_union_or_omission():
     assert "bloom:person_id" not in w(a, {}, {})
     # old None: the staged entry stands alone
     assert w(None, b, {}) is b
-    # legacy hex entries (pre-r9 sidecar read during an upgrade window)
-    # still merge with byte entries
-    hx = {"bloom:person_id": {"m": 1024, "j": 7, "w": "f0" + "00" * 127}}
-    merged2 = w(hx, a, {})
-    assert merged2["bloom:person_id"]["w"].startswith(b"\xff")
 
 
 def _stage(spark, tmp_path, rows, schema: str):
@@ -687,6 +682,87 @@ def test_plain_rebuild_and_noop_sync_job_budget(built_plain):
     job; the one-group commits take their file stats from footers)."""
     assert built_plain["jobs"]["rebuild"] <= 42, built_plain["jobs"]
     assert built_plain["jobs"]["sync"] <= 8, built_plain["jobs"]
+
+
+def test_delta_attempt_loads_one_snapshot_and_one_sidecar(
+    spark, built, tmp_path, monkeypatch
+):
+    """One partitioned delta stage attempt plans from ONE snapshot of
+    its table: the target read, the probe reader and its month list,
+    the touched-file plan, the phase-2 read, the month universe and the
+    writer's new month map all come from a single ``snapshot.load`` of
+    the table directory, and the sidecar that snapshot names is read
+    once.  A commit landing between two separate loads would otherwise
+    give the attempt a mixed view (saved only by the CAS, at the cost
+    of a spurious retry).  Runs on a copy of ``built``'s store, so the
+    shared fixture keeps its state."""
+    import builtins
+    import shutil
+
+    import mrsboraetl_spark.engine as engine_mod
+    from tests.test_file_level_writes import _small_delta
+
+    root = str(tmp_path / "store")
+    shutil.copytree(built["runner"].root, root)
+    runner = PipelineRunner(spark, root, partitioned=True)
+
+    loads: list[str] = []
+    real_load = snapshot.load
+
+    def counting_load(table_dir):
+        loads.append(os.path.normpath(table_dir))
+        return real_load(table_dir)
+
+    reads: list[str] = []
+
+    def counting_open(file, mode="r", *a, **kw):
+        if "r" in mode:
+            reads.append(os.path.normpath(str(file)))
+        return builtins.open(file, mode, *a, **kw)
+
+    writes: list[tuple[str, bool]] = []
+    real_write = PipelineRunner._write
+
+    def spy_write(self, df, table, *a, **kw):
+        writes.append((table, kw.get("months") is not None))
+        return real_write(self, df, table, *a, **kw)
+
+    attempts: list[tuple[str, list, list, list]] = []
+    real_attempt = PipelineRunner._stage_attempt
+
+    def spy_attempt(self, table, *a, **kw):
+        n_l, n_r, n_w = len(loads), len(reads), len(writes)
+        try:
+            return real_attempt(self, table, *a, **kw)
+        finally:
+            attempts.append(
+                (table, loads[n_l:], reads[n_r:], writes[n_w:])
+            )
+
+    monkeypatch.setattr(snapshot, "load", counting_load)
+    monkeypatch.setattr(engine_mod, "open", counting_open, raising=False)
+    monkeypatch.setattr(PipelineRunner, "_write", spy_write)
+    monkeypatch.setattr(PipelineRunner, "_stage_attempt", spy_attempt)
+    runner.run(to_spark(spark, _small_delta(built["pdfs"])), mode="sync")
+
+    by_table = {t: (ls, rs, ws) for t, ls, rs, ws in attempts}
+    assert "flat_obs" in by_table, attempts
+    for table, (ls, rs, ws) in by_table.items():
+        if table not in PipelineRunner._PARTITION_SRC:
+            continue
+        path = os.path.normpath(runner._path(table))
+        assert ls.count(path) == 1, (table, ls)
+        sidecar_reads = [
+            os.path.basename(f) for f in rs if f.startswith(path + os.sep)
+        ]
+        assert sidecar_reads.count(runner._BOUNDS_FILE) == 1, (
+            table, sidecar_reads,
+        )
+        assert sidecar_reads.count(runner._BLOOMS_FILE) == (
+            1 if table in runner._BLOOM_COLS else 0
+        ), (table, sidecar_reads)
+    # the pin is about the delta path: flat_obs took it
+    assert ("flat_obs", True) in by_table["flat_obs"][2], by_table
 
 
 def test_target_reads_take_schema_from_one_footer(
@@ -933,7 +1009,7 @@ def test_delta_write_stages_months_in_the_live_column_order(spark, built):
     before = snapshot.load(path)
     m = sorted(before["months"])[0]
     rows = runner.read_target_months(table, [m])
-    runner._write_delta(rows.select(*reversed(rows.columns)), table, [m])
+    runner._write(rows.select(*reversed(rows.columns)), table, months=[m])
     assert snapshot.load(path)["months"][m] != before["months"][m]
     for t in PipelineRunner._CLUSTER_BY:
         orders = {

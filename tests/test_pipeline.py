@@ -37,10 +37,12 @@ def pipeline(spark, tmp_path_factory):
 
 
 def test_swap_written_store_is_refused(spark, tmp_path):
-    """A target the retired whole-directory swap wrote — data files
-    directly in ``<table>.parquet/``, or in the ``.old`` a crash inside
-    the swap left, and no snapshot pointer — is refused with
-    ValueError, not read as cold and quietly rebuilt."""
+    """A target a retired layout wrote, with no snapshot pointer, is
+    refused with ValueError, not read as cold and quietly rebuilt.  Two
+    inputs: the whole-directory swap's data files directly in
+    ``<table>.parquet/`` (or in the ``.old`` a crash inside the swap
+    left), and the hive-directory layout's root-level ``p_month=*``
+    directories beside a demoted ``_old.*`` one."""
     import os
 
     import pyarrow as pa
@@ -60,6 +62,29 @@ def test_swap_written_store_is_refused(spark, tmp_path):
             with pytest.raises(ValueError, match="re-create the store"):
                 PipelineRunner(spark, str(root), partitioned=partitioned)
         assert os.listdir(d) == ["part-00000.parquet"]
+
+    hive_root = tmp_path / "hive_store"
+    hive = hive_root / "flat_obs.parquet"
+    for d in ("p_month=2024-01", "p_month=2024-02", "_old.2024-01"):
+        os.makedirs(hive / d)
+        pq.write_table(
+            pa.table({"encounter_id": [1, 2]}),
+            hive / d / "part-00000.parquet",
+        )
+
+    def tree():
+        return sorted(
+            (os.path.relpath(dp, hive_root), sorted(fs))
+            for dp, _ds, fs in os.walk(hive_root)
+        )
+
+    before = tree()
+    for partitioned in (False, True):
+        with pytest.raises(
+            ValueError, match="hive-directory layout.*re-create the store"
+        ):
+            PipelineRunner(spark, str(hive_root), partitioned=partitioned)
+    assert tree() == before
 
 
 def _sorted_rows(pdf, cols):
@@ -314,9 +339,9 @@ def test_noop_sync_skips_every_stage(spark, tmp_path_factory, monkeypatch):
     reads: list[str] = []
     orig = PipelineRunner.read_target
 
-    def spy(self, table):
+    def spy(self, table, **kw):
         reads.append(table)
-        return orig(self, table)
+        return orig(self, table, **kw)
 
     monkeypatch.setattr(PipelineRunner, "read_target", spy)
 

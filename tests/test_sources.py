@@ -177,9 +177,9 @@ def test_partitioned_engine_with_path_sources_noop_sync(
         maxes_calls.append(cols)
         return orig_maxes(df, *cols)
 
-    def spy_rtm(self, table, months):
+    def spy_rtm(self, table, months, **kw):
         months_reads.append((table, tuple(months)))
-        return orig_rtm(self, table, months)
+        return orig_rtm(self, table, months, **kw)
 
     monkeypatch.setattr(PipelineRunner, "_maxes", staticmethod(spy_maxes))
     monkeypatch.setattr(PipelineRunner, "read_target_months", spy_rtm)
