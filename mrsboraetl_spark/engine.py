@@ -337,7 +337,9 @@ class PipelineRunner:
     # conservative, never wrong; raise the cap (or move the sidecar to
     # parquet) for production-scale months.
     # encounter_id added r11 (VERDICT r10 item 5, decided by
-    # measurement — tests/encounter_bloom_probe.py): the time-
+    # measurement — PERF.md "Round 11: encounter-key Bloom"; pinned by
+    # tests/test_partitioned_bounds.py::
+    # test_bloom_sidecar_prunes_person_probe[encounter_id]): the time-
     # correlation claim behind range-only encounter pruning does not
     # hold when encounters are entered out of visit order (the fixture
     # models it; production backdated data entry does the same) — an
@@ -432,10 +434,6 @@ class PipelineRunner:
         return read_files(self.spark, all_files[:1]).filter(F.lit(False))
 
     # ------------------------------------------------- month key bounds
-
-    def _load_bounds(self, table: str) -> dict | None:
-        path = self._path(table)
-        return self._load_sidecar(path, snapshot.load(path))
 
     def _load_sidecar(self, table_dir: str, man: dict | None) -> dict | None:
         """The merged in-memory sidecar snapshot ``man`` names (its
@@ -989,8 +987,8 @@ class PipelineRunner:
         self, table: str, man: dict | None = None,
         bounds: dict | None = None,
     ):
-        """A (keys_df, key_col) -> DataFrame|None closure for the plans'
-        month_probe (plans/_probe.py), or None when this table keeps no
+        """A (keys_df, key_col) -> DataFrame|None closure for
+        plans/_probe.month_probe, or None when this table keeps no
         bounds.  The closure range-joins the distinct probe keys against
         the broadcast per-month bounds (tens of rows), collects the
         candidate month list (bounded driver action), and returns the
@@ -1314,8 +1312,7 @@ class PipelineRunner:
         return plan_map, carry
 
     def _read_target_files(
-        self, table: str, months: list[str], touched: dict,
-        man: dict | None = None,
+        self, table: str, touched: dict, man: dict | None = None,
     ) -> DataFrame:
         """The target restricted to the touched FILES of the affected
         months (full month lists, from snapshot ``man``, for months
@@ -1911,7 +1908,7 @@ class PipelineRunner:
             c: (v.isoformat() if isinstance(v, dt.date) else v)
             for c, v in maxes.items()
         }
-        # last_staged_rows: observability for the scale probe — None
+        # last_staged_rows: read by tests/test_jdbc_pipeline.py — None
         # means a full copy, an int means that many delta rows crossed
         # the JDBC pipe this sync (survivor rows of touched files are
         # local rewrites, not pipe traffic)
@@ -1981,8 +1978,8 @@ class PipelineRunner:
                     # within a stage) reads the frozen columnar copy.
                     # Without this, lazy JDBC scans re-execute per
                     # action (~14 obs table scans in one delta sync,
-                    # tests/jdbc_scale_probe.py) and stages can tear
-                    # across a moving replica.  snapshot=False opts
+                    # PERF.md "Round 10: JDBC at scale") and stages can
+                    # tear across a moving replica.  snapshot=False opts
                     # back into plain lazy scans.  With
                     # delta_key/delta_cols declared the pipe carries
                     # only rows past the previous snapshot's maxes
@@ -2570,7 +2567,7 @@ class PipelineRunner:
                     else:
                         touched, carry = plan_files
                         pruned = self._read_target_files(
-                            table, months, touched, man=base
+                            table, touched, man=base
                         )
                     # Same out dict: the plan reuses its pinned
                     # recompute instead of re-running every source

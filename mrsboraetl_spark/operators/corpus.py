@@ -88,11 +88,12 @@ class CurationConfig:
     # thing curate_corpus is pointed at is raw crawl data, where a
     # single 16M-token document costs a 60-80s straggler task in the
     # repetition/shingling stages (superlinear past ~8M tokens —
-    # tests/adversarial_doc_probe.py).  Documents above the cap are
-    # ANALYZED on their first max_doc_tokens tokens only (quality,
-    # decontam, dedup all see the capped text); they are never dropped
-    # for length, their ORIGINAL text flows through to the outputs,
-    # and the audit marks them ``truncated=true``.  None opts out.
+    # PERF.md "Round 6: adversarial-document probe").  Documents above
+    # the cap are ANALYZED on their first max_doc_tokens tokens only
+    # (quality, decontam, dedup all see the capped text); they are never
+    # dropped for length, their ORIGINAL text flows through to the
+    # outputs, and the audit marks them ``truncated=true``.  None opts
+    # out.
     max_doc_tokens: int | None = 1_000_000
 
 

@@ -756,7 +756,6 @@ def unigram_logprob(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    broadcast_vocab: bool = False,
     max_doc_tokens: int | None = None,
     materialize_tokens: bool = False,
 ) -> DataFrame:
@@ -775,14 +774,13 @@ def unigram_logprob(
     ``ln(S) - avg(ln c)`` with ln(S) a scalar — fetched with one
     bounded 1-row action (the watermark-store precedent) instead of a
     1-row nested-loop cross join, keeping the package NLJ-free.  The
-    count join is a plain shuffle equi-join by default — the full
-    vocabulary at 100 TB is far past broadcast range; per-key work is
-    1:1 with token occurrences, so the worst partition is bounded by the
-    hottest token's occurrence count, which AQE's skew splitting handles
-    (the count side is one row per token, never skewed).
-    ``broadcast_vocab=True`` broadcasts the count table for small
-    corpora.  ``nll`` is rounded to 4 decimals so double summation order
-    can't flip the oracle hash (the same rule the BM25 oracle uses).
+    count join is a plain shuffle equi-join — the full vocabulary at
+    100 TB is far past broadcast range; per-key work is 1:1 with token
+    occurrences, so the worst partition is bounded by the hottest
+    token's occurrence count, which AQE's skew splitting handles (the
+    count side is one row per token, never skewed).  ``nll`` is
+    rounded to 4 decimals so double summation order can't flip the
+    oracle hash (the same rule the BM25 oracle uses).
     ``max_doc_tokens`` caps the per-document explode at the first N
     tokens — the guard against a single crawler-artifact monster doc
     concentrating its whole token stream in one task (the LM's counts
@@ -823,8 +821,6 @@ def unigram_logprob(
     if row is None or row["s"] is None:
         raise ValueError("empty corpus: no tokens to model")
     ln_s = math.log(row["s"])
-    if broadcast_vocab:
-        counts = F.broadcast(counts)
     return (
         toks.join(counts, "t")
         .groupBy("id")
@@ -936,7 +932,8 @@ def repetition_metrics(
 
     Cost is bounded by (and ~linear in, modulo GC) the LARGEST document:
     its token and bigram Counters are built inside the one task that owns
-    the doc (tests/adversarial_doc_probe.py drives a 16M-token doc).
+    the doc (PERF.md "Round 6: adversarial-document probe" drove a
+    16M-token doc).
     ``max_doc_tokens`` caps that bound: the metrics are computed over
     each document's FIRST max_doc_tokens tokens (a documented
     approximation — a crawler artifact that long is degenerate and will

@@ -55,13 +55,13 @@ def _memo_md5(cap: int = _KERNEL_CACHE_MAX):
     working set and re-hashes it (rehash storm); a FIFO half-evict is no
     better, because under any scan-like access order the oldest-inserted
     keys are exactly the ones coming back next (measured: both collapse
-    ~7x at 1.05x cap, tests/kernel_cache_probe.py).  The segmented scheme
-    is the O(1)-per-op fix: lookups hit the ``hot`` dict, then the
-    ``cold`` (previous generation, re-promoted on hit); when ``hot``
-    reaches cap/2 it BECOMES the new cold and a fresh hot starts.  A key
-    is only ever re-hashed after going untouched for a full generation,
-    so hot-set throughput stays flat across the cap boundary while total
-    memory stays <= cap entries."""
+    ~7x at 1.05x cap, PERF.md "Round 6: kernel memo eviction").  The
+    segmented scheme is the O(1)-per-op fix: lookups hit the ``hot``
+    dict, then the ``cold`` (previous generation, re-promoted on hit);
+    when ``hot`` reaches cap/2 it BECOMES the new cold and a fresh hot
+    starts.  A key is only ever re-hashed after going untouched for a
+    full generation, so hot-set throughput stays flat across the cap
+    boundary while total memory stays <= cap entries."""
     import hashlib
 
     half = max(cap // 2, 1)
@@ -860,7 +860,8 @@ def connected_components(
     )
 
 
-# Diagnostics only (read by tests/cc_probe.py): rounds taken by the most
+# Diagnostics only (read by tests/test_llmdata.py::
+# test_connected_components_stats_stay_bounded): rounds taken by the most
 # recent connected_components call on this driver.  Not part of the API.
 _LAST_CC_ROUNDS = 0
 

@@ -77,7 +77,6 @@ class SpanFrequencyIndex:
         id_col: str,
         text_col: str,
         max_freq: int = 2,
-        broadcast_bad: bool = True,
     ) -> DataFrame:
         """Append the batch's span counts, then return the batch cleaned
         against the post-append frequencies: (id, clean_text, n_kept).
@@ -92,7 +91,7 @@ class SpanFrequencyIndex:
             spans.groupBy("span").agg(F.count(F.lit(1)).alias("cnt"))
         )
         bad = self.frequencies(spark).filter(F.col("freq") > max_freq)
-        return clean_spans(spans, bad, broadcast_bad)
+        return clean_spans(spans, bad)
 
     def clean_corpus(
         self,
@@ -100,7 +99,6 @@ class SpanFrequencyIndex:
         id_col: str,
         text_col: str,
         max_freq: int = 2,
-        broadcast_bad: bool = True,
     ) -> DataFrame:
         """Clean ``docs`` against the CURRENT index frequencies (no
         ingest).  After all batches are ingested this equals the batch
@@ -111,7 +109,7 @@ class SpanFrequencyIndex:
         if freqs is None:
             raise ValueError(f"index at {self.path} is empty")
         bad = freqs.filter(F.col("freq") > max_freq)
-        return clean_spans(spans, bad, broadcast_bad)
+        return clean_spans(spans, bad)
 
     def compact(self, spark: SparkSession) -> None:
         """Fold the per-ingest partial counts into one aggregated group,

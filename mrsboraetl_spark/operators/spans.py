@@ -20,9 +20,7 @@ Spark-first shape (and why it holds at 100 TB):
 * over-frequent spans are a tiny relation (boilerplate is by definition
   few distinct strings with many copies), so the deletion is a BROADCAST
   left-anti join against that set — the corpus-side span stream never
-  shuffles for it.  ``broadcast_bad=False`` falls back to a shuffle
-  anti-join for adversarial corpora where the bad-span set itself is
-  large (same escape hatch as decontam's gram probe);
+  shuffles for it;
 * reassembly is one aggregation keyed by doc id: ``array_sort`` on
   (pos, span) structs + ``array_join`` — the same ordered-collect shape
   as the engine's signature obs-blob pack (functions/obsmap.py), bounded
@@ -94,17 +92,11 @@ def over_frequent_spans(
     )
 
 
-def clean_spans(
-    spans: DataFrame, bad: DataFrame, broadcast_bad: bool = True
-) -> DataFrame:
+def clean_spans(spans: DataFrame, bad: DataFrame) -> DataFrame:
     """(id, clean_text, n_kept): reassemble documents from their (id,
-    pos, span) rows after anti-joining away the ``bad`` (span) set.
-    ``broadcast_bad`` broadcasts it (default; boilerplate sets are
-    small); set False to shuffle the anti-join when the bad set is
-    itself huge."""
-    bad = bad.select("span")
-    bad = F.broadcast(bad) if broadcast_bad else bad
-    kept = spans.join(bad, "span", "left_anti")
+    pos, span) rows after anti-joining away the ``bad`` (span) set,
+    which is broadcast (boilerplate sets are small)."""
+    kept = spans.join(F.broadcast(bad.select("span")), "span", "left_anti")
     return kept.groupBy("id").agg(
         F.array_join(
             F.transform(
@@ -123,7 +115,6 @@ def remove_repeated_spans(
     text_col: str,
     span_tokens: int = 10,
     max_freq: int = 2,
-    broadcast_bad: bool = True,
 ) -> DataFrame:
     """(id, clean_text, n_kept): documents with over-frequent spans
     deleted (one-shot batch spelling; see operators/span_index.py for
@@ -135,7 +126,7 @@ def remove_repeated_spans(
     rule the span index applies at ingest)."""
     spans = doc_spans(df, id_col, text_col, span_tokens).localCheckpoint()
     bad = over_frequent_spans(spans, max_freq)
-    return clean_spans(spans, bad, broadcast_bad)
+    return clean_spans(spans, bad)
 
 
 def repeated_spans_oracle_sql(

@@ -61,7 +61,7 @@ class JdbcSource:
     ``snapshot`` controls staging to local parquet on first resolution
     (one partitioned JDBC scan + write), after which every stage reads
     the staging copy.  Motivated by measurement
-    (tests/jdbc_scale_probe.py, PERF.md r10): Spark re-executes a lazy
+    (PERF.md "Round 10: JDBC at scale"): Spark re-executes a lazy
     JDBC scan per ACTION, and one delta sync's five stages drove ~14
     full scans of ``obs`` over the pipe — a replica-killer at scale.
     With a snapshot the pipe is crossed exactly once per CHANGED table

@@ -344,8 +344,8 @@ def test_monster_doc_capped_not_dropped(spark):
     an over-cap document is ANALYZED on its prefix, flagged
     truncated=true in the audit, keeps its ORIGINAL text in the kept
     output, and is never silently dropped.  (The 16M-token wall-clock
-    claim lives in tests/adversarial_doc_probe.py; this pins the
-    semantics at a small cap.)"""
+    measurement is PERF.md "Round 6: adversarial-document probe"; this
+    pins the semantics at a small cap.)"""
     import random
 
     rng = random.Random(3)

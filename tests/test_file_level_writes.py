@@ -35,7 +35,7 @@ def _mk_state(
     monkeypatch.setattr(PipelineRunner, "_TARGET_FILE_ROWS", file_rows)
     pdfs = make_sources(n_persons=n_persons, seed=seed)
     # Clamp date_changed stragglers so a later delta is ONLY what the
-    # test injects (same clamp as delta_write_probe.py).
+    # test injects.
     enc = pdfs["encounter"].copy()
     wm = pdfs["obs"]["date_created"].max()
     late = enc["date_changed"].notna() & (enc["date_changed"] > wm)
@@ -91,6 +91,13 @@ def _file_map(runner, table):
             st = os.stat(os.path.join(base, rp))
             out[m][rp] = (st.st_ino, st.st_mtime_ns, st.st_size)
     return out
+
+
+def _live_sidecar(runner, table):
+    """The merged sidecar (ranges, file entries, Blooms) the live
+    snapshot of a partitioned target names, None when it names none."""
+    path = runner._path(table)
+    return runner._load_sidecar(path, snapshot.load(path))
 
 
 def _live_with_month(runner, table):
@@ -194,7 +201,7 @@ def test_file_level_sync_rewrites_only_touched_files(
     # The affected months' pk ranges must be EXACT after the sync (re-
     # tightened from the per-file entries), not stuck widened: compare
     # to a fresh scan-derived recompute over the live table.
-    bounds = r._load_bounds("flat_obs")
+    bounds = _live_sidecar(r, "flat_obs")
     exact = _live_exact_bounds(r, "flat_obs")
     for m, (_c, rw) in per_month.items():
         if rw and "encounter_id" in exact.get(m, {}):
@@ -234,7 +241,7 @@ def test_sidecar_file_entries_track_disk_and_are_disjoint(
     test_sidecar_file_entries_after_file_level_sync pins that state."""
     r, _ = _mk_state(spark, tmp_path, monkeypatch, n_persons=40, seed=47)
     for t in ("flat_obs", "flat_orders", "flat_visit_summary"):
-        bounds = r._load_bounds(t)
+        bounds = _live_sidecar(r, t)
         disk = _file_map(r, t)
         for m, files in disk.items():
             ent = bounds.get(m, {}).get("files")
@@ -264,10 +271,10 @@ def test_phase2_reads_only_touched_files_plus_fallback_months(
     reads: list = []
     orig = PipelineRunner._read_target_files
 
-    def spy(self, table, months, touched, **kw):
+    def spy(self, table, touched, **kw):
         reads.append((table, {m: sorted(v) if v is not None else None
                               for m, v in touched.items()}))
-        return orig(self, table, months, touched, **kw)
+        return orig(self, table, touched, **kw)
 
     monkeypatch.setattr(PipelineRunner, "_read_target_files", spy)
     r.run(to_spark(spark, pdfs2), mode="sync")
@@ -302,7 +309,7 @@ def test_sidecar_file_entries_after_file_level_sync(
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
 
-    bounds = r._load_bounds("flat_obs")
+    bounds = _live_sidecar(r, "flat_obs")
     disk = _file_map(r, "flat_obs")
     for m, files in disk.items():
         ent = bounds.get(m, {}).get("files")
@@ -373,11 +380,11 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
     # two add-obs syncs: the widen streak
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
-    b1 = r._load_bounds("flat_obs")
+    b1 = _live_sidecar(r, "flat_obs")
     assert b1[modal].get("fl_syncs") == 1, b1[modal].get("fl_syncs")
     pdfs3 = _small_delta(pdfs2)
     r.run(to_spark(spark, pdfs3), mode="sync")
-    b2 = r._load_bounds("flat_obs")
+    b2 = _live_sidecar(r, "flat_obs")
     assert b2[modal].get("fl_syncs") == 2, b2[modal].get("fl_syncs")
 
     # pre-trigger: the widened Bloom (correctly) holds the victim
@@ -427,7 +434,7 @@ def test_person_retighten_cadence(spark, tmp_path, monkeypatch):
         "vacuous", before.get(modal), after.get(modal),
     )
 
-    b3 = r._load_bounds("flat_obs")
+    b3 = _live_sidecar(r, "flat_obs")
     assert "fl_syncs" not in b3[modal], "trigger must reset the streak"
     left = r.read_target("flat_obs").toPandas()
     left["m"] = pd.to_datetime(

@@ -295,7 +295,7 @@ def test_jdbc_column_exists_probe(spark, env, tmp_path):
 def test_jdbc_snapshot_staging_single_pipe_crossing(
     spark, env, tmp_path, monkeypatch
 ):
-    """r10 (probe finding, tests/jdbc_scale_probe.py): without
+    """r10 (PERF.md "Round 10: JDBC at scale"): without
     staging, a delta sync re-executes the lazy obs JDBC scan once per
     Spark ACTION (~14 table scans over the pipe).  snapshot=True must
     (a) resolve each table through the pipe AT MOST ONCE per run,

@@ -417,7 +417,12 @@ def test_connected_components_stats_stay_bounded(spark):
     broadcast-size checks (measured: 224s for round 14 alone on a 10k
     chain).  The parquet stats reset (stats_reset_every) bounds it; this
     asserts the returned plan's estimate is sane after enough rounds to
-    have exploded without the reset."""
+    have exploded without the reset.  The rounds are also bounded
+    above: pointer jumping converges on the 600-node chain in
+    O(log n) rounds, where plain label propagation needs ~600 (PERF.md
+    "Round 5: connected-components probe")."""
+    import math
+
     from mrsboraetl_spark.operators.dedup import (
         _LAST_CC_ROUNDS,  # noqa: F401 - imported to assert it exists
         connected_components,
@@ -429,6 +434,7 @@ def test_connected_components_stats_stay_bounded(spark):
     )
     labels = connected_components(chain, max_iter=30)
     assert dedup._LAST_CC_ROUNDS >= 10  # enough rounds to compound 3^r
+    assert dedup._LAST_CC_ROUNDS <= 2 * math.ceil(math.log2(600))
     size = int(
         labels._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from mrsboraetl_spark.engine import PipelineRunner
 from mrsboraetl_spark.sources import snapshot
-from tests.test_file_level_writes import _mk_state, _small_delta
+from tests.test_file_level_writes import _live_sidecar, _mk_state, _small_delta
 
 
 def _forbid_data_copies(monkeypatch):
@@ -186,7 +186,7 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     )
     rows_before = _rows(r, "flat_obs")
     man_before = _manifest(r, "flat_obs")
-    bounds_before = r._load_bounds("flat_obs")
+    bounds_before = _live_sidecar(r, "flat_obs")
     pdfs2 = _small_delta(pdfs)
 
     real_flip = snapshot.flip
@@ -217,7 +217,7 @@ def test_manifest_crash_at_flip_keeps_contract(spark, tmp_path, monkeypatch):
     assert _rows(r, "flat_obs") == rows_before
 
     # (b) the old snapshot's own sidecar: file entries == month lists
-    bounds = r._load_bounds("flat_obs")
+    bounds = _live_sidecar(r, "flat_obs")
     assert bounds == bounds_before
     live = man_before["months"]
     assert {m for m, ent in bounds.items() if "files" in ent} == set(live)
@@ -700,7 +700,7 @@ def test_legacy_table_without_sidecar_is_rebuilt_by_next_sync(
         os.path.join(path, f"_snap_{raw['epoch']:08d}.json"), raw
     )
     snapshot.write_json(os.path.join(path, snapshot.SNAPSHOT_FILE), raw)
-    assert r._load_bounds("flat_obs") is None
+    assert _live_sidecar(r, "flat_obs") is None
 
     full: list[str] = []
     real_write = r._write
@@ -714,7 +714,7 @@ def test_legacy_table_without_sidecar_is_rebuilt_by_next_sync(
     pdfs2 = _small_delta(pdfs)
     r.run(to_spark(spark, pdfs2), mode="sync")
     assert "flat_obs" in full, full
-    assert r._load_bounds("flat_obs")
+    assert _live_sidecar(r, "flat_obs")
     rf = PipelineRunner(
         spark, str(tmp_path / "fresh_ub"), partitioned=True
     )
@@ -746,7 +746,7 @@ def test_losing_writer_never_publishes_its_sidecar(
         build_flat_obs(dfs["obs"], dfs["encounter"], dfs["person"]), table
     )
     live = _live_with_month(rA, table).localCheckpoint()
-    bounds = rA._load_bounds(table)
+    bounds = _live_sidecar(rA, table)
     m_a, m_b = sorted(bounds)[:2]
     hi = bounds[m_a]["encounter_id"][1]
     a_rows = live.filter(F.col("p_month") == m_a)
@@ -772,7 +772,7 @@ def test_losing_writer_never_publishes_its_sidecar(
         rB._write(delta_b, table, months=[m_b])
     assert fired
 
-    bounds = rA._load_bounds(table)
+    bounds = _live_sidecar(rA, table)
     real = F.when(
         F.col("encounter_id") < SYNTHETIC_ENCOUNTER_OFFSET,
         F.col("encounter_id"),

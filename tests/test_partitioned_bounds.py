@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from mrsboraetl_spark.engine import PipelineRunner
 from mrsboraetl_spark.sources import snapshot
 from tests.fixtures import make_sources, to_spark
-from tests.test_file_level_writes import _live_with_month
+from tests.test_file_level_writes import _live_sidecar, _live_with_month
 
 
 @pytest.fixture(scope="module")
@@ -57,7 +57,7 @@ def test_bounds_sidecar_exact_after_rebuild(spark, built):
     from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
 
     runner = built["runner"]
-    bounds = runner._load_bounds("flat_obs")
+    bounds = _live_sidecar(runner, "flat_obs")
     assert bounds, "rebuild must write the bounds sidecar"
     # encounter bounds cover the REAL population only (synthetic ids at
     # SYNTHETIC_ENCOUNTER_OFFSET+ would stretch the range over every
@@ -91,7 +91,7 @@ def test_probe_reader_prunes_to_candidate_months(spark, built, monkeypatch):
     runner = built["runner"]
     reader = runner._make_probe_reader("flat_obs")
     assert reader is not None
-    bounds = runner._load_bounds("flat_obs")
+    bounds = _live_sidecar(runner, "flat_obs")
     # A key inside exactly one month's range must prune to month(s)
     # whose range contains it; a key beyond every range reads nothing.
     from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
@@ -180,7 +180,7 @@ def test_probe_driver_transfer_is_month_bounded(spark, built, monkeypatch):
     hit = reader(keys, "encounter_id")
     assert hit is not None
     assert sizes, "probe must run at least one collect"
-    n_months = len(runner._load_bounds("flat_obs"))
+    n_months = len(_live_sidecar(runner, "flat_obs"))
     assert max(sizes) <= 1 + n_months, (
         f"probe collected {max(sizes)} rows for a 5,000-key delta — "
         "driver transfer must be month-bounded, not key-bounded"
@@ -278,7 +278,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     one was never published), and the next write converges."""
     runner = built["runner"]
     table = "flat_obs"
-    pre = runner._load_bounds(table)
+    pre = _live_sidecar(runner, table)
     epoch0 = snapshot.load(runner._path(table))["epoch"]
     target = _live_with_month(runner, table)
     n_before = target.count()
@@ -313,14 +313,14 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
 
     # The flip never happened: the old snapshot is still the table,
     # and its sidecar is exactly the one it had.
-    assert runner._load_bounds(table) == pre
+    assert _live_sidecar(runner, table) == pre
     assert snapshot.load(runner._path(table))["epoch"] == epoch0
     restored = runner.read_target(table)
     assert restored.count() == n_before
     restored = restored.localCheckpoint()  # same hazard for the cleanup
     # A clean rewrite of the same months lands exact bounds again.
     runner._write(delta, table, months=months)
-    post = runner._load_bounds(table)
+    post = _live_sidecar(runner, table)
     for m in months:
         old_lo, old_hi = pre[m]["encounter_id"]
         assert post[m]["encounter_id"] == [old_lo + 7, old_hi + 7]
@@ -328,7 +328,7 @@ def test_interrupted_month_swap_keeps_bounds_superset(spark, built):
     runner._write(
         restored, table
     )
-    final = runner._load_bounds(table)
+    final = _live_sidecar(runner, table)
     assert set(final) >= set(pre)
 
 
@@ -381,18 +381,27 @@ def test_widen_bounds_missing_column_is_unprunable():
     assert PipelineRunner._widen_bounds(None, b, cols) == b
 
 
-def test_bloom_sidecar_prunes_person_probe(spark, built):
+@pytest.mark.parametrize("key", ["person_id", "encounter_id"])
+def test_bloom_sidecar_prunes_person_probe(spark, built, key):
     """r8 (VERDICT r7 item 3): per-month [min,max] on person_id prunes
     ~nothing by construction (person ids are uniform across months);
     the per-month Bloom sidecar lets person-keyed probes open only the
     months actually holding a probed person — superset-exact (every
     row of the probed person is in the pruned read) and genuinely
-    pruning (fewer months than the whole target)."""
+    pruning (exactly the months that hold the key, plus any month
+    whose sidecar records no real key of the column: with nothing
+    recorded there is nothing to prune by).  r11 (PERF.md "Round 11:
+    encounter-key Bloom"): the same holds for encounter_id, whose
+    ranges alone cannot prune either — the fixture spreads each
+    person's encounters over the year out of id order, so the month
+    ranges cover the whole encounter id space."""
+    from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
+
     runner = built["runner"]
-    bounds = runner._load_bounds("flat_obs")
+    bounds = _live_sidecar(runner, "flat_obs")
     ent = next(iter(bounds.values()))
-    assert "bloom:person_id" in ent, sorted(ent)
-    b = ent["bloom:person_id"]
+    assert f"bloom:{key}" in ent, sorted(ent)
+    b = ent[f"bloom:{key}"]
     # r9: raw bytes from the binary sidecar (m bits / 8), not hex-JSON
     assert isinstance(b["w"], bytes)
     assert b["m"] % 64 == 0 and len(b["w"]) == b["m"] // 8
@@ -401,24 +410,30 @@ def test_bloom_sidecar_prunes_person_probe(spark, built):
         assert "bloom:" not in f.read()
 
     tgt = _live_with_month(runner, "flat_obs")
-    victim = int(tgt.select("person_id").first()["person_id"])
-    mine = tgt.filter(F.col("person_id") == victim)
-    true_rows, true_months = (
-        mine.count(),
-        mine.select("p_month").distinct().count(),
-    )
-    assert true_months < len(bounds)  # premise: person is month-local
+    # below the synthetic-encounter sentinel (person ids never reach it)
+    real = tgt.filter(F.col(key) < SYNTHETIC_ENCOUNTER_OFFSET)
+    ids = sorted(r[key] for r in real.select(key).distinct().collect())
+    victim = ids[len(ids) // 2]  # mid-range: most month ranges hold it
+    mine = tgt.filter(F.col(key) == victim)
+    true_rows = mine.count()
+    true_months = {r["p_month"] for r in mine.select("p_month").collect()}
+    assert len(true_months) < len(bounds)  # premise: key is month-local
+    unrecorded = {m for m, e in bounds.items() if key not in e}
 
     reader = runner._make_probe_reader("flat_obs")
-    keys = spark.createDataFrame([(victim,)], "person_id long")
-    hit = reader(keys, "person_id")
-    assert hit.filter(F.col("person_id") == victim).count() == true_rows
-    assert hit.count() < tgt.count(), "bloom pruned nothing"
+    keys = spark.createDataFrame([(victim,)], f"{key} long")
+    hit = reader(keys, key)
+    assert hit.filter(F.col(key) == victim).count() == true_rows
+    opened = {
+        p.split("p_month=")[1].split("/")[0] for p in hit.inputFiles()
+    }
+    assert opened == true_months | unrecorded, (
+        sorted(opened), sorted(true_months), sorted(unrecorded)
+    )
 
-    # A person the corpus never saw: every blooming month is pruned.
+    # A key the corpus never saw: every blooming month is pruned.
     miss = reader(
-        spark.createDataFrame([(99_999_999,)], "person_id long"),
-        "person_id",
+        spark.createDataFrame([(99_999_999,)], f"{key} long"), key
     )
     assert miss.count() == 0
 
@@ -801,7 +816,7 @@ def test_target_reads_take_schema_from_one_footer(
             frames += [
                 runner.read_target_months(table, [m]),
                 runner.read_target_months(table, []),
-                runner._read_target_files(table, [m], {m: None}),
+                runner._read_target_files(table, {m: None}),
             ]
         else:
             frames.append(runner._versioned(table).read(spark))
@@ -822,7 +837,7 @@ def test_bloom_probe_driver_transfer_is_month_bounded(
         import pyspark.sql.dataframe as _dfmod
 
     runner = built["runner"]
-    bounds = runner._load_bounds("flat_obs")
+    bounds = _live_sidecar(runner, "flat_obs")
     blooms = {
         m: e["bloom:person_id"]
         for m, e in bounds.items()
@@ -854,7 +869,7 @@ def test_bloom_synthetic_key_abandons_pruning(spark, built):
     from mrsboraetl_spark.config import SYNTHETIC_ENCOUNTER_OFFSET
 
     runner = built["runner"]
-    bounds = runner._load_bounds("flat_obs")
+    bounds = _live_sidecar(runner, "flat_obs")
     blooms = {
         m: e["bloom:person_id"]
         for m, e in bounds.items()

@@ -1,8 +1,21 @@
-"""The session factory's driver JVM options reach the running JVM."""
+"""The session factory's driver JVM options reach the running JVM, and
+the test tree holds no side scripts beside the suite."""
 
 from __future__ import annotations
 
+import os
+
 from mrsboraetl_spark.session import DRIVER_JIT_FLAGS
+
+# The only non-test modules under tests/: shared fixtures, the oracle
+# gate, the registry smoke and the bench re-measure guard demo.
+_HELPERS = {
+    "conftest.py",
+    "fixtures.py",
+    "oracle_check.py",
+    "registry_sweep.py",
+    "bench_guard_demo.py",
+}
 
 
 def _vm_option(spark, name: str) -> str:
@@ -24,3 +37,19 @@ def test_driver_jit_policy_reaches_the_jvm(spark):
         assert _vm_option(spark, name) == value, name
     assert _vm_option(spark, "TieredStopAtLevel") == "4"
     assert _vm_option(spark, "CICompilerCount") == "4"
+
+
+def test_tests_tree_holds_only_pytest_modules_and_named_helpers():
+    """A measurement script dropped beside the suite is run by nothing
+    and rots as the engine moves under it."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    stray = sorted(
+        f for f in os.listdir(here)
+        if f.endswith(".py")
+        and not f.startswith("test_")
+        and f not in _HELPERS
+    )
+    assert not stray, (
+        f"{stray}: new measurement goes into perfbench/run.py or a "
+        "pinned test, not a script under tests/"
+    )

@@ -154,6 +154,7 @@ def test_partitioned_engine_with_path_sources_noop_sync(
     row logged."""
     from mrsboraetl_spark.engine import PipelineRunner
     from tests.fixtures import make_sources, to_spark
+    from tests.test_file_level_writes import _live_sidecar
 
     pdfs = make_sources(n_persons=15, seed=19)
     dfs = to_spark(spark, pdfs)
@@ -166,7 +167,7 @@ def test_partitioned_engine_with_path_sources_noop_sync(
     r = PipelineRunner(spark, str(tmp_path / "store"), partitioned=True)
     r.run(src, mode="rebuild")
     r.run(src, mode="sync")  # drain stragglers; signals stored
-    assert r._load_bounds("flat_obs"), "partitioned rebuild writes sidecars"
+    assert _live_sidecar(r, "flat_obs"), "partitioned rebuild writes sidecars"
 
     maxes_calls: list = []
     months_reads: list = []
