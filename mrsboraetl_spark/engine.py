@@ -2117,18 +2117,11 @@ class PipelineRunner:
             # move either: skip the stage INCLUDING the O(target)
             # flat_obs max_date_created snapshot read.
             vs_ran = False
+        # The plan publishes its queue here, pinned on either layout
+        # (plans/_probe.pin): the latest-summary merge below reads it
+        # after the stage's write, whose GC may delete the files the
+        # queue's lineage reads.
         vs_out: dict = {}
-        if not self.partitioned:
-            # The latest-summary merge consumes the plan's queue in a
-            # separate action after the stage's own write, whose GC
-            # deletes the visit-summary files the queue's lineage
-            # reads.  One-group targets never set pin_recomputed (no
-            # month-scoped two-phase re-run), so without this pin the
-            # plan would never publish the key, leaving
-            # _merge_latest_summary's merge leg unreachable and those
-            # deployments silently on the full latest-table rewrite
-            # (ADVICE r10; plain-layout gap ADVICE r11).
-            vs_out["pin_keys"] = ("queue_keys",)
         if vs_ran:
             flat_obs = self.read_target("flat_obs")
             flat_lab = self.read_target("flat_lab_obs")
@@ -2449,14 +2442,11 @@ class PipelineRunner:
         # Optimistic-concurrency consumer (VERDICT r11 item 1): a flip
         # that loses to a concurrent commit re-plans against the new
         # live snapshot — re-read target, re-run the plan, re-write.
-        # Caller-seeded out_sink keys (pin_keys) are restored per
-        # attempt; plan-published keys from the failed attempt are
-        # dropped (they described the stale base).
-        seed = dict(out_sink) if out_sink is not None else None
+        # What the failed attempt published to out_sink is dropped (it
+        # described the stale base); callers seed no keys.
         for attempt in range(self._COMMIT_RETRIES + 1):
             if attempt and out_sink is not None:
                 out_sink.clear()
-                out_sink.update(seed)
             try:
                 return self._stage_attempt(
                     table, plan, data_wm, change_signal, started,
@@ -2533,6 +2523,7 @@ class PipelineRunner:
             out["vp_stable"] = vp_stable
         merged = plan(target, wm, out)
         months_df = out.get("affected_months")
+        months = None
         if (
             part_src and months_df is not None and target is not None
             # A live snapshot naming no readable sidecar (a table
@@ -2546,41 +2537,34 @@ class PipelineRunner:
             # rows for years of data — the watermark-store precedent).
             months = sorted(r["p_month"] for r in months_df.collect())
             universe = set(base["months"]) | set(months)
-            if not universe or len(months) <= (
+            if universe and len(months) > (
                 self._DELTA_WRITE_MAX_FRACTION * len(universe)
             ):
-                if months:
-                    # File-level path (r9): when the plan published a
-                    # changed-key superset and the sidecar carries
-                    # per-file bounds, phase 2 reads ONLY the touched
-                    # files and carries the rest forward as manifest
-                    # entries — read and write both O(touched files),
-                    # not O(touched months).
-                    plan_files = self._plan_touched_files(
-                        table, months, out, base, sidecar
-                    )
-                    if plan_files is None:
-                        pruned = self.read_target_months(
-                            table, months, man=base
-                        )
-                        carry = None
-                    else:
-                        touched, carry = plan_files
-                        pruned = self._read_target_files(
-                            table, touched, man=base
-                        )
-                    # Same out dict: the plan reuses its pinned
-                    # recompute instead of re-running every source
-                    # filter/join/reaggregation job a second time.
-                    self._write(
-                        plan(pruned, wm, out), table, parent=base,
-                        months=months, carry=carry, sidecar=sidecar,
-                    )
-                self.watermarks.log_run(version, started, data_wm)
-                if change_signal is not None:
-                    self._save_signal(version, change_signal)
-                return True
-        self._write(merged, table, parent=base)
+                months = None
+        if months is None:
+            self._write(merged, table, parent=base)
+        elif months:
+            # File-level path (r9): when the plan published a
+            # changed-key superset and the sidecar carries per-file
+            # bounds, phase 2 reads ONLY the touched files and carries
+            # the rest forward as manifest entries — read and write both
+            # O(touched files), not O(touched months).
+            plan_files = self._plan_touched_files(
+                table, months, out, base, sidecar
+            )
+            if plan_files is None:
+                pruned = self.read_target_months(table, months, man=base)
+                carry = None
+            else:
+                touched, carry = plan_files
+                pruned = self._read_target_files(table, touched, man=base)
+            # Same out dict: the plan reuses its pinned recompute
+            # instead of re-running every source
+            # filter/join/reaggregation job a second time.
+            self._write(
+                plan(pruned, wm, out), table, parent=base,
+                months=months, carry=carry, sidecar=sidecar,
+            )
         self.watermarks.log_run(version, started, data_wm)
         if change_signal is not None:
             self._save_signal(version, change_signal)

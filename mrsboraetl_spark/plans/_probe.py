@@ -1,5 +1,5 @@
-"""Bounded target probes for the incremental plans' affected-month
-derivation.
+"""The incremental plans' engine-facing side: one pin rule and the
+retraction probes that locate the target rows a sync changes.
 
 Under the partitioned layout, a sync's phase-1 plan must locate the
 storage months of the TARGET rows it will retract (old locations of
@@ -9,18 +9,18 @@ per sync where the reference's PK index makes the same lookup
 O(delta * log n) (flat_obs_v1.0.sql:46-50).
 
 ``month_probe`` closes that gap: when the engine offers a
-``probe_reader`` (PipelineRunner keeps per-month [min, max] key bounds,
-recorded at write time — the partitioned-layout lift of
-VersionedTable.merge_delta's per-file accounting in
-sources/versioned.py), the probe reads ONLY the month
-directories whose recorded key range can contain a probe key; planning-
-time partition pruning means the other directories are never opened.
-Each snapshot names the bounds staged with its own data (one flip
-publishes both), so the bounds always cover the live content and a
-pruned probe can return extra months but never miss one — the
-correctness contract the affected-month superset needs.  Without a
-reader (unpartitioned layout, pre-bounds table, cold start) the probe
-falls back to the full column-pruned scan.
+``probe_reader`` (PipelineRunner keeps per-month [min, max] key bounds
+and Bloom filters in a sidecar, recorded at write time — the
+partitioned-layout lift of VersionedTable.merge_delta's per-file
+accounting in sources/versioned.py), the probe reads ONLY the files of
+the months whose recorded keys can contain a probe key: the reader
+hands back a frame over those months' snapshot file lists, so no other
+month's file is ever opened.  Each snapshot names the sidecar staged
+with its own data (one flip publishes both), so the bounds always cover
+the live content and a pruned probe can return extra months but never
+miss one — the correctness contract the affected-month superset needs.
+Without a reader (the plain layout, or a snapshot naming no sidecar)
+the probe falls back to the full column-pruned scan.
 """
 
 from __future__ import annotations
@@ -28,32 +28,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mrsboraetl_spark.schemas import p_month_of
 
-def pin(df: DataFrame, out: dict | None, key: str) -> DataFrame:
-    """Materialize a delta-sized frame once per sync and reuse it across
-    the plan's many consumers (probe range-join, month semi-join,
-    recompute semi-join, anti-delete — each evaluated twice under the
-    engine's two-phase delta write; without the pin every evaluation
-    re-reads the source parquet).  Only active under the engine's
-    ``pin_recomputed`` request — the partitioned two-phase path, where
-    an eager localCheckpoint is already the accepted trade (see the
-    ``recomputed`` pin); other layouts keep pure lineage — EXCEPT for
-    keys the engine names in ``out["pin_keys"]``: those have a
-    consumer in a separate action AFTER the stage's own write (the
-    latest-summary merge reads ``queue_keys`` post-commit), so the
-    same materialize-once trade applies on any layout (ADVICE r10:
-    without this the plain layout never publishes the queue and its
-    merge path is unreachable).
-    localCheckpoint preserves size stats (PERF.md), so a pinned
-    delta-key frame stays broadcast-eligible."""
+# The one plan output the engine reads AFTER the stage's own write:
+# engine._merge_latest_summary merges the visit-summary queue into the
+# latest table once that write's GC may have deleted the files the
+# queue's lineage reads.
+_READ_AFTER_WRITE = "queue_keys"
+
+
+def pin(build, out: dict | None, key: str) -> DataFrame:
+    """The one pin rule of the incremental plans: ``build()``'s frame,
+    materialized (localCheckpoint) into ``out[key]`` when some consumer
+    evaluates it again after the plan has run.
+
+    That is every frame a plan pins under the engine's
+    ``pin_recomputed`` request — the partitioned two-phase sync, which
+    evaluates the plan's delta keys, its recompute and its changed-key
+    set in phase 1, then re-runs the plan against the pruned target
+    (each source re-read per evaluation otherwise) — and the
+    visit-summary ``queue_keys`` whenever ``out`` is given, read after
+    the write on either layout.  An ``out`` already holding ``key``
+    returns that frame without calling ``build``, so phase 2 neither
+    re-runs nor even re-plans what phase 1 pinned.  Any other frame
+    stays pure lineage: a layout that evaluates it once would pay an
+    eager materialization (and lose lineage replay on a real cluster)
+    for nothing.  localCheckpoint preserves size stats (PERF.md), so a
+    pinned delta-sized frame stays broadcast-eligible."""
     if out is None:
-        return df
-    if key in out:
-        return out[key]
-    if out.get("pin_recomputed") or key in out.get("pin_keys", ()):
-        df = df.localCheckpoint()
-        out[key] = df
-    return df
+        return build()
+    if key not in out:
+        df = build()
+        if not (out.get("pin_recomputed") or key == _READ_AFTER_WRITE):
+            return df
+        out[key] = df.localCheckpoint()
+    return out[key]
 
 
 def month_probe(
@@ -117,3 +126,67 @@ def recently_voided(
     return vp.filter(
         F.col("date_voided").isNull() | (F.col("date_voided") > since)
     ).select("person_id")
+
+
+def publish_retractions(
+    out: dict,
+    target: DataFrame | None,
+    recomputed: DataFrame,
+    person: DataFrame,
+    keys: DataFrame | None = None,
+    probes: tuple = (),
+    months: tuple = (),
+) -> None:
+    """Publish a sync's changed-row supersets for the engine's
+    delta-scoped writer, derived from the SAME key sets the merge uses:
+
+    * ``out["affected_months"]``: every storage month a changed row can
+      live in — the months of the recomputed rows (where upserts land),
+      of each ``months`` frame (a ``p_month`` column: a retraction class
+      whose key contains its datetime), and of the target rows each
+      probe finds (where deletions happen).  Everything outside it is
+      byte-identical to the previous target state.
+    * ``out["changed_keys"]``, pinned: every encounter_id whose row may
+      differ (engine._plan_touched_files) — recomputed's, ``keys``, and
+      those of the rows each person-keyed probe finds.  An
+      encounter-keyed probe adds none: its rows carry only the ids it
+      probed, which ``keys`` or ``recomputed`` already name.
+
+    Retractions are located by bounds-pruned target probes (one probe
+    reader call each, ``month_probe``): ``keys``, the plan's retracted
+    encounter_ids; then each ``(keys_df, key_col)`` of ``probes``; then
+    the persons voided since the last processed point
+    (``recently_voided``, pinned) — the merged output's purge still
+    uses the full voided set.  Without a target nothing is retracted
+    and nothing is probed."""
+    month = p_month_of("encounter_datetime").alias("p_month")
+    key = F.col("encounter_id").cast("long").alias("encounter_id")
+    all_months = recomputed.select(month)
+    for m in months:
+        all_months = all_months.unionByName(m)
+    changed = recomputed.select(key)
+    if keys is not None:
+        changed = changed.unionByName(keys.select(key))
+    if target is not None:
+        voided = pin(
+            lambda: recently_voided(
+                person, cutoff=out.get("vp_cutoff"),
+                stable=out.get("vp_stable", False),
+            ),
+            out, "vp_recent",
+        )
+        located = [] if keys is None else [(keys, "encounter_id")]
+        for keys_df, key_col in (*located, *probes, (voided, "person_id")):
+            # encounter_id rides along for the changed-key superset —
+            # the same pruned, column-pruned read.
+            cols = list(dict.fromkeys(
+                ["encounter_id", key_col, "encounter_datetime"]
+            ))
+            rows = month_probe(target, out, keys_df, key_col, cols).join(
+                keys_df, key_col, "left_semi"
+            )
+            all_months = all_months.unionByName(rows.select(month))
+            if key_col != "encounter_id":
+                changed = changed.unionByName(rows.select(key))
+    out["affected_months"] = all_months.distinct()
+    out["changed_keys"] = pin(changed.distinct, out, "changed_keys")

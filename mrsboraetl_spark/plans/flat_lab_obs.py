@@ -45,7 +45,9 @@ from mrsboraetl_spark.functions.obsmap import (
     packed_blob,
     typed_value,
 )
-from mrsboraetl_spark.operators.upsert import anti_delete, replace_into
+from mrsboraetl_spark.operators.upsert import replace_into
+from mrsboraetl_spark.plans._probe import pin
+from mrsboraetl_spark.schemas import p_month_of
 
 
 def _lab_rows(obs: DataFrame) -> DataFrame:
@@ -131,22 +133,19 @@ def incremental_flat_lab_obs(
         lab.filter((F.col("voided") == 0) & (F.col("date_created") > wm))
         .select("person_id", F.to_date("obs_datetime").alias("day"))
     )
-    affected = voided_days.unionByName(new_days).distinct()
-    # Delta-key pin (plans/_probe.pin; review finding r10 — this plan
-    # skipped the discipline its siblings follow): affected feeds the
-    # month set, the changed-key publication, the recompute semi-join,
-    # and the phase-2 delete-join.  Unpinned, each evaluation re-derives
-    # it from the source — repeated work, and over a mutable source
-    # (live DataFrame / JdbcSource(snapshot=False)) the phase-1 file
-    # plan and the phase-2 delete could see DIFFERENT affected sets:
-    # a row landing between them would be deleted from the touched
-    # files with no replacement in the already-pinned recompute.
-    from mrsboraetl_spark.plans._probe import pin as _pin
-
-    affected = _pin(affected, out, "lab_affected_keys")
+    # Delta-key pin (plans/_probe.pin): affected feeds the month set,
+    # the changed-key publication, the recompute semi-join, and the
+    # phase-2 delete-join.  Unpinned, each evaluation re-derives it
+    # from the source — repeated work, and over a mutable source (live
+    # DataFrame / JdbcSource(snapshot=False)) the phase-1 file plan and
+    # the phase-2 delete could see DIFFERENT affected sets: a row
+    # landing between them would be deleted from the touched files with
+    # no replacement in the already-pinned recompute.
+    affected = pin(
+        lambda: voided_days.unionByName(new_days).distinct(),
+        out, "lab_affected_keys",
+    )
     if out is not None and "affected_months" not in out:
-        from mrsboraetl_spark.schemas import p_month_of
-
         out["affected_months"] = (
             affected.select(p_month_of("day").alias("p_month")).distinct()
         )
@@ -160,22 +159,15 @@ def incremental_flat_lab_obs(
         # flat_lab_obs_v1.0.sql:58).
         out["changed_keys"] = affected.select("person_id").distinct()
 
-    # Pin across the engine's two-phase delta-scoped sync (see
+    # Pinned across the engine's two-phase delta-scoped sync (see
     # incremental_flat_obs): the recompute is target-independent.
-    if out is not None and "recomputed" in out:
-        recomputed = out["recomputed"]
-    else:
+    def recompute():
         base = _lab_rows(obs).withColumn("day", F.to_date("obs_datetime"))
-        recomputed = build_flat_lab_obs(
+        return build_flat_lab_obs(
             base.join(affected, ["person_id", "day"], "left_semi").drop("day")
         )
-        if out is not None and out.get("pin_recomputed"):
-            # Engine-requested: only the partitioned two-phase delta
-            # sync re-runs the plan and can reuse the pin; other
-            # layouts would pay an eager materialization (and lose
-            # lineage replay on a real cluster) for nothing.
-            recomputed = recomputed.localCheckpoint()
-            out["recomputed"] = recomputed
+
+    recomputed = pin(recompute, out, "recomputed")
 
     if target is not None:
         # Delete-join on the date-truncated key (J6, :96-98).

@@ -32,7 +32,8 @@ from mrsboraetl_spark.functions.obsmap import (
     typed_value,
 )
 from mrsboraetl_spark.operators.upsert import anti_delete, replace_into
-from mrsboraetl_spark.plans._probe import pin as _pin
+from mrsboraetl_spark.plans._probe import pin, publish_retractions
+from mrsboraetl_spark.schemas import p_month_of
 
 def _obs_aggregates() -> list:
     """The shared per-group aggregate list: obs blob, obs_datetimes blob,
@@ -143,14 +144,10 @@ def incremental_flat_obs(
     rebuild over the current base (the property the tests assert).
 
     ``out``: optional side-channel for the engine's delta-scoped
-    partitioned writer.  When given, ``out["affected_months"]`` is set to
-    a 1-column (``p_month``) DataFrame of every storage month a changed
-    row can live in — the months of the RECOMPUTED rows (where upserts
-    land) plus the months of the target rows being retracted or purged
-    (where deletions happen).  It is derived from the SAME key sets the
-    merge uses, so it is a guaranteed superset of the months whose
-    content differs; everything outside it is byte-identical to the
-    previous target state.
+    partitioned writer.  When given, the plan publishes the months and
+    keys of every row that may change (``_probe.publish_retractions``)
+    and, in ``out["synthetic_delta_months"]``, the months of the
+    changed encounter-less groups.
     """
     wm = F.lit(watermark).cast("timestamp")
 
@@ -158,145 +155,71 @@ def incremental_flat_obs(
     new_obs = obs.filter((F.col("voided") == 0) & (F.col("date_created") > wm))
     changed_enc = encounter.filter(F.col("date_changed") > wm)
 
-    # Affected with-encounter keys (:80-87, 199-207).
-    affected_enc = (
-        voided_obs.filter(F.col("encounter_id").isNotNull()).select("encounter_id")
+    # Affected with-encounter keys (:80-87, 199-207).  The delta-key
+    # frames feed four-plus jobs per sync (recompute semi-join, month
+    # probe, month semi-join, anti-delete — each twice under the
+    # two-phase delta write), each otherwise re-reading the source
+    # parquet; they are delta-sized, so the pin is tiny and keeps them
+    # broadcastable.
+    affected_enc = pin(
+        lambda: voided_obs.filter(F.col("encounter_id").isNotNull())
+        .select("encounter_id")
         .unionByName(
-            new_obs.filter(F.col("encounter_id").isNotNull()).select("encounter_id")
+            new_obs.filter(F.col("encounter_id").isNotNull()).select(
+                "encounter_id"
+            )
         )
         .unionByName(changed_enc.select("encounter_id"))
-        .distinct()
+        .distinct(),
+        out, "affected_enc",
     )
     # Affected encounter-less groups (:110-113, 157-194).
-    affected_noenc = (
-        voided_obs.filter(F.col("encounter_id").isNull())
+    affected_noenc = pin(
+        lambda: voided_obs.filter(F.col("encounter_id").isNull())
         .select("person_id", "obs_datetime")
         .unionByName(
             new_obs.filter(F.col("encounter_id").isNull()).select(
                 "person_id", "obs_datetime"
             )
         )
-        .distinct()
+        .distinct(),
+        out, "affected_noenc",
     )
-    # The delta-key frames are consumed by four-plus jobs per sync
-    # (recompute semi-join, month probe, month semi-join, anti-delete —
-    # each twice under the two-phase delta write), and every evaluation
-    # re-reads the source parquet.  Under the engine's pin request
-    # (partitioned two-phase sync only) materialize them once — they
-    # are delta-sized, so the pin is tiny and keeps them broadcastable.
-    affected_enc = _pin(affected_enc, out, "affected_enc")
-    affected_noenc = _pin(affected_noenc, out, "affected_noenc")
 
-    # Recompute whole groups from base state, restricted to affected keys.
-    # Under the engine's two-phase delta-scoped sync this plan is built
-    # TWICE (full target for the month derivation, pruned target for the
-    # write); the recompute subtree is target-independent, so pin it on
-    # the first pass and reuse it on the second — without the pin every
-    # source filter/join/reaggregation job runs twice per sync.
-    if out is not None and "recomputed" in out:
-        recomputed = out["recomputed"]
-    else:
+    # Recompute whole groups from base state, restricted to affected
+    # keys.  The recompute subtree is target-independent, so the
+    # two-phase delta-scoped sync pins it on the first pass and reuses
+    # it on the second — without the pin every source
+    # filter/join/reaggregation job runs twice per sync.
+    def recompute():
         base_obs = obs.filter(F.col("voided") == 0)
-        recomputed = build_flat_obs(
-            base_obs.join(
-                affected_enc, "encounter_id", "left_semi"
-            ).unionByName(
+        return build_flat_obs(
+            base_obs.join(affected_enc, "encounter_id", "left_semi")
+            .unionByName(
                 base_obs.filter(F.col("encounter_id").isNull()).join(
-                    affected_noenc,
-                    ["person_id", "obs_datetime"],
+                    affected_noenc, ["person_id", "obs_datetime"],
                     "left_semi",
                 )
             ),
             encounter,
         )
-        if out is not None and out.get("pin_recomputed"):
-            # Engine-requested: only the partitioned two-phase delta
-            # sync re-runs the plan and can reuse the pin; other
-            # layouts would pay an eager materialization (and lose
-            # lineage replay on a real cluster) for nothing.
-            recomputed = recomputed.localCheckpoint()
-            out["recomputed"] = recomputed
 
-    voided_person = person.filter(F.col("voided") == 1).select("person_id")
+    recomputed = pin(recompute, out, "recomputed")
     if out is not None and "affected_months" not in out:
-        from mrsboraetl_spark.schemas import p_month_of
-
-        month = p_month_of("encounter_datetime").alias("p_month")
-        months = recomputed.select(month)
-        # Old locations: the synthetic-row key CONTAINS the datetime, so
-        # its months come straight from the key set; encounter-keyed and
-        # person-keyed retractions need a (column-pruned) target probe.
-        months = months.unionByName(
-            affected_noenc.select(
-                p_month_of("obs_datetime").alias("p_month")
-            )
-        )
-        if target is not None:
-            from mrsboraetl_spark.plans._probe import (
-                month_probe,
-                recently_voided,
-            )
-
-            # Old locations of changed encounters: with the engine's
-            # key-bounds reader this opens only candidate month
-            # directories (encounter ids correlate with storage months,
-            # so the [min,max] ranges prune hard); without it, the full
-            # column-pruned scan.
-            enc_probe = month_probe(
-                target, out, affected_enc, "encounter_id",
-                ["encounter_id", "encounter_datetime"],
-            )
-            # Rows of voided persons: scoped to voids SINCE the
-            # watermark (earlier voids were purged by the sync that
-            # first saw them), so a steady-state sync probes nothing
-            # here at all.  The merged-output purge below still uses
-            # the full voided set.
-            vp_recent = _pin(
-                recently_voided(
-                    person, cutoff=out.get("vp_cutoff"),
-                    stable=out.get("vp_stable", False),
-                ),
-                out, "vp_recent",
-            )
-            # encounter_id rides along for the changed-key superset
-            # below — same partition-pruned, column-pruned read.
-            vp_probe = month_probe(
-                target, out, vp_recent, "person_id",
-                ["encounter_id", "person_id", "encounter_datetime"],
-            )
-            months = months.unionByName(
-                enc_probe.join(affected_enc, "encounter_id", "left_semi")
-                .select(month)
-            ).unionByName(
-                vp_probe.join(vp_recent, "person_id", "left_semi")
-                .select(month)
-            )
-        out["affected_months"] = months.distinct()
-        # Changed-pk superset for the engine's file-level delta writer
-        # (engine._plan_touched_files): every encounter_id whose row may
-        # differ between old and merged state — retracted keys
-        # (⊆ affected_enc), upserted keys (recomputed), and the purged
-        # rows of freshly-voided persons (from the same pruned probe
-        # the month derivation pays for).  The one deletion class whose
-        # OLD pks are unknowable without reading — encounter-less
-        # groups, whose synthetic id embeds a min(obs_id) that may have
-        # changed — is published as its MONTH set instead; the writer
+        # The synthetic-row key CONTAINS the datetime, so the old
+        # locations of encounter-less groups come straight from the key
+        # set.  Their OLD pks are unknowable without reading (the
+        # synthetic id embeds a min(obs_id) that may have changed), so
+        # they are also published as a MONTH set: the file-level writer
         # marks the sentinel-range files of those months touched.
-        key = F.col("encounter_id").cast("long").alias("encounter_id")
-        changed = recomputed.select(key).unionByName(
-            affected_enc.select(key)
-        )
-        if target is not None:
-            changed = changed.unionByName(
-                vp_probe.join(vp_recent, "person_id", "left_semi")
-                .select(key)
-            )
-        out["changed_keys"] = _pin(
-            changed.distinct(), out, "changed_keys"
-        )
-        out["synthetic_delta_months"] = affected_noenc.select(
+        noenc_months = affected_noenc.select(
             p_month_of("obs_datetime").alias("p_month")
-        ).distinct()
+        )
+        publish_retractions(
+            out, target, recomputed, person,
+            keys=affected_enc, months=(noenc_months,),
+        )
+        out["synthetic_delta_months"] = noenc_months.distinct()
     if target is not None:
         # Retract all affected rows (J4/J5), then upsert the recomputed ones.
         target = anti_delete(target, affected_enc, ["encounter_id"])
@@ -318,4 +241,5 @@ def incremental_flat_obs(
     merged = replace_into(target, recomputed, ["encounter_id"])
 
     # Purge voided patients (:337-340).
+    voided_person = person.filter(F.col("voided") == 1).select("person_id")
     return anti_delete(merged, voided_person, ["person_id"])

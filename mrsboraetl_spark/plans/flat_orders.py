@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from mrsboraetl_spark.functions.obsmap import blob_entry, packed_blob
 from mrsboraetl_spark.operators.upsert import anti_delete, replace_into
+from mrsboraetl_spark.plans._probe import pin, publish_retractions
 
 
 def build_flat_orders(
@@ -94,8 +95,7 @@ def incremental_flat_orders(
     with voided orders (:54-56), recompute those plus encounters with new
     orders (:47-48, :90-91), REPLACE-INTO, purge voided patients (:95-98).
 
-    ``out``: see incremental_flat_obs — when given, stashes the
-    1-column ``affected_months`` superset for the delta-scoped writer."""
+    ``out``: see incremental_flat_obs."""
     wm = F.lit(watermark).cast("timestamp")
 
     voided_keys = (
@@ -106,80 +106,26 @@ def incremental_flat_orders(
         orders.filter((F.col("voided") == 0) & (F.col("date_created") > wm))
         .select("encounter_id")
     )
-    affected = voided_keys.unionByName(new_keys).distinct()
     # Delta-key pin (see plans/_probe.pin): four-plus consumers per
     # sync, each otherwise re-reading the orders parquet.
-    from mrsboraetl_spark.plans._probe import pin as _pin
-
-    affected = _pin(affected, out, "affected_keys")
-
-    # Pin across the engine's two-phase delta-scoped sync (see
+    affected = pin(
+        lambda: voided_keys.unionByName(new_keys).distinct(),
+        out, "affected_keys",
+    )
+    # Pinned across the engine's two-phase delta-scoped sync (see
     # incremental_flat_obs): the recompute is target-independent.
-    if out is not None and "recomputed" in out:
-        recomputed = out["recomputed"]
-    else:
-        recomputed = build_flat_orders(
+    recomputed = pin(
+        lambda: build_flat_orders(
             orders.join(affected, "encounter_id", "left_semi"), encounter
-        )
-        if out is not None and out.get("pin_recomputed"):
-            # Engine-requested: only the partitioned two-phase delta
-            # sync re-runs the plan and can reuse the pin; other
-            # layouts would pay an eager materialization (and lose
-            # lineage replay on a real cluster) for nothing.
-            recomputed = recomputed.localCheckpoint()
-            out["recomputed"] = recomputed
-    voided_person = person.filter(F.col("voided") == 1).select("person_id")
+        ),
+        out, "recomputed",
+    )
     if out is not None and "affected_months" not in out:
-        from mrsboraetl_spark.schemas import p_month_of
-
-        month = p_month_of("encounter_datetime").alias("p_month")
-        months = recomputed.select(month)
-        if target is not None:
-            from mrsboraetl_spark.plans._probe import (
-                month_probe,
-                recently_voided,
-            )
-
-            # See incremental_flat_obs: bounds-pruned probe for the old
-            # locations of changed encounters; watermark-scoped probe
-            # for voided persons (the purge itself stays unconditional).
-            enc_probe = month_probe(
-                target, out, affected, "encounter_id",
-                ["encounter_id", "encounter_datetime"],
-            )
-            vp_recent = _pin(
-                recently_voided(
-                    person, cutoff=out.get("vp_cutoff"),
-                    stable=out.get("vp_stable", False),
-                ),
-                out, "vp_recent",
-            )
-            # encounter_id rides along for the changed-key superset
-            # below — same partition-pruned, column-pruned read.
-            vp_probe = month_probe(
-                target, out, vp_recent, "person_id",
-                ["encounter_id", "person_id", "encounter_datetime"],
-            )
-            months = months.unionByName(
-                enc_probe.join(affected, "encounter_id", "left_semi")
-                .select(month)
-            ).unionByName(
-                vp_probe.join(vp_recent, "person_id", "left_semi")
-                .select(month)
-            )
-        out["affected_months"] = months.distinct()
-        # Changed-pk superset for the file-level delta writer (see
-        # incremental_flat_obs; flat_orders has no synthetic class, so
-        # the key set alone covers every differing row).
-        key = F.col("encounter_id").cast("long").alias("encounter_id")
-        changed = recomputed.select(key).unionByName(affected.select(key))
-        if target is not None:
-            changed = changed.unionByName(
-                vp_probe.join(vp_recent, "person_id", "left_semi")
-                .select(key)
-            )
-        out["changed_keys"] = _pin(changed.distinct(), out, "changed_keys")
+        # flat_orders has no synthetic class: the retracted encounter
+        # keys and the voided persons cover every differing row.
+        publish_retractions(out, target, recomputed, person, keys=affected)
     if target is not None:
         target = anti_delete(target, affected, ["encounter_id"])
     merged = replace_into(target, recomputed, ["encounter_id"])
+    voided_person = person.filter(F.col("voided") == 1).select("person_id")
     return anti_delete(merged, voided_person, ["person_id"])

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from mrsboraetl_spark.config import CLINICAL_ENCOUNTER_TYPES
 from mrsboraetl_spark.functions.decode import decode_columns
 from mrsboraetl_spark.operators.upsert import anti_delete, replace_into
+from mrsboraetl_spark.plans._probe import pin, publish_retractions
 
 # Final column order: the reference DDL (:17-67) with engine lineage extras.
 SUMMARY_COLS = [
@@ -146,124 +147,65 @@ def incremental_flat_visit_summary(
     voided persons — convergent regardless of when the void happened.
     """
     wm = F.lit(watermark).cast("timestamp")
-    queue = (
-        encounter.filter(F.col("date_changed") > wm)
-        .select(F.col("patient_id").alias("person_id"))
-        .unionByName(
-            flat_obs.filter(F.col("max_date_created") > wm).select("person_id")
+
+    def queued():
+        queue = (
+            encounter.filter(F.col("date_changed") > wm)
+            .select(F.col("patient_id").alias("person_id"))
+            .unionByName(
+                flat_obs.filter(F.col("max_date_created") > wm)
+                .select("person_id")
+            )
         )
-    )
-    if obs_for_retractions is not None:
-        queue = queue.unionByName(
-            obs_for_retractions.filter(
-                (F.col("voided") == 1) & (F.col("date_voided") > wm)
-            ).select("person_id")
-        )
-    queue = queue.distinct()
+        if obs_for_retractions is not None:
+            queue = queue.unionByName(
+                obs_for_retractions.filter(
+                    (F.col("voided") == 1) & (F.col("date_voided") > wm)
+                ).select("person_id")
+            )
+        return queue.distinct()
+
     # Delta-key pin (see plans/_probe.pin): the queue feeds the two
     # recompute semi-joins, the month probes, and the retraction —
     # each otherwise re-deriving it from scratch (including a flat_obs
-    # scan) per evaluation.
-    from mrsboraetl_spark.plans._probe import pin as _pin
-
-    queue = _pin(queue, out, "queue_keys")
-    # Pin across the engine's two-phase delta-scoped sync (see
+    # scan) per evaluation — and, as ``out["queue_keys"]``, the
+    # engine's latest-summary merge after the stage's write.
+    queue = pin(queued, out, "queue_keys")
+    # Pinned across the engine's two-phase delta-scoped sync (see
     # incremental_flat_obs): the recompute is target-independent.
-    if out is not None and "recomputed" in out:
-        recomputed = out["recomputed"]
-    else:
-        recomputed = build_flat_visit_summary(
+    recomputed = pin(
+        lambda: build_flat_visit_summary(
             flat_obs.join(queue, "person_id", "left_semi"),
             flat_lab_obs.join(queue, "person_id", "left_semi"),
             person,
             include_lab_rows,
-        )
-        if out is not None and out.get("pin_recomputed"):
-            # Engine-requested: only the partitioned two-phase delta
-            # sync re-runs the plan and can reuse the pin; other
-            # layouts would pay an eager materialization (and lose
-            # lineage replay on a real cluster) for nothing.
-            recomputed = recomputed.localCheckpoint()
-            out["recomputed"] = recomputed
-    voided_person = person.filter(F.col("voided") == 1).select("person_id")
+        ),
+        out, "recomputed",
+    )
     if out is not None and "affected_months" not in out:
-        from mrsboraetl_spark.schemas import p_month_of
-
-        month = p_month_of("encounter_datetime").alias("p_month")
-        months = recomputed.select(month)
-        if target is not None:
-            from mrsboraetl_spark.plans._probe import (
-                month_probe,
-                recently_voided,
-            )
-
-            # Old rows of queued persons.  person_id-keyed, so the
-            # engine's [min,max] bounds prune weakly here (a month's
-            # person range is wide) — candidates degrade to all months
-            # rather than below today's full column-pruned scan; the
-            # reference pays the same secondary-index walk for its
-            # person-keyed deletes.
-            # encounter_id rides along for the changed-key superset
-            # below — same partition-pruned, column-pruned read.
-            queue_probe = month_probe(
-                target, out, queue, "person_id",
-                ["encounter_id", "person_id", "encounter_datetime"],
-            )
-            vp_recent = _pin(
-                recently_voided(
-                    person, cutoff=out.get("vp_cutoff"),
-                    stable=out.get("vp_stable", False),
-                ),
-                out, "vp_recent",
-            )
-            vp_probe = month_probe(
-                target, out, vp_recent, "person_id",
-                ["encounter_id", "person_id", "encounter_datetime"],
-            )
-            # replace_into also deletes by ENCOUNTER id: an encounter
-            # re-pointed to a different person (patient merge) leaves
-            # its old row under a person the queue never names — and
-            # possibly under a different month.  Probe the old
-            # locations of every recomputed encounter (bounds-pruned:
-            # encounter ids correlate with storage months) so that
-            # row's month is always in the superset.
-            enc_probe = month_probe(
-                target, out, recomputed.select("encounter_id"),
-                "encounter_id", ["encounter_id", "encounter_datetime"],
-            )
-            months = months.unionByName(
-                queue_probe.join(queue, "person_id", "left_semi")
-                .select(month)
-            ).unionByName(
-                vp_probe.join(vp_recent, "person_id", "left_semi")
-                .select(month)
-            ).unionByName(
-                enc_probe.join(
-                    recomputed.select("encounter_id"),
-                    "encounter_id",
-                    "left_semi",
-                ).select(month)
-            )
-        out["affected_months"] = months.distinct()
-        # Changed-pk superset for the file-level delta writer (see
-        # incremental_flat_obs).  All three deletion classes here are
-        # person-keyed (queue retraction, vp purge) or pk-keyed
-        # (replace_into's delete of re-pointed encounters ⊆ recomputed
-        # keys); the person-keyed rows' pks — including synthetic
-        # ones — come from the same pruned probes the month derivation
-        # pays for, so no separate synthetic-month channel is needed.
-        key = F.col("encounter_id").cast("long").alias("encounter_id")
-        changed = recomputed.select(key)
-        if target is not None:
-            changed = changed.unionByName(
-                queue_probe.join(queue, "person_id", "left_semi")
-                .select(key)
-            ).unionByName(
-                vp_probe.join(vp_recent, "person_id", "left_semi")
-                .select(key)
-            )
-        out["changed_keys"] = _pin(changed.distinct(), out, "changed_keys")
+        # Old rows of queued persons: person_id-keyed, so the engine's
+        # [min,max] bounds prune weakly here (a month's person range is
+        # wide) — candidates degrade to all months rather than below a
+        # full column-pruned scan; the reference pays the same
+        # secondary-index walk for its person-keyed deletes.  Their
+        # pks, synthetic ones included, come from the same probe, so
+        # no separate synthetic-month channel is needed.
+        # replace_into also deletes by ENCOUNTER id: an encounter
+        # re-pointed to a different person (patient merge) leaves its
+        # old row under a person the queue never names — and possibly
+        # under a different month.  Probe the old locations of every
+        # recomputed encounter (bounds-pruned: encounter ids correlate
+        # with storage months) so that row's month is always in the
+        # superset.
+        publish_retractions(
+            out, target, recomputed, person,
+            probes=(
+                (queue, "person_id"),
+                (recomputed.select("encounter_id"), "encounter_id"),
+            ),
+        )
     if target is not None:
         target = anti_delete(target, queue, ["person_id"])
     merged = replace_into(target, recomputed, ["encounter_id"])
+    voided_person = person.filter(F.col("voided") == 1).select("person_id")
     return anti_delete(merged, voided_person, ["person_id"])

@@ -20,10 +20,6 @@ import dataclasses
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_parquet_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{base_dir}/{name}.parquet")
-
-
 @dataclasses.dataclass(frozen=True)
 class JdbcSource:
     """A JDBC-resident source table, accepted by ``PipelineRunner.run``
@@ -258,11 +254,3 @@ def read_json_table(
         reader = reader.schema(schema)
     return reader.json(path)
 
-
-def load_tpch(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load the driver's synthetic tables (TESTDATA.md) as a dict."""
-    names = names or (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    )
-    return {n: read_parquet_table(spark, sf_dir, n) for n in names}

@@ -85,10 +85,10 @@ def _new_obs_delta(pdfs, wm, days=1):
 def test_latest_merge_runs_and_matches_full_build(
     spark, tmp_path, spy
 ):
-    """Plain layout: the plan publishes queue_keys through
-    out["pin_keys"] (no two-phase re-run there), and the latest table
-    merges through VersionedTable.merge_delta, as under the partitioned
-    layout."""
+    """Plain layout: the plan publishes queue_keys pinned (plans/_probe.pin
+    pins the queue whenever it is given ``out``, with no two-phase re-run
+    there), and the latest table merges through
+    VersionedTable.merge_delta, as under the partitioned layout."""
     r, pdfs, wm = _base(spark, tmp_path, "plainmode", partitioned=False)
     latest0 = r.read_target("flat_latest_hiv_summary")
     n_persons_total = latest0.count()

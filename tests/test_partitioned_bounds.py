@@ -208,10 +208,19 @@ def test_probe_reader_synthetic_key_defeats_pruning(spark, built):
     assert res.count() == full
 
 
-def test_sync_probe_reads_scale_with_delta(spark, built, monkeypatch):
+def test_sync_probe_reads_scale_with_delta(
+    spark, built, tmp_path, monkeypatch
+):
     """A one-month-localized delta must probe (and rewrite) only a small
-    month subset; a no-op sync must probe ZERO month directories."""
-    runner, pdfs = built["runner"], built["pdfs"]
+    month subset; a no-op sync must probe ZERO month directories.  Runs
+    on a copy of ``built``'s store, so the shared fixture keeps its
+    state."""
+    import shutil
+
+    root = str(tmp_path / "store")
+    shutil.copytree(built["runner"].root, root)
+    runner = PipelineRunner(spark, root, partitioned=True)
+    pdfs = built["pdfs"]
     obs_pdf, enc_pdf = pdfs["obs"], pdfs["encounter"]
     wm = built["wm"]
 
@@ -735,24 +744,33 @@ def test_delta_attempt_loads_one_snapshot_and_one_sidecar(
             reads.append(os.path.normpath(str(file)))
         return builtins.open(file, mode, *a, **kw)
 
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     writes: list[tuple[str, bool]] = []
+    write_jobs = [0]
     real_write = PipelineRunner._write
 
     def spy_write(self, df, table, *a, **kw):
         writes.append((table, kw.get("months") is not None))
-        return real_write(self, df, table, *a, **kw)
+        j0 = int(dag.numTotalJobs())
+        try:
+            return real_write(self, df, table, *a, **kw)
+        finally:
+            write_jobs[0] += int(dag.numTotalJobs()) - j0
 
-    attempts: list[tuple[str, list, list, list]] = []
+    attempts: list[tuple[str, list, list, list, tuple[int, int]]] = []
     real_attempt = PipelineRunner._stage_attempt
 
     def spy_attempt(self, table, *a, **kw):
         n_l, n_r, n_w = len(loads), len(reads), len(writes)
+        j0, w0 = int(dag.numTotalJobs()), write_jobs[0]
         try:
             return real_attempt(self, table, *a, **kw)
         finally:
-            attempts.append(
-                (table, loads[n_l:], reads[n_r:], writes[n_w:])
-            )
+            jobs = int(dag.numTotalJobs()) - j0
+            attempts.append((
+                table, loads[n_l:], reads[n_r:], writes[n_w:],
+                (jobs - (write_jobs[0] - w0), jobs),
+            ))
 
     monkeypatch.setattr(snapshot, "load", counting_load)
     monkeypatch.setattr(engine_mod, "open", counting_open, raising=False)
@@ -760,7 +778,7 @@ def test_delta_attempt_loads_one_snapshot_and_one_sidecar(
     monkeypatch.setattr(PipelineRunner, "_stage_attempt", spy_attempt)
     runner.run(to_spark(spark, _small_delta(built["pdfs"])), mode="sync")
 
-    by_table = {t: (ls, rs, ws) for t, ls, rs, ws in attempts}
+    by_table = {t: (ls, rs, ws) for t, ls, rs, ws, _j in attempts}
     assert "flat_obs" in by_table, attempts
     for table, (ls, rs, ws) in by_table.items():
         if table not in PipelineRunner._PARTITION_SRC:
@@ -778,6 +796,16 @@ def test_delta_attempt_loads_one_snapshot_and_one_sidecar(
         ), (table, sidecar_reads)
     # the pin is about the delta path: flat_obs took it
     assert ("flat_obs", True) in by_table["flat_obs"][2], by_table
+    # Spark jobs of each attempt outside its write (the plan phase:
+    # pins, probes, the month collect, the touched-file plan), pinned
+    # at their measured values.  The write's own AQE stage jobs vary
+    # between identical runs (flat_obs 17-19), so a whole-attempt count
+    # (flat_obs 52-54) cannot be pinned exactly.
+    budget = {"flat_obs": 35, "flat_lab_obs": 2, "flat_visit_summary": 46}
+    plan_jobs = {t: j for t, *_r, (j, _all) in attempts}
+    assert set(plan_jobs) <= set(budget), plan_jobs
+    for table, n in plan_jobs.items():
+        assert n <= budget[table], (table, plan_jobs)
 
 
 def test_target_reads_take_schema_from_one_footer(

@@ -1,8 +1,10 @@
-"""The session factory's driver JVM options reach the running JVM, and
-the test tree holds no side scripts beside the suite."""
+"""The session factory's driver JVM options reach the running JVM, the
+test tree holds no side scripts beside the suite, and the incremental
+plans materialize through one pin rule."""
 
 from __future__ import annotations
 
+import ast
 import os
 
 from mrsboraetl_spark.session import DRIVER_JIT_FLAGS
@@ -53,3 +55,45 @@ def test_tests_tree_holds_only_pytest_modules_and_named_helpers():
         f"{stray}: new measurement goes into perfbench/run.py or a "
         "pinned test, not a script under tests/"
     )
+
+
+def test_plans_materialize_only_through_probe_pin():
+    """The incremental plans pin through one rule (plans/_probe.pin):
+    no other function under plans/ calls localCheckpoint, and no plan
+    tests ``"recomputed" in out`` to reuse a pin by hand."""
+    plans = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "mrsboraetl_spark", "plans",
+    )
+    checkpoints: list[str] = []
+    reuses: list[str] = []
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, module):
+            self.scope = [module]
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Attribute(self, node):
+            if node.attr == "localCheckpoint":
+                checkpoints.append(".".join(self.scope))
+            self.generic_visit(node)
+
+        def visit_Compare(self, node):
+            if (
+                isinstance(node.left, ast.Constant)
+                and node.left.value == "recomputed"
+                and any(isinstance(op, ast.In) for op in node.ops)
+            ):
+                reuses.append(".".join(self.scope))
+            self.generic_visit(node)
+
+    for f in sorted(os.listdir(plans)):
+        if f.endswith(".py"):
+            with open(os.path.join(plans, f)) as fh:
+                Scan(f[:-3]).visit(ast.parse(fh.read()))
+    assert checkpoints == ["_probe.pin"], checkpoints
+    assert not reuses, reuses
